@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
 import graft.linkage.expr.{functions => gf}
 
 /** Driver-contract queries: one per SQL-expressible operator family from
@@ -46,25 +47,36 @@ object Queries {
       val p = new org.apache.hadoop.fs.Path(path)
       p.getFileSystem(s.sparkContext.hadoopConfiguration)
         .getContentSummary(p).getLength
-    } catch { case _: Throwable => Long.MaxValue }
+    } catch { case NonFatal(_) => Long.MaxValue }
     val maxSplit = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
       s.conf.get("spark.sql.files.maxPartitionBytes", "128m"))
-    val naturalTasks = math.max(1L, (bytes + maxSplit - 1) / maxSplit)
-    // per-task input sizing and the parallelism cap are session-tunable
-    // (runtime conf, not a rebuild) so fan-out variants can be A/B'd
-    // interleaved in ONE session; defaults are the measured best
-    val splitBytes = s.conf.get("graft.text.splitBytes", "32768").toLong
-    val capWaves = s.conf.get("graft.text.capWaves", "1").toInt
-    val target = math.min(
-      capWaves.toLong * s.sparkContext.defaultParallelism,
-      math.max(1L, bytes / splitBytes))
     // hash-repartition on the row key, NOT round-robin: keyless
     // repartition(n) pays a local sort of the scan output
     // (sortBeforeRepartition) inside the single-task scan stage — the
     // very stage being relieved; the key is high-cardinality vs the
     // task count, so the spread is even (guide §2.5)
-    if (naturalTasks < target) df.repartition(target.toInt, col("doc_id"))
-    else df
+    textFanout(bytes, maxSplit, s.sparkContext.defaultParallelism)
+      .fold(df)(n => df.repartition(n, col("doc_id")))
+  }
+
+  /** Input bytes per fan-out task, with at most one wave of tasks: 8 KB
+    * tasks in up to four waves measured slower on every tText query
+    * (OPTIMIZATION_r06.md, "tText fan-out sizing"). */
+  private val TextSplitBytes = 32768L
+
+  /** Fan-out task count for a text table of `bytes` on-disk bytes read
+    * with `maxSplit`-byte scan splits, or None to keep the scan as is.
+    * Fans out only when the scan's own split count is below
+    * min(parallelism, bytes / TextSplitBytes). An unknown size
+    * (`Long.MaxValue`) never fans out; the ceiling division cannot
+    * overflow. */
+  private[graft] def textFanout(bytes: Long, maxSplit: Long,
+                                parallelism: Int): Option[Int] = {
+    val naturalTasks = math.max(1L,
+      bytes / maxSplit + (if (bytes % maxSplit == 0) 0 else 1))
+    val target = math.min(parallelism.toLong,
+      math.max(1L, bytes / TextSplitBytes))
+    if (naturalTasks < target) Some(target.toInt) else None
   }
 
   val all: Map[String, (SparkSession, String) => DataFrame] = Map(

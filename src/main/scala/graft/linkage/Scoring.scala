@@ -37,8 +37,9 @@ object Scoring {
     * branch values are excluded from Spark's subexpression elimination,
     * so inline it is evaluated up to 3× per pair — on this corpus the
     * street fields average ~370 chars and jw is O(len²), making those
-    * re-evaluations ~30% of the whole scoring CPU (ScoreCostProbe:
-    * full tree ~365 µs CPU/pair, one long-string jw ~55–60 µs).
+    * re-evaluations ~30% of the whole scoring CPU (perfbench link-dense
+    * on 4 vCPU: `scoring.cpu_us_per_pair` ~322 µs for the full tree,
+    * `sim.jw_ns_per_pair` ~53 µs for one street jw).
     * Callers that project pairs (scorePairs) hoist the comparison into
     * its own opaque column and pass it here; the default None keeps
     * this function a self-contained 1:1 port (exemplar specs). Values

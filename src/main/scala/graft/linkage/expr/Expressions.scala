@@ -39,7 +39,14 @@ case class NormalizeAscii(child: Expression)
   * addr_score: the pushed-down prefilter re-ran the ~20-JW composite
   * comparator in the join stage — measured as HALF the scoring wall —
   * on top of the projection's own evaluation). The wrapped value is
-  * bit-identical to the child's; only optimizer placement changes. */
+  * bit-identical to the child's; only optimizer placement changes.
+  *
+  * The barrier is per PROJECTION, not per column: Spark pushes a filter
+  * through a Project only when every projected expression is
+  * deterministic, so one Opaque column blocks pushdown of EVERY
+  * predicate through that projection, including filters on its cheap
+  * columns. Apply a selective cheap filter below the projection by
+  * hand. */
 case class Opaque(child: Expression) extends UnaryExpression {
   override lazy val deterministic: Boolean = false
   override def foldable: Boolean = false

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.linkage._
@@ -7,14 +8,64 @@ import graft.linkage._
 /** Physical-plan quality gates (SURVEY.md §4): filters reach the parquet
   * scan, projection prunes columns, the scoring expression tree stays in
   * whole-stage codegen, small sides broadcast, and the candidate
-  * self-join is a real equi-join on the blocking key (no cross product).
+  * self-join is a real equi-join on the blocking key (no cross product),
+  * and each product layer's analyzed expression tree stays under a
+  * node ceiling.
   */
 class PlanSpec extends AnyFunSuite with SparkFixture {
 
   private val sf = "/root/testdata/sf0.001"
 
-  private def planOf(df: org.apache.spark.sql.DataFrame): String =
+  private def planOf(df: DataFrame): String =
     df.queryExecution.executedPlan.toString
+
+  /** Expression nodes in the analyzed plan: the count perfbench reports
+    * as `fold.plan_nodes` / `scoring.plan_nodes`. */
+  private def planNodes(df: DataFrame): Long = {
+    var n = 0L
+    df.queryExecution.analyzed.foreach { p =>
+      p.expressions.foreach(e => n += e.collect { case x => x }.size)
+    }
+    n
+  }
+
+  /** `df`'s rows as a LocalRelation, so a plan built on top of it counts
+    * only its own layer's expressions. */
+  private def local(df: DataFrame): DataFrame =
+    spark.createDataFrame(df.collectAsList(), df.schema)
+
+  private lazy val transcripts = local(SynthTranscripts
+    .transcripts(spark, SynthTranscripts.Config(nConvs = 50)).toDF)
+  private lazy val records = local(Fold.fold(transcripts))
+  private lazy val docs = local(spark.range(20).select(
+    col("id").as("doc_id"),
+    concat(lit("mail a"), col("id"), lit("@x.org or call 555-123-4567"))
+      .as("text")))
+
+  // Plan-time cost gate: a Column builder whose derived vals re-inline
+  // into every use grows exponentially (a rule-grammar address tagger
+  // analyzed to 27,677 nodes for one column and 2.7M once scored, ~87 s
+  // to plan one row). Ceilings are ~3x the measured count (333, 372,
+  // 619, 24, 304), so ordinary growth passes and a re-inlining blowup
+  // fails here in seconds.
+  Seq[(String, () => DataFrame, Long)](
+    ("Fold.fold", () => Fold.fold(transcripts), 1000L),
+    ("Candidates.candidates",
+      () => Candidates.candidates(records, Blocking.defaultPasses), 1200L),
+    ("Scoring.scorePairs", () => Scoring.scorePairs(records,
+      local(Candidates.candidates(records, Blocking.defaultPasses))),
+      1900L),
+    ("Redact.redactText",
+      () => docs.select(graft.data.Redact.redactText(col("text"))), 75L),
+    ("TextAnalysis.qualityFeatures",
+      () => graft.data.TextAnalysis.qualityFeatures(docs), 1000L)
+  ).foreach { case (name, df, ceiling) =>
+    test(s"analyzed expression nodes stay bounded: $name") {
+      val n = planNodes(df())
+      info(s"$name: $n expression nodes (ceiling $ceiling)")
+      assert(n <= ceiling, s"$name analyzes to $n expression nodes")
+    }
+  }
 
   test("parquet scan: predicate pushdown + column pruning") {
     val df = spark.read.parquet(s"$sf/lineitem.parquet")
