@@ -135,18 +135,21 @@ object CleanCorpus {
     (cleaned, nDecont, nRep, nQuality, nLang, nRedacted)
   }
 
-  /** Returns (cleaned docs with quality columns attached, stage counts).
-    * The returned DataFrame is persisted (single caller-owned handle);
-    * unpersist when done. Interior fan-out caches are released here. */
+  /** Returns (cleaned docs with quality columns attached, stage counts,
+    * the ids of the exact-dedup survivors — the store a later
+    * [[cleanIncremental]] dedups against). Both DataFrames are persisted
+    * and materialized (caller-owned handles); unpersist when done.
+    * Interior fan-out caches are released here. */
   def clean(docs: DataFrame, cfg: Config = Config(),
             idCol: String = "doc_id", textCol: String = "text")
-      : (DataFrame, StageCounts) = {
+      : (DataFrame, StageCounts, DataFrame) = {
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val nIn = docs.count()
 
-    // 1. exact dedup: keep each group's min-id representative
+    // 1. exact dedup: keep each group's min-id representative; the narrow
+    //    keeper ids are cached by the same action that materializes exact
     val keepers = Dedup.exact(docs, idCol, textCol)
-      .filter(col(idCol) === col("keeper")).select(idCol)
+      .filter(col(idCol) === col("keeper")).select(idCol).persist(lvl)
     val exact = docs.join(keepers, Seq(idCol), "left_semi").persist(lvl)
     val nExact = exact.count()
 
@@ -163,7 +166,7 @@ object CleanCorpus {
     nearDeduped.unpersist(blocking = false)
 
     (cleaned, StageCounts(nIn, nExact, nNear, nQuality, nLang,
-      nDecont, nRedacted, nRep))
+      nDecont, nRedacted, nRep), keepers)
   }
 
   /** Incremental clean — the daily-append mode: clean ONLY `newDocs`
@@ -319,20 +322,9 @@ object CleanCorpusMain {
 
     val counts = opts.get("previous") match {
       case Some(prev) =>
-        // same Hadoop-qualified guard as LinkageMain (ADVICE r05): the
-        // cumulative exact_survivor_ids write below unions a LAZY scan
-        // of $prev/exact_survivor_ids while overwriting
-        // $out/exact_survivor_ids — a same-dir invocation would corrupt
-        // the store mid-run after $out/cleaned was already overwritten
-        val hconf = spark.sparkContext.hadoopConfiguration
-        val qual = (p: String) => {
-          val hp = new org.apache.hadoop.fs.Path(p)
-          hp.getFileSystem(hconf).makeQualified(hp).toString
-        }
-        require(qual(prev) != qual(out),
-          s"--output must differ from --previous ($prev): the incremental " +
-            "run reads the previous exact_survivor_ids lazily and " +
-            "overwriting them mid-read corrupts the cumulative store")
+        // the cumulative exact_survivor_ids write below unions a LAZY scan
+        // of $prev/exact_survivor_ids (ADVICE r05)
+        Cli.requireOutputDiffers(spark, prev, out)
         val prevIds = spark.read.parquet(s"$prev/exact_survivor_ids")
         val prevRaw = readMulti(spark,
           Cli.required(opts, "previous-input"))
@@ -347,14 +339,11 @@ object CleanCorpusMain {
         newExact.unpersist(blocking = false)
         counts
       case None =>
-        val (cleaned, counts) = CleanCorpus.clean(docs, cfg)
+        val (cleaned, counts, exactIds) = CleanCorpus.clean(docs, cfg)
         cleaned.write.mode("overwrite").parquet(s"$out/cleaned")
         cleaned.unpersist(blocking = false)
-        // cumulative exact-survivor ids: one extra hash aggregate over
-        // the input — the store future --previous increments need
-        Dedup.exact(docs)
-          .filter(col("doc_id") === col("keeper")).select("doc_id")
-          .write.mode("overwrite").parquet(s"$out/exact_survivor_ids")
+        exactIds.write.mode("overwrite").parquet(s"$out/exact_survivor_ids")
+        exactIds.unpersist(blocking = false)
         counts
     }
     val fs = org.apache.hadoop.fs.FileSystem.get(

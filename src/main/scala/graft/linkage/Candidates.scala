@@ -50,16 +50,9 @@ object Candidates {
     * and is also the 100-TB plan: no branch cliff at saltThreshold, skew
     * handled per-block, AQE as backstop. */
   def candidates(records: DataFrame, passes: Seq[Blocking.Pass],
-                 cfg: Config = Config()): DataFrame = {
-    val total = records.count()
-    val cap = math.max(cfg.minBlockCap, (cfg.ratioMax * total).toLong)
-    val keyed = Blocking.keyedAll(records, passes)
-    val counts = keyed.groupBy("pass", "block_key")
-      .agg(count(lit(1)).as("n"))
-      .filter(col("n") <= cap)
-    val kept = keyed.join(counts, Seq("pass", "block_key"))
-    saltedPairs(kept, cfg).dropDuplicates("id_a", "id_b")
-  }
+                 cfg: Config = Config()): DataFrame =
+    saltedPairs(cappedBlocks(records, passes, cfg)._1, cfg)
+      .dropDuplicates("id_a", "id_b")
 
   /** Incremental candidates: pairs where AT LEAST ONE side is a new
     * record — the increment path's blocking stage. Old-old pairs are
@@ -70,19 +63,11 @@ object Candidates {
   def incrementalCandidates(allRecords: DataFrame, newRecords: DataFrame,
                             passes: Seq[Blocking.Pass],
                             cfg: Config = Config()): DataFrame = {
-    val total = allRecords.count()
-    val cap = math.max(cfg.minBlockCap, (cfg.ratioMax * total).toLong)
-    // same unified single-relation shape as candidates(): one keyed
-    // relation over all passes, one count aggregate (evaluated over ALL
-    // records, exactly like a full run), one new×all pair join
-    val keyedAll = Blocking.keyedAll(allRecords, passes)
-    val keptKeys = keyedAll.groupBy("pass", "block_key")
-      .agg(count(lit(1)).as("n"))
-      .filter(col("n") <= cap)
-      .select("pass", "block_key")
-    val keptAll = keyedAll.join(keptKeys, Seq("pass", "block_key"))
+    // same unified single-relation shape as candidates(): block sizes
+    // over ALL records, exactly like a full run, then one new×all join
+    val (keptAll, blocks) = cappedBlocks(allRecords, passes, cfg)
     val keptNew = Blocking.keyedAll(newRecords, passes)
-      .join(keptKeys, Seq("pass", "block_key"), "left_semi")
+      .join(blocks, Seq("pass", "block_key"), "left_semi")
     val l = keptNew.select(col("pass"), col("block_key"),
       col("conv_id").as("new_id"))
     val r = keptAll.select(col("pass").as("pass_r"),
@@ -93,6 +78,22 @@ object Candidates {
       .select(least(col("new_id"), col("other_id")).as("id_a"),
         greatest(col("new_id"), col("other_id")).as("id_b"))
       .dropDuplicates("id_a", "id_b")
+  }
+
+  /** The 2% block cap both generators share: keys `records` under every
+    * pass in one relation, sizes each (pass, block_key) block with one
+    * hash-aggregate and keeps the blocks of at most
+    * max(minBlockCap, ratioMax·N) records. Returns (kept keyed rows with
+    * their block size `n`, kept blocks with `n`). */
+  private def cappedBlocks(records: DataFrame, passes: Seq[Blocking.Pass],
+                           cfg: Config): (DataFrame, DataFrame) = {
+    val cap = math.max(cfg.minBlockCap,
+      (cfg.ratioMax * records.count()).toLong)
+    val keyed = Blocking.keyedAll(records, passes)
+    val blocks = keyed.groupBy("pass", "block_key")
+      .agg(count(lit(1)).as("n"))
+      .filter(col("n") <= cap)
+    (keyed.join(blocks, Seq("pass", "block_key")), blocks)
   }
 
   /** Adaptive triangle-salted self-join over (pass, block_key) with the

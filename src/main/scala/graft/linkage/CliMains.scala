@@ -52,6 +52,26 @@ private[graft] object Cli {
     opts.getOrElse(key,
       throw new IllegalArgumentException(s"--$key required"))
 
+  /** Daily-append guard shared by the `--previous` mains: the
+    * incremental result reads the previous run's tables lazily, so
+    * writing them back to the same dir would overwrite files a running
+    * plan is still reading. Compared Hadoop-qualified, not via
+    * java.io.File: the same store spelled with and without a scheme
+    * (hdfs://nn/store vs /store) is one path to the FileSystem but two
+    * distinct local-File canonical strings (ADVICE r04). */
+  def requireOutputDiffers(spark: SparkSession, previous: String,
+                           output: String): Unit = {
+    val hconf = spark.sparkContext.hadoopConfiguration
+    def qual(p: String): String = {
+      val hp = new org.apache.hadoop.fs.Path(p)
+      hp.getFileSystem(hconf).makeQualified(hp).toString
+    }
+    require(qual(previous) != qual(output),
+      s"--output must differ from --previous ($previous): the incremental " +
+        "run reads the previous tables lazily and overwriting them " +
+        "mid-read corrupts the cumulative store")
+  }
+
   def readText(spark: SparkSession, path: String): String = {
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(path), spark.sparkContext.hadoopConfiguration)

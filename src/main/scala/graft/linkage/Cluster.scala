@@ -27,8 +27,9 @@ object Cluster {
   /** edges: (id_a, id_b), undirected, self-loop-free. The id columns may
     * be ANY orderable type — longs are the cheap default, but string
     * conv_ids work unchanged (every per-round op is greatest/least/min/
-    * join/distinct), which is the >10⁹-records path where 64-bit hashed
-    * ids start risking collisions (see Pipeline.Config.hashNodeIds).
+    * join/distinct) — the collision-free domain for the >10⁹-records
+    * scale where Pipeline's 64-bit xxhash64(conv_id) ids (collision odds
+    * n²/2⁶⁴) start risking collisions.
     * Returns (id, cluster_id) for every node APPEARING IN EDGES; callers
     * attach singletons via [[labelRecords]].
     *

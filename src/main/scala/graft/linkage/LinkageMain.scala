@@ -71,14 +71,7 @@ object LinkageMain {
     // parse BEFORE building the session: a bad argv must fail without
     // spinning up (and then leaking) a cluster session
     val opts = parseArgs(args)
-    val builder = SparkSession.builder()
-      .appName("graft-linkage")
-      .config("spark.sql.session.timeZone", "UTC")
-    // spark-submit injects spark.master; fall back to local[*] when run
-    // directly (sbt runMain)
-    val spark = (if (sys.props.contains("spark.master")) builder
-                 else builder.master("local[*]")).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Cli.session("graft-linkage")
     try run(spark, opts)
     finally spark.stop()
   }
@@ -106,7 +99,6 @@ object LinkageMain {
 
     val cfg = Pipeline.Config(
       ccOptions = Cluster.Options(checkpointDir = opts.get("checkpoint")),
-      metricsPath = Some(s"$out/metrics"),
       exactAddresses = opts.contains("exact-addresses"),
       pairsFile = opts.get("pairsfile"),
       bucketedRecords = opts.get("buckets")
@@ -119,40 +111,24 @@ object LinkageMain {
     // costs O(new × blocked-neighborhood), not O(corpus²).
     val result = opts.get("previous") match {
       case Some(prev) =>
-        // the result's records/matched_pairs plans READ prev's tables;
-        // writing them back to the same dir would overwrite a path being
-        // read from (the self-overwrite class CLAUDE.md documents) —
-        // daily appends alternate output dirs (or snapshot generations).
-        // Canonicalize through Hadoop, not java.io.File: the same store
-        // spelled with and without a scheme (hdfs://nn/store vs /store)
-        // is one path to the FileSystem but two distinct local-File
-        // canonical strings, which would bypass this guard exactly where
-        // it matters (ADVICE r04)
-        val hconf = spark.sparkContext.hadoopConfiguration
-        val qual = (p: String) => {
-          val hp = new org.apache.hadoop.fs.Path(p)
-          hp.getFileSystem(hconf).makeQualified(hp).toString
-        }
-        require(qual(prev) != qual(out),
-          s"--output must differ from --previous ($prev): the incremental " +
-            "result reads the previous tables lazily and overwriting them " +
-            "mid-read corrupts the cumulative store")
-        require(!opts.contains("pairsfile") && !opts.contains("buckets"),
-          "--pairsfile/--buckets are not supported with --previous " +
-            "(the incremental path neither bypasses scoring nor buckets " +
-            "the attribute side)")
+        // the result's records/matched_pairs plans READ prev's tables —
+        // daily appends alternate output dirs (or snapshot generations)
+        Cli.requireOutputDiffers(spark, prev, out)
         val prevRecords = TableIO.read(spark, s"$prev/records")
         val prevMatches = TableIO.read(spark, s"$prev/matched_pairs")
         Pipeline.incremental(spark, prevRecords, prevMatches, transcripts, cfg)
       case None => Pipeline.run(spark, transcripts, cfg)
     }
 
+    val metrics = result.metrics.collect()
+      .map(r => r.getString(0) -> r.getLong(1))
+    TableIO.write(result.metrics, s"$out/metrics")
     TableIO.write(result.records.drop("turns"), s"$out/records")
     TableIO.write(result.matchedPairs, s"$out/matched_pairs")
     TableIO.write(result.clusters, s"$out/clusters")
     // households metadata document (households.py:370–390 analog)
     Extract.writeMetadata(spark, Map(
-      "number_of_households" -> result.clusters.count().toString,
+      "number_of_households" -> metrics.toMap.apply("clusters").toString,
       "households_inferred" -> "true"), s"$out/households_metadata.json")
     // comma-joined ids only at the CSV edge (households.py:268–276 shape)
     result.clusters.select(col("cluster_id"),
@@ -171,8 +147,7 @@ object LinkageMain {
         clks.withColumnRenamed("cluster_id", "conv_id"), s"$out/household_clks")
     }
     println(s"[graft] linkage complete: " +
-      s"${result.metrics.collect().map(r => s"${r.getString(0)}=${r.getLong(1)}")
-        .mkString(", ")}")
+      metrics.map { case (k, v) => s"$k=$v" }.mkString(", "))
     result.unpersist() // release the run's internal cache handles
   }
 }

@@ -19,10 +19,7 @@ import org.apache.spark.sql.functions._
 object Pipeline {
 
   case class Config(
-      passes: Seq[Blocking.Pass] = Blocking.defaultPasses,
-      candidates: Candidates.Config = Candidates.Config(),
       ccOptions: Cluster.Options = Cluster.Options(),
-      metricsPath: Option[String] = None,
       /** exact-address mode (matching.py:401–402, 333–335): block on
         * [zip, full text]; candidate links ARE the matches, no scoring. */
       exactAddresses: Boolean = false,
@@ -30,7 +27,7 @@ object Pipeline {
         * blocking + scoring entirely. `.csv` → the reference's own format
         * (headerless two-column, households.py:92–93 / matching.py:305);
         * otherwise parquet, whose id_a/id_b columns are selected BY NAME
-        * (round 2 trusted positional column order). */
+        * (round 2 trusted positional column order). Full runs only. */
       pairsFile: Option[String] = None,
       /** (tableName, numBuckets): persist the folded records (minus the
         * fat turns array) as a conv_id-bucketed catalog table and run the
@@ -40,7 +37,8 @@ object Pipeline {
         * structs must not move; bucketing moves them exactly once, at
         * write time. Below broadcast scale the in-memory path is faster
         * (no table write), so bucketing turns itself on at
-        * [[autoBucketThreshold]] records when unset here. */
+        * [[autoBucketThreshold]] records when unset here. Full runs
+        * only. */
       bucketedRecords: Option[(String, Int)] = None,
       /** Records count at which the default run auto-switches to a
         * bucketed attribute side (writes a run-unique
@@ -48,12 +46,6 @@ object Pipeline {
         * Below it the pairs relation is comfortably broadcast-sized and
         * the table write would be pure overhead. */
       autoBucketThreshold: Long = 1000000L,
-      /** Node-id domain for connected components. true (default): 64-bit
-        * xxhash64(conv_id) — cheapest shuffles; collision odds n²/2⁶⁴ are
-        * negligible below ~10⁹ records. false: the conv_id strings
-        * themselves — collision-free at any scale (the >10⁹ setting),
-        * paying wider shuffle keys. */
-      hashNodeIds: Boolean = true,
       /** Runaway-conversation guard (Fold.fold maxTurns): > 0 keeps only
         * the maxTurns lowest-turn_idx turns per conversation before the
         * fold, bounding the per-conversation aggregation buffer a
@@ -70,26 +62,25 @@ object Pipeline {
       labeledRecords: DataFrame,
       clusters: DataFrame,
       metrics: DataFrame,
+      /** The run's OWN folded records (piiCols shape) and newly found
+        * matches — what an append-only store (LinkageStream's delta logs)
+        * writes per batch, O(new) rows where `records`/`matchedPairs` are
+        * the O(corpus) cumulative views of an incremental run. On a full
+        * run the delta is the result itself. */
+      deltaRecords: DataFrame,
+      deltaMatches: DataFrame,
       /** Internal cache handles (records/scored/CC labels). The library
         * persists exactly these during a run; callers release them when
         * done with the Result's DataFrames via [[unpersist]] — the round-2
         * API gave callers no handle and leaked them for the session. */
-      cached: Seq[DataFrame] = Nil,
+      cached: Seq[DataFrame],
       /** The run-unique auto-bucketed records table, when the auto path
         * wrote one. Dropped by [[unpersist]] — run-unique names never
         * overwrite each other, so without the drop every auto-bucketed
         * run would leak a full records copy into the warehouse.
         * User-named bucketedRecords tables are caller-owned and never
         * dropped here. */
-      autoBucketTable: Option[String] = None,
-      /** Incremental runs only: the increment's OWN folded records
-        * (piiCols shape) and newly found matches — what an append-only
-        * store (LinkageStream's delta logs) writes per batch, O(new)
-        * rows where `records`/`matchedPairs` are the O(corpus)
-        * cumulative views. None on full runs (the full result IS the
-        * delta there). */
-      deltaRecords: Option[DataFrame] = None,
-      deltaMatches: Option[DataFrame] = None) {
+      autoBucketTable: Option[String] = None) {
     def unpersist(): Unit = {
       cached.foreach(_.unpersist(false))
       autoBucketTable.foreach(t =>
@@ -107,10 +98,15 @@ object Pipeline {
   val piiCols: Seq[String] = Seq("conv_id", "given_name", "family_name",
     "DOB", "sex", "phone_number", "household_zip", "addr")
 
+  private val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+
+  /** Blocking passes: exact mode blocks on [zip, full text]. */
+  private def passes(cfg: Config): Seq[Blocking.Pass] =
+    if (cfg.exactAddresses) Blocking.exactPasses else Blocking.defaultPasses
+
   def run(spark: SparkSession, transcripts: DataFrame,
           cfg: Config = Config()): Result = {
-    val records = Fold.fold(transcripts, cfg.maxTurns)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val records = Fold.fold(transcripts, cfg.maxTurns).persist(lvl)
     val nRecords = records.count() // materializes the persist
 
     // shuffle-free attribute side: write the folded records once, bucketed
@@ -138,36 +134,17 @@ object Pipeline {
       case None => (records, None)
     }
 
-    val passes = if (cfg.exactAddresses) Blocking.exactPasses else cfg.passes
     val pairs = cfg.pairsFile match {
       case Some(path) => loadPairs(spark, path)
-      case None => Candidates.candidates(attrSide, passes, cfg.candidates)
+      case None => Candidates.candidates(attrSide, passes(cfg))
     }
-    val (scored, matched, scoredHandle) =
-      if (cfg.pairsFile.isDefined || cfg.exactAddresses) {
-        // exact mode: candidate links are already all pairs with equal
-        // [zip, address] (matching.py:333–335) — no similarity scoring
-        (pairs, pairs, Nil)
-      } else {
-        val sc = Scoring.scorePairs(attrSide, pairs)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        (sc, Scoring.matches(sc), Seq(sc))
-      }
-
-    val (labeled, labels) = clusterAndLabel(spark, records, matched, cfg)
-    val clustersDf = Output.clusters(labeled)
-
-    val metrics = metricsDf(spark, Seq(
-      ("records", nRecords),
-      ("candidate_pairs", pairs.count()),
-      ("scored_pairs_past_addr_prefilter", scored.count()),
-      ("matched_pairs", matched.count()),
-      ("clusters", clustersDf.count())))
-    cfg.metricsPath.foreach(p => TableIO.write(metrics, p))
-
-    Result(records, pairs, scored, matched, labeled, clustersDf, metrics,
-      cached = Seq(records) ++ scoredHandle ++ Seq(labels),
-      autoBucketTable = autoTable)
+    link(spark, cfg, records, attrSide, pairs, None,
+      records.select(piiCols.map(col): _*), Seq(records), autoTable) {
+      scored => Seq(
+        ("records", nRecords),
+        ("candidate_pairs", pairs.count()),
+        ("scored_pairs_past_addr_prefilter", scored.count()))
+    }
   }
 
   /** --pairsfile loader (households.py:92–93): `.csv` is the reference's
@@ -190,30 +167,51 @@ object Pipeline {
       p.select("id_a", "id_b")
     }
 
-  /** CC over the matched pairs + label every record (singletons keep
-    * their own id). Node ids are xxhash64(conv_id) by default or the raw
-    * conv_id strings (cfg.hashNodeIds=false, the >10⁹-records setting) —
-    * either way the human-readable cluster id is min(conv_id). Returns
-    * (labeled records, labels cache handle). */
-  private def clusterAndLabel(spark: SparkSession, records: DataFrame,
-                              matched: DataFrame, cfg: Config)
-      : (DataFrame, DataFrame) = {
-    val (withNode, edges) =
-      if (cfg.hashNodeIds)
-        (records.withColumn("node_id", xxhash64(col("conv_id"))),
-          matched.select(xxhash64(col("id_a")).as("a"),
-            xxhash64(col("id_b")).as("b")))
-      else
-        (records.withColumn("node_id", col("conv_id")),
-          matched.select(col("id_a").as("a"), col("id_b").as("b")))
-    val labels = Cluster.connectedComponents(spark, edges, cfg.ccOptions)
-    val labeledByNode = Cluster.labelRecords(withNode, labels)
-    // human-readable cluster id: min conv_id in the cluster
+  /** The linkage tail both entry points share, everything after the
+    * candidate pairs: score them (exact mode and a pairs file link the
+    * candidates as they are, matching.py:333–335), union `previous`
+    * matches, CC over xxhash64(conv_id) node ids (collision odds n²/2⁶⁴)
+    * with singletons keeping their own id, label every record with its
+    * cluster's min(conv_id), and count. `counts` supplies the caller's
+    * leading metric rows given the scored pairs; it runs after CC,
+    * followed by matched_pairs and clusters. */
+  private def link(spark: SparkSession, cfg: Config, records: DataFrame,
+                   attrSide: DataFrame, pairs: DataFrame,
+                   previous: Option[DataFrame], deltaRecords: DataFrame,
+                   cached: Seq[DataFrame], autoTable: Option[String])
+                  (counts: DataFrame => Seq[(String, Long)]): Result = {
+    val (scored, newMatches, scoredHandle) =
+      if (cfg.pairsFile.isDefined || cfg.exactAddresses) (pairs, pairs, Nil)
+      else {
+        val sc = Scoring.scorePairs(attrSide, pairs).persist(lvl)
+        (sc, Scoring.matches(sc), Seq(sc))
+      }
+    // no overlap to dedup across the union in practice — incremental
+    // candidates always touch a new record, previous matches never do —
+    // but keep the belt: a caller-supplied previousMatches overlapping
+    // the increment must not double-count
+    val matched = previous.fold(newMatches)(
+      _.unionByName(newMatches).dropDuplicates("id_a", "id_b"))
+
+    val labels = Cluster.connectedComponents(spark,
+      matched.select(xxhash64(col("id_a")).as("a"),
+        xxhash64(col("id_b")).as("b")), cfg.ccOptions)
+    val labeledByNode = Cluster.labelRecords(
+      records.withColumn("node_id", xxhash64(col("conv_id"))), labels)
     val clusterName = labeledByNode.groupBy(col("cluster_id"))
       .agg(min(col("conv_id")).as("cluster_key"))
     val labeled = labeledByNode.join(clusterName, Seq("cluster_id"))
       .drop("cluster_id").withColumnRenamed("cluster_key", "cluster_id")
-    (labeled, labels)
+    val clustersDf = Output.clusters(labeled)
+
+    import spark.implicits._
+    val metrics = (counts(scored) ++ Seq(
+      ("matched_pairs", matched.count()),
+      ("clusters", clustersDf.count()))).toDF("metric", "value")
+
+    Result(records, pairs, scored, matched, labeled, clustersDf, metrics,
+      deltaRecords, newMatches, cached ++ scoredHandle ++ Seq(labels),
+      autoTable)
   }
 
   /** Incremental linkage — the daily-increment path a 100-TB deployment
@@ -222,7 +220,9 @@ object Pipeline {
     * the union of previous matches and new matches. Old-old pairs are
     * never refolded or rescored (scoring is deterministic, so their
     * matches are `previousMatches` verbatim); the whole increment costs
-    * O(new × blocked-neighborhood), not O(corpus²).
+    * O(new × blocked-neighborhood), not O(corpus²). Exact mode links the
+    * new exact-blocked pairs unscored, like a full exact run; the
+    * full-run-only modes (pairsFile, bucketedRecords) are refused.
     *
     * Equivalence: labels equal a full run over the combined corpus, with
     * one documented divergence — a block that crosses the 2% cap only
@@ -240,47 +240,24 @@ object Pipeline {
   def incremental(spark: SparkSession, existingRecords: DataFrame,
                   previousMatches: DataFrame, newTranscripts: DataFrame,
                   cfg: Config = Config()): Result = {
+    require(cfg.pairsFile.isEmpty && cfg.bucketedRecords.isEmpty,
+      "pairsFile/bucketedRecords are full-run-only modes: the incremental " +
+        "path neither bypasses blocking nor buckets the attribute side")
     val newRecords = Fold.fold(newTranscripts, cfg.maxTurns)
       .select(piiCols.map(col): _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(lvl)
     val all = existingRecords.select(piiCols.map(col): _*)
       .unionByName(newRecords)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(lvl)
 
-    val passes = if (cfg.exactAddresses) Blocking.exactPasses else cfg.passes
-    val pairs = Candidates.incrementalCandidates(all, newRecords, passes,
-      cfg.candidates)
-    val scored = Scoring.scorePairs(all, pairs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val newMatches = Scoring.matches(scored)
-    // no overlap to dedup across the union in practice — incremental
-    // candidates always touch a new record, previous matches never do —
-    // but keep the belt: a caller-supplied previousMatches overlapping
-    // the increment must not double-count
-    val matched = previousMatches
-      .unionByName(newMatches)
-      .dropDuplicates("id_a", "id_b")
-
-    val (labeled, labels) = clusterAndLabel(spark, all, matched, cfg)
-    val clustersDf = Output.clusters(labeled)
-
-    val metrics = metricsDf(spark, Seq(
-      ("new_records", newRecords.count()),
-      ("records", all.count()),
-      ("incremental_candidate_pairs", pairs.count()),
-      ("matched_pairs", matched.count()),
-      ("clusters", clustersDf.count())))
-    cfg.metricsPath.foreach(p => TableIO.write(metrics, p))
-
-    Result(all, pairs, scored, matched, labeled, clustersDf, metrics,
-      cached = Seq(newRecords, all, scored, labels),
-      deltaRecords = Some(newRecords), deltaMatches = Some(newMatches))
-  }
-
-  private def metricsDf(spark: SparkSession,
-                        rows: Seq[(String, Long)]): DataFrame = {
-    import spark.implicits._
-    rows.toDF("metric", "value")
+    val pairs = Candidates.incrementalCandidates(all, newRecords, passes(cfg))
+    link(spark, cfg, all, all, pairs, Some(previousMatches), newRecords,
+      Seq(newRecords, all), None) {
+      _ => Seq(
+        ("new_records", newRecords.count()),
+        ("records", all.count()),
+        ("incremental_candidate_pairs", pairs.count()))
+    }
   }
 
   /** Pairwise P/R/F1 vs an answer key, restricted to labeled pairs at the

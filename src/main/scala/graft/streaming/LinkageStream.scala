@@ -81,14 +81,13 @@ object LinkageStream {
   def linkBatch(batch: DataFrame, batchId: Long, storeDir: String,
                 cfg: Pipeline.Config = Pipeline.Config()): Boolean = {
     // the sink runs Pipeline.run for the FIRST batch and incremental for
-    // the rest — modes that only exist on the full-run path would make
-    // matching semantics depend on arrival batch (exactAddresses'
-    // no-scoring contract, pairsFile bypass, bucketed attr side), so
-    // refuse them rather than silently diverge
+    // the rest — pairsFile and bucketedRecords exist only on the full-run
+    // path, and exact mode has no stream-equivalence spec yet (a trigger
+    // sequence must provably equal one exact full run), so all three are
+    // refused rather than left to make matching depend on arrival batch
     require(!cfg.exactAddresses && cfg.pairsFile.isEmpty &&
       cfg.bucketedRecords.isEmpty,
-      "exactAddresses/pairsFile/bucketedRecords are full-run-only modes " +
-        "the incremental path does not honor — unsupported in the " +
+      "exactAddresses/pairsFile/bucketedRecords are unsupported in the " +
         "continuous sink")
     val spark = batch.sparkSession
     val st = readState(spark, storeDir)
@@ -112,18 +111,13 @@ object LinkageStream {
           readLog(spark, s"$storeDir/matches_log", s.batch), batch, cfg),
           1 - s.gen)
     }
-    // delta rows for the logs: the increment's own records/new matches;
-    // a FIRST batch's full result IS its delta. Both paths project to
-    // the common piiCols schema (the full run's Fold output is wider —
-    // ts_min/ts_max — and the log schema must not depend on arrival
-    // order).
-    val deltaRecords = result.deltaRecords.getOrElse(result.records)
-      .select(Pipeline.piiCols.map(col): _*)
-    val deltaMatches = result.deltaMatches.getOrElse(result.matchedPairs)
-    // idempotent per-batch partitions: a replay overwrites its own dirs
-    deltaRecords.write.mode("overwrite")
+    // delta rows for the logs: the batch's own records (piiCols on both
+    // paths, so the log schema does not depend on arrival order) and new
+    // matches; idempotent per-batch partitions: a replay overwrites its
+    // own dirs
+    result.deltaRecords.write.mode("overwrite")
       .parquet(s"$storeDir/records_log/batch=$batchId")
-    deltaMatches.write.mode("overwrite")
+    result.deltaMatches.write.mode("overwrite")
       .parquet(s"$storeDir/matches_log/batch=$batchId")
     // new partition dirs dodge the self-overwrite class, but the session
     // FileStatusCache may still hold the roots' pre-append listings

@@ -72,6 +72,13 @@ class CacheLifecycleSpec extends AnyFunSuite with SparkFixture {
       SynthTranscripts.Config(seed = 7L, nConvs = 120, days = 5)).toDF
     val result = Pipeline.run(spark, transcripts)
     result.clusters.collect()
+    // the incremental entry point builds its handles in the same tail
+    val inc = Pipeline.incremental(spark, result.records,
+      result.matchedPairs, SynthTranscripts.transcripts(spark,
+        SynthTranscripts.Config(seed = 8L, nConvs = 40, days = 5)).toDF
+        .withColumn("conv_id", concat(lit("n"), col("conv_id"))))
+    inc.clusters.collect()
+    inc.unpersist()
     result.unpersist()
     assert(persisted == 0)
   }

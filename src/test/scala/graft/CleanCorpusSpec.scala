@@ -31,13 +31,21 @@ class CleanCorpusSpec extends AnyFunSuite with SparkFixture {
 
   test("clean(): stagewise survivors and deterministic keep policy") {
     spark.catalog.clearCache() // isolate the strand-check from prior suites
-    val (cleaned, counts) = CleanCorpus.clean(corpus,
+    val (cleaned, counts, exactIds) = CleanCorpus.clean(corpus,
       CleanCorpus.Config(
         lang = Some("en"), minQuality = 0.5,
         minhash = Dedup.MinHashConfig(jaccardThreshold = 0.6, bands = 32)))
+    // both handles come back fully cached: the exact ids by the action
+    // that counted the exact stage, not by a pass of their own
+    assert(spark.sparkContext.getRDDStorageInfo
+      .count(i => i.numCachedPartitions == i.numPartitions) == 2)
     val ids = cleaned.select("doc_id").collect().map(_.getLong(0)).toSet
     // 1 drops as exact dup, 3 as near-dup, 4 as junk, 5 as German
     assert(ids == Set(0L, 2L, 6L), s"survivors: $ids")
+    // the exact stage's survivors, ids only: every doc but the exact dup
+    assert(exactIds.columns.toSeq == Seq("doc_id"))
+    assert(exactIds.collect().map(_.getLong(0)).toSet ==
+      Set(0L, 2L, 3L, 4L, 5L, 6L))
     assert(counts.input == 7)
     assert(counts.afterExact == 6)     // -1 (exact dup)
     assert(counts.afterNearDup == 5)   // -3 (near dup)
@@ -46,6 +54,7 @@ class CleanCorpusSpec extends AnyFunSuite with SparkFixture {
     // quality features ride along on the survivors
     assert(cleaned.columns.contains("quality_score"))
     cleaned.unpersist()
+    exactIds.unpersist()
     // interior caches released
     assert(spark.sparkContext.getPersistentRDDs.isEmpty,
       "clean() must not strand cached blocks")
@@ -64,7 +73,7 @@ class CleanCorpusSpec extends AnyFunSuite with SparkFixture {
     ).toDF("doc_id", "text")
     val bench = Seq((100L, "over the lazy dog"))
       .toDF("bench_id", "text")
-    val (cleaned, counts) = CleanCorpus.clean(docs,
+    val (cleaned, counts, exactIds) = CleanCorpus.clean(docs,
       CleanCorpus.Config(
         lang = Some("en"), minQuality = 0.5,
         minhash = Dedup.MinHashConfig(jaccardThreshold = 0.6, bands = 32),
@@ -85,6 +94,7 @@ class CleanCorpusSpec extends AnyFunSuite with SparkFixture {
       counts.toJson.contains("\"after_repetition\":2") &&
       counts.toJson.contains("\"redacted_docs\":1"))
     cleaned.unpersist()
+    exactIds.unpersist()
     assert(spark.sparkContext.getPersistentRDDs.isEmpty,
       "optional stages must not strand cached blocks")
   }

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.linkage.Cluster
 
@@ -64,19 +66,26 @@ class ClusterSpec extends AnyFunSuite with SparkFixture {
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(Seq("c2", "c3", "c4").forall(labels(_) == "c1"))
     assert(labels("x11") == "x10")
-    // and through the Pipeline config switch: conv_id-string nodes give
-    // the same clusters as the default hashed-id path
+    // and over real matched pairs: conv_id-string nodes give the same
+    // record clusters as the xxhash64 node ids Pipeline uses
     val t = linkage.SynthTranscripts.transcripts(spark,
       linkage.SynthTranscripts.Config(seed = 11L, nConvs = 150, days = 5)).toDF
-    val hashed = linkage.Pipeline.run(spark, t)
-    val strings = linkage.Pipeline.run(spark, t,
-      linkage.Pipeline.Config(hashNodeIds = false))
-    val a = hashed.labeledRecords.select("conv_id", "cluster_id")
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    val b = strings.labeledRecords.select("conv_id", "cluster_id")
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(a == b)
-    hashed.unpersist(); strings.unpersist()
+    val run = linkage.Pipeline.run(spark, t)
+    def clusters(node: Column => Column): Set[Set[String]] = {
+      val labels = Cluster.connectedComponents(spark, run.matchedPairs
+        .select(node(col("id_a")).as("a"), node(col("id_b")).as("b")))
+      val members = Cluster.labelRecords(
+          run.records.select(col("conv_id"), node(col("conv_id")).as("node_id")),
+          labels)
+        .groupBy("cluster_id").agg(collect_set(col("conv_id")))
+        .collect().map(_.getSeq[String](1).toSet).toSet
+      labels.unpersist()
+      members
+    }
+    val hashed = clusters(xxhash64(_))
+    assert(hashed.exists(_.size > 1), "no multi-record cluster to compare")
+    assert(clusters(identity) == hashed)
+    run.unpersist()
   }
 
   test("resume from checkpoint reproduces identical labels") {

@@ -126,10 +126,10 @@ class IncrementalDedupSpec extends AnyFunSuite with SparkFixture {
       maxDupNgramFrac = Some(0.5), redactPii = true)
     val all = d1.unionByName(p2).unionByName(d3)
 
-    val (full, fullCounts) = CleanCorpus.clean(all, ccfg)
+    val (full, fullCounts, fullExact) = CleanCorpus.clean(all, ccfg)
     val fullRows = full.select("doc_id", "text").collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
-    full.unpersist()
+    full.unpersist(); fullExact.unpersist()
     assert(fullCounts.afterDecontaminate.get < fullCounts.afterNearDup,
       "benchmark must contaminate at least one doc")
     assert(fullCounts.redactedDocs.get >= 1L,
@@ -140,10 +140,9 @@ class IncrementalDedupSpec extends AnyFunSuite with SparkFixture {
     // (the CLI path breaks it by writing parquet) — without it the
     // increment-2 plan tree is big enough that merely RENDERING its
     // explain string OOMs the test JVM
-    val (c1, _) = CleanCorpus.clean(d1, ccfg)
-    val exact1 = d1.join(Dedup.exact(d1)
-      .filter(col("doc_id") === col("keeper")).select("doc_id"),
-      Seq("doc_id"), "left_semi").localCheckpoint()
+    val (c1, _, ids1) = CleanCorpus.clean(d1, ccfg)
+    val exact1 = d1.join(ids1, Seq("doc_id"), "left_semi").localCheckpoint()
+    ids1.unpersist()
     val (c2, _, e2) = CleanCorpus.cleanIncremental(exact1, p2, ccfg)
     val exact12 = exact1.unionByName(e2.select("doc_id", "text"))
       .localCheckpoint()
@@ -172,10 +171,11 @@ class IncrementalDedupSpec extends AnyFunSuite with SparkFixture {
       minhash = cfg.copy(jaccardThreshold = 0.6))
     val all123 = d1.unionByName(d2).unionByName(d3)
 
-    val (fullCleaned, fullCounts) = CleanCorpus.clean(all123, ccfg)
+    val (fullCleaned, fullCounts, fullExact) = CleanCorpus.clean(all123, ccfg)
     val fullIds = fullCleaned.select("doc_id").collect()
       .map(_.getLong(0)).toSet
-    fullCleaned.unpersist()
+    val fullExactIds = fullExact.collect().map(_.getLong(0)).toSet
+    fullCleaned.unpersist(); fullExact.unpersist()
 
     val tmp = java.nio.file.Files.createTempDirectory("cleaninc").toString
     Seq(d1, d2, d3).zipWithIndex.foreach { case (df, i) =>
@@ -201,10 +201,11 @@ class IncrementalDedupSpec extends AnyFunSuite with SparkFixture {
         .collect().map(_.getLong(0))).toSet
     // full clean() runs with lang=Some("en") by default in Config — the
     // CLI runs above pinned lang none both sides, so compare none-vs-none
-    val (fullNone, _) = CleanCorpus.clean(all123, ccfg.copy(lang = None))
+    val (fullNone, _, noneExact) =
+      CleanCorpus.clean(all123, ccfg.copy(lang = None))
     val fullNoneIds = fullNone.select("doc_id").collect()
       .map(_.getLong(0)).toSet
-    fullNone.unpersist()
+    fullNone.unpersist(); noneExact.unpersist()
     assert(incIds == fullNoneIds,
       s"missing=${fullNoneIds -- incIds} extra=${incIds -- fullNoneIds}")
 
@@ -214,6 +215,13 @@ class IncrementalDedupSpec extends AnyFunSuite with SparkFixture {
       .collect().map(_.getLong(0)).toSet
     assert(!exactIds.contains(2500L), "exact dup must not survive")
     assert(exactIds.contains(2501L), "junk doc survives EXACT stage")
+    // and equals one full run's exact stage over all three slices
+    assert(exactIds == fullExactIds)
+    // full mode writes the same ids its own exact stage kept
+    val exact1Ids = spark.read.parquet(s"$tmp/out1/exact_survivor_ids")
+      .collect().map(_.getLong(0)).toSet
+    val d1Ids = d1.select("doc_id").collect().map(_.getLong(0)).toSet
+    assert(exact1Ids == fullExactIds.intersect(d1Ids))
 
     // id-discipline violation is refused loudly
     val e = intercept[IllegalArgumentException] {

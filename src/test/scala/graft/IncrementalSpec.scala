@@ -87,4 +87,54 @@ class IncrementalSpec extends AnyFunSuite with SparkFixture {
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(fromStream == expected)
   }
+
+  test("exact mode: incremental(T1 then +T2) == exact full(T1 ∪ T2)") {
+    import spark.implicits._
+    val exact = Pipeline.Config(exactAddresses = true)
+    val synth = SynthTranscripts.transcripts(spark,
+      SynthTranscripts.Config(seed = 5L, nConvs = 200, typoProb = 0.0)).toDF
+    // one [zip, full text] block across the increment boundary whose two
+    // records differ in family name (first user turn) and phone (tool
+    // signature): exact mode links them unscored; the fuzzy score (addr
+    // 1.0, family name and phone far apart) stays below 0.85
+    val ts = java.sql.Timestamp.valueOf("2025-03-01 10:00:00")
+    def planted(id: String, roles: Seq[String], tool: String) =
+      roles.zip(Seq("kkkk", "mmmm nnnn", "bbbb")).zipWithIndex.map {
+        case ((role, text), i) =>
+          (id, i, role, text, if (role == "tool") tool else "", ts)
+      }.toDF("conv_id", "turn_idx", "role", "text", "tool", "ts")
+    val p1 = planted("p1", Seq("user", "tool", "assistant"), "search")
+    val p2 = planted("p2", Seq("assistant", "tool", "user"), "weather")
+    val inT2 = pmod(xxhash64(col("conv_id")), lit(3)) === 0
+    val t1 = synth.filter(!inT2).unionByName(p1)
+    val t2 = synth.filter(inT2).unionByName(p2)
+
+    val full = Pipeline.run(spark, t1.unionByName(t2), exact)
+    val first = Pipeline.run(spark, t1, exact)
+    val inc = Pipeline.incremental(spark,
+      first.records, first.matchedPairs, t2, exact)
+    val a = full.labeledRecords.select("conv_id", "cluster_id")
+      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    val b = inc.labeledRecords.select("conv_id", "cluster_id")
+      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    assert(a("p1") == a("p2"), "exact full run must link the planted pair")
+    val diff = a.toSet diff b.toSet
+    assert(diff.isEmpty && a.keySet == b.keySet, s"diff=${diff.take(5)}")
+    Seq(full, first, inc).foreach(_.unpersist())
+  }
+
+  test("incremental refuses the full-run-only modes") {
+    val t = SynthTranscripts.transcripts(spark,
+      SynthTranscripts.Config(seed = 3L, nConvs = 20)).toDF
+    val pairs = intercept[IllegalArgumentException] {
+      Pipeline.incremental(spark, t, t, t,
+        Pipeline.Config(pairsFile = Some("pairs.parquet")))
+    }
+    assert(pairs.getMessage.contains("pairsFile"))
+    val bucketed = intercept[IllegalArgumentException] {
+      Pipeline.incremental(spark, t, t, t,
+        Pipeline.Config(bucketedRecords = Some(("records_bucketed", 4))))
+    }
+    assert(bucketed.getMessage.contains("bucketedRecords"))
+  }
 }

@@ -142,6 +142,19 @@ class PipelineModesSpec extends AnyFunSuite with SparkFixture {
       .select(col("cluster_id"), col("members"))
     assert(ca.exceptAll(cb).isEmpty && cb.exceptAll(ca).isEmpty,
       s"full=${ca.count()} incremental-CLI=${cb.count()}")
+    // the metrics table LinkageMain writes holds the five incremental
+    // rows, and its clusters count is the clusters table's row count and
+    // the metadata's household count
+    val metrics = TableIO.read(spark, s"$base/runAB/metrics").collect()
+      .map(r => r.getString(0) -> r.getLong(1))
+    assert(metrics.map(_._1).sorted.toSeq == Seq("clusters",
+      "incremental_candidate_pairs", "matched_pairs", "new_records",
+      "records"))
+    val nClusters = metrics.toMap.apply("clusters")
+    assert(nClusters == cb.count())
+    assert(Extract.readMetadata(spark,
+      s"$base/runAB/households_metadata.json")("number_of_households") ==
+      nClusters.toString)
     full.unpersist()
     all.unpersist()
     // in-place append is the self-overwrite hazard class — refused

@@ -37,6 +37,9 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
   private lazy val transcripts = local(SynthTranscripts
     .transcripts(spark, SynthTranscripts.Config(nConvs = 50)).toDF)
   private lazy val records = local(Fold.fold(transcripts))
+  private lazy val mixDocs = local(spark.range(30).select(
+    col("id").as("doc_id"), element_at(array(lit("web"), lit("code"),
+      lit("forum")), (col("id") % 3 + 1).cast("int")).as("source")))
   private lazy val docs = local(spark.range(20).select(
     col("id").as("doc_id"),
     concat(lit("mail a"), col("id"), lit("@x.org or call 555-123-4567"))
@@ -46,8 +49,8 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
   // into every use grows exponentially (a rule-grammar address tagger
   // analyzed to 27,677 nodes for one column and 2.7M once scored, ~87 s
   // to plan one row). Ceilings are ~3x the measured count (333, 372,
-  // 619, 24, 304), so ordinary growth passes and a re-inlining blowup
-  // fails here in seconds.
+  // 619, 24, 304, 21, 56, 7), so ordinary growth passes and a
+  // re-inlining blowup fails here in seconds.
   Seq[(String, () => DataFrame, Long)](
     ("Fold.fold", () => Fold.fold(transcripts), 1000L),
     ("Candidates.candidates",
@@ -58,7 +61,14 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     ("Redact.redactText",
       () => docs.select(graft.data.Redact.redactText(col("text"))), 75L),
     ("TextAnalysis.qualityFeatures",
-      () => graft.data.TextAnalysis.qualityFeatures(docs), 1000L)
+      () => graft.data.TextAnalysis.qualityFeatures(docs), 1000L),
+    ("Mix.sampleByDomain", () => graft.data.Mix.sampleByDomain(mixDocs,
+      Map("code" -> 0.2, "forum" -> 0.05)), 65L),
+    ("Mix.repeatByDomain", () => graft.data.Mix.repeatByDomain(mixDocs,
+      Map("code" -> 2.5, "forum" -> 0.3)), 170L),
+    // Positions hands back an RDD-backed frame, so this counts only the
+    // projection above it
+    ("Mix.epochOrder", () => graft.data.Mix.epochOrder(mixDocs, 1), 25L)
   ).foreach { case (name, df, ceiling) =>
     test(s"analyzed expression nodes stay bounded: $name") {
       val n = planNodes(df())
