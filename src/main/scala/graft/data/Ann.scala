@@ -2,6 +2,7 @@ package graft.data
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.linkage.{Cli, Extract}
 import graft.linkage.expr.{functions => gf}
 
 /** Approximate nearest-neighbor search over an embedding column
@@ -295,7 +296,7 @@ object Ann {
       s"""{"centroid":$i,"vec":[${c.mkString(",")}]}"""
     }.mkString("", "\n", "\n")
     val spark = corpus.sparkSession
-    writeSidecar(spark, s"$path/centroids.json", json)
+    Extract.writeRaw(spark, json, s"$path/centroids.json")
     // config fingerprint: without it an appendToIvfIndex against an index
     // built with different dims/seed/quantizer assigns new vectors with
     // the WRONG geometry and fails silently downstream. dims is the
@@ -303,22 +304,14 @@ object Ann {
     // the DATA's width, which cfg.dims need not match), so the stamp can
     // never reject the index its own writer just produced.
     val dims = centroids.headOption.map(_.length).getOrElse(sized.dims)
-    writeSidecar(spark, s"$path/ivf_meta.json",
+    Extract.writeRaw(spark,
       s"""{"version":$IndexVersion,"nCentroids":${centroids.length},""" +
-        s""""dims":$dims,"seed":${sized.seed}}""" + "\n")
+        s""""dims":$dims,"seed":${sized.seed}}""" + "\n",
+      s"$path/ivf_meta.json")
   }
 
   /** Bumped whenever the cell layout or quantizer semantics change. */
   val IndexVersion = 1
-
-  private[data] def writeSidecar(spark: org.apache.spark.sql.SparkSession,
-                                 file: String, content: String): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(file), spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(new org.apache.hadoop.fs.Path(file), true)
-    out.write(content.getBytes("UTF-8"))
-    out.close()
-  }
 
   /** Load + validate the index fingerprint against the centroid sidecar
     * and (on append) the incoming vectors. Indexes written before the
@@ -466,19 +459,12 @@ object Ann {
   /** Merge numeric fields into ivf_meta.json, preserving the stamp. */
   private def stampMeta(spark: org.apache.spark.sql.SparkSession,
                         path: String, extra: Map[String, String]): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-    val p = new org.apache.hadoop.fs.Path(s"$path/ivf_meta.json")
-    val in = fs.open(p)
-    val txt = scala.io.Source.fromInputStream(in).mkString
-    in.close()
+    val metaPath = s"$path/ivf_meta.json"
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val node = mapper.readTree(txt)
+    val node = mapper.readTree(Cli.readText(spark, metaPath))
       .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
     extra.foreach { case (k, v) => node.put(k, v.toDouble) }
-    val out = fs.create(p, true)
-    out.write((mapper.writeValueAsString(node) + "\n").getBytes("UTF-8"))
-    out.close()
+    Extract.writeRaw(spark, mapper.writeValueAsString(node) + "\n", metaPath)
   }
 
   /** Top-k against a persisted index: only the probed cell partitions

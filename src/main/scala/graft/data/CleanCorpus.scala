@@ -194,15 +194,10 @@ object CleanCorpus {
     * new docs that survived exact dedup — append their ids to the
     * cumulative exact-survivor store for the next increment). The first
     * two mirror [[clean]]; all three DataFrames are caller-owned
-    * (cleaned is persisted — unpersist when done).
-    *
-    * `storePath`: optional NearDupStream v2 signature store over
-    * prevExactSurvivors — switches the near-dup stage's previous-corpus
-    * bucketing to pruned store reads (see IncrementalDedup). */
+    * (cleaned is persisted — unpersist when done). */
   def cleanIncremental(prevExactSurvivors: DataFrame, newDocs: DataFrame,
                        cfg: Config = Config(),
-                       idCol: String = "doc_id", textCol: String = "text",
-                       storePath: Option[String] = None)
+                       idCol: String = "doc_id", textCol: String = "text")
       : (DataFrame, StageCounts, DataFrame) = {
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val nIn = newDocs.count()
@@ -235,7 +230,7 @@ object CleanCorpus {
     //    is always the new side (id discipline), matching the full run's
     //    drop-the-larger policy
     val pairs = IncrementalDedup.incrementalNearDupPairs(
-      prevExactSurvivors, exact, cfg.minhash, idCol, textCol, storePath)
+      prevExactSurvivors, exact, cfg.minhash, idCol, textCol)
     val drops = pairs.select(col("id_b").as(idCol)).distinct()
     val nearDeduped = exact.join(drops, Seq(idCol), "left_anti").persist(lvl)
     val nNear = nearDeduped.count()
@@ -346,11 +341,7 @@ object CleanCorpusMain {
         exactIds.unpersist(blocking = false)
         counts
     }
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(out), spark.sparkContext.hadoopConfiguration)
-    val o = fs.create(new org.apache.hadoop.fs.Path(s"$out/stats.json"), true)
-    o.write(counts.toJson.getBytes("UTF-8"))
-    o.close()
+    graft.linkage.Extract.writeRaw(spark, counts.toJson, s"$out/stats.json")
     println(s"[graft] clean-corpus: ${counts.toJson}")
     counts
   }

@@ -128,16 +128,6 @@ object Dedup {
       maxBucketCap: Long = 20000) {
     /** Is the oversized-bucket guard live at this config? */
     def capOn: Boolean = capRatio < 1.0
-    /** Effective bucket cap for a corpus of n docs; Long.MaxValue = off.
-      * For full-corpus runs prefer the ratio-based [[Dedup.capBuckets]]
-      * overload, which derives n from the bucket relation itself instead
-      * of paying a separate count action — this explicit form exists for
-      * callers whose bucket relation is NOT the whole corpus (the
-      * incremental path's pruned store legs). */
-    def bucketCap(n: Long): Long =
-      if (!capOn) Long.MaxValue
-      else math.min(maxBucketCap,
-        math.max(minBucketCap, (capRatio * n).toLong))
   }
 
   /** Drop (band, bucket) groups holding more than
@@ -165,22 +155,6 @@ object Dedup {
                                 rowsPerDoc: Int,
                                 tag: String): Option[DataFrame] = {
     if (capRatio >= 1.0) return None
-    applyCap(buckets, total => math.min(maxBucketCap,
-      math.max(minBucketCap,
-        (capRatio * (total / math.max(rowsPerDoc, 1))).toLong)), tag)
-  }
-
-  /** Explicit-cap variant for callers whose bucket relation is NOT the
-    * whole corpus (the incremental path joins new-batch buckets against
-    * partition-PRUNED store legs, so deriving |docs| from the relation
-    * would undercount — they size the cap from known corpus counts). */
-  private[graft] def capBuckets(buckets: DataFrame, cap: Long,
-                                tag: String): Option[DataFrame] =
-    if (cap == Long.MaxValue) None
-    else applyCap(buckets, _ => cap, tag)
-
-  private def applyCap(buckets: DataFrame, capOf: Long => Long,
-                       tag: String): Option[DataFrame] = {
     val counts = buckets.groupBy(col("band"), col("bucket"))
       .agg(count(lit(1)).as("n"))
     val head = counts
@@ -188,7 +162,8 @@ object Dedup {
         coalesce(max(col("n")), lit(0L)).as("biggest"))
       .collect().head
     val (total, biggest) = (head.getLong(0), head.getLong(1))
-    val cap = capOf(total)
+    val cap = math.min(maxBucketCap, math.max(minBucketCap,
+      (capRatio * (total / math.max(rowsPerDoc, 1))).toLong))
     if (biggest <= cap) return None
     val over = counts.filter(col("n") > cap)
       .agg(count(lit(1)).as("b"), coalesce(sum(col("n")), lit(0L)).as("r"))

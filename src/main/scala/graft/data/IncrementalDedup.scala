@@ -1,6 +1,6 @@
 package graft.data
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Daily-append near-dup dedup — the dedup family's analog of the
@@ -10,18 +10,9 @@ import org.apache.spark.sql.functions._
   * and verification are deterministic, so the previous run's pairs are
   * final), the exact-Jaccard verify explodes shingles only for new docs
   * plus the old docs candidates actually touch, and connected components
-  * run over previous ∪ new edges.
-  *
-  * Two bucket sources for the PREVIOUS corpus:
-  *  - `storePath = Some(p)`: a NearDupStream v2 bucketed signature store —
-  *    the at-scale path. Only store partitions matching the NEW docs'
-  *    (band, shard) footprint are read (the same pruned-read kernel the
-  *    streaming gate uses), so the increment's IO is O(new footprint),
-  *    not O(corpus). The store must cover exactly `prevDocs` and carry a
-  *    matching minhash config (meta-fingerprint enforced upstream).
-  *  - `storePath = None`: previous buckets are recomputed from
-  *    `prevDocs` — one signature pass over the corpus (linear, no joins),
-  *    still never a corpus × corpus candidate stage.
+  * run over previous ∪ new edges. Previous buckets are recomputed from
+  * `prevDocs` — one signature pass over the corpus (linear, no joins),
+  * never a corpus × corpus candidate stage.
   *
   * Equivalence vs a full recompute has the same one documented divergence
   * as the linkage increment: a (band, bucket) that crosses the hot-bucket
@@ -37,44 +28,22 @@ object IncrementalDedup {
                               cfg: Dedup.MinHashConfig =
                                 Dedup.MinHashConfig(),
                               idCol: String = "doc_id",
-                              textCol: String = "text",
-                              storePath: Option[String] = None,
-                              combinedCount: Option[Long] = None)
+                              textCol: String = "text")
       : DataFrame = {
-    val spark = newDocs.sparkSession
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val newExploded = Dedup.explodedShingles(newDocs, idCol, textCol,
       cfg.shingleSize).persist(lvl)
     val newBuckets = Dedup.lshBuckets(
       Dedup.sigs(newExploded, cfg, idCol), cfg, idCol).persist(lvl)
 
-    val prevBuckets = storePath match {
-      case Some(p) =>
-        val meta = graft.streaming.NearDupStream.readStoreMeta(spark, p)
-          .getOrElse(throw new IllegalStateException(
-            s"no signature store at $p"))
-        require(meta.numHashes == cfg.numHashes && meta.bands == cfg.bands &&
-          meta.shingleSize == cfg.shingleSize && meta.seed == cfg.seed &&
-          meta.oph == cfg.oph,
-          s"minhash config mismatch vs store meta at $p")
-        val touched = newBuckets
-          .select(col("band"),
-            pmod(col("bucket"), lit(meta.shards.toLong)).cast("int")
-              .as("shard"))
-          .distinct().collect().map(r => (r.getInt(0), r.getInt(1))).toSeq
-        graft.streaming.NearDupStream.prunedStore(spark, p, idCol,
-            newDocs.schema(idCol).dataType, touched)
-          .select(col("band"), col("bucket"), col(idCol))
-      case None =>
-        Dedup.lshBuckets(Dedup.sigs(
-          Dedup.explodedShingles(prevDocs, idCol, textCol, cfg.shingleSize),
-          cfg, idCol), cfg, idCol)
-    }
+    val prevBuckets = Dedup.lshBuckets(Dedup.sigs(
+      Dedup.explodedShingles(prevDocs, idCol, textCol, cfg.shingleSize),
+      cfg, idCol), cfg, idCol)
 
-    // hot-bucket cap over the COMBINED relation, sized by the combined
-    // corpus — identical to a full run's cap for every bucket the
-    // increment can touch (a pruned store partition holds ALL rows of
-    // its buckets, so counts there are complete).
+    // hot-bucket cap over the COMBINED relation: `all` is the complete
+    // corpus bucket relation (every doc contributes exactly `bands`
+    // rows), so the ratio capBuckets sizes the cap from the same stats
+    // pass the guard already runs — identical to a full run's cap.
     //
     // r06: localCheckpoint (lazy) instead of persist — `all` is
     // referenced by the stats pass, the candidate join AND (through
@@ -89,22 +58,8 @@ object IncrementalDedup {
       .select(col("band"), col("bucket"), col(idCol))
       .unionByName(newBuckets.select(col("band"), col("bucket"), col(idCol)))
       .localCheckpoint(eager = false)
-    val keptOpt = storePath match {
-      case None =>
-        // storePath=None ⇒ `all` IS the complete corpus bucket relation
-        // (every doc contributes exactly `bands` rows), so the cap's
-        // corpus size is derived from the SAME stats pass the guard
-        // already runs — the r05 shape paid prevDocs.count() +
-        // newDocs.count() (a full column-pruned pass over the previous
-        // corpus) per increment just to size the cap (VERDICT r05).
-        Dedup.capBuckets(all, cfg.capRatio, cfg.minBucketCap,
-          cfg.maxBucketCap, cfg.bands, "minhash-lsh-incremental")
-      case Some(_) =>
-        // pruned store legs undercount the corpus — size from counts the
-        // caller already knows, or pay the two count jobs as before
-        val n = combinedCount.getOrElse(prevDocs.count() + newDocs.count())
-        Dedup.capBuckets(all, cfg.bucketCap(n), "minhash-lsh-incremental")
-    }
+    val keptOpt = Dedup.capBuckets(all, cfg.capRatio, cfg.minBucketCap,
+      cfg.maxBucketCap, cfg.bands, "minhash-lsh-incremental")
     val kept = keptOpt.getOrElse(all)
     // steady state (no bucket over cap): every newBuckets row appears in
     // `all` by construction, so the kept-side semi-join is the identity —
@@ -172,11 +127,10 @@ object IncrementalDedup {
                                  idCol: String = "doc_id",
                                  textCol: String = "text",
                                  ccOptions: graft.linkage.Cluster.Options =
-                                   graft.linkage.Cluster.Options(),
-                                 storePath: Option[String] = None): Result = {
+                                   graft.linkage.Cluster.Options()): Result = {
     val spark = newDocs.sparkSession
     val newPairs = incrementalNearDupPairs(prevDocs, newDocs, cfg, idCol,
-      textCol, storePath)
+      textCol)
     val allPairs = prevPairs.select(col("id_a"), col("id_b"), col("jaccard"))
       .unionByName(newPairs.select(col("id_a"), col("id_b"), col("jaccard")))
       .dropDuplicates("id_a", "id_b")

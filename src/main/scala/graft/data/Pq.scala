@@ -2,6 +2,7 @@ package graft.data
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.linkage.Extract
 import graft.linkage.expr.{functions => gf}
 
 /** Product quantization for embedding ANN at corpus scales where raw
@@ -190,19 +191,20 @@ object Pq {
     val centJson = centroids.zipWithIndex.map { case (c, i) =>
       s"""{"centroid":$i,"vec":[${c.mkString(",")}]}"""
     }.mkString("", "\n", "\n")
-    Ann.writeSidecar(spark, s"$path/centroids.json", centJson)
+    Extract.writeRaw(spark, centJson, s"$path/centroids.json")
     val cbJson = codebooks.zipWithIndex.flatMap { case (cb, m) =>
       cb.zipWithIndex.map { case (v, k) =>
         s"""{"sub":$m,"k":$k,"vec":[${v.mkString(",")}]}"""
       }
     }.mkString("", "\n", "\n")
-    Ann.writeSidecar(spark, s"$path/pq_codebooks.json", cbJson)
+    Extract.writeRaw(spark, cbJson, s"$path/pq_codebooks.json")
     val dims = centroids.headOption.map(_.length).getOrElse(0)
-    Ann.writeSidecar(spark, s"$path/ivfpq_meta.json",
+    Extract.writeRaw(spark,
       s"""{"version":$IndexVersion,"nCentroids":${centroids.length},""" +
         s""""numSubspaces":${codebooks.length},""" +
         s""""codebookSize":${codebooks.headOption.map(_.length).getOrElse(0)},""" +
-        s""""dims":$dims,"seed":${sized.seed},"pqSeed":${pqCfg.seed}}""" + "\n")
+        s""""dims":$dims,"seed":${sized.seed},"pqSeed":${pqCfg.seed}}""" + "\n",
+      s"$path/ivfpq_meta.json")
   }
 
   /** Codebook sidecar reader (driver-side; M·K rows). */

@@ -170,17 +170,11 @@ object Cluster {
     }
 
   private def writeState(spark: SparkSession, dir: String, iter: Int,
-                         sig: (Long, Long)): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(dir), spark.sparkContext.hadoopConfiguration)
-    val p = new org.apache.hadoop.fs.Path(s"$dir/_cc_state.json")
-    val out = fs.create(p, true)
-    out.write(
-      (s"""{"last_completed_iter": $iter, """ +
-        s""""edges_count": ${sig._1}, "edges_hash": ${sig._2}}""")
-        .getBytes("UTF-8"))
-    out.close()
-  }
+                         sig: (Long, Long)): Unit =
+    Extract.writeRaw(spark,
+      s"""{"last_completed_iter": $iter, """ +
+        s""""edges_count": ${sig._1}, "edges_hash": ${sig._2}}""",
+      s"$dir/_cc_state.json")
 
   private def stateField(txt: String, key: String): Option[Long] =
     (""""""" + key + """"\s*:\s*(-?\d+)""").r
@@ -197,9 +191,7 @@ object Cluster {
       new java.net.URI(dir), spark.sparkContext.hadoopConfiguration)
     val statePath = new org.apache.hadoop.fs.Path(s"$dir/_cc_state.json")
     if (fs.exists(statePath)) {
-      val in = fs.open(statePath)
-      val txt = scala.io.Source.fromInputStream(in).mkString
-      in.close()
+      val txt = Cli.readText(spark, statePath.toString)
       val iter = stateField(txt, "last_completed_iter")
         .map(_.toInt).getOrElse(-1)
       val sigMatches =

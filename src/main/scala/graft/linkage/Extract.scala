@@ -89,11 +89,7 @@ object Extract {
     * sentinels, which behave identically). */
   def readTranslationConf(spark: SparkSession,
                           path: String): TranslationConfig = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(new org.apache.hadoop.fs.Path(path))
-    val txt = scala.io.Source.fromInputStream(in).mkString
-    in.close()
+    val txt = Cli.readText(spark, path)
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     val root = mapper.readTree(txt)
     val tm = root.path("translation_map")
@@ -301,11 +297,7 @@ object Extract {
   }
 
   def readMetadata(spark: SparkSession, path: String): Map[String, String] = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(new org.apache.hadoop.fs.Path(path))
-    val txt = scala.io.Source.fromInputStream(in).mkString
-    in.close()
+    val txt = Cli.readText(spark, path)
     """"([^"]+)"\s*:\s*"([^"]*)"""".r.findAllMatchIn(txt)
       .map(m => m.group(1) -> m.group(2)).toMap
   }

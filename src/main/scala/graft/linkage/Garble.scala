@@ -200,11 +200,7 @@ object Garble {
     * "hashType": "blakeHash"} (the anonlink-schema analog the multi-schema
     * flow iterates over). */
   def readSchema(spark: SparkSession, path: String): ClkSchema = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(new org.apache.hadoop.fs.Path(path))
-    val txt = scala.io.Source.fromInputStream(in).mkString
-    in.close()
+    val txt = Cli.readText(spark, path)
     val fields = """"fields"\s*:\s*\[([^\]]*)\]""".r
       .findFirstMatchIn(txt).map(_.group(1)).getOrElse("")
       .split(",").map(_.trim.stripPrefix("\"").stripSuffix("\""))

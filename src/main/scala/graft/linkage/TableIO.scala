@@ -100,10 +100,7 @@ object TableIO {
       s"""{"row_count": $count, "num_files": ${files.size},
          |"schema": "$schemaJson",
          |"files": $filesJson}""".stripMargin
-    val out = fs.create(
-      new org.apache.hadoop.fs.Path(s"$path/_snapshot.json"), true)
-    out.write(json.getBytes("UTF-8"))
-    out.close()
+    Extract.writeRaw(spark, json, s"$path/_snapshot.json")
   }
 
   private def listParquet(fs: org.apache.hadoop.fs.FileSystem,

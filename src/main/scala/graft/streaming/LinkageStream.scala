@@ -214,9 +214,7 @@ object LinkageStream {
             else main
     if (!fs.exists(p)) None
     else {
-      val in = fs.open(p)
-      val txt = scala.io.Source.fromInputStream(in).mkString
-      in.close()
+      val txt = graft.linkage.Cli.readText(spark, p.toString)
       val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(txt)
       // fail LOUDLY on a malformed pointer: path(..).asInt() defaults of
       // a partial file would silently point reads at the wrong

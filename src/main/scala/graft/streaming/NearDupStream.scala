@@ -1,10 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.graftbridge.DatasetBridge
 import graft.data.Dedup
+import graft.linkage.{Cli, Extract}
 import graft.linkage.expr.{functions => gf}
 
 /** Streaming NEAR-dup dedup — the LSH leg of the streaming dedup family
@@ -35,9 +36,14 @@ import graft.linkage.expr.{functions => gf}
   * every trigger — O(store) compute + IO per batch). The price is the
   * signature duplicated ×bands in store rows (write amplification);
   * the win is per-trigger IO that scales with the BATCH's bucket
-  * footprint, not the corpus. Size `shards` so bands×shards comfortably
-  * exceeds a typical batch's distinct-bucket count — partitions a batch
-  * does not touch are never opened.
+  * footprint, not the corpus. A new store gets `DefaultShards`; an
+  * existing store keeps the shard count its meta records. Partitions a
+  * batch does not touch are never opened.
+  *
+  * The store holds ADMITTED docs only — a dropped near-dup never lands
+  * in it — so it is the stream's gate state, not a signature index of
+  * the corpus: batch dedup (Dedup, IncrementalDedup) re-signs its input
+  * instead of reading it.
   *
   * Delivery semantics: survivors append to the caller's out path
   * at-least-once (foreachBatch replays after a crash). The store append
@@ -65,8 +71,8 @@ object NearDupStream {
     org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
 
-  private[graft] def readStoreMeta(spark: SparkSession,
-                                       storePath: String): Option[StoreMeta] = {
+  private def readStoreMeta(spark: SparkSession,
+                            storePath: String): Option[StoreMeta] = {
     val fs = hadoopFs(spark, storePath)
     val metaPath =
       new org.apache.hadoop.fs.Path(s"$storePath/_store_meta.json")
@@ -81,9 +87,7 @@ object NearDupStream {
           "the stream at a fresh store dir)")
       None
     } else {
-      val in = fs.open(metaPath)
-      val txt = scala.io.Source.fromInputStream(in).mkString
-      in.close()
+      val txt = Cli.readText(spark, metaPath.toString)
       val n = new com.fasterxml.jackson.databind.ObjectMapper().readTree(txt)
       require(Seq("version", "numHashes", "bands", "shingleSize", "seed",
         "oph", "shards").forall(n.has),
@@ -98,17 +102,14 @@ object NearDupStream {
     }
   }
 
+  /** Meta of a NEW store: the caller's minhash config, DefaultShards. */
   private def writeStoreMeta(spark: SparkSession, storePath: String,
-                             meta: StoreMeta): Unit = {
-    val fs = hadoopFs(spark, storePath)
-    val out = fs.create(
-      new org.apache.hadoop.fs.Path(s"$storePath/_store_meta.json"), true)
-    out.write((s"""{"version":${meta.version},"numHashes":${meta.numHashes},""" +
-      s""""bands":${meta.bands},"shingleSize":${meta.shingleSize},""" +
-      s""""seed":${meta.seed},"oph":${meta.oph},"shards":${meta.shards}}""")
-      .getBytes("UTF-8"))
-    out.close()
-  }
+                             cfg: Dedup.MinHashConfig): Unit =
+    Extract.writeRaw(spark,
+      s"""{"version":$StoreVersion,"numHashes":${cfg.numHashes},""" +
+        s""""bands":${cfg.bands},"shingleSize":${cfg.shingleSize},""" +
+        s""""seed":${cfg.seed},"oph":${cfg.oph},"shards":$DefaultShards}""",
+      s"$storePath/_store_meta.json")
 
   /** A config mismatch against the store silently computes foreign
     * buckets/signatures and re-admits every duplicate — refuse loudly. */
@@ -138,120 +139,94 @@ object NearDupStream {
       StructField("shard", IntegerType)))
   }
 
+  /** Every store row. meta is written BEFORE the first sigs append
+    * (crash-ordering contract) — a replay between the two reads an empty
+    * store, so a missing sigs dir must mean "no rows", not path-not-found
+    * (ADVICE r05: the stream failed on every replay of that window
+    * otherwise). */
+  private def readStore(spark: SparkSession, storePath: String,
+                        idCol: String,
+                        idType: org.apache.spark.sql.types.DataType)
+      : DataFrame = {
+    val schema = storeSchema(idCol, idType)
+    if (hadoopFs(spark, storePath).exists(
+        new org.apache.hadoop.fs.Path(s"$storePath/sigs")))
+      spark.read.schema(schema).parquet(s"$storePath/sigs")
+    else spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+  }
+
+  /** Predicate selecting the given (band, shard) partitions. The terms
+    * form a balanced OR tree: a left-deep reduce at bands×shards terms
+    * (512 at bands=32) overflows the Column→Expression converter's
+    * recursion. */
+  private def inPartitions(parts: Seq[(Int, Int)]): Column = {
+    def orAll(cs: Seq[Column]): Column =
+      if (cs.length == 1) cs.head
+      else { val (a, b) = cs.splitAt(cs.length / 2); orAll(a) || orAll(b) }
+    if (parts.isEmpty) lit(false)
+    else orAll(parts.map { case (b, s) =>
+      col("band") === b && col("shard") === s })
+  }
+
   /** Pruned store view for a batch's (band, shard) footprint. The filter
     * is a disjunction over PARTITION columns only — bounded by
     * bands×shards terms — so the scan lists and reads matched partition
     * directories exclusively (NearDupStreamSpec proves it by planting a
     * poison file in an untouched partition). */
-  private[graft] def prunedStore(spark: SparkSession, storePath: String,
-                                     idCol: String,
-                                     idType: org.apache.spark.sql.types.DataType,
-                                     touched: Seq[(Int, Int)]): DataFrame = {
-    // meta is written BEFORE the first sigs append (crash-ordering
-    // contract) — a replay between the two reads an empty store, so a
-    // missing sigs dir must mean "no rows", not path-not-found (ADVICE
-    // r05: the stream failed on every replay of that window otherwise)
-    if (!sigsDirExists(spark, storePath))
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        storeSchema(idCol, idType))
-    val base = spark.read.schema(storeSchema(idCol, idType))
-      .parquet(s"$storePath/sigs")
-    // balanced OR tree: a left-deep reduce at bands×shards terms (512 at
-    // bands=32) overflows the Column→Expression converter's recursion
-    def orAll(cs: Seq[org.apache.spark.sql.Column]): org.apache.spark.sql.Column =
-      if (cs.length == 1) cs.head
-      else {
-        val (a, b) = cs.splitAt(cs.length / 2)
-        orAll(a) || orAll(b)
-      }
-    if (touched.isEmpty) base.filter(lit(false))
-    else base.filter(orAll(touched.map { case (b, s) =>
-      col("band") === b && col("shard") === s
-    }))
-  }
+  private def prunedStore(spark: SparkSession, storePath: String,
+                          idCol: String,
+                          idType: org.apache.spark.sql.types.DataType,
+                          touched: Seq[(Int, Int)]): DataFrame =
+    readStore(spark, storePath, idCol, idType).filter(inPartitions(touched))
 
   /** All admitted doc ids (deduped): reconcile/audit entry point. */
-  private[streaming] def storedIds(spark: SparkSession, storePath: String,
-                                   idCol: String,
-                                   idType: org.apache.spark.sql.types.DataType =
-                                     org.apache.spark.sql.types.LongType)
+  private def storedIds(spark: SparkSession, storePath: String,
+                        idCol: String,
+                        idType: org.apache.spark.sql.types.DataType)
       : DataFrame = {
-    val meta = readStoreMeta(spark, storePath)
-    require(meta.isDefined, s"no signature store at $storePath")
-    // same meta-before-first-append tolerance as [[prunedStore]]
-    if (!sigsDirExists(spark, storePath))
-      spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField(idCol, idType))))
-        .select(col(idCol))
-    else spark.read.parquet(s"$storePath/sigs").select(col(idCol))
-  }
-
-  private def sigsDirExists(spark: SparkSession, storePath: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(s"$storePath/sigs")
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+    require(readStoreMeta(spark, storePath).isDefined,
+      s"no signature store at $storePath")
+    readStore(spark, storePath, idCol, idType).select(col(idCol))
   }
 
   /** One-time v1 → v2 store migration: flat (doc_id, sig) rows become
     * per-band bucket rows partitioned by (band, shard). */
   def migrateStore(spark: SparkSession, v1Path: String, v2Path: String,
                    cfg: Dedup.MinHashConfig = Dedup.MinHashConfig(oph = true),
-                   idCol: String = "doc_id",
-                   shards: Int = DefaultShards): Unit = {
+                   idCol: String = "doc_id"): Unit = {
     val old = spark.read.parquet(v1Path)
-    writeStoreMeta(spark, v2Path, StoreMeta(StoreVersion, cfg.numHashes,
-      cfg.bands, cfg.shingleSize, cfg.seed, cfg.oph, shards))
-    clusterForWrite(bucketRows(old, cfg, idCol, shards))
-      .write.mode("append").partitionBy("band", "shard")
-      .parquet(s"$v2Path/sigs")
+    writeStoreMeta(spark, v2Path, cfg)
+    appendStore(bucketRows(
+      withShard(Dedup.lshBuckets(old, cfg, idCol), DefaultShards), old, idCol),
+      v2Path)
   }
 
-  /** Bootstrap a v2 store holding EVERY doc's signature — the handle
-    * batch incremental dedup (IncrementalDedup) buckets new docs
-    * against. Contrast [[nearDupBatch]], which stores admitted
-    * (near-dup-free) docs only: an incremental-dedup store must cover
-    * the whole previous corpus, duplicates included, because the
-    * full-recompute it must match generates candidates over all docs. */
-  def buildStore(docs: DataFrame, storePath: String,
-                 cfg: Dedup.MinHashConfig = Dedup.MinHashConfig(),
-                 idCol: String = "doc_id", textCol: String = "text",
-                 shards: Int = DefaultShards): Unit = {
-    val spark = docs.sparkSession
-    require(readStoreMeta(spark, storePath).isEmpty,
-      s"store already exists at $storePath")
-    val sigs = {
-      val exploded = Dedup.explodedShingles(docs, idCol, textCol,
-        cfg.shingleSize)
-      if (cfg.oph) Dedup.minHashSignaturesOPH(exploded, cfg, idCol)
-      else Dedup.minHashSignatures(exploded, cfg, idCol)
-    }
-    writeStoreMeta(spark, storePath, StoreMeta(StoreVersion, cfg.numHashes,
-      cfg.bands, cfg.shingleSize, cfg.seed, cfg.oph, shards))
-    clusterForWrite(bucketRows(sigs, cfg, idCol, shards))
-      .write.mode("append").partitionBy("band", "shard")
-      .parquet(s"$storePath/sigs")
-  }
+  /** (band, bucket) rows gain their store partition: shard = bucket mod
+    * `shards`. */
+  private def withShard(buckets: DataFrame, shards: Int): DataFrame =
+    buckets.withColumn("shard",
+      pmod(col("bucket"), lit(shards.toLong)).cast("int"))
 
-  /** (band, shard, bucket, id, sig) store rows from a signature relation. */
-  private def bucketRows(sigs: DataFrame, cfg: Dedup.MinHashConfig,
-                         idCol: String, shards: Int): DataFrame =
-    Dedup.lshBuckets(sigs, cfg, idCol)
-      .withColumn("shard", pmod(col("bucket"), lit(shards.toLong)).cast("int"))
-      .join(sigs.select(col(idCol), col("sig")), Seq(idCol))
+  /** (band, shard, bucket, id, sig) store rows: sharded bucket rows with
+    * their doc's signature attached. */
+  private def bucketRows(sharded: DataFrame, sigs: DataFrame,
+                        idCol: String): DataFrame =
+    sharded.join(sigs.select(col(idCol), col("sig")), Seq(idCol))
       .select(col("band"), col("shard"), col("bucket"), col(idCol),
         col("sig"))
 
-  /** Cluster append rows by their target partition before the
-    * partitionBy write: without this every writer task emits one file
-    * per (band, shard) value it holds — measured ~10k files PER BATCH at
-    * bands×shards = 256 and 32 shuffle partitions (the small-files
-    * pathology that dominates trigger wall as the store ages). With it,
-    * each (band, shard) lands in exactly one task → at most one file per
-    * touched partition per append. */
-  private def clusterForWrite(rows: DataFrame): DataFrame =
+  /** Append store rows, clustered by their target partition before the
+    * partitionBy write: without the clustering every writer task emits
+    * one file per (band, shard) value it holds — measured ~10k files PER
+    * BATCH at bands×shards = 256 and 32 shuffle partitions (the
+    * small-files pathology that dominates trigger wall as the store
+    * ages). With it, each (band, shard) lands in exactly one task → at
+    * most one file per touched partition per append. */
+  private def appendStore(rows: DataFrame, storePath: String): Unit =
     rows.repartition(col("band"), col("shard"))
+      .write.mode("append").partitionBy("band", "shard")
+      .parquet(s"$storePath/sigs")
 
   /** Per-partition file compaction for the (band, shard) store — run on
     * a schedule for long-lived streams: every append adds at most one
@@ -278,12 +253,8 @@ object NearDupStream {
     } yield (bandDir.getPath.getName.stripPrefix("band=").toInt,
       shardDir.getPath.getName.stripPrefix("shard=").toInt)
     if (over.isEmpty) return 0
-    def orAll(cs: Seq[org.apache.spark.sql.Column]): org.apache.spark.sql.Column =
-      if (cs.length == 1) cs.head
-      else { val (a, b) = cs.splitAt(cs.length / 2); orAll(a) || orAll(b) }
     val rows = spark.read.parquet(s"$storePath/sigs")
-      .filter(orAll(over.map { case (b, s) =>
-        col("band") === b && col("shard") === s }))
+      .filter(inPartitions(over))
       .repartition(col("band"), col("shard"))
       .localCheckpoint()
     val prevMode = spark.conf.get(
@@ -308,26 +279,19 @@ object NearDupStream {
   def nearDupBatch(batch: DataFrame, storePath: String,
                    cfg: Dedup.MinHashConfig =
                      Dedup.MinHashConfig(oph = true),
-                   idCol: String = "doc_id", textCol: String = "text",
-                   shards: Int = DefaultShards): DataFrame = {
+                   idCol: String = "doc_id", textCol: String = "text")
+      : DataFrame = {
     val spark = batch.sparkSession
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val exploded = Dedup.explodedShingles(batch, idCol, textCol,
-      cfg.shingleSize)
-    val sigs =
-      (if (cfg.oph) Dedup.minHashSignaturesOPH(exploded, cfg, idCol)
-       else Dedup.minHashSignatures(exploded, cfg, idCol)).persist(lvl)
+    val sigs = Dedup.sigs(Dedup.explodedShingles(batch, idCol, textCol,
+      cfg.shingleSize), cfg, idCol).persist(lvl)
     sigs.count()
     val idType = batch.schema(idCol).dataType
 
     val meta = readStoreMeta(spark, storePath)
     meta.foreach(requireCompatible(_, cfg))
-    val shardsEff = meta.map(_.shards).getOrElse(shards)
-
-    val batchBuckets = Dedup.lshBuckets(sigs, cfg, idCol)
-      .withColumn("shard",
-        pmod(col("bucket"), lit(shardsEff.toLong)).cast("int"))
-      .persist(lvl)
+    val batchBuckets = withShard(Dedup.lshBuckets(sigs, cfg, idCol),
+      meta.fold(DefaultShards)(_.shards)).persist(lvl)
     // the batch's partition footprint — bounded by bands×shards values
     // however large the batch, so the driver collect stays tiny
     val touched = batchBuckets.select(col("band"), col("shard")).distinct()
@@ -403,17 +367,10 @@ object NearDupStream {
     // meta BEFORE the first data append: a crash between them leaves a
     // valid empty store, whereas data-without-meta would read as a v1
     // layout and refuse to start
-    if (meta.isEmpty)
-      writeStoreMeta(spark, storePath, StoreMeta(StoreVersion,
-        cfg.numHashes, cfg.bands, cfg.shingleSize, cfg.seed, cfg.oph,
-        shardsEff))
-    clusterForWrite(batchBuckets
-        .join(survivors.select(idCol), Seq(idCol), "left_semi")
-        .join(sigs.select(col(idCol), col("sig")), Seq(idCol))
-        .select(col("band"), col("shard"), col("bucket"), col(idCol),
-          col("sig")))
-      .write.mode("append").partitionBy("band", "shard")
-      .parquet(s"$storePath/sigs")
+    if (meta.isEmpty) writeStoreMeta(spark, storePath, cfg)
+    appendStore(bucketRows(
+      batchBuckets.join(survivors.select(idCol), Seq(idCol), "left_semi"),
+      sigs, idCol), storePath)
     spark.catalog.refreshByPath(s"$storePath/sigs")
     sigs.unpersist(blocking = false)
     batchBuckets.unpersist(blocking = false)
@@ -523,9 +480,8 @@ object NearDupStream {
     // docs whose best exact Jaccard never reaches the threshold
     val exploded = Dedup.explodedShingles(corpusP, idCol, textCol,
       cfg.shingleSize).persist(lvl)
-    val sigs = if (cfg.oph) Dedup.minHashSignaturesOPH(exploded, cfg, idCol)
-               else Dedup.minHashSignatures(exploded, cfg, idCol)
-    val buckets = Dedup.lshBuckets(sigs, auditCfg, idCol).persist(lvl)
+    val buckets = Dedup.lshBuckets(Dedup.sigs(exploded, cfg, idCol),
+      auditCfg, idCol).persist(lvl)
     val dB = buckets.join(admittedIds, Seq(idCol), "left_anti")
       .select(col("band"), col("bucket"), col(idCol).as("id_a"))
     val aB = buckets.join(admittedIds, Seq(idCol), "left_semi")
@@ -566,7 +522,7 @@ object NearDupStream {
   *     --store <signature store dir> --output <admitted-docs dir> \
   *     --checkpoint <dir> [--once] [--compact <maxFilesPerPartition>]
   *     [--jaccard 0.7] [--num-hashes 64] [--bands 16]
-  *     [--shingle-size 3] [--seed 42] [--no-oph] [--shards 16]
+  *     [--shingle-size 3] [--seed 42] [--no-oph]
   *
   * The file source picks up parquet files of documents as they land
   * under --source. `--once` drains everything currently available and
@@ -578,7 +534,6 @@ object NearDupStream {
   * The minhash knobs MUST match the store's meta on an existing store
   * (mismatches are refused loudly). */
 object NearDupStreamMain {
-  import graft.linkage.Cli
 
   def main(args: Array[String]): Unit = {
     val opts = Cli.parse(args, flags = Set("once", "no-oph"))
@@ -590,13 +545,7 @@ object NearDupStreamMain {
   def run(spark: SparkSession, opts: Map[String, String]): Unit = {
     import org.apache.spark.sql.types._
     val store = Cli.required(opts, "store")
-    val cfg = Dedup.MinHashConfig(
-      numHashes = opts.getOrElse("num-hashes", "64").toInt,
-      bands = opts.getOrElse("bands", "16").toInt,
-      shingleSize = opts.getOrElse("shingle-size", "3").toInt,
-      jaccardThreshold = opts.getOrElse("jaccard", "0.7").toDouble,
-      seed = opts.getOrElse("seed", "42").toLong,
-      oph = !opts.contains("no-oph"))
+    val cfg = minHashConfig(opts)
     val docs = spark.readStream
       .schema(StructType(Seq(StructField("doc_id", LongType),
         StructField("text", StringType))))
@@ -610,6 +559,17 @@ object NearDupStreamMain {
       println(s"[graft] compacted $rewritten store partitions at $store")
     }
   }
+
+  /** The MinHashConfig flags both near-dup store CLIs accept. */
+  private[streaming] def minHashConfig(opts: Map[String, String])
+      : Dedup.MinHashConfig =
+    Dedup.MinHashConfig(
+      numHashes = opts.getOrElse("num-hashes", "64").toInt,
+      bands = opts.getOrElse("bands", "16").toInt,
+      shingleSize = opts.getOrElse("shingle-size", "3").toInt,
+      jaccardThreshold = opts.getOrElse("jaccard", "0.7").toDouble,
+      seed = opts.getOrElse("seed", "42").toLong,
+      oph = !opts.contains("no-oph"))
 }
 
 /** Batch reconcile CLI over a streaming near-dup signature store:
@@ -627,7 +587,6 @@ object NearDupStreamMain {
   * reconciled (mismatched bands/shingles would silently compute the
   * wrong candidate set and Jaccard domain). */
 object ReconcileMain {
-  import graft.linkage.Cli
 
   def main(args: Array[String]): Unit = {
     val spark = Cli.session("graft-reconcile")
@@ -637,13 +596,7 @@ object ReconcileMain {
 
   def run(spark: SparkSession, opts: Map[String, String]): (Long, Long) = {
     val out = Cli.required(opts, "output")
-    val cfg = Dedup.MinHashConfig(
-      numHashes = opts.getOrElse("num-hashes", "64").toInt,
-      bands = opts.getOrElse("bands", "16").toInt,
-      shingleSize = opts.getOrElse("shingle-size", "3").toInt,
-      jaccardThreshold = opts.getOrElse("jaccard", "0.7").toDouble,
-      seed = opts.getOrElse("seed", "42").toLong,
-      oph = !opts.contains("no-oph"))
+    val cfg = NearDupStreamMain.minHashConfig(opts)
     val corpus = spark.read.parquet(Cli.required(opts, "corpus"))
     val diffs = NearDupStream.reconcileStore(
       Cli.required(opts, "store"), corpus, cfg)

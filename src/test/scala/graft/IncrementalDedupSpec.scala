@@ -91,20 +91,38 @@ class IncrementalDedupSpec extends AnyFunSuite with SparkFixture {
         "point lost its lineage cut (IncrementalDedup localCheckpoints)")
   }
 
-  test("store-backed incremental pairs equal the recompute path") {
-    val store = java.nio.file.Files
-      .createTempDirectory("incdedupstore").toString + "/sigs_store"
-    graft.streaming.NearDupStream.buildStore(d1, store, cfg)
-    val viaStore = IncrementalDedup.incrementalNearDupPairs(
-      d1, d2, cfg, storePath = Some(store))
-    val viaRecompute = IncrementalDedup.incrementalNearDupPairs(d1, d2, cfg)
+  test("incremental hot-bucket cap is sized from the combined corpus") {
+    // 30 identical flood docs on EACH side share every band bucket: 30
+    // rows per bucket stays under the cap (floor lowered to 50 for test
+    // scale) in either slice alone, but the combined 60 exceed it — an
+    // increment that sized the cap from its own slice would admit the
+    // flood pairs a full run drops
+    val capCfg = cfg.copy(minBucketCap = 50)
+    def flood(from: Long) = spark.range(30).select(
+      (col("id") + from).as("doc_id"),
+      lit("flood of identical tokens repeated here").as("text"))
+    val prev = d1.unionByName(flood(5000L))
+    val next = d2.unionByName(flood(6000L))
     def pairSet(df: org.apache.spark.sql.DataFrame) =
       df.select("id_a", "id_b").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val (s, r) = (pairSet(viaStore), pairSet(viaRecompute))
-    assert(s == r, s"missing=${r -- s} extra=${s -- r}")
-    assert(s.nonEmpty, "planted cross-increment pairs must exist")
-    viaStore.unpersist(); viaRecompute.unpersist()
+
+    val inc = IncrementalDedup.incrementalNearDupPairs(prev, next, capCfg)
+    val incPairs = pairSet(inc)
+    assert(!incPairs.exists { case (a, b) => a >= 5000L || b >= 5000L },
+      s"flood pairs must be dropped by the combined-corpus cap: $incPairs")
+    (0 until 10).foreach { i =>
+      assert(incPairs.contains((100L + i, 1100L + i)),
+        s"planted cross-slice pair $i lost to an unrelated cap")
+    }
+
+    val full = Dedup.minHashNearDups(prev.unionByName(next), capCfg)
+    val newIds = next.select("doc_id").collect().map(_.getLong(0)).toSet
+    val fullNew = pairSet(full).filter { case (a, b) =>
+      newIds(a) || newIds(b) }
+    assert(incPairs == fullNew,
+      s"missing=${fullNew -- incPairs} extra=${incPairs -- fullNew}")
+    inc.unpersist(); full.unpersist()
   }
 
   test("incremental == full clean with ALL optional stages on") {
