@@ -1,22 +1,43 @@
 package graft.linkage
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
 
 /** Transitive closure: distributed connected components replacing the
   * reference's driver-side BFS (households.py:152–169; SURVEY.md §2.9).
   *
-  * Algorithm: alternating large-star / small-star (Kiveris et al.,
-  * "Connected Components in MapReduce and Beyond") implemented purely as
-  * DataFrame groupBy/join rounds — no collect_list, so hub nodes never
-  * materialize a neighbor array; skew is absorbed by the aggregation
-  * (partial min) + AQE. Converges in O(log n) rounds.
+  * Algorithm: the hybrid of Kiveris et al., "Connected Components in
+  * MapReduce and Beyond" (SoCC 2014) — star rounds while the graph is
+  * big, then a local finish.
+  *  - Rounds: alternating large-star / small-star, implemented purely as
+  *    DataFrame groupBy/join rounds — no collect_list, so hub nodes never
+  *    materialize a neighbor array; skew is absorbed by the aggregation
+  *    (partial min) + AQE. Each round leaves only (node → smaller
+  *    neighbour) edges; they converge in O(log n) rounds.
+  *  - Local finish: once the edge count that every convergence
+  *    `signature` already returns is at or below [[LocalFinishEdges]],
+  *    one task runs union-find over what is left ([[localFinish]]). The
+  *    finish is the last step of every run; only a graph whose fixpoint
+  *    is still above the ceiling (more than 2²⁰ non-root nodes) reads
+  *    its labels off the star fixpoint instead. Both label a node with its component's
+  *    minimum id, so the labels do not depend on where the switch
+  *    happens (ClusterSpec runs every case both ways).
+  *  - Ceiling sizing: an absolute edge count, sized for one task — not a
+  *    ratio, and not an option. At 2²⁰ random long edges (1.33M nodes,
+  *    local[4]) the finish task ran 2.6–3.1 s next to Spark's 67 MB
+  *    sort buffer; its flat arrays are 50 MB and its boxed ids ~21 MB
+  *    (from the array sizes). The whole CC call took 4.4 s there, and
+  *    pure star rounds on the same graph 60 s.
   *
   * Lineage is truncated each round. With a checkpoint dir the round state
   * is written to reliable storage (`iter_k/` parquet + `_cc_state.json`),
   * so a killed job resumes from the last completed round (north-rule
-  * resumability); without one, localCheckpoint() is used.
+  * resumability); without one, localCheckpoint() is used. The finish
+  * always reads such a round: when no round ran because the input was
+  * already small, the input edge set is first written as round 0, so a
+  * killed finish resumes from it too.
   */
 object Cluster {
 
@@ -24,29 +45,42 @@ object Cluster {
       checkpointDir: Option[String] = None,
       maxIter: Int = 50)
 
+  /** Edge count at or below which CC finishes in one task (see the
+    * object doc for how it is sized). */
+  val LocalFinishEdges: Long = 1L << 20
+
   /** edges: (id_a, id_b), undirected, self-loop-free. The id columns may
-    * be ANY orderable type — longs are the cheap default, but string
-    * conv_ids work unchanged (every per-round op is greatest/least/min/
-    * join/distinct) — the collision-free domain for the >10⁹-records
-    * scale where Pipeline's 64-bit xxhash64(conv_id) ids (collision odds
-    * n²/2⁶⁴) start risking collisions.
-    * Returns (id, cluster_id) for every node APPEARING IN EDGES; callers
-    * attach singletons via [[labelRecords]].
+    * be ANY orderable type whose values compare by value (every atomic
+    * type but binary) — longs are the cheap default, but string conv_ids
+    * work unchanged (every per-round op is greatest/least/min/join/
+    * distinct, and the finish takes its order from Spark's sort) — the
+    * collision-free domain for the >10⁹-records scale where Pipeline's
+    * 64-bit xxhash64(conv_id) ids (collision odds n²/2⁶⁴) start risking
+    * collisions.
+    * Returns (id, cluster_id) for every node APPEARING IN EDGES, labelled
+    * with its component's minimum id; callers attach singletons via
+    * [[labelRecords]].
     *
     * Cache lifecycle: each round is lazily localCheckpoint()'d — the
     * LOGICAL plan of a round references the previous round ~8× (largeStar
     * and smallStar each fan out their input), so without per-round
     * lineage truncation the plan tree grows exponentially and analysis
     * OOMs by round ~10 (measured). The convergence-signature action is
-    * the round's single materializing job (round 2's eager checkpoint +
-    * signature ran two), and the previous round's checkpoint blocks are
-    * released via DatasetBridge as soon as the next is materialized —
-    * round 2's Dataset-level unpersist never freed them, leaking every
-    * round for the session. The returned labels are materialized into a
-    * CacheManager persist (callers unpersist when done) and all round
-    * state is released before returning. */
+    * the round's single materializing job, and the previous round's
+    * checkpoint blocks are released via DatasetBridge as soon as the next
+    * is materialized (a Dataset-level unpersist never frees them). The
+    * returned labels are materialized into a CacheManager persist
+    * (callers unpersist when done) and all round state is released
+    * before returning. */
   def connectedComponents(spark: SparkSession, edges: DataFrame,
-                          opts: Options = Options()): DataFrame = {
+                          opts: Options = Options()): DataFrame =
+    connectedComponents(spark, edges, opts, LocalFinishEdges)
+
+  /** [[connectedComponents]] with the finish ceiling as a parameter: a
+    * test seam (0 = pure star rounds), not an option. */
+  private[graft] def connectedComponents(spark: SparkSession,
+                                         edges: DataFrame, opts: Options,
+                                         finishEdges: Long): DataFrame = {
     // fingerprint of the INPUT edge set, written into _cc_state.json with
     // every round: resuming against a checkpoint dir whose state was
     // computed from different edges must fall back to a fresh init, not
@@ -65,7 +99,7 @@ object Cluster {
     var converged = false
     var iter = startIter
     var prevSig = signature(cur) // materializes the lazy checkpoint
-    while (!converged && iter < opts.maxIter) {
+    while (prevSig._1 > finishEdges && !converged && iter < opts.maxIter) {
       val ls = largeStar(cur)
       val ss = smallStar(ls)
       val next = persistRound(spark, ss, opts, iter, inputSig)
@@ -76,20 +110,86 @@ object Cluster {
       cur = next
       iter += 1
     }
-    require(converged, s"CC did not converge in ${opts.maxIter} rounds")
-    // fixpoint edges are (node -> component-min root); roots map to
-    // selves. At a VERIFIED fixpoint no lo can also appear as a hi:
-    // (a→r) and (r→r') together are not stable under largeStar (N(r)
-    // would re-point a at r'), so the r05 anti-join that guarded the
-    // roots union provably dropped nothing — one join fewer (r06).
-    val nodeToRoot = cur.select(col("hi").as("id"), col("lo").as("cluster_id"))
-    val roots = cur.select(col("lo").as("id")).distinct()
-      .withColumn("cluster_id", col("id"))
-    val labels = nodeToRoot.unionByName(roots)
+    val finish = prevSig._1 <= finishEdges
+    require(finish || converged,
+      s"CC did not converge in ${opts.maxIter} rounds")
+    // with a checkpoint dir the finish reads a persisted round: iter == 0
+    // means no round ran and nothing was resumed, so write the input
+    // edge set as round 0 first
+    if (finish && opts.checkpointDir.isDefined && iter == 0) {
+      val persisted = persistRound(spark, cur, opts, iter, inputSig)
+      org.apache.spark.sql.graftbridge.DatasetBridge.releaseCheckpoint(cur)
+      cur = persisted
+    }
+    val labels = (if (finish) localFinish(cur, prevSig._1.toInt)
+                  else starLabels(cur))
       .persist(StorageLevel.MEMORY_AND_DISK)
     labels.count() // materialize before releasing the final round state
     org.apache.spark.sql.graftbridge.DatasetBridge.releaseCheckpoint(cur)
     labels
+  }
+
+  /** Labels of a star-round FIXPOINT: its edges are (node → component-min
+    * root) and roots map to selves. At a VERIFIED fixpoint no lo can also
+    * appear as a hi: (a→r) and (r→r') together are not stable under
+    * largeStar (N(r) would re-point a at r'), so the r05 anti-join that
+    * guarded the roots union provably dropped nothing (r06). */
+  private def starLabels(fixpoint: DataFrame): DataFrame = {
+    val nodeToRoot = fixpoint.select(col("hi").as("id"),
+      col("lo").as("cluster_id"))
+    val roots = fixpoint.select(col("lo").as("id")).distinct()
+      .withColumn("cluster_id", col("id"))
+    nodeToRoot.unionByName(roots)
+  }
+
+  /** The local finish: union-find over all `nEdges` (hi, lo) edges in one
+    * task, emitting (id, component-min) for every node — exactly what
+    * the star rounds would converge to.
+    *
+    * The order comes from Spark: the task reads its edges sorted by lo
+    * under the id column's own ordering, and numbers nodes densely in
+    * order of first appearance, lo before hi. A component's minimum m is
+    * the lo of every edge it is in, and every edge of the component
+    * without m has a larger lo, so m is the first of its component to be
+    * numbered. Linking every union under the smaller dense index then
+    * keeps m the root. The structure is flat: an open-addressing table
+    * (id slot → dense index) and parent/id arrays indexed by dense id. */
+  private def localFinish(edges: DataFrame, nEdges: Int): DataFrame = {
+    val schema = StructType(Seq(edges.schema("hi").copy(name = "id"),
+      edges.schema("lo").copy(name = "cluster_id")))
+    edges.repartition(1).sortWithinPartitions("lo")
+      .mapPartitions(rows => unionFind(rows, nEdges))(Encoders.row(schema))
+  }
+
+  private def unionFind(rows: Iterator[Row], nEdges: Int): Iterator[Row] = {
+    val maxNodes = 2 * nEdges
+    // power of two ≥ 2·maxNodes: load factor ≤ ½ for linear probing
+    val mask = Integer.highestOneBit(math.max(4 * maxNodes - 1, 1)) - 1
+    val slotId = new Array[AnyRef](mask + 1)
+    val slotIdx = new Array[Int](mask + 1)
+    val ids = new Array[AnyRef](maxNodes)
+    val parent = new Array[Int](maxNodes)
+    var n = 0
+    def indexOf(id: AnyRef): Int = {
+      val h = id.hashCode * 0x9E3779B9
+      var s = (h ^ (h >>> 16)) & mask
+      while (slotId(s) != null && slotId(s) != id) s = (s + 1) & mask
+      if (slotId(s) == null) {
+        slotId(s) = id; slotIdx(s) = n; ids(n) = id; parent(n) = n; n += 1
+      }
+      slotIdx(s)
+    }
+    def find(i: Int): Int = {
+      var x = i
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+      x
+    }
+    rows.foreach { r =>
+      val lo = find(indexOf(r.get(1).asInstanceOf[AnyRef]))
+      val hi = find(indexOf(r.get(0).asInstanceOf[AnyRef]))
+      if (lo < hi) parent(hi) = lo else if (hi < lo) parent(lo) = hi
+    }
+    Iterator.range(0, n).map(i => Row(ids(i), ids(find(i))))
   }
 
   /** Undirected edge set as (hi, lo) with hi > lo, deduped. */

@@ -79,6 +79,8 @@ object LinkageMain {
   def run(spark: SparkSession, opts: Map[String, String]): Unit = {
     val out = opts.getOrElse("output",
       throw new IllegalArgumentException("--output required"))
+    // a bad secret must fail before any input is read or table written
+    opts.get("secret").foreach(Garble.validateSecret)
 
     opts.get("householddef").foreach { defPath =>
       val n = householdDefFlow(spark, defPath, out, opts.get("secret"))
@@ -120,6 +122,14 @@ object LinkageMain {
       case None => Pipeline.run(spark, transcripts, cfg)
     }
 
+    try writeOutputs(spark, opts, out, result)
+    finally result.unpersist() // release the run's internal cache handles
+  }
+
+  /** Every table and file of a linkage run; the clusters are cached, so
+    * each output below reads them without re-running the aggregation. */
+  private def writeOutputs(spark: SparkSession, opts: Map[String, String],
+                           out: String, result: Pipeline.Result): Unit = {
     val metrics = result.metrics.collect()
       .map(r => r.getString(0) -> r.getLong(1))
     TableIO.write(result.metrics, s"$out/metrics")
@@ -148,6 +158,5 @@ object LinkageMain {
     }
     println(s"[graft] linkage complete: " +
       metrics.map { case (k, v) => s"$k=$v" }.mkString(", "))
-    result.unpersist() // release the run's internal cache handles
   }
 }

@@ -168,18 +168,22 @@ object Pipeline {
     }
 
   /** The linkage tail both entry points share, everything after the
-    * candidate pairs: score them (exact mode and a pairs file link the
-    * candidates as they are, matching.py:333–335), union `previous`
+    * candidate pairs: persist them (their count and the scoring or
+    * linking read one copy), score them (exact mode and a pairs file link
+    * the candidates as they are, matching.py:333–335), union `previous`
     * matches, CC over xxhash64(conv_id) node ids (collision odds n²/2⁶⁴)
-    * with singletons keeping their own id, label every record with its
-    * cluster's min(conv_id), and count. `counts` supplies the caller's
-    * leading metric rows given the scored pairs; it runs after CC,
-    * followed by matched_pairs and clusters. */
+    * with singletons keeping their own id, and build the clusters once,
+    * each named by its min(conv_id). `counts` supplies the caller's
+    * leading metric rows given the scored pairs; it runs after CC (so a
+    * count of the pairs reads their cache), followed by matched_pairs and
+    * clusters, whose count materializes the cached clusters every output
+    * then reads. */
   private def link(spark: SparkSession, cfg: Config, records: DataFrame,
                    attrSide: DataFrame, pairs: DataFrame,
                    previous: Option[DataFrame], deltaRecords: DataFrame,
                    cached: Seq[DataFrame], autoTable: Option[String])
                   (counts: DataFrame => Seq[(String, Long)]): Result = {
+    pairs.persist(lvl)
     val (scored, newMatches, scoredHandle) =
       if (cfg.pairsFile.isDefined || cfg.exactAddresses) (pairs, pairs, Nil)
       else {
@@ -198,11 +202,15 @@ object Pipeline {
         xxhash64(col("id_b")).as("b")), cfg.ccOptions)
     val labeledByNode = Cluster.labelRecords(
       records.withColumn("node_id", xxhash64(col("conv_id"))), labels)
+    // members are sorted, so members[0] is the cluster's min(conv_id):
+    // the name the labelled records get from their join-back below
+    val clustersDf = Output.clusters(labeledByNode)
+      .withColumn("cluster_id", col("members")(0))
+      .persist(lvl)
     val clusterName = labeledByNode.groupBy(col("cluster_id"))
       .agg(min(col("conv_id")).as("cluster_key"))
     val labeled = labeledByNode.join(clusterName, Seq("cluster_id"))
       .drop("cluster_id").withColumnRenamed("cluster_key", "cluster_id")
-    val clustersDf = Output.clusters(labeled)
 
     import spark.implicits._
     val metrics = (counts(scored) ++ Seq(
@@ -210,7 +218,8 @@ object Pipeline {
       ("clusters", clustersDf.count()))).toDF("metric", "value")
 
     Result(records, pairs, scored, matched, labeled, clustersDf, metrics,
-      deltaRecords, newMatches, cached ++ scoredHandle ++ Seq(labels),
+      deltaRecords, newMatches,
+      cached ++ Seq(pairs) ++ scoredHandle ++ Seq(labels, clustersDf),
       autoTable)
   }
 

@@ -1,6 +1,6 @@
 package graft.linkage
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Iceberg-like table layout over Parquet (SURVEY.md §7.6: no Iceberg
@@ -15,13 +15,16 @@ import org.apache.spark.sql.functions._
   */
 object TableIO {
 
+  /** The snapshot's row_count is observed on the write itself: no
+    * read-back pass over the files just written. */
   def write(df: DataFrame, path: String,
             partitionBy: Seq[String] = Nil): Unit = {
-    val w = df.write.mode("overwrite")
+    val rows = Observation()
+    val w = df.observe(rows, count(lit(1)).as("rows")).write.mode("overwrite")
     val withPart = if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*)
                    else w
     withPart.parquet(s"$path/data")
-    writeSnapshot(df, path)
+    writeSnapshot(df, path, rows.get("rows").asInstanceOf[Long])
   }
 
   def read(spark: SparkSession, path: String): DataFrame =
@@ -82,17 +85,17 @@ object TableIO {
     if (names.isEmpty) None else Some(s"$dir/${names.max}")
   }
 
-  private def writeSnapshot(df: DataFrame, path: String): Unit = {
+  private def writeSnapshot(df: DataFrame, path: String,
+                            count: Long): Unit = {
     val spark = df.sparkSession
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
     val dataPath = new org.apache.hadoop.fs.Path(s"$path/data")
     val files = listParquet(fs, dataPath)
     // the session-shared FileStatusCache may hold the PREVIOUS overwrite's
-    // listing for this path — a second write of the same table in one
-    // session would otherwise read back stale files (or FILE_NOT_EXIST)
+    // listing for this path — a later read of the table in this session
+    // would otherwise see stale files (or FILE_NOT_EXIST)
     spark.catalog.refreshByPath(s"$path/data")
-    val count = spark.read.parquet(s"$path/data").count()
     val filesJson = files.map(f =>
       s"""{"path": "${f._1}", "bytes": ${f._2}}""").mkString("[", ",", "]")
     val schemaJson = df.schema.json.replace("\\", "\\\\").replace("\"", "\\\"")

@@ -1,19 +1,40 @@
 package graft
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.linkage.Cluster
 
 /** Connected components: known graphs, singleton semantics
-  * (households.py:247–249), GraphX cross-check, checkpoint resume. */
+  * (households.py:247–249), GraphX cross-check, checkpoint resume. Every
+  * labelling runs twice — pure star rounds (finish ceiling 0) and the
+  * default local finish — and both must return the same labels. */
 class ClusterSpec extends AnyFunSuite with SparkFixture {
+
+  /** Labels of `edges` at each finish ceiling, asserted equal; the first
+    * is returned. */
+  private def ccAt(edges: DataFrame,
+                   ceilings: Seq[Long] = Seq(0L, Cluster.LocalFinishEdges))
+      : Map[Any, Any] = {
+    val runs = ceilings.map { c =>
+      val labels = Cluster.connectedComponents(spark, edges,
+        Cluster.Options(), c)
+      val m = labels.collect().map(r => r.get(0) -> r.get(1)).toMap
+      labels.unpersist()
+      m
+    }
+    runs.zip(ceilings).tail.foreach { case (m, c) =>
+      assert(m == runs.head,
+        s"ceiling $c: ${(m.toSet diff runs.head.toSet).take(5)} differ " +
+          s"from pure star rounds")
+    }
+    runs.head
+  }
 
   private def cc(edges: Seq[(Long, Long)]): Map[Long, Long] = {
     import spark.implicits._
-    val df = edges.toDF("a", "b")
-    Cluster.connectedComponents(spark, df)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    ccAt(edges.toDF("a", "b")).map { case (k, v) =>
+      k.asInstanceOf[Long] -> v.asInstanceOf[Long] }
   }
 
   test("two components + chain") {
@@ -62,8 +83,7 @@ class ClusterSpec extends AnyFunSuite with SparkFixture {
     // type-generic, so no hashing to 64-bit is required
     val edges = Seq(("c1", "c2"), ("c2", "c3"), ("c3", "c4"), ("x10", "x11"))
       .toDF("a", "b")
-    val labels = Cluster.connectedComponents(spark, edges)
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    val labels = ccAt(edges)
     assert(Seq("c2", "c3", "c4").forall(labels(_) == "c1"))
     assert(labels("x11") == "x10")
     // and over real matched pairs: conv_id-string nodes give the same
@@ -72,8 +92,10 @@ class ClusterSpec extends AnyFunSuite with SparkFixture {
       linkage.SynthTranscripts.Config(seed = 11L, nConvs = 150, days = 5)).toDF
     val run = linkage.Pipeline.run(spark, t)
     def clusters(node: Column => Column): Set[Set[String]] = {
-      val labels = Cluster.connectedComponents(spark, run.matchedPairs
-        .select(node(col("id_a")).as("a"), node(col("id_b")).as("b")))
+      val edges = run.matchedPairs
+        .select(node(col("id_a")).as("a"), node(col("id_b")).as("b"))
+      ccAt(edges)
+      val labels = Cluster.connectedComponents(spark, edges)
       val members = Cluster.labelRecords(
           run.records.select(col("conv_id"), node(col("conv_id")).as("node_id")),
           labels)
@@ -130,5 +152,61 @@ class ClusterSpec extends AnyFunSuite with SparkFixture {
       Cluster.Options(checkpointDir = Some(dir)))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(labels == Map(11L -> 10L, 10L -> 10L, 13L -> 12L, 12L -> 12L))
+  }
+
+  // The local finish against pure star rounds (ccAt) on seeded graphs:
+  // many small components, a long chain, a huge hub, string ids, and a
+  // graph that crosses a small ceiling only after star rounds ran.
+
+  test("local finish = star rounds: random graphs over 5 seeds") {
+    import spark.implicits._
+    (1 to 5).foreach { seed =>
+      val rnd = new scala.util.Random(seed)
+      val n = 400 * seed
+      val edges = Seq.fill(n)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
+        .filter { case (a, b) => a != b }
+      assert(ccAt(edges.toDF("a", "b")).nonEmpty)
+    }
+  }
+
+  test("local finish = star rounds: chain of length 1000") {
+    import spark.implicits._
+    // node ids shuffled along the path, so the minimum sits mid-chain
+    val ids = new scala.util.Random(3).shuffle((0L until 1001L).toVector)
+    val labels = ccAt(ids.zip(ids.tail).toDF("a", "b"))
+    assert(labels.size == 1001 && labels.values.toSet == Set(0L))
+  }
+
+  test("local finish = star rounds: star with 10⁵ leaves") {
+    import spark.implicits._
+    val hub = 50000L // mid-range hub: half the leaves are smaller
+    val labels = ccAt((0L to 100000L).filter(_ != hub).map(l => (hub, l))
+      .toDF("a", "b"))
+    assert(labels.size == 100001 && labels.values.toSet == Set(0L))
+  }
+
+  test("local finish = star rounds: string ids") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(11)
+    val edges = Seq.fill(600)((f"n${rnd.nextInt(800)}%03d",
+        f"n${rnd.nextInt(800)}%03d"))
+      .filter { case (a, b) => a != b }
+    assert(ccAt(edges.toDF("a", "b")).nonEmpty)
+  }
+
+  test("local finish = star rounds: ceiling crossed after star rounds") {
+    import spark.implicits._
+    // 3000 random edges over 300 nodes: above the 500-edge ceiling at the
+    // start, while the fixpoint has at most nodes − 1 = 299 edges, so at
+    // least one star round runs before the finish takes over
+    val rnd = new scala.util.Random(5)
+    val edges = Seq.fill(3000)((rnd.nextInt(300).toLong,
+        rnd.nextInt(300).toLong))
+      .filter { case (a, b) => a != b }
+      .map { case (a, b) => (math.max(a, b), math.min(a, b)) }.distinct
+    val ceiling = 500L
+    val labels = ccAt(edges.toDF("a", "b"),
+      Seq(0L, ceiling, Cluster.LocalFinishEdges))
+    assert(edges.size > ceiling && labels.size - 1 <= ceiling)
   }
 }

@@ -115,4 +115,24 @@ class LinkagePipelineSpec extends AnyFunSuite with SparkFixture {
       .join(nearMiss, Seq("cluster_id"), "left_semi")
     assert(joined.filter(col("n") > 1).count() == 0)
   }
+
+  test("LinkageMain.run stays within its Spark job budget") {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    val out = java.nio.file.Files.createTempDirectory("budget").toString
+    val sc = spark.sparkContext
+    org.apache.spark.graftbridge.Bus.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      LinkageMain.run(spark, Map("synthetic" -> "150", "output" -> out))
+      org.apache.spark.graftbridge.Bus.drain(sc)
+    } finally sc.removeSparkListener(listener)
+    // the run took 38 jobs on local[4] when this budget was set; the rest
+    // is headroom for AQE replanning
+    assert(jobs.get <= 45, s"${jobs.get} Spark jobs, budget 45")
+  }
 }

@@ -165,6 +165,17 @@ class PipelineModesSpec extends AnyFunSuite with SparkFixture {
     assert(e.getMessage.contains("differ"))
   }
 
+  test("LinkageMain refuses a short --secret before reading or caching") {
+    val out = java.nio.file.Files.createTempDirectory("badsecret").toString
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    intercept[IllegalArgumentException] {
+      LinkageMain.run(spark, Map("synthetic" -> "60", "output" -> out,
+        "secret" -> "0123456789abcdef"))
+    }
+    assert(!new java.io.File(s"$out/records").exists())
+    assert(spark.sparkContext.getPersistentRDDs.keySet == before)
+  }
+
   test("max-turns bounds a runaway mega-conversation's fold") {
     import spark.implicits._
     // one synthetic agent loop at 50k turns next to normal conversations:
