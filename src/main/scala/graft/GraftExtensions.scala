@@ -10,9 +10,8 @@ import graft.linkage.expr._
   *
   *   spark-submit --conf spark.sql.extensions=graft.GraftExtensions …
   *
-  * then `SELECT jaro_winkler(a, b)` etc. work from plain SQL.
-  * (`graft.linkage.expr.functions.registerAll` does the same imperatively
-  * for an already-running session.)
+  * then `SELECT jaro_winkler(a, b)` etc. work from plain SQL. This is
+  * the engine's one SQL-registration path.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 

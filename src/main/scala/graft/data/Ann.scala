@@ -111,24 +111,6 @@ object Ann {
       .select(col("query_id"), col(idCol), col("cos"), col("rank"))
   }
 
-  /** Embedding near-duplicate pairs: same LSH bucket, exact cosine ≥ t
-    * (the embedding leg of the dedup family). */
-  def cosineNearDups(corpus: DataFrame, threshold: Double,
-                     numPlanes: Int = 16, dims: Int = 64, seed: Long = 7L,
-                     idCol: String = "vec_id"): DataFrame = {
-    val bucketed = corpus
-      .withColumn("bucket", lshBucket(col("embedding"), numPlanes, dims, seed))
-    val l = bucketed.select(col("bucket"), col(idCol).as("id_a"),
-      col("embedding").as("emb_a"))
-    val r = bucketed.select(col("bucket").as("bucket_r"),
-      col(idCol).as("id_b"), col("embedding").as("emb_b"))
-    l.join(r, col("bucket") === col("bucket_r") &&
-        col("id_a") < col("id_b"))
-      .withColumn("cos", cosine(col("emb_a"), col("emb_b")))
-      .filter(col("cos") >= threshold)
-      .select("id_a", "id_b", "cos")
-  }
-
   // ---------- IVF ----------
 
   /** nCentroids <= 0 → derived as max(16, √|corpus|) at search time (the

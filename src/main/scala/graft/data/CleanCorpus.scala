@@ -286,11 +286,8 @@ object CleanCorpus {
 object CleanCorpusMain {
   import graft.linkage.Cli
 
-  def main(args: Array[String]): Unit = {
-    val spark = Cli.session("graft-clean-corpus")
-    run(spark, Cli.parse(args, flags = Set("no-oph", "redact")))
-    spark.stop()
-  }
+  def main(args: Array[String]): Unit =
+    Cli.main("graft-clean-corpus", args, flags = Set("no-oph", "redact"))(run)
 
   private def readMulti(spark: SparkSession, paths: String): DataFrame =
     spark.read.parquet(paths.split(",").map(_.trim).filter(_.nonEmpty): _*)

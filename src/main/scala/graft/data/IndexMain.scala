@@ -80,10 +80,8 @@ object IndexMain {
     }
   }
 
-  def main(args: Array[String]): Unit = {
-    val opts = Cli.parse(args, flags = Set("pq"))
-    val spark = Cli.session("graft-index")
-    try println(run(spark, opts))
-    finally spark.stop()
-  }
+  def main(args: Array[String]): Unit =
+    Cli.main("graft-index", args, flags = Set("pq")) { (spark, opts) =>
+      println(run(spark, opts))
+    }
 }

@@ -1,17 +1,16 @@
 package graft.data
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{Dataset, SparkSession}
 
 /** Multimodal column plumbing: image/audio/video as opaque binary columns
   * with typed metadata structs, processed by typed Dataset transforms.
   *
   * The codec step is STUBBED (no image/audio libraries exist in this
-  * container): `decodeStub` parses a deterministic fake header instead of
-  * invoking a real decoder — swap `FakeCodec` for a JNI/library decoder on
-  * a real cluster. Everything around it — schema, binary batching,
-  * partition-by-modality, iterator-to-iterator mapPartitions (the Scala
-  * analog of mapInPandas batch shape) — is real and tested.
+  * container): `FakeCodec.decode` strips a deterministic fake header
+  * instead of invoking a real decoder — swap `FakeCodec` for a
+  * JNI/library decoder on a real cluster. Everything around it — schema,
+  * binary batching, iterator-to-iterator mapPartitions (the Scala analog
+  * of mapInPandas batch shape) — is real and tested.
   */
 object Multimodal {
 
@@ -26,9 +25,6 @@ object Multimodal {
       media_id: Long, modality: String,
       width: Int, height: Int, duration_ms: Int,
       n_bytes: Int, mean_byte: Double, byte_entropy_q: Double)
-
-  case class FrameSample(media_id: Long, frame_idx: Int,
-                         frame_bytes: Array[Byte])
 
   /** ======= STUB: deterministic fake codec =======
     * Fake payload layout: 8-byte magic "GRAFTMED", then an md5 chain
@@ -107,42 +103,4 @@ object Multimodal {
       }
     }
   }
-
-  /** Frame sampling (video): every Nth 64-byte window of the payload —
-    * the real version would seek keyframes. Generator-style flatMap. */
-  def sampleFrames(media: Dataset[MediaRow], everyN: Int = 4)
-      : Dataset[FrameSample] = {
-    import media.sparkSession.implicits._
-    media.filter(_.modality == "video").flatMap { m =>
-      val body = FakeCodec.decode(m.payload)
-      body.grouped(64).zipWithIndex.collect {
-        case (frame, idx) if idx % everyN == 0 =>
-          FrameSample(m.media_id, idx, frame)
-      }
-    }
-  }
-
-  /** Resize stub: truncate payload proportionally (real impl: scale
-    * pixels); keeps schema + partitioning intact. */
-  def resizeStub(media: Dataset[MediaRow], factor: Double)
-      : Dataset[MediaRow] = {
-    import media.sparkSession.implicits._
-    media.map { m =>
-      if (m.modality != "image") m
-      else {
-        val body = FakeCodec.decode(m.payload)
-        val keep = math.max(1, (body.length * factor).toInt)
-        m.copy(
-          payload = FakeCodec.Magic ++ body.take(keep),
-          width = math.max(1, (m.width * math.sqrt(factor)).toInt),
-          height = math.max(1, (m.height * math.sqrt(factor)).toInt))
-      }
-    }
-  }
-
-  /** Scale plumbing: co-locate rows of one modality (decoders batch far
-    * better on homogeneous partitions). */
-  def partitionByModality(media: DataFrame, partitions: Int): DataFrame =
-    media.repartition(partitions, col("modality"),
-      pmod(col("media_id"), lit(partitions / 3 + 1)))
 }

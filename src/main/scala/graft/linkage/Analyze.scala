@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 import scala.collection.immutable.ListMap
 
 /** The `analyze` report driver — reference data_analysis.py:36–112 +
-  * 175–197: composes the Profile aggregates into the reference's actual
-  * deliverable, a (stats, raw_values) JSON document pair, with the
+  * 175–197: the data_analysis aggregations, composed into the reference's
+  * actual deliverable, a (stats, raw_values) JSON document pair, with the
   * PII-spill guards enforced INSIDE:
   *
   *  - min-count guard (data_analysis.py:91–104, top_N lower_limit=3):

@@ -1,6 +1,6 @@
 package graft.linkage
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Thin spark-submit wrappers completing the reference's five-executable
@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   * (households.py's analog is LinkageMain.)
   */
 private[graft] object Cli {
-  def parse(args: Array[String], flags: Set[String] = Set.empty)
+  private def parse(args: Array[String], flags: Set[String])
       : Map[String, String] = {
     val m = scala.collection.mutable.Map[String, String]()
     var i = 0
@@ -33,7 +33,20 @@ private[graft] object Cli {
     m.toMap
   }
 
-  def session(name: String): SparkSession = {
+  /** Every CLI main's body: parse argv BEFORE building the session (a
+    * bad argv fails without spinning up a cluster session), then run,
+    * and stop the session even when `run` throws. Returns `run`'s
+    * result. */
+  def main[T](name: String, args: Array[String],
+              flags: Set[String] = Set.empty)
+             (run: (SparkSession, Map[String, String]) => T): T = {
+    val opts = parse(args, flags)
+    val spark = session(name)
+    try run(spark, opts)
+    finally spark.stop()
+  }
+
+  private def session(name: String): SparkSession = {
     val builder = SparkSession.builder()
       .appName(name)
       .config("spark.sql.session.timeZone", "UTC")
@@ -90,11 +103,8 @@ private[graft] object Cli {
   *     [--conf <translation json>] [--seed <n>] [--verbose]
   */
 object ExtractMain {
-  def main(args: Array[String]): Unit = {
-    val spark = Cli.session("graft-extract")
-    run(spark, Cli.parse(args, flags = Set("verbose")))
-    spark.stop()
-  }
+  def main(args: Array[String]): Unit =
+    Cli.main("graft-extract", args, flags = Set("verbose"))(run)
 
   def run(spark: SparkSession, opts: Map[String, String]): String = {
     val in = Cli.required(opts, "input")
@@ -133,11 +143,8 @@ object ExtractMain {
   * anonlink blakeHash strategy (keyed blake2b + HKDF field keys).
   */
 object GarbleMain {
-  def main(args: Array[String]): Unit = {
-    val spark = Cli.session("graft-garble")
-    run(spark, Cli.parse(args, flags = Set("exact-crypto")))
-    spark.stop()
-  }
+  def main(args: Array[String]): Unit =
+    Cli.main("graft-garble", args, flags = Set("exact-crypto"))(run)
 
   def run(spark: SparkSession, opts: Map[String, String]): Seq[String] = {
     val out = Cli.required(opts, "output")
@@ -200,11 +207,7 @@ object BlockMain {
       seed = cfg.path("random_state").asInt(0))
   }
 
-  def main(args: Array[String]): Unit = {
-    val spark = Cli.session("graft-block")
-    run(spark, Cli.parse(args))
-    spark.stop()
-  }
+  def main(args: Array[String]): Unit = Cli.main("graft-block", args)(run)
 
   def run(spark: SparkSession, opts: Map[String, String]): Unit = {
     val clkPath = Cli.required(opts, "clkpath")
@@ -245,11 +248,7 @@ object BlockMain {
   * reference's two-file split (data_analysis.py:179–197).
   */
 object AnalyzeMain {
-  def main(args: Array[String]): Unit = {
-    val spark = Cli.session("graft-analyze")
-    run(spark, Cli.parse(args))
-    spark.stop()
-  }
+  def main(args: Array[String]): Unit = Cli.main("graft-analyze", args)(run)
 
   def run(spark: SparkSession, opts: Map[String, String]): (String, String) = {
     val df = Extract.readCsvAllStrings(spark, Cli.required(opts, "csv"))
@@ -274,9 +273,8 @@ object AnalyzeMain {
   */
 object ValidateMetadataMain {
   def main(args: Array[String]): Unit = {
-    val spark = Cli.session("graft-validate-metadata")
-    val issues = run(spark, Cli.parse(args, flags = Set("verbose")))
-    spark.stop()
+    val issues = Cli.main("graft-validate-metadata", args,
+      flags = Set("verbose"))(run)
     if (issues.nonEmpty) sys.exit(1)
   }
 
@@ -307,18 +305,19 @@ object ValidateMetadataMain {
   *     [--metadata <local metadata json>] [--force]
   *
   * Positions are the reference's: 0-based data-row index in the SOURCE
-  * FILE (the agent's links carry them; the +1 header offset of
-  * linkid_to_patid.py:88 collapses to equal 0-based indices here).
+  * FILE (the joins are [[Resolve.linkIds]] / [[Resolve.householdIds]]).
   */
 object ResolveMain {
-  private def firstTwo(df: DataFrame, names: (String, String)): DataFrame =
-    df.select(col(df.columns(0)).as(names._1),
-      col(df.columns(1)).as(names._2))
+  def main(args: Array[String]): Unit =
+    Cli.main("graft-resolve", args, flags = Set("force"))(run)
 
-  def main(args: Array[String]): Unit = {
-    val spark = Cli.session("graft-resolve")
-    run(spark, Cli.parse(args, flags = Set("force")))
-    spark.stop()
+  /** One header-bearing CSV file; the row count is observed on the write
+    * itself, not by re-running the join. */
+  private def writeCsv(df: DataFrame, path: String): Long = {
+    val rows = Observation()
+    df.observe(rows, count(lit(1)).as("rows"))
+      .coalesce(1).write.mode("overwrite").option("header", "true").csv(path)
+    rows.get("rows").asInstanceOf[Long]
   }
 
   def run(spark: SparkSession, opts: Map[String, String]): Unit = {
@@ -336,33 +335,17 @@ object ResolveMain {
     }
 
     for (src <- opts.get("sourcefile"); zip <- opts.get("linkszip")) {
-      val pii = Positions.withScanPosition(
-        Extract.readCsvAllStrings(spark, src), "position")
-      val links = firstTwo(Resolve.readZipMemberCsv(spark, zip),
-        ("LINK_ID", "position"))
-        .withColumn("position", col("position").cast("long"))
-      val resolved = links.join(pii, Seq("position"))
-        .select(col("LINK_ID"), col("record_id").as("PATID"))
-        .orderBy(col("LINK_ID"))
-      resolved.coalesce(1).write.mode("overwrite")
-        .option("header", "true").csv(s"$out/linkid_to_patid_csv")
-      println(s"[graft] wrote linkid_to_patid (${resolved.count()} rows)")
+      val n = writeCsv(Resolve.linkIds(Resolve.readZipMemberCsv(spark, zip),
+        Extract.readCsvAllStrings(spark, src)), s"$out/linkid_to_patid_csv")
+      println(s"[graft] wrote linkid_to_patid ($n rows)")
     }
 
     for (src <- opts.get("hhsourcefile"); zip <- opts.get("hhlinkszip")) {
-      val hhPii = Positions.withScanPosition(
-        Extract.readCsvAllStrings(spark, src), "household_position")
-      val hhLinks = firstTwo(Resolve.readZipMemberCsv(spark, zip),
-        ("HOUSEHOLD_ID", "household_position"))
-        .withColumn("household_position",
-          col("household_position").cast("long"))
-      val resolved = hhLinks.join(hhPii, Seq("household_position"))
-        .select(col("HOUSEHOLD_ID"),
-          explode(split(col("record_ids"), ",")).as("PATID"))
-        .orderBy(col("HOUSEHOLD_ID"), col("PATID"))
-      resolved.coalesce(1).write.mode("overwrite")
-        .option("header", "true").csv(s"$out/householdid_to_patid_csv")
-      println(s"[graft] wrote householdid_to_patid (${resolved.count()} rows)")
+      val n = writeCsv(Resolve.householdIds(
+          Resolve.readZipMemberCsv(spark, zip),
+          Extract.readCsvAllStrings(spark, src)),
+        s"$out/householdid_to_patid_csv")
+      println(s"[graft] wrote householdid_to_patid ($n rows)")
     }
   }
 }

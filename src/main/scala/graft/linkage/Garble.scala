@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.linkage.expr.{functions => gf}
 
 /** Garble + block stages — reference `garble.py` / `block.py`: CLK
-  * Bloom encodings per schema, λ-fold and p-sig blocking keys, zip
+  * Bloom encodings per schema, λ-fold blocking keys, zip
   * packaging. The anonlink subprocess boundary collapses into in-engine
   * Catalyst expressions (SURVEY.md §2.8, §7.5).
   */
@@ -17,14 +17,6 @@ object Garble {
       "Secret must be in hexadecimal format")
     require(secret.length >= 32, "Secret smaller than minimum security level")
     secret
-  }
-
-  /** F11: site-secret generation (testing-and-tuning/generate_secret.py:
-    * 1–7) — 32 hex chars from SecureRandom. */
-  def generateSecret(): String = {
-    val bytes = new Array[Byte](16)
-    new java.security.SecureRandom().nextBytes(bytes)
-    bytes.map(b => f"${b & 0xff}%02x").mkString
   }
 
   /** HMAC-SHA256 subkey derivation (derive_subkey.py:5–10),
@@ -174,27 +166,6 @@ object Garble {
     clksDf.select(col("conv_id"),
       explode(gf.lambda_fold_keys(col("clk"), lambda, 64, k, seed))
         .as("block_key"))
-
-  /** p-sig blocking (p-sig.json): signature union of
-    * chars-at-0(field1,field2) and metaphone(field1,field2), with the
-    * ratio filter dropping blocks > maxRatio of records (the reference's
-    * frequency-based skew guard). */
-  def psigBlocks(records: DataFrame, f1: String, f2: String,
-                 maxRatio: Double = 0.02): DataFrame = {
-    val total = records.count()
-    val sig1 = records.select(col("conv_id"),
-      concat(lit("c0:"), substring(col(f1), 1, 1),
-        substring(col(f2), 1, 1)).as("block_key"))
-    val sig2 = records.select(col("conv_id"),
-      concat(lit("mp:"), gf.metaphone_sig(col(f1)), lit("|"),
-        gf.metaphone_sig(col(f2))).as("block_key"))
-    val all = sig1.unionByName(sig2)
-    val keep = all.groupBy(col("block_key"))
-      .agg(count(lit(1)).as("n"))
-      .filter(col("n") <= (lit(maxRatio) * total))
-      .select("block_key")
-    all.join(keep, Seq("block_key"), "left_semi")
-  }
 
   /** Parse a linkage-schema JSON document: {"fields": ["family_name",…],
     * "hashType": "blakeHash"} (the anonlink-schema analog the multi-schema

@@ -41,9 +41,6 @@ import org.apache.spark.sql.functions._
   */
 object LinkageMain {
 
-  private def parseArgs(args: Array[String]): Map[String, String] =
-    Cli.parse(args, flags = Set("exact-addresses", "testrun"))
-
   /** --householddef (households.py:39–44, 322–323, 404–407): the user
     * supplies household definitions (HOUSEHOLD_PII_HEADERS csv:
     * family_name, phone_number, household_street_address, household_zip,
@@ -67,14 +64,9 @@ object LinkageMain {
     n
   }
 
-  def main(args: Array[String]): Unit = {
-    // parse BEFORE building the session: a bad argv must fail without
-    // spinning up (and then leaking) a cluster session
-    val opts = parseArgs(args)
-    val spark = Cli.session("graft-linkage")
-    try run(spark, opts)
-    finally spark.stop()
-  }
+  def main(args: Array[String]): Unit =
+    Cli.main("graft-linkage", args,
+      flags = Set("exact-addresses", "testrun"))(run)
 
   def run(spark: SparkSession, opts: Map[String, String]): Unit = {
     val out = opts.getOrElse("output",
@@ -140,8 +132,13 @@ object LinkageMain {
     Extract.writeMetadata(spark, Map(
       "number_of_households" -> metrics.toMap.apply("clusters").toString,
       "households_inferred" -> "true"), s"$out/households_metadata.json")
+    // household position i is the i-th cluster by cluster_id: mapping_csv
+    // row i (which ResolveMain --hhsourcefile numbers by scan order) and
+    // household CLK i both follow that order. coalesce(1) after the global
+    // sort keeps it; writeClksJson streams partitions in index order.
+    val ordered = result.clusters.orderBy(col("cluster_id"))
     // comma-joined ids only at the CSV edge (households.py:268–276 shape)
-    result.clusters.select(col("cluster_id"),
+    ordered.select(col("cluster_id"),
         concat_ws(",", col("members")).as("record_ids"), col("size"))
       .coalesce(1).write.mode("overwrite").option("header", "true")
       .csv(s"$out/mapping_csv")
@@ -152,7 +149,7 @@ object LinkageMain {
       TableIO.write(perHousehold, s"$out/household_pos_pid")
     }
     opts.get("secret").foreach { secret =>
-      val clks = Garble.householdClks(result.clusters, secret)
+      val clks = Garble.householdClks(ordered, secret)
       Garble.writeClksJson(
         clks.withColumnRenamed("cluster_id", "conv_id"), s"$out/household_clks")
     }

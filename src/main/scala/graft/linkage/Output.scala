@@ -3,9 +3,8 @@ package graft.linkage
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Cluster assembly + reference-shaped outputs and resolve joins
-  * (households.py:182–283; linkid_to_patid.py; SURVEY.md §2.4 A8/A9,
-  * §2.3 J4/J5).
+/** Cluster assembly + reference-shaped outputs (households.py:182–283;
+  * SURVEY.md §2.4 A8/A9).
   *
   * Deviation (SURVEY.md §7.5): the reference picks the household's display
   * row by shuffled first-visit (households.py:226–249, deliberately
@@ -36,36 +35,6 @@ object Output {
         col("rep.family_name"), col("rep.phone_number"),
         col("rep.household_street_address"), col("rep.household_zip"))
 
-  /** Reference-shaped mapping file (HOUSEHOLD_POSITION, PII_POSITIONS) —
-    * positions assigned by [[Positions.withPosition]] (scale-safe W2:
-    * identical to a global row_number, households.py:190–193, without
-    * moving the corpus to one partition). `labeled` must carry conv_id +
-    * cluster_id. */
-  def mappingFile(labeled: DataFrame): DataFrame = {
-    val pos = Positions.withPosition(labeled, col("conv_id"), "position")
-    val hh = pos.groupBy(col("cluster_id"))
-      .agg(sort_array(collect_list(col("position"))).as("positions"))
-    Positions.withPosition(hh, col("cluster_id"), "HOUSEHOLD_POSITION")
-      .select(col("HOUSEHOLD_POSITION"),
-        concat_ws(",", col("positions")).as("PII_POSITIONS"))
-  }
-
-  /** J4: LINK_ID → record id via positional join (linkid_to_patid.py:84–90;
-    * the +1 header offset collapses to equal row_number bases). */
-  def resolveLinks(links: DataFrame, orderedIds: DataFrame): DataFrame = {
-    val pos = Positions.withPosition(orderedIds, col("conv_id"), "position")
-    links.join(pos, Seq("position"))
-      .select(col("LINK_ID"), col("conv_id").as("PATID"))
-  }
-
-  /** J5: household links → one row per member id
-    * (linkid_to_patid.py:114–131: split + explode). */
-  def resolveHouseholdLinks(hhLinks: DataFrame,
-                            households: DataFrame): DataFrame =
-    hhLinks.join(households, Seq("HOUSEHOLD_POSITION"))
-      .select(col("HOUSEHOLD_ID"),
-        explode(split(col("record_ids"), ",")).as("PATID"))
-
   /** --testrun scoring files (households.py:261–265, 345–347):
     * `hh_pos_patids` = (household_position, pid) one row per member;
     * `household_pos_pid` = (household_position, pid) one row per
@@ -82,8 +51,4 @@ object Output {
       col("rep").as("pid"))
     (perMember, perHousehold)
   }
-
-  /** Household-size stats (describe analog, households.py:278–281). */
-  def sizeStats(clustersDf: DataFrame): DataFrame =
-    clustersDf.select(col("size").cast("double").as("size")).summary()
 }

@@ -11,18 +11,14 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * a cluster (round 1 used it at four output edges; the "Moving all data
   * to a single partition" WARN was visible in the bench tail).
   *
-  * Scale-safe, leak-free equivalent for a total order: range-partition by
-  * the key, sort within partitions, then `zipWithIndex` on the pinned
-  * physical RDD. `.rdd` materializes the range exchange once (AQE runs
-  * the shuffle eagerly), so zipWithIndex's internal count job and the
-  * downstream consumption read the SAME shuffle output — the
-  * nondeterministic range-boundary sampling can't diverge between the
-  * two, which is what round 2's MEMORY_AND_DISK persist was guarding
-  * against. The persist (and its session-lifetime cache leak — every
-  * mappingFile/resolveLinks call stranded a cached copy of the corpus,
-  * VERDICT r02 #2) is gone: the only extra cost is one count job reading
-  * shuffle-local metadata, the only driver-side data one count per
-  * partition.
+  * Scale-safe equivalent for a total order: range-partition by the key,
+  * sort within partitions, then `zipWithIndex` on the pinned physical
+  * RDD. `.rdd` materializes the range exchange once (AQE runs the shuffle
+  * eagerly), so zipWithIndex's internal count job and the downstream
+  * consumption read the SAME shuffle output — the nondeterministic
+  * range-boundary sampling can't diverge between the two. Nothing is
+  * cached: the only extra cost is one count job over shuffle-local
+  * metadata, the only driver-side data one count per partition.
   */
 object Positions {
 

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 /** Resolve stage — reference `linkid_to_patid.py`: metadata gate, LINK_ID
   * → record-id positional join, household link fan-out (SURVEY.md §3.3).
+  * [[ResolveMain]] is the CLI over it.
   */
 object Resolve {
 
@@ -83,13 +84,37 @@ object Resolve {
     spark.read.option("header", "true").csv(csvPath.get.toString)
   }
 
-  /** Full resolve: gate on metadata, then J4 + J5 (Output.resolveLinks /
-    * resolveHouseholdLinks). */
-  def translate(links: DataFrame, orderedIds: DataFrame,
-                expectedMeta: Map[String, String],
-                actualMeta: Map[String, String],
-                force: Boolean = false): DataFrame = {
-    gate(expectedMeta, actualMeta, force)
-    Output.resolveLinks(links, orderedIds)
-  }
+  /** The links' first two columns under the given names, whatever their
+    * header says (the agent's CSVs are read by position,
+    * linkid_to_patid.py:84–90). */
+  private def firstTwo(df: DataFrame, names: (String, String)): DataFrame =
+    df.select(col(df.columns(0)).as(names._1),
+      col(df.columns(1)).as(names._2))
+
+  /** J4 (linkid_to_patid.py:84–90): the agent's (LINK_ID, position) links
+    * → (LINK_ID, PATID), ordered by LINK_ID. A position is the 0-based
+    * data-row index in the SOURCE FILE `pii` was read from (the +1 header
+    * offset of linkid_to_patid.py:88 collapses to equal 0-based indices),
+    * so `pii` is numbered in scan order, not key order. */
+  def linkIds(links: DataFrame, pii: DataFrame): DataFrame =
+    firstTwo(links, ("LINK_ID", "position"))
+      .withColumn("position", col("position").cast("long"))
+      .join(Positions.withScanPosition(pii, "position"), Seq("position"))
+      .select(col("LINK_ID"), col("record_id").as("PATID"))
+      .orderBy(col("LINK_ID"))
+
+  /** J5 (linkid_to_patid.py:114–131): the agent's (HOUSEHOLD_ID,
+    * household_position) links → one (HOUSEHOLD_ID, PATID) row per member
+    * of the household's comma-joined `record_ids` (split + explode),
+    * ordered by both. Positions are scan-order rows of `hhPii`, as in
+    * [[linkIds]]. */
+  def householdIds(hhLinks: DataFrame, hhPii: DataFrame): DataFrame =
+    firstTwo(hhLinks, ("HOUSEHOLD_ID", "household_position"))
+      .withColumn("household_position",
+        col("household_position").cast("long"))
+      .join(Positions.withScanPosition(hhPii, "household_position"),
+        Seq("household_position"))
+      .select(col("HOUSEHOLD_ID"),
+        explode(split(col("record_ids"), ",")).as("PATID"))
+      .orderBy(col("HOUSEHOLD_ID"), col("PATID"))
 }

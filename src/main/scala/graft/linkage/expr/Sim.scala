@@ -145,20 +145,6 @@ object Sim {
   @inline private def isAsciiSpace(c: Char): Boolean =
     c == ' ' || (c >= '\t' && c <= '\r')
 
-  /** Digits-only projection of a string — reference `clean_phone`
-    * (extract.py:87–90). */
-  def digitsOnly(s: String): String = {
-    if (s == null) return null
-    val sb = new java.lang.StringBuilder(s.length)
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c >= '0' && c <= '9') sb.append(c)
-      i += 1
-    }
-    sb.toString
-  }
-
   /** Plain Jaro similarity (textdistance parity). */
   def jaro(s1: String, s2: String): Double = {
     val l1 = s1.length

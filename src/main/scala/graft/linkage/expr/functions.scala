@@ -1,7 +1,7 @@
 package graft.linkage.expr
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.graftbridge.{ColumnBridge, Register}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.graftbridge.ColumnBridge
 
 /** Column-level facade over the custom Catalyst expressions — the graft
   * analog of `org.apache.spark.sql.functions`. */
@@ -14,7 +14,6 @@ object functions {
     col_(JaroWinkler(expr_(a), expr_(b)))
   def hamming_sim(a: Column, b: Column): Column =
     col_(HammingSim(expr_(a), expr_(b)))
-  def metaphone_sig(c: Column): Column = col_(MetaphoneExpr(expr_(c)))
   def dot_product(a: Column, b: Column): Column =
     col_(DotProduct(expr_(a), expr_(b)))
   def nearest_centroid(emb: Column, centroids: Array[Array[Double]]): Column =
@@ -37,13 +36,4 @@ object functions {
   def lambda_fold_keys(clk: Column, lambda: Int = 3, bfLen: Int = 64,
                        k: Int = 5, seed: Int = 0): Column =
     col_(LambdaFoldKeys(expr_(clk), lambda, bfLen, k, seed))
-
-  /** Make all custom expressions SQL-callable in this session. */
-  def registerAll(spark: SparkSession): Unit = {
-    Register.tempFunction(spark, "normalize_ascii", es => NormalizeAscii(es.head))
-    Register.tempFunction(spark, "jaro_winkler", es => JaroWinkler(es(0), es(1)))
-    Register.tempFunction(spark, "hamming_sim", es => HammingSim(es(0), es(1)))
-    Register.tempFunction(spark, "metaphone_sig", es => MetaphoneExpr(es.head))
-    Register.tempFunction(spark, "dot_product", es => DotProduct(es(0), es(1)))
-  }
 }

@@ -59,13 +59,11 @@ object LinkageSoakMain {
   import graft.linkage.Cli
 
   def main(args: Array[String]): Unit = {
-    val opts = Cli.parse(args)
     // bench-comparable sizing: SparkConf picks spark.* system properties
     // up, so the env knob rides into Cli.session's builder
     sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS").foreach(p =>
       System.setProperty("spark.sql.shuffle.partitions", p))
-    val spark = Cli.session("graft-linkage-soak")
-    try {
+    Cli.main("graft-linkage-soak", args) { (spark, opts) =>
       val triggers = LinkageSoak.run(spark, Cli.required(opts, "workdir"),
         opts.getOrElse("convs", "20000").toInt,
         opts.getOrElse("batches", "10").toInt)
@@ -76,6 +74,6 @@ object LinkageSoakMain {
         s""""mat_appended":${t.matchesAppended},""" +
         s""""clusters":${t.clusters}}""").mkString("[", ",", "]")
       println(s"""[graft-soak-summary] {"triggers":$js}""")
-    } finally spark.stop()
+    }
   }
 }

@@ -166,41 +166,8 @@ object LinkageStream {
     readState(spark, storeDir).getOrElse(
       throw new IllegalStateException(s"no linkage store at $storeDir"))
 
-  /** One-time v1 → v2 in-place migration: the v1 generation's cumulative
-    * records/matched_pairs become the logs' single opening partition
-    * (batch = the committed pointer), clusters stay where they are, and
-    * the pointer gains the version stamp. */
-  def migrateStore(spark: SparkSession, storeDir: String): Unit = {
-    val raw = readRawState(spark, storeDir).getOrElse(
-      throw new IllegalStateException(s"no linkage store at $storeDir"))
-    require(raw._3.isEmpty,
-      s"$storeDir is already a v${raw._3.get} store")
-    val (gen, batch) = (raw._1, raw._2)
-    TableIO.read(spark, s"$storeDir/g$gen/records")
-      .select(Pipeline.piiCols.map(col): _*)
-      .write.mode("overwrite")
-      .parquet(s"$storeDir/records_log/batch=$batch")
-    TableIO.read(spark, s"$storeDir/g$gen/matched_pairs")
-      .write.mode("overwrite")
-      .parquet(s"$storeDir/matches_log/batch=$batch")
-    // v1 kept clusters under g<gen>/clusters too — layout unchanged
-    writeState(spark, storeDir, StoreState(gen, batch))
-  }
-
   private[graft] def readState(spark: SparkSession,
-                               storeDir: String): Option[StoreState] =
-    readRawState(spark, storeDir).map { case (gen, batch, version) =>
-      require(version.contains(StoreVersion),
-        s"linkage store $storeDir is layout v${version.getOrElse(1)}, " +
-          s"engine supports v$StoreVersion — run " +
-          "LinkageStream.migrateStore once")
-      StoreState(gen, batch)
-    }
-
-  /** (gen, batch, version?) without the version gate — the migration
-    * entry point needs to read v1 pointers. */
-  private def readRawState(spark: SparkSession, storeDir: String)
-      : Option[(Int, Long, Option[Int])] = {
+                               storeDir: String): Option[StoreState] = {
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(storeDir), spark.sparkContext.hadoopConfiguration)
     // if only the tmp pointer exists, a crash hit the delete→rename
@@ -221,8 +188,11 @@ object LinkageStream {
       // generation and re-admit committed batches
       require(node.has("gen") && node.has("batch"),
         s"corrupt linkage-store pointer $p: '$txt'")
-      Some((node.get("gen").asInt(), node.get("batch").asLong(),
-        if (node.has("version")) Some(node.get("version").asInt()) else None))
+      val version = if (node.has("version")) node.get("version").asInt() else 1
+      require(version == StoreVersion,
+        s"linkage store $storeDir is layout v$version, engine supports " +
+          s"v$StoreVersion — point the sink at a fresh store")
+      Some(StoreState(node.get("gen").asInt(), node.get("batch").asLong()))
     }
   }
 
@@ -262,12 +232,8 @@ object LinkageStream {
 object LinkageStreamMain {
   import graft.linkage.Cli
 
-  def main(args: Array[String]): Unit = {
-    val opts = Cli.parse(args, flags = Set("once"))
-    val spark = Cli.session("graft-linkage-stream")
-    try run(spark, opts)
-    finally spark.stop()
-  }
+  def main(args: Array[String]): Unit =
+    Cli.main("graft-linkage-stream", args, flags = Set("once"))(run)
 
   def run(spark: SparkSession, opts: Map[String, String]): Unit = {
     val turns = spark.readStream

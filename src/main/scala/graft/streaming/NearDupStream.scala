@@ -83,8 +83,7 @@ object NearDupStream {
       require(!fs.exists(new org.apache.hadoop.fs.Path(storePath)) ||
         fs.listStatus(new org.apache.hadoop.fs.Path(storePath)).isEmpty,
         s"$storePath exists without _store_meta.json — a v1 flat " +
-          "signature store; run NearDupStream.migrateStore once (or point " +
-          "the stream at a fresh store dir)")
+          "signature store; point the stream at a fresh store dir")
       None
     } else {
       val txt = Cli.readText(spark, metaPath.toString)
@@ -188,18 +187,6 @@ object NearDupStream {
     require(readStoreMeta(spark, storePath).isDefined,
       s"no signature store at $storePath")
     readStore(spark, storePath, idCol, idType).select(col(idCol))
-  }
-
-  /** One-time v1 → v2 store migration: flat (doc_id, sig) rows become
-    * per-band bucket rows partitioned by (band, shard). */
-  def migrateStore(spark: SparkSession, v1Path: String, v2Path: String,
-                   cfg: Dedup.MinHashConfig = Dedup.MinHashConfig(oph = true),
-                   idCol: String = "doc_id"): Unit = {
-    val old = spark.read.parquet(v1Path)
-    writeStoreMeta(spark, v2Path, cfg)
-    appendStore(bucketRows(
-      withShard(Dedup.lshBuckets(old, cfg, idCol), DefaultShards), old, idCol),
-      v2Path)
   }
 
   /** (band, bucket) rows gain their store partition: shard = bucket mod
@@ -535,12 +522,8 @@ object NearDupStream {
   * (mismatches are refused loudly). */
 object NearDupStreamMain {
 
-  def main(args: Array[String]): Unit = {
-    val opts = Cli.parse(args, flags = Set("once", "no-oph"))
-    val spark = Cli.session("graft-neardup-stream")
-    try run(spark, opts)
-    finally spark.stop()
-  }
+  def main(args: Array[String]): Unit =
+    Cli.main("graft-neardup-stream", args, flags = Set("once", "no-oph"))(run)
 
   def run(spark: SparkSession, opts: Map[String, String]): Unit = {
     import org.apache.spark.sql.types._
@@ -588,11 +571,8 @@ object NearDupStreamMain {
   * wrong candidate set and Jaccard domain). */
 object ReconcileMain {
 
-  def main(args: Array[String]): Unit = {
-    val spark = Cli.session("graft-reconcile")
-    try run(spark, Cli.parse(args, flags = Set("no-oph")))
-    finally spark.stop()
-  }
+  def main(args: Array[String]): Unit =
+    Cli.main("graft-reconcile", args, flags = Set("no-oph"))(run)
 
   def run(spark: SparkSession, opts: Map[String, String]): (Long, Long) = {
     val out = Cli.required(opts, "output")

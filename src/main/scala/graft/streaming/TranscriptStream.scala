@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.linkage.Turn
@@ -103,16 +103,6 @@ object TranscriptStream {
       }
   }
 
-  /** Windowed turn-rate monitoring: events per role per 10-minute
-    * event-time window (late data bounded by the watermark). */
-  def turnRates(turns: DataFrame): DataFrame =
-    turns
-      .withWatermark("ts", "30 minutes")
-      .groupBy(window(col("ts"), "10 minutes"), col("role"))
-      .agg(count(lit(1)).as("n_turns"))
-      .select(col("window.start").as("window_start"), col("role"),
-        col("n_turns"))
-
   /** Streaming exact dedup (the ingest leg of the dedup family, batch
     * analog Dedup.exact): emit each distinct document text once, keyed by
     * its 64-bit content hash. dropDuplicatesWithinWatermark bounds the
@@ -126,19 +116,4 @@ object TranscriptStream {
       .withColumn("text_hash", xxhash64(col("text")))
       .withWatermark("ts", watermarkDelay)
       .dropDuplicatesWithinWatermark("text_hash")
-
-  /** File-source streaming ingest → TableIO-layout parquet sink with
-    * checkpointing (exactly-once file sink). */
-  def ingest(spark: SparkSession, sourceDir: String, targetDir: String,
-             checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    val stream = spark.readStream
-      .schema(graft.linkage.Schemas.transcripts)
-      .parquet(sourceDir)
-    stream.writeStream
-      .format("parquet")
-      .option("path", s"$targetDir/data")
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append())
-      .start()
-  }
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.linkage._
 
 /** Cache hygiene (VERDICT r02 #2): library operators must not strand
-  * persisted blocks the caller can't release. Positions/mappingFile cache
+  * persisted blocks the caller can't release. Positions/scoringFiles cache
   * nothing at all; operators that DO persist internally (minhash fan-out,
   * CC rounds, Pipeline stages) must release everything except handles the
   * caller can see — and releasing those must leave the session clean.
@@ -32,12 +32,14 @@ class CacheLifecycleSpec extends AnyFunSuite with SparkFixture {
     assert(persisted == 0)
   }
 
-  test("Output.mappingFile leaves no cached blocks after materialization") {
+  test("Output.scoringFiles leaves no cached blocks after materialization") {
     clearAll()
     import spark.implicits._
     val labeled = (1 to 50).map(i => (f"c$i%03d", f"k${i % 7}"))
       .toDF("conv_id", "cluster_id")
-    assert(Output.mappingFile(labeled).collect().length == 7)
+    val (perMember, perHousehold) = Output.scoringFiles(labeled)
+    assert(perMember.collect().length == 50)
+    assert(perHousehold.collect().length == 7)
     assert(persisted == 0)
   }
 

@@ -17,6 +17,16 @@ class CliMainsSpec extends AnyFunSuite with SparkFixture {
     path
   }
 
+  test("Cli.main fails a bad argv before building a session") {
+    var ran = false
+    intercept[IllegalArgumentException] {
+      Cli.main("graft-bad-argv", Array("stray")) { (_, _) => ran = true }
+    }
+    // a session built first would be the shared one, stopped by the
+    // wrapper's finally
+    assert(!ran && !spark.sparkContext.isStopped)
+  }
+
   test("ExtractMain: conf-mapped CSV → pii-<ts>.csv + metadata pair") {
     // reference-shaped source (faker-sample style) + sample_conf shape
     write(s"$base/source.csv",

@@ -125,24 +125,12 @@ class LinkageStreamSpec extends AnyFunSuite with SparkFixture {
     assert(triggers.last.cumRecords == triggers.map(_.recordsAppended).sum)
   }
 
-  test("v1 stores are refused loudly and migrate in place") {
-    import spark.implicits._
-    val cfg = SynthTranscripts.Config(seed = 21L, nConvs = 80)
-    val all = SynthTranscripts.transcripts(spark, cfg).toDF.cache()
-    val seedId = regexp_extract(col("conv_id"), "^(c\\d+)", 1)
-    val inB2 = pmod(xxhash64(seedId), lit(2)) === 0
-    val t1 = all.filter(!inB2 || col("conv_id").contains("~"))
-    val t2 = all.filter(inB2 && !col("conv_id").contains("~"))
-
-    // hand-build a v1 store: cumulative tables under g0, pointer without
-    // a version stamp — exactly what a pre-v2 deployment left behind
+  test("v1 stores are refused loudly") {
+    val batch = SynthTranscripts.transcripts(spark,
+      SynthTranscripts.Config(seed = 21L, nConvs = 20)).toDF
+    // a v1 pointer carries no version stamp — exactly what a pre-v2
+    // deployment left behind
     val store = s"$dir/v1store"
-    val prev = Pipeline.run(spark, t1)
-    TableIO.write(prev.records
-      .select(Pipeline.piiCols.map(col): _*), s"$store/g0/records")
-    TableIO.write(prev.matchedPairs, s"$store/g0/matched_pairs")
-    TableIO.write(prev.clusters, s"$store/g0/clusters")
-    prev.unpersist()
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(store), spark.sparkContext.hadoopConfiguration)
     val o = fs.create(
@@ -150,20 +138,12 @@ class LinkageStreamSpec extends AnyFunSuite with SparkFixture {
     o.write("""{"gen":0,"batch":5}""".getBytes("UTF-8")); o.close()
 
     val e = intercept[IllegalArgumentException] {
-      LinkageStream.linkBatch(t2, 6L, store)
+      LinkageStream.linkBatch(batch, 6L, store)
     }
-    assert(e.getMessage.contains("migrateStore"), e.getMessage)
-
-    LinkageStream.migrateStore(spark, store)
-    assert(LinkageStream.linkBatch(t2, 6L, store))
-    val full = Pipeline.run(spark, all)
-    val ca = full.clusters.select(col("cluster_id"), col("members"))
-    val cb = LinkageStream.currentClusters(spark, store)
-      .select(col("cluster_id"), col("members"))
-    assert(ca.exceptAll(cb).isEmpty && cb.exceptAll(ca).isEmpty,
-      s"full=${ca.count()} migrated+increment=${cb.count()}")
-    full.unpersist()
-    all.unpersist()
+    assert(e.getMessage.contains("v1") &&
+      e.getMessage.contains("fresh store"), e.getMessage)
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$store/records_log")),
+      "a refused batch must leave the store untouched")
   }
 
   test("LinkageStreamMain --once: scheduled-job shape over a file source") {

@@ -110,7 +110,7 @@ class NearDupStreamSpec extends AnyFunSuite with SparkFixture {
     spark.catalog.refreshByPath(s"$store/sigs")
   }
 
-  test("v1 flat stores are refused and migrate cleanly") {
+  test("v1 flat stores are refused") {
     import spark.implicits._
     val cfg = graft.data.Dedup.MinHashConfig(oph = true)
     val docs = Seq((1L, doc(40)), (2L, doc(41))).toDF("doc_id", "text")
@@ -122,15 +122,8 @@ class NearDupStreamSpec extends AnyFunSuite with SparkFixture {
     val e = intercept[IllegalArgumentException] {
       NearDupStream.nearDupBatch(docs, s"$dir/v1store", cfg)
     }
-    assert(e.getMessage.contains("v1"), e.getMessage)
-
-    NearDupStream.migrateStore(spark, s"$dir/v1store", s"$dir/v2store", cfg)
-    val b2 = Seq((10L, doc(40).replaceFirst("tok", "EDITEDtok")),
-      (11L, doc(55))).toDF("doc_id", "text")
-    val s2 = NearDupStream.nearDupBatch(b2, s"$dir/v2store", cfg)
-    assert(s2.select("doc_id").collect().map(_.getLong(0)).toSet == Set(11L),
-      "10 must lose to migrated stored doc 1")
-    s2.unpersist()
+    assert(e.getMessage.contains("v1") &&
+      e.getMessage.contains("fresh store"), e.getMessage)
   }
 
   test("foreachBatch sink admits exactly the non-duplicates") {

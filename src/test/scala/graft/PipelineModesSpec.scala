@@ -176,6 +176,42 @@ class PipelineModesSpec extends AnyFunSuite with SparkFixture {
     assert(spark.sparkContext.getPersistentRDDs.keySet == before)
   }
 
+  test("household CLK i and mapping_csv row i belong to --testrun position i") {
+    val tmp = java.nio.file.Files.createTempDirectory("hhclks")
+    val out = tmp.toString
+    val secret = "0123456789abcdef0123456789abcdef"
+    try {
+      LinkageMain.run(spark, Map("synthetic" -> "300", "output" -> out,
+        "testrun" -> "true", "secret" -> secret))
+      val clusters = TableIO.read(spark, s"$out/clusters")
+      // the cached clusters span several partitions: their hash order is
+      // not the cluster_id order the positions follow
+      assert(clusters.inputFiles.length > 1)
+      val clkOf = Garble.householdClks(clusters, secret)
+        .select(col("cluster_id"), base64(col("clk"))).collect()
+        .map(r => r.getString(0) -> r.getString(1)).toMap
+      // household_pos_pid: (household_position, representative id), and a
+      // cluster's id is its representative's
+      val repAt = TableIO.read(spark, s"$out/household_pos_pid").collect()
+        .map(r => r.getLong(0) -> r.getString(1)).toMap
+      val written = Garble.readClks(spark, s"$out/household_clks")
+        .select(col("record_index"), base64(col("clk"))).collect()
+        .map(r => r.getLong(0) -> r.getString(1)).toMap
+      assert(written.size == repAt.size && repAt.size == clkOf.size)
+      val misplaced = repAt.count { case (i, rep) => written(i) != clkOf(rep) }
+      assert(misplaced == 0, s"$misplaced of ${repAt.size} CLKs out of place")
+      // ResolveMain --hhsourcefile numbers mapping_csv rows by scan order
+      val mapped = Positions.withScanPosition(
+          spark.read.option("header", "true").csv(s"$out/mapping_csv"),
+          "household_position")
+        .select(col("household_position"), col("cluster_id")).collect()
+        .map(r => r.getLong(0) -> r.getString(1)).toMap
+      val shifted = repAt.count { case (i, rep) => !mapped.get(i).contains(rep) }
+      assert(mapped.size == repAt.size && shifted == 0,
+        s"$shifted of ${repAt.size} mapping_csv rows out of household order")
+    } finally new scala.reflect.io.Directory(tmp.toFile).deleteRecursively()
+  }
+
   test("max-turns bounds a runaway mega-conversation's fold") {
     import spark.implicits._
     // one synthetic agent loop at 50k turns next to normal conversations:

@@ -156,15 +156,11 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     // global sort was round 1's scale-killer at the output edges)
     assert(!planOf(scalable).contains("Window"),
       s"global window leaked into positions plan")
-    // same for the output-edge consumers
+    // same for the output-edge consumer (the --testrun scoring files)
     val labeled = df.withColumn("cluster_id", substring(col("conv_id"), 1, 4))
-      .withColumn("family_name", lit("F"))
-      .withColumn("phone_number", lit(""))
-      .withColumn("household_zip", lit("Z"))
-      .withColumn("addr", struct(lit("").as("number"), lit("").as("street"),
-        lit("").as("suffix"), lit("").as("prefix"), lit("").as("value"),
-        lit("x").as("full")))
-    assert(!planOf(Output.mappingFile(labeled)).contains("Window"))
+    val (perMember, perHousehold) = Output.scoringFiles(labeled)
+    assert(!planOf(perMember).contains("Window"))
+    assert(!planOf(perHousehold).contains("Window"))
   }
 
   test("fold is a single-shuffle aggregation (no window, no sort)") {

@@ -54,11 +54,6 @@ class SimSpec extends AnyFunSuite {
     assert(Sim.normalizeAscii("") == "")
   }
 
-  test("digitsOnly") {
-    assert(Sim.digitsOnly(" (555) 123-4567 ") == "5551234567")
-    assert(Sim.digitsOnly("abc") == "")
-  }
-
   test("metaphone produces stable non-empty sigs for alpha strings") {
     assert(Sim.metaphone("SMITH") == Sim.metaphone("SMITH"))
     assert(Sim.metaphone("SMITH").nonEmpty)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.linkage._
 
-/** Extract / garble / block / resolve / profile stage semantics. */
+/** Extract / garble / block / resolve / analyze stage semantics. */
 class StagesSpec extends AnyFunSuite with SparkFixture {
 
   test("extract: mapping, defaults, value maps, cleaning, seeded shuffle") {
@@ -109,32 +109,15 @@ class StagesSpec extends AnyFunSuite with SparkFixture {
     assert(byId("a").size == 3)
   }
 
-  test("psig blocks: signatures + ratio filter drops oversized blocks") {
-    import spark.implicits._
-    // 40 records share family initial 'S' + phone initial 'B' → that
-    // c0 block exceeds the 2%… use maxRatio 0.5 on 44 records: the
-    // 40-strong block (91%) is dropped, small ones survive
-    val many = (0 until 40).map(i => (s"x$i", s"SMITH$i", "BROWSER"))
-    val few = Seq(("y1", "ADAMS", "CALC"), ("y2", "ADLER", "CALC"),
-      ("z1", "KOCH", "MAIL"), ("z2", "KAHN", "WEB"))
-    val recs = (many ++ few).toDF("conv_id", "family_name", "phone_number")
-    val blocks = Garble.psigBlocks(recs, "family_name", "phone_number",
-      maxRatio = 0.5)
-    val keys = blocks.select("block_key").distinct()
-      .collect().map(_.getString(0)).toSet
-    assert(!keys.contains("c0:SB"), "oversized c0 block must be dropped")
-    assert(keys.contains("c0:AC"), "small blocks survive")
-    // metaphone sigs exist
-    assert(keys.exists(_.startsWith("mp:")))
-  }
-
   test("resolve: metadata gate + positional link translation") {
     import spark.implicits._
-    val ids = Seq("r1", "r2", "r3").toDF("conv_id")
-    val links = Seq((101L, 0), (102L, 2)).toDF("LINK_ID", "position")
-    val out = Output.resolveLinks(links, ids).collect()
+    // positions index SOURCE rows, so the pii is not in record_id order;
+    // the links' columns are taken by position, whatever their header
+    val pii = Seq("r2", "r1", "r3").toDF("record_id")
+    val links = Seq((101L, 0), (102L, 2)).toDF("LINK_ID", "PII_POSITION")
+    val out = Resolve.linkIds(links, pii).collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
-    assert(out == Map(101L -> "r1", 102L -> "r3"))
+    assert(out == Map(101L -> "r2", 102L -> "r3"))
 
     val meta = Map("number_of_records" -> "3", "run_id" -> "aa")
     assert(Resolve.metadataDiff(meta, meta).isEmpty)
@@ -142,43 +125,18 @@ class StagesSpec extends AnyFunSuite with SparkFixture {
     assert(Resolve.metadataDiff(meta, bad).nonEmpty)
     intercept[IllegalArgumentException](Resolve.gate(meta, bad))
     Resolve.gate(meta, bad, force = true) // forced passes
-    val translated = Resolve.translate(links, ids, meta, meta)
-    assert(translated.count() == 2)
   }
 
   test("household links fan out record_ids (J5)") {
     import spark.implicits._
-    val hh = Seq((0, "a,b,c"), (1, "d"))
-      .toDF("HOUSEHOLD_POSITION", "record_ids")
-    val links = Seq((7L, 0), (9L, 1))
+    // mapping_csv shape; household positions are its scan-order rows
+    val hh = Seq(("k1", "d", 1), ("k0", "a,b,c", 3))
+      .toDF("cluster_id", "record_ids", "size")
+    val links = Seq((7L, 1), (9L, 0))
       .toDF("HOUSEHOLD_ID", "HOUSEHOLD_POSITION")
-    val out = Output.resolveHouseholdLinks(links, hh).collect()
-      .map(r => (r.getLong(0), r.getString(1))).toSet
-    assert(out == Set((7L, "a"), (7L, "b"), (7L, "c"), (9L, "d")))
-  }
-
-  test("profile reports") {
-    import spark.implicits._
-    val df = Seq(("a", "X1"), ("b", "X2"), ("c", "X2"), ("c", ""),
-      ("d", "Y33")).toDF("id", "v")
-    val vc = Profile.valueCounts(df, "v", topN = 5, minCount = 2)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(vc == Map("X2" -> 2L))
-    val dups = Profile.duplicateIds(df, "id").collect()
-    assert(dups.length == 1 && dups.head.getString(0) == "c")
-    // <20% guard computed: 1 dup of 4 uniques = 25% → NOT ok to report
-    assert(!dups.head.getBoolean(dups.head.fieldIndex("dup_share_ok")))
-    // 1 dup of 6 uniques (17%) → ok
-    val wide = df.unionByName(Seq(("e", "Z"), ("f", "Z")).toDF("id", "v"))
-    val dups2 = Profile.duplicateIds(wide, "id").collect()
-    assert(dups2.head.getBoolean(dups2.head.fieldIndex("dup_share_ok")))
-    val mask = Profile.formatMask(df, "v").collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(mask("X#") == 3 && mask("X##") == 1 && mask("") == 1)
-    val missing = Profile.missingReport(df, Seq("v")).head()
-    assert(missing.getLong(0) == 1)
-    val mm = Profile.minMaxMissing(df, "v").head()
-    assert(mm.getString(0) == "" && mm.getString(1) == "Y33")
+    val out = Resolve.householdIds(links, hh).collect()
+      .map(r => (r.getLong(0), r.getString(1))).toSeq
+    assert(out == Seq((7L, "a"), (7L, "b"), (7L, "c"), (9L, "d")))
   }
 
   test("timestamped pii/metadata pair + newest-source discovery") {
@@ -242,8 +200,17 @@ class StagesSpec extends AnyFunSuite with SparkFixture {
 
   test("config validation rejects malformed translation configs") {
     import graft.linkage.Extract.{FieldSpec, TranslationConfig}
-    val good = graft.sources.Sources.DataDictionary.v2.fields +
-      ("DOB" -> FieldSpec(Seq("birth_date"), dateFormat = Some("yyyy-MM-dd")))
+    // the v2 data dictionary (utils/data_reader.py) with a DOB format
+    val good = Map(
+      "record_id" -> FieldSpec(Seq("patid")),
+      "given_name" -> FieldSpec(Seq("pat_firstname")),
+      "family_name" -> FieldSpec(Seq("pat_lastname")),
+      "DOB" -> FieldSpec(Seq("birth_date"), dateFormat = Some("yyyy-MM-dd")),
+      "sex" -> FieldSpec(Seq("sex")),
+      "phone_number" -> FieldSpec(Seq("primary_phone")),
+      "household_street_address" ->
+        FieldSpec(Seq("address_street", "address_detail")),
+      "household_zip" -> FieldSpec(Seq("address_zip5")))
     assert(Extract.validateConfig(TranslationConfig(good)).isEmpty)
     val issues = Extract.validateConfig(TranslationConfig(Map(
       "given_nam" -> FieldSpec(Seq("first")), // typo → unknown field

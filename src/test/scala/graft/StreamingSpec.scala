@@ -94,23 +94,4 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
         Seq("alpha doc", "beta doc", "delta doc", "gamma doc"))
     } finally query.stop()
   }
-
-  test("windowed turn rates with watermark") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val input = MemoryStream[Turn]
-    val query = TranscriptStream.turnRates(input.toDF())
-      .writeStream.format("memory").queryName("rates")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      input.addData((0 until 20).map(i =>
-        turn("c1", i, if (i % 2 == 0) "user" else "assistant", s"t$i")): _*)
-      // advance the watermark far enough to close the windows
-      input.addData(turn("c2", 10000, "user", "late-mover"))
-      query.processAllAvailable()
-      val rows = spark.table("rates").collect()
-      assert(rows.nonEmpty)
-      assert(rows.map(_.getLong(2)).sum == 20)
-    } finally query.stop()
-  }
 }
