@@ -287,7 +287,11 @@ object CleanCorpusMain {
   import graft.linkage.Cli
 
   def main(args: Array[String]): Unit =
-    Cli.main("graft-clean-corpus", args, flags = Set("no-oph", "redact"))(run)
+    Cli.main("graft-clean-corpus", args,
+      options = Set("output", "input", "lang", "min-quality",
+        "neardup-jaccard", "benchmarks", "decont-ngram",
+        "max-dup-ngram-frac", "rep-ngram", "previous", "previous-input"),
+      flags = Set("no-oph", "redact"))(run)
 
   private def readMulti(spark: SparkSession, paths: String): DataFrame =
     spark.read.parquet(paths.split(",").map(_.trim).filter(_.nonEmpty): _*)

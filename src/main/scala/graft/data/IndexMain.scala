@@ -81,7 +81,11 @@ object IndexMain {
   }
 
   def main(args: Array[String]): Unit =
-    Cli.main("graft-index", args, flags = Set("pq")) { (spark, opts) =>
+    Cli.main("graft-index", args,
+        options = Set("mode", "index", "input", "ncentroids", "nprobe",
+          "subspaces", "codebook-size", "queries", "output", "k", "refine",
+          "max-files"),
+        flags = Set("pq")) { (spark, opts) =>
       println(run(spark, opts))
     }
 }

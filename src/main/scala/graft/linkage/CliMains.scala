@@ -16,31 +16,37 @@ import org.apache.spark.sql.functions._
   * (households.py's analog is LinkageMain.)
   */
 private[graft] object Cli {
-  private def parse(args: Array[String], flags: Set[String])
-      : Map[String, String] = {
+  /** `--key value` for each of `options`, bare `--flag` for each of
+    * `flags`; any other argument, a `--key` the main does not read
+    * included, is refused. */
+  private def parse(args: Array[String], options: Set[String],
+                    flags: Set[String]): Map[String, String] = {
     val m = scala.collection.mutable.Map[String, String]()
     var i = 0
     while (i < args.length) {
-      args(i) match {
-        case f if f.startsWith("--") && flags.contains(f.drop(2)) =>
-          m(f.drop(2)) = "true"; i += 1
-        case f if f.startsWith("--") && i + 1 < args.length =>
-          m(f.drop(2)) = args(i + 1); i += 2
-        case other =>
-          throw new IllegalArgumentException(s"unexpected arg: $other")
-      }
+      val key = if (args(i).startsWith("--")) args(i).drop(2) else ""
+      if (flags.contains(key)) {
+        m(key) = "true"; i += 1
+      } else if (options.contains(key) && i + 1 < args.length) {
+        m(key) = args(i + 1); i += 2
+      } else if (options.contains(key))
+        throw new IllegalArgumentException(s"--$key needs a value")
+      else if (key.nonEmpty)
+        throw new IllegalArgumentException(s"unknown option --$key")
+      else throw new IllegalArgumentException(s"unexpected arg: ${args(i)}")
     }
     m.toMap
   }
 
-  /** Every CLI main's body: parse argv BEFORE building the session (a
-    * bad argv fails without spinning up a cluster session), then run,
-    * and stop the session even when `run` throws. Returns `run`'s
-    * result. */
+  /** Every CLI main's body: parse argv against the main's value
+    * `options` and `flags` BEFORE building the session (a bad argv fails
+    * without spinning up a cluster session), then run, and stop the
+    * session even when `run` throws. Returns `run`'s result. */
   def main[T](name: String, args: Array[String],
+              options: Set[String] = Set.empty,
               flags: Set[String] = Set.empty)
              (run: (SparkSession, Map[String, String]) => T): T = {
-    val opts = parse(args, flags)
+    val opts = parse(args, options, flags)
     val spark = session(name)
     try run(spark, opts)
     finally spark.stop()
@@ -104,7 +110,9 @@ private[graft] object Cli {
   */
 object ExtractMain {
   def main(args: Array[String]): Unit =
-    Cli.main("graft-extract", args, flags = Set("verbose"))(run)
+    Cli.main("graft-extract", args,
+      options = Set("input", "output", "conf", "seed"),
+      flags = Set("verbose"))(run)
 
   def run(spark: SparkSession, opts: Map[String, String]): String = {
     val in = Cli.required(opts, "input")
@@ -137,14 +145,15 @@ object ExtractMain {
   *
   *   spark-submit --class graft.linkage.GarbleMain <jar> \
   *     --schemadir <dir> --secretfile <file> --output <dir> \
-  *     (--piidir <temp-data dir> | --input <pii csv>) [--exact-crypto]
+  *     (--piidir <temp-data dir> | --input <pii csv>)
   *
-  * --exact-crypto switches from the fast seeded-murmur CLK to the
-  * anonlink blakeHash strategy (keyed blake2b + HKDF field keys).
+  * CLKs are the anonlink blakeHash strategy (keyed blake2b + HKDF field
+  * keys from the whole households/individuals subkey, crypto.ClkCrypto).
   */
 object GarbleMain {
   def main(args: Array[String]): Unit =
-    Cli.main("graft-garble", args, flags = Set("exact-crypto"))(run)
+    Cli.main("graft-garble", args, options = Set("output", "secretfile",
+      "input", "piidir", "schemadir"))(run)
 
   def run(spark: SparkSession, opts: Map[String, String]): Seq[String] = {
     val out = Cli.required(opts, "output")
@@ -161,19 +170,16 @@ object GarbleMain {
     val garbleTime = java.time.LocalDateTime.now().format(
       java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd'T'HH:mm:ss"))
     val dirs = Garble.garbleFlow(records,
-      Cli.required(opts, "schemadir"), secret, out, meta, garbleTime,
-      exactCrypto = opts.contains("exact-crypto"))
+      Cli.required(opts, "schemadir"), secret, out, meta, garbleTime)
     // the ClkCrypto caveat, surfaced at the CLI (VERDICT r04 #7): the
     // blake2b/HKDF primitives are RFC-vector-tested, but byte parity of
     // the CLK COMPOSITION (field keys → bigrams → k bit indices) with
     // anonlink/clkhash has no offline ground-truth vector — a user about
     // to exchange zips with a real CODI linkage agent must know
-    if (opts.contains("exact-crypto"))
-      println("[graft] NOTE: --exact-crypto CLKs use RFC-vector-tested " +
-        "blake2b/HKDF primitives, but the CLK composition is NOT " +
-        "certified byte-compatible with anonlink/clkhash — cross-validate " +
-        "against the agent's clkhash output before exchanging encodings " +
-        "(SURVEY.md §7.5)")
+    println("[graft] NOTE: CLKs use RFC-vector-tested blake2b/HKDF " +
+      "primitives, but the CLK composition is NOT certified " +
+      "byte-compatible with anonlink/clkhash — cross-validate against the " +
+      "agent's clkhash output before exchanging encodings (SURVEY.md §7.5)")
     println(s"[graft] garble complete: ${dirs.size} schema(s) → $out.zip")
     dirs
   }
@@ -207,7 +213,8 @@ object BlockMain {
       seed = cfg.path("random_state").asInt(0))
   }
 
-  def main(args: Array[String]): Unit = Cli.main("graft-block", args)(run)
+  def main(args: Array[String]): Unit = Cli.main("graft-block", args,
+    options = Set("clkpath", "output", "schemafile"))(run)
 
   def run(spark: SparkSession, opts: Map[String, String]): Unit = {
     val clkPath = Cli.required(opts, "clkpath")
@@ -248,7 +255,8 @@ object BlockMain {
   * reference's two-file split (data_analysis.py:179–197).
   */
 object AnalyzeMain {
-  def main(args: Array[String]): Unit = Cli.main("graft-analyze", args)(run)
+  def main(args: Array[String]): Unit = Cli.main("graft-analyze", args,
+    options = Set("csv", "output", "source"))(run)
 
   def run(spark: SparkSession, opts: Map[String, String]): (String, String) = {
     val df = Extract.readCsvAllStrings(spark, Cli.required(opts, "csv"))
@@ -274,7 +282,7 @@ object AnalyzeMain {
 object ValidateMetadataMain {
   def main(args: Array[String]): Unit = {
     val issues = Cli.main("graft-validate-metadata", args,
-      flags = Set("verbose"))(run)
+      options = Set("source", "linkage"), flags = Set("verbose"))(run)
     if (issues.nonEmpty) sys.exit(1)
   }
 
@@ -309,7 +317,9 @@ object ValidateMetadataMain {
   */
 object ResolveMain {
   def main(args: Array[String]): Unit =
-    Cli.main("graft-resolve", args, flags = Set("force"))(run)
+    Cli.main("graft-resolve", args, options = Set("output", "metadata",
+      "sourcefile", "linkszip", "hhsourcefile", "hhlinkszip"),
+      flags = Set("force"))(run)
 
   /** One header-bearing CSV file; the row count is observed on the write
     * itself, not by re-running the join. */

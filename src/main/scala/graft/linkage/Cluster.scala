@@ -41,9 +41,11 @@ import org.apache.spark.storage.StorageLevel
   */
 object Cluster {
 
-  case class Options(
-      checkpointDir: Option[String] = None,
-      maxIter: Int = 50)
+  case class Options(checkpointDir: Option[String] = None)
+
+  /** Star rounds after which a CC that has neither converged nor shrunk
+    * to the finish ceiling fails. */
+  private val MaxRounds = 50
 
   /** Edge count at or below which CC finishes in one task (see the
     * object doc for how it is sized). */
@@ -99,7 +101,7 @@ object Cluster {
     var converged = false
     var iter = startIter
     var prevSig = signature(cur) // materializes the lazy checkpoint
-    while (prevSig._1 > finishEdges && !converged && iter < opts.maxIter) {
+    while (prevSig._1 > finishEdges && !converged && iter < MaxRounds) {
       val ls = largeStar(cur)
       val ss = smallStar(ls)
       val next = persistRound(spark, ss, opts, iter, inputSig)
@@ -112,7 +114,7 @@ object Cluster {
     }
     val finish = prevSig._1 <= finishEdges
     require(finish || converged,
-      s"CC did not converge in ${opts.maxIter} rounds")
+      s"CC did not converge in $MaxRounds rounds")
     // with a checkpoint dir the finish reads a persisted round: iter == 0
     // means no round ran and nothing was resumed, so write the input
     // edge set as round 0 first

@@ -38,28 +38,13 @@ object Garble {
     schema
   }
 
-  private def seedOf(subkey: String): Int =
-    java.lang.Long.parseLong(subkey.take(8), 16).toInt
-
   /** Individual CLKs: one 4096-bit encoding per record over the schema
-    * fields (garble.py:135–145 / name-sex-dob-addr schema). */
+    * fields (garble.py:135–145 / name-sex-dob-addr schema) — the anonlink
+    * "blakeHash" strategy: HKDF-SHA256 per-field keys from the whole
+    * subkey + keyed blake2b-512 per bigram (crypto.ClkCrypto;
+    * RFC-vector-tested primitives). */
   def clks(records: DataFrame, schema: ClkSchema, secret: String,
            context: String = "individuals"): DataFrame = {
-    validateSchema(schema)
-    val subkey = deriveSubkey(validateSecret(secret), context)
-    records.select(col("conv_id"),
-      gf.clk_encode(seedOf(subkey), schema.fields.map(col): _*).as("clk"))
-  }
-
-  /** Crypto-grade CLKs — the anonlink "blakeHash" strategy itself:
-    * HKDF-SHA256 per-field keys + keyed blake2b-512 per bigram
-    * (crypto.ClkCrypto; RFC-vector-tested primitives). Same 4096-bit
-    * output shape as [[clks]]; measured ~4.5× the murmur path's cost
-    * (42k vs 190k records/s warm at local[32], 3-field schema, 33k
-    * records) — opt-in because the default bench doesn't need crypto,
-    * not because it can't scale. */
-  def clksExact(records: DataFrame, schema: ClkSchema, secret: String,
-                context: String = "individuals"): DataFrame = {
     validateSchema(schema)
     val subkey = deriveSubkey(validateSecret(secret), context)
     records.select(col("conv_id"),
@@ -67,11 +52,12 @@ object Garble {
   }
 
   /** Household CLKs from cluster representatives
-    * (households.py:308–334 analog). */
+    * (households.py:308–334 analog), encoded like [[clks]] under the
+    * households subkey. */
   def householdClks(clusters: DataFrame, secret: String): DataFrame = {
     val subkey = deriveSubkey(validateSecret(secret), "households")
     clusters.select(col("cluster_id"),
-      gf.clk_encode(seedOf(subkey),
+      gf.clk_encode_blake(subkey,
         col("family_name"), col("phone_number"),
         col("household_street_address"), col("household_zip")).as("clk"))
   }
@@ -87,16 +73,17 @@ object Garble {
     * the linkage agent identify a record by its index in the array), so
     * the array order must equal the pii source-row order end to end.
     * The encode runs at FULL parallelism and is materialized first (a
-    * driver-funnelled plan would run the whole CLK hash — 4.5× costlier
-    * on the blake2b path — on one core); the driver then streams the
+    * driver-funnelled plan would run the whole blake2b CLK hash on one
+    * core); the driver then streams the
     * cached partitions out in partition-index order, one partition in
     * memory at a time. The export is driver-IO-bound BY the wire format
     * itself — the reference consumer is a single-node agent doing
     * json.load; scale the linkage, not this export. Spark's base64 is
     * MIME-chunked (CRLF every 76 chars); the chunking is stripped so the
     * emitted strings are plain single-line base64 — raw CRLF inside a
-    * JSON string literal would not be valid JSON. */
-  def writeClksJson(clksDf: DataFrame, path: String): Unit = {
+    * JSON string literal would not be valid JSON. Returns the number of
+    * CLKs written. */
+  def writeClksJson(clksDf: DataFrame, path: String): Long = {
     val spark = clksDf.sparkSession
     val b64 = clksDf.select(
       regexp_replace(base64(col("clk")), "[\\r\\n]", "").as("clks"))
@@ -114,17 +101,18 @@ object Garble {
       true), 1 << 20)
     out.write("""{"clks": [""".getBytes("UTF-8"))
     val it = b64.toLocalIterator() // partition-index order = source order
-    var first = true
+    var written = 0L
     while (it.hasNext) {
-      if (!first) out.write(',')
+      if (written > 0) out.write(',')
       out.write('"')
       out.write(it.next().getString(0).getBytes("UTF-8"))
       out.write('"')
-      first = false
+      written += 1
     }
     out.write("]}".getBytes("UTF-8"))
     out.close()
     b64.unpersist(blocking = false)
+    written
   }
 
   /** Read a CLK table back as (record_index, clk) with record_index the
@@ -188,15 +176,16 @@ object Garble {
   /** Multi-schema garble flow (garble.py:82–157): iterate every *.json
     * schema under `schemaDir`, CLK-encode the records once per schema
     * into `outDir/<schema-name>/`, stamp `garble_time` into the metadata
-    * document (written alongside), validate each CLK table's row count
-    * against metadata.number_of_records (validate_clks, garble.py:63–74),
+    * document (written alongside), validate the number of CLKs each
+    * table was written with against metadata.number_of_records
+    * (validate_clks, garble.py:63–74),
     * and package everything into `<outDir>.zip`. `garbleTime` is
     * caller-injected (the reference stamps datetime.now(); deterministic
     * runs are a documented deviation, SURVEY.md §7.5). Returns the list
     * of written CLK table paths. */
   def garbleFlow(records: DataFrame, schemaDir: String, secret: String,
                  outDir: String, metadata: Map[String, String],
-                 garbleTime: String, exactCrypto: Boolean = false): Seq[String] = {
+                 garbleTime: String): Seq[String] = {
     val spark = records.sparkSession
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(schemaDir), spark.sparkContext.hadoopConfiguration)
@@ -208,10 +197,7 @@ object Garble {
     val clkDirs = schemaPaths.map { p =>
       val schema = readSchema(spark, p.toString)
       val dir = s"$outDir/${p.getName.stripSuffix(".json")}"
-      val encoded = if (exactCrypto) clksExact(records, schema, secret)
-                    else clks(records, schema, secret)
-      writeClksJson(encoded, dir)
-      val written = readClks(spark, dir).count()
+      val written = writeClksJson(clks(records, schema, secret), dir)
       expected.foreach(e => require(written == e,
         s"Expected $e in $dir, found $written"))
       dir

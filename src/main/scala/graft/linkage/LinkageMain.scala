@@ -14,9 +14,6 @@ import org.apache.spark.sql.functions._
   *     [--pairsfile <parquet>]    pre-computed matched pairs
   *     [--secret <hex>]           emit household CLKs (garble stage)
   *     [--testrun]                emit the scoring files
-  *     [--buckets <n>]            persist records conv_id-bucketed (n
-  *                                buckets) so pair-attribute joins never
-  *                                shuffle the record structs
   *     [--max-turns <n>]          runaway-conversation guard: keep only
   *                                the n lowest-turn_idx turns per
   *                                conversation (bounds the fold buffer;
@@ -66,6 +63,8 @@ object LinkageMain {
 
   def main(args: Array[String]): Unit =
     Cli.main("graft-linkage", args,
+      options = Set("input", "output", "checkpoint", "pairsfile", "secret",
+        "max-turns", "previous", "householddef", "synthetic"),
       flags = Set("exact-addresses", "testrun"))(run)
 
   def run(spark: SparkSession, opts: Map[String, String]): Unit = {
@@ -95,8 +94,6 @@ object LinkageMain {
       ccOptions = Cluster.Options(checkpointDir = opts.get("checkpoint")),
       exactAddresses = opts.contains("exact-addresses"),
       pairsFile = opts.get("pairsfile"),
-      bucketedRecords = opts.get("buckets")
-        .map(n => ("graft_records_bucketed", n.toInt)),
       maxTurns = opts.get("max-turns").map(_.toInt).getOrElse(0))
     // --previous <outdir of an earlier run>: daily-append mode. Fold and
     // score ONLY the new transcripts, candidates restricted to pairs
@@ -144,7 +141,7 @@ object LinkageMain {
       .csv(s"$out/mapping_csv")
 
     if (opts.contains("testrun")) {
-      val (perMember, perHousehold) = Output.scoringFiles(result.labeledRecords)
+      val (perMember, perHousehold) = Output.scoringFiles(result.clusters)
       TableIO.write(perMember, s"$out/hh_pos_patids")
       TableIO.write(perHousehold, s"$out/household_pos_pid")
     }

@@ -35,20 +35,20 @@ object Output {
         col("rep.family_name"), col("rep.phone_number"),
         col("rep.household_street_address"), col("rep.household_zip"))
 
-  /** --testrun scoring files (households.py:261–265, 345–347):
-    * `hh_pos_patids` = (household_position, pid) one row per member;
-    * `household_pos_pid` = (household_position, pid) one row per
-    * household with the representative's id. */
-  def scoringFiles(labeled: DataFrame): (DataFrame, DataFrame) = {
-    val agg = labeled.groupBy(col("cluster_id"))
-      .agg(sort_array(collect_list(col("conv_id"))).as("members"),
-        min(col("conv_id")).as("rep"))
-    val hh = Positions.withPosition(agg, col("cluster_id"),
+  /** --testrun scoring files (households.py:261–265, 345–347) from the
+    * [[clusters]] rows, whose `cluster_id` is the representative
+    * `members[0]`: `hh_pos_patids` = (household_position, pid) one row
+    * per member; `household_pos_pid` = (household_position, pid) one row
+    * per household with the representative's id. Positions follow
+    * `cluster_id` order, like mapping_csv and the household CLKs. */
+  def scoringFiles(clusters: DataFrame): (DataFrame, DataFrame) = {
+    val hh = Positions.withPosition(
+      clusters.select(col("cluster_id"), col("members")), col("cluster_id"),
       "household_position")
     val perMember = hh.select(col("household_position"),
       explode(col("members")).as("pid"))
     val perHousehold = hh.select(col("household_position"),
-      col("rep").as("pid"))
+      col("cluster_id").as("pid"))
     (perMember, perHousehold)
   }
 }

@@ -29,23 +29,6 @@ object Pipeline {
         * otherwise parquet, whose id_a/id_b columns are selected BY NAME
         * (round 2 trusted positional column order). Full runs only. */
       pairsFile: Option[String] = None,
-      /** (tableName, numBuckets): persist the folded records (minus the
-        * fat turns array) as a conv_id-bucketed catalog table and run the
-        * pair-attribute joins (J7) against it. The bucketed side joins
-        * with NO Exchange — at 100 TB the pairs relation scales with the
-        * corpus, broadcasting it stops being possible, and the records
-        * structs must not move; bucketing moves them exactly once, at
-        * write time. Below broadcast scale the in-memory path is faster
-        * (no table write), so bucketing turns itself on at
-        * [[autoBucketThreshold]] records when unset here. Full runs
-        * only. */
-      bucketedRecords: Option[(String, Int)] = None,
-      /** Records count at which the default run auto-switches to a
-        * bucketed attribute side (writes a run-unique
-        * "graft_records_auto_<id>" table).
-        * Below it the pairs relation is comfortably broadcast-sized and
-        * the table write would be pure overhead. */
-      autoBucketThreshold: Long = 1000000L,
       /** Runaway-conversation guard (Fold.fold maxTurns): > 0 keeps only
         * the maxTurns lowest-turn_idx turns per conversation before the
         * fold, bounding the per-conversation aggregation buffer a
@@ -57,8 +40,9 @@ object Pipeline {
   case class Result(
       records: DataFrame,
       candidatePairs: DataFrame,
-      scoredPairs: DataFrame,
       matchedPairs: DataFrame,
+      /** (conv_id, cluster_id), one row per record: the exploded members
+        * of the cached [[clusters]]. */
       labeledRecords: DataFrame,
       clusters: DataFrame,
       metrics: DataFrame,
@@ -73,19 +57,8 @@ object Pipeline {
         * persists exactly these during a run; callers release them when
         * done with the Result's DataFrames via [[unpersist]] — the round-2
         * API gave callers no handle and leaked them for the session. */
-      cached: Seq[DataFrame],
-      /** The run-unique auto-bucketed records table, when the auto path
-        * wrote one. Dropped by [[unpersist]] — run-unique names never
-        * overwrite each other, so without the drop every auto-bucketed
-        * run would leak a full records copy into the warehouse.
-        * User-named bucketedRecords tables are caller-owned and never
-        * dropped here. */
-      autoBucketTable: Option[String] = None) {
-    def unpersist(): Unit = {
-      cached.foreach(_.unpersist(false))
-      autoBucketTable.foreach(t =>
-        records.sparkSession.sql(s"DROP TABLE IF EXISTS `$t`"))
-    }
+      cached: Seq[DataFrame]) {
+    def unpersist(): Unit = cached.foreach(_.unpersist(false))
   }
 
   /** PII record columns every stage downstream of fold actually consumes
@@ -93,8 +66,8 @@ object Pipeline {
     * phone_number/addr; outputs: those + given_name/DOB/sex passthrough).
     * This is the COMMON schema across every documented records source —
     * Fold.fold output (which adds turns + timestamp ts_min/ts_max), the
-    * conv_id-bucketed table (no turns), and TranscriptStream.toRecords
-    * (no turns, day-string ts_min/ts_max). */
+    * records table LinkageMain writes (no turns), and
+    * TranscriptStream.toRecords (no turns, day-string ts_min/ts_max). */
   val piiCols: Seq[String] = Seq("conv_id", "given_name", "family_name",
     "DOB", "sex", "phone_number", "household_zip", "addr")
 
@@ -108,38 +81,12 @@ object Pipeline {
           cfg: Config = Config()): Result = {
     val records = Fold.fold(transcripts, cfg.maxTurns).persist(lvl)
     val nRecords = records.count() // materializes the persist
-
-    // shuffle-free attribute side: write the folded records once, bucketed
-    // on the join key; every equi-join on conv_id then reads the table
-    // bucket-local (EnsureRequirements elides the Exchange). Explicit via
-    // cfg.bucketedRecords, or automatic once the corpus outgrows the
-    // broadcast-friendly regime (the default 100-TB run must not lean on
-    // broadcasting a corpus-proportional pairs relation).
-    val (attrSide, autoTable) = cfg.bucketedRecords match {
-      case Some((table, buckets)) =>
-        TableIO.writeBucketed(records.drop("turns"), table, "conv_id", buckets)
-        (TableIO.readTable(spark, table), None)
-      case None if nRecords >= cfg.autoBucketThreshold =>
-        val buckets = math.min(4096,
-          math.max(32, (nRecords / 250000L).toInt))
-        // run-unique name: two concurrent runs sharing one warehouse must
-        // not clobber each other's auto table (the fixed name did); the
-        // Result carries the name so unpersist() drops it — run-unique
-        // tables never overwrite, so they must not outlive the run
-        val table = "graft_records_auto_" +
-          java.util.UUID.randomUUID().toString.replace("-", "").take(10)
-        TableIO.writeBucketed(records.drop("turns"), table,
-          "conv_id", buckets)
-        (TableIO.readTable(spark, table), Some(table))
-      case None => (records, None)
-    }
-
     val pairs = cfg.pairsFile match {
       case Some(path) => loadPairs(spark, path)
-      case None => Candidates.candidates(attrSide, passes(cfg))
+      case None => Candidates.candidates(records, passes(cfg))
     }
-    link(spark, cfg, records, attrSide, pairs, None,
-      records.select(piiCols.map(col): _*), Seq(records), autoTable) {
+    link(spark, cfg, records, pairs, None,
+      records.select(piiCols.map(col): _*), Seq(records)) {
       scored => Seq(
         ("records", nRecords),
         ("candidate_pairs", pairs.count()),
@@ -173,21 +120,21 @@ object Pipeline {
     * the candidates as they are, matching.py:333–335), union `previous`
     * matches, CC over xxhash64(conv_id) node ids (collision odds n²/2⁶⁴)
     * with singletons keeping their own id, and build the clusters once,
-    * each named by its min(conv_id). `counts` supplies the caller's
-    * leading metric rows given the scored pairs; it runs after CC (so a
-    * count of the pairs reads their cache), followed by matched_pairs and
+    * each named by its min(conv_id); the labelled records are the
+    * clusters' exploded members. `counts` supplies the caller's leading
+    * metric rows given the scored pairs; it runs after CC (so a count of
+    * the pairs reads their cache), followed by matched_pairs and
     * clusters, whose count materializes the cached clusters every output
     * then reads. */
   private def link(spark: SparkSession, cfg: Config, records: DataFrame,
-                   attrSide: DataFrame, pairs: DataFrame,
-                   previous: Option[DataFrame], deltaRecords: DataFrame,
-                   cached: Seq[DataFrame], autoTable: Option[String])
+                   pairs: DataFrame, previous: Option[DataFrame],
+                   deltaRecords: DataFrame, cached: Seq[DataFrame])
                   (counts: DataFrame => Seq[(String, Long)]): Result = {
     pairs.persist(lvl)
     val (scored, newMatches, scoredHandle) =
       if (cfg.pairsFile.isDefined || cfg.exactAddresses) (pairs, pairs, Nil)
       else {
-        val sc = Scoring.scorePairs(attrSide, pairs).persist(lvl)
+        val sc = Scoring.scorePairs(records, pairs).persist(lvl)
         (sc, Scoring.matches(sc), Seq(sc))
       }
     // no overlap to dedup across the union in practice — incremental
@@ -200,27 +147,22 @@ object Pipeline {
     val labels = Cluster.connectedComponents(spark,
       matched.select(xxhash64(col("id_a")).as("a"),
         xxhash64(col("id_b")).as("b")), cfg.ccOptions)
-    val labeledByNode = Cluster.labelRecords(
-      records.withColumn("node_id", xxhash64(col("conv_id"))), labels)
-    // members are sorted, so members[0] is the cluster's min(conv_id):
-    // the name the labelled records get from their join-back below
-    val clustersDf = Output.clusters(labeledByNode)
+    // members are sorted, so members[0] is the cluster's min(conv_id)
+    val clustersDf = Output.clusters(Cluster.labelRecords(
+        records.withColumn("node_id", xxhash64(col("conv_id"))), labels))
       .withColumn("cluster_id", col("members")(0))
       .persist(lvl)
-    val clusterName = labeledByNode.groupBy(col("cluster_id"))
-      .agg(min(col("conv_id")).as("cluster_key"))
-    val labeled = labeledByNode.join(clusterName, Seq("cluster_id"))
-      .drop("cluster_id").withColumnRenamed("cluster_key", "cluster_id")
+    val labeled = clustersDf.select(explode(col("members")).as("conv_id"),
+      col("cluster_id"))
 
     import spark.implicits._
     val metrics = (counts(scored) ++ Seq(
       ("matched_pairs", matched.count()),
       ("clusters", clustersDf.count()))).toDF("metric", "value")
 
-    Result(records, pairs, scored, matched, labeled, clustersDf, metrics,
+    Result(records, pairs, matched, labeled, clustersDf, metrics,
       deltaRecords, newMatches,
-      cached ++ Seq(pairs) ++ scoredHandle ++ Seq(labels, clustersDf),
-      autoTable)
+      cached ++ Seq(pairs) ++ scoredHandle ++ Seq(labels, clustersDf))
   }
 
   /** Incremental linkage — the daily-increment path a 100-TB deployment
@@ -231,7 +173,7 @@ object Pipeline {
     * matches are `previousMatches` verbatim); the whole increment costs
     * O(new × blocked-neighborhood), not O(corpus²). Exact mode links the
     * new exact-blocked pairs unscored, like a full exact run; the
-    * full-run-only modes (pairsFile, bucketedRecords) are refused.
+    * full-run-only pairsFile is refused.
     *
     * Equivalence: labels equal a full run over the combined corpus, with
     * one documented divergence — a block that crosses the 2% cap only
@@ -241,7 +183,8 @@ object Pipeline {
     *
     * `existingRecords` is the previous run's folded records from ANY of
     * the documented sources — Result.records (still carrying turns +
-    * timestamp ts_min/ts_max), the conv_id-bucketed table (no turns), or
+    * timestamp ts_min/ts_max), the records table LinkageMain writes (no
+    * turns, read back with TableIO.read, as `--previous` does), or
     * TranscriptStream.toRecords output (no turns, day-string ts_min/
     * ts_max); both sides are projected to the common [[piiCols]] schema
     * before the union, so the source shapes interoperate.
@@ -249,9 +192,9 @@ object Pipeline {
   def incremental(spark: SparkSession, existingRecords: DataFrame,
                   previousMatches: DataFrame, newTranscripts: DataFrame,
                   cfg: Config = Config()): Result = {
-    require(cfg.pairsFile.isEmpty && cfg.bucketedRecords.isEmpty,
-      "pairsFile/bucketedRecords are full-run-only modes: the incremental " +
-        "path neither bypasses blocking nor buckets the attribute side")
+    require(cfg.pairsFile.isEmpty,
+      "pairsFile is a full-run-only mode: the incremental path does not " +
+        "bypass blocking")
     val newRecords = Fold.fold(newTranscripts, cfg.maxTurns)
       .select(piiCols.map(col): _*)
       .persist(lvl)
@@ -260,8 +203,8 @@ object Pipeline {
       .persist(lvl)
 
     val pairs = Candidates.incrementalCandidates(all, newRecords, passes(cfg))
-    link(spark, cfg, all, all, pairs, Some(previousMatches), newRecords,
-      Seq(newRecords, all), None) {
+    link(spark, cfg, all, pairs, Some(previousMatches), newRecords,
+      Seq(newRecords, all)) {
       _ => Seq(
         ("new_records", newRecords.count()),
         ("records", all.count()),

@@ -60,28 +60,31 @@ object Resolve {
     } finally zin.close()
   }
 
-  /** S9: read the single CSV inside a linkage-agent zip (driver unzips to
-    * temp, then a normal csv scan). */
+  /** S9: read the CSV inside a linkage-agent zip (the last `.csv`
+    * member, as the reference's unzip-then-read does). The driver reads
+    * the member's lines into a Dataset for a normal csv parse: nothing is
+    * unpacked to disk, so no copy of the link file outlives the run. */
   def readZipMemberCsv(spark: SparkSession, zipPath: String): DataFrame = {
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(zipPath), spark.sparkContext.hadoopConfiguration)
     val zin = new java.util.zip.ZipInputStream(
       fs.open(new org.apache.hadoop.fs.Path(zipPath)))
-    val tmp = java.nio.file.Files.createTempDirectory("graft-links")
-    var entry = zin.getNextEntry
-    var csvPath: Option[java.nio.file.Path] = None
-    while (entry != null) {
-      if (entry.getName.endsWith(".csv")) {
-        val p = tmp.resolve(new java.io.File(entry.getName).getName)
-        java.nio.file.Files.copy(zin, p,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        csvPath = Some(p)
+    var lines: Option[Seq[String]] = None
+    try {
+      var entry = zin.getNextEntry
+      while (entry != null) {
+        if (entry.getName.endsWith(".csv")) {
+          val reader = new java.io.BufferedReader(
+            new java.io.InputStreamReader(zin, "UTF-8"))
+          lines = Some(Iterator.continually(reader.readLine())
+            .takeWhile(_ != null).toVector)
+        }
+        entry = zin.getNextEntry
       }
-      entry = zin.getNextEntry
-    }
-    zin.close()
-    require(csvPath.isDefined, s"no CSV member found in $zipPath")
-    spark.read.option("header", "true").csv(csvPath.get.toString)
+    } finally zin.close()
+    require(lines.isDefined, s"no CSV member found in $zipPath")
+    import spark.implicits._
+    spark.read.option("header", "true").csv(lines.get.toDS())
   }
 
   /** The links' first two columns under the given names, whatever their

@@ -156,10 +156,8 @@ object Scoring {
     // reps: speed variance, not data skew). Hash-repartition on the
     // (uniform by construction) pair identity into ≥4 waves so fast
     // cores absorb more tasks. GATED on the regime: deployments whose
-    // scoring stage already has ≥4 tasks/core — production
-    // shuffle.partitions, or a bucketed records table with thousands of
-    // buckets — skip the exchange entirely, keeping the bucketed path's
-    // zero-records-shuffle plan (BucketedJoinSpec).
+    // scoring stage already has ≥4 tasks/core (production
+    // shuffle.partitions) skip the exchange entirely.
     val spark = records.sparkSession
     val cores = spark.sparkContext.defaultParallelism
     val shufflePartitions =

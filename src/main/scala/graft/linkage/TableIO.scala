@@ -30,46 +30,6 @@ object TableIO {
   def read(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(s"$path/data")
 
-  /** Bucketed write: pre-hash-partitions a table on its join key so every
-    * downstream equi-join on that key skips the shuffle of this side
-    * entirely (Exchange elided by EnsureRequirements). At 100 TB this is
-    * the difference between moving the fat records table per join and
-    * never moving it — bucket `records` by conv_id once at fold time,
-    * then pair-attribute joins (J7) stream bucket-local.
-    * Uses the session catalog (saveAsTable is how Spark persists bucket
-    * metadata); `database`.`name` table identifier. */
-  def writeBucketed(df: DataFrame, table: String, bucketCol: String,
-                    buckets: Int): Unit = {
-    val spark = df.sparkSession
-    // A table the CATALOG knows about is overwritten through saveAsTable
-    // itself — never by a hand-computed path delete (the old code derived
-    // <warehouse>/<table.toLowerCase>, which is the wrong path for a
-    // qualified db.table identifier or a custom-LOCATION table, and on a
-    // shared warehouse deleted data this session does not own).
-    //
-    // What saveAsTable cannot handle alone is the ORPHAN case: a
-    // warehouse directory left by a previous JVM whose in-memory catalog
-    // died with it — overwrite then fails with LOCATION_ALREADY_EXISTS.
-    // Clear it only when (a) the catalog has NO entry (so no live table
-    // is harmed), (b) the name is unqualified (the default-database
-    // layout <warehouse>/<name> is the only one we can derive), keeping
-    // the delete inside this session's warehouse by construction.
-    if (!spark.catalog.tableExists(table) && !table.contains(".")) {
-      val warehouse = spark.conf.get("spark.sql.warehouse.dir")
-      val loc = new org.apache.hadoop.fs.Path(warehouse, table.toLowerCase)
-      val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(loc)) fs.delete(loc, true)
-    }
-    df.write.mode("overwrite")
-      .bucketBy(buckets, bucketCol)
-      .sortBy(bucketCol)
-      .format("parquet")
-      .saveAsTable(table)
-  }
-
-  def readTable(spark: SparkSession, table: String): DataFrame =
-    spark.table(table)
-
   /** S10 analog (garble.py:82–93): resolve the newest timestamped table
     * under `dir` by lexicographic name (names carry sortable stamps,
     * e.g. pii-YYYYMMDD-HHMMSS). */

@@ -28,9 +28,9 @@ package graft.linkage.crypto
   *
   * The PRIMITIVES are exact (RFC 7693 / RFC 5869, vector-tested in
   * CryptoSpec); the COMPOSITION follows clkhash's published structure.
-  * The default engine path (expr.Clk, seeded-murmur) remains the fast
-  * non-crypto variant; this one is opt-in via Garble.clksExact /
-  * GarbleMain --exact-crypto.
+  * It is the engine's one CLK encoder: Garble.clks and
+  * Garble.householdClks (and so GarbleMain and LinkageMain --secret)
+  * encode through it.
   */
 object ClkCrypto {
 

@@ -512,44 +512,9 @@ case class SigAgreement(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
+/** λ-fold blocking over CLKs (the CLK encoder itself is
+  * [[ClkEncodeBlake]]). */
 object Clk {
-  /** CLK Bloom-filter encoding of one record's fields.
-    * Capability-parity port of the anonlink CLK described by
-    * example-schema/name-sex-dob-addr.json (l=4096 bits, k=30 per bigram,
-    * bigram tokenization with whitespace padding) — seeded MurmurHash3
-    * stands in for blake2+HKDF (documented deviation, SURVEY.md §7.5:
-    * the north rule scores clustering, not crypto).
-    */
-  val L = 4096 // bits
-  val K = 30   // hash functions per bigram
-  def encode(fields: Array[String], secretSeed: Int): Array[Byte] = {
-    val bits = new Array[Byte](L / 8)
-    var f = 0
-    while (f < fields.length) {
-      val s = fields(f)
-      if (s != null && s.nonEmpty) {
-        val padded = " " + s + " "
-        var i = 0
-        while (i < padded.length - 1) {
-          val gram = padded.substring(i, i + 2)
-          val g = scala.util.hashing.MurmurHash3.stringHash(gram, secretSeed ^ f)
-          // double hashing: idx_h = g1 + h*g2 (Kirsch–Mitzenmacher);
-          // g2 depends only on (gram, field) — computed once per gram
-          val g2 = scala.util.hashing.MurmurHash3.productHash((g, f), secretSeed + 31)
-          var h = 0
-          while (h < K) {
-            val idx = java.lang.Math.floorMod(g + h * (g2 | 1), L)
-            bits(idx >> 3) = (bits(idx >> 3) | (1 << (idx & 7))).toByte
-            h += 1
-          }
-          i += 1
-        }
-      }
-      f += 1
-    }
-    bits
-  }
-
   /** λ-fold blocking keys from a CLK
     * (example-schema/blocking-schema/lambda.json: Λ=3, bf-len 64, K=5,
     * random_state 0): Λ independent Hamming-LSH keys, each formed by
@@ -584,29 +549,9 @@ object Clk {
   }
 }
 
-/** CLK encode over N string fields → 512-byte Bloom bitvector (F7). */
-case class ClkEncode(children: Seq[Expression], secretSeed: Int)
-    extends Expression with CodegenFallback {
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
-  override def prettyName: String = "clk_encode"
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val fields = new Array[String](children.size)
-    var i = 0
-    while (i < children.size) {
-      val v = children(i).eval(input)
-      fields(i) = if (v == null) "" else v.asInstanceOf[UTF8String].toString
-      i += 1
-    }
-    Clk.encode(fields, secretSeed)
-  }
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): ClkEncode =
-    copy(children = newChildren)
-}
-
-/** Crypto-grade CLK encode (anonlink "blakeHash" strategy): keyed
-  * blake2b-512 per bigram with HKDF-SHA256 per-field keys — see
+/** CLK encode over N string fields → 512-byte Bloom bitvector (F7), the
+  * anonlink "blakeHash" strategy: keyed blake2b-512 per bigram with
+  * HKDF-SHA256 per-field keys — see
   * [[graft.linkage.crypto.ClkCrypto]]. Keys are derived once per
   * executor from the secret (transient lazy), not shipped in the plan. */
 case class ClkEncodeBlake(children: Seq[Expression], secretHex: String)

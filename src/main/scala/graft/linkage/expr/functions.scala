@@ -29,8 +29,6 @@ object functions {
     col_(PqLutExpr(expr_(emb), codebooks))
   def pq_adc(lut: Column, code: Column, codebookSize: Int): Column =
     col_(PqAdcExpr(expr_(lut), expr_(code), codebookSize))
-  def clk_encode(secretSeed: Int, fields: Column*): Column =
-    col_(ClkEncode(fields.map(expr_), secretSeed))
   def clk_encode_blake(secretHex: String, fields: Column*): Column =
     col_(ClkEncodeBlake(fields.map(expr_), secretHex))
   def lambda_fold_keys(clk: Column, lambda: Int = 3, bfLen: Int = 64,

@@ -63,7 +63,8 @@ object LinkageSoakMain {
     // up, so the env knob rides into Cli.session's builder
     sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS").foreach(p =>
       System.setProperty("spark.sql.shuffle.partitions", p))
-    Cli.main("graft-linkage-soak", args) { (spark, opts) =>
+    Cli.main("graft-linkage-soak", args,
+        options = Set("workdir", "convs", "batches")) { (spark, opts) =>
       val triggers = LinkageSoak.run(spark, Cli.required(opts, "workdir"),
         opts.getOrElse("convs", "20000").toInt,
         opts.getOrElse("batches", "10").toInt)

@@ -81,14 +81,12 @@ object LinkageStream {
   def linkBatch(batch: DataFrame, batchId: Long, storeDir: String,
                 cfg: Pipeline.Config = Pipeline.Config()): Boolean = {
     // the sink runs Pipeline.run for the FIRST batch and incremental for
-    // the rest — pairsFile and bucketedRecords exist only on the full-run
-    // path, and exact mode has no stream-equivalence spec yet (a trigger
-    // sequence must provably equal one exact full run), so all three are
-    // refused rather than left to make matching depend on arrival batch
-    require(!cfg.exactAddresses && cfg.pairsFile.isEmpty &&
-      cfg.bucketedRecords.isEmpty,
-      "exactAddresses/pairsFile/bucketedRecords are unsupported in the " +
-        "continuous sink")
+    // the rest — pairsFile exists only on the full-run path, and exact
+    // mode has no stream-equivalence spec yet (a trigger sequence must
+    // provably equal one exact full run), so both are refused rather than
+    // left to make matching depend on arrival batch
+    require(!cfg.exactAddresses && cfg.pairsFile.isEmpty,
+      "exactAddresses/pairsFile are unsupported in the continuous sink")
     val spark = batch.sparkSession
     val st = readState(spark, storeDir)
     st.foreach { s =>
@@ -233,7 +231,9 @@ object LinkageStreamMain {
   import graft.linkage.Cli
 
   def main(args: Array[String]): Unit =
-    Cli.main("graft-linkage-stream", args, flags = Set("once"))(run)
+    Cli.main("graft-linkage-stream", args,
+      options = Set("source", "store", "checkpoint", "max-turns"),
+      flags = Set("once"))(run)
 
   def run(spark: SparkSession, opts: Map[String, String]): Unit = {
     val turns = spark.readStream

@@ -523,7 +523,10 @@ object NearDupStream {
 object NearDupStreamMain {
 
   def main(args: Array[String]): Unit =
-    Cli.main("graft-neardup-stream", args, flags = Set("once", "no-oph"))(run)
+    Cli.main("graft-neardup-stream", args,
+      options = minHashOptions ++
+        Set("store", "source", "output", "checkpoint", "compact"),
+      flags = Set("once", "no-oph"))(run)
 
   def run(spark: SparkSession, opts: Map[String, String]): Unit = {
     import org.apache.spark.sql.types._
@@ -543,7 +546,12 @@ object NearDupStreamMain {
     }
   }
 
-  /** The MinHashConfig flags both near-dup store CLIs accept. */
+  /** The MinHashConfig options both near-dup store CLIs accept, besides
+    * the --no-oph flag. */
+  private[streaming] val minHashOptions =
+    Set("num-hashes", "bands", "shingle-size", "jaccard", "seed")
+
+  /** The MinHashConfig those options and --no-oph give. */
   private[streaming] def minHashConfig(opts: Map[String, String])
       : Dedup.MinHashConfig =
     Dedup.MinHashConfig(
@@ -572,7 +580,10 @@ object NearDupStreamMain {
 object ReconcileMain {
 
   def main(args: Array[String]): Unit =
-    Cli.main("graft-reconcile", args, flags = Set("no-oph"))(run)
+    Cli.main("graft-reconcile", args,
+      options = NearDupStreamMain.minHashOptions ++
+        Set("output", "corpus", "store"),
+      flags = Set("no-oph"))(run)
 
   def run(spark: SparkSession, opts: Map[String, String]): (Long, Long) = {
     val out = Cli.required(opts, "output")

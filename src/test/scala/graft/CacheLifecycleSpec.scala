@@ -35,9 +35,11 @@ class CacheLifecycleSpec extends AnyFunSuite with SparkFixture {
   test("Output.scoringFiles leaves no cached blocks after materialization") {
     clearAll()
     import spark.implicits._
-    val labeled = (1 to 50).map(i => (f"c$i%03d", f"k${i % 7}"))
-      .toDF("conv_id", "cluster_id")
-    val (perMember, perHousehold) = Output.scoringFiles(labeled)
+    // the clusters shape: 7 clusters, each named by its members[0]
+    val clusters = (1 to 50).groupBy(_ % 7).values.toSeq
+      .map(is => is.sorted.map(i => f"c$i%03d"))
+      .map(m => (m.head, m)).toDF("cluster_id", "members")
+    val (perMember, perHousehold) = Output.scoringFiles(clusters)
     assert(perMember.collect().length == 50)
     assert(perHousehold.collect().length == 7)
     assert(persisted == 0)

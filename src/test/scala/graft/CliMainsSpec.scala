@@ -25,6 +25,13 @@ class CliMainsSpec extends AnyFunSuite with SparkFixture {
     // a session built first would be the shared one, stopped by the
     // wrapper's finally
     assert(!ran && !spark.sparkContext.isStopped)
+    // an option the main does not read (--buckets was removed; a typo
+    // such as --checkpont alike) is refused, not silently ignored
+    val e = intercept[IllegalArgumentException] {
+      LinkageMain.main(Array("--buckets", "8"))
+    }
+    assert(e.getMessage.contains("--buckets"))
+    assert(!spark.sparkContext.isStopped)
   }
 
   test("ExtractMain: conf-mapped CSV → pii-<ts>.csv + metadata pair") {
@@ -74,13 +81,23 @@ class CliMainsSpec extends AnyFunSuite with SparkFixture {
     write(s"$base/schemas/name-dob.json",
       """{"fields": ["given_name", "family_name", "DOB"],
          "hashType": "blakeHash"}""")
-    val dirs = GarbleMain.run(spark, Map(
-      "piidir" -> s"$base/temp-data",
-      "schemadir" -> s"$base/schemas",
-      "secretfile" -> s"$base/secret.txt",
-      "output" -> s"$base/garbled"))
+    // every run prints the uncertified-composition caveat (VERDICT r04
+    // #7): capture the CLI's stdout
+    val buf = new java.io.ByteArrayOutputStream()
+    val dirs = Console.withOut(new java.io.PrintStream(buf)) {
+      GarbleMain.run(spark, Map(
+        "piidir" -> s"$base/temp-data",
+        "schemadir" -> s"$base/schemas",
+        "secretfile" -> s"$base/secret.txt",
+        "output" -> s"$base/garbled"))
+    }
+    assert(buf.toString.contains("NOT certified byte-compatible"),
+      s"missing crypto-interop caveat in CLI output:\n$buf")
     assert(dirs.size == 1)
-    assert(Garble.readClks(spark, dirs.head).count() == 2)
+    val clks = Garble.readClks(spark, dirs.head).collect()
+      .map(_.getAs[Array[Byte]]("clk"))
+    // two records, each a 4096-bit CLK
+    assert(clks.length == 2 && clks.forall(_.length == 512))
     val meta = Extract.readMetadata(spark, s"$base/garbled/metadata.json")
     assert(meta.contains("garble_time"))
     assert(meta("number_of_records") == "2")
@@ -187,12 +204,18 @@ class CliMainsSpec extends AnyFunSuite with SparkFixture {
     zipWithCsv(s"$base/resolve/hhlinks.zip", "hh_links.csv",
       "HOUSEHOLD_ID,household_position\nH1,0\nH2,1\n")
 
+    // no unzipped copy of a link file outlives the run
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def linkCopies: Int =
+      tmp.listFiles().count(_.getName.startsWith("graft-links"))
+    val copiesBefore = linkCopies
     ResolveMain.run(spark, Map(
       "sourcefile" -> s"$base/resolve/pii.csv",
       "linkszip" -> s"$base/resolve/links.zip",
       "hhsourcefile" -> s"$base/resolve/hh.csv",
       "hhlinkszip" -> s"$base/resolve/hhlinks.zip",
       "output" -> s"$base/resolve/out"))
+    assert(linkCopies == copiesBefore)
 
     val links = spark.read.option("header", "true")
       .csv(s"$base/resolve/out/linkid_to_patid_csv")
@@ -202,44 +225,6 @@ class CliMainsSpec extends AnyFunSuite with SparkFixture {
       .csv(s"$base/resolve/out/householdid_to_patid_csv")
       .collect().map(r => (r.getString(0), r.getString(1))).toSet
     assert(hh == Set(("H1", "pA"), ("H1", "pB"), ("H2", "pC")))
-  }
-
-  test("GarbleMain --exact-crypto: blake2b CLKs, same shape, different bits") {
-    // self-contained inputs (this test must not lean on earlier tests)
-    write(s"$base/ec/pii.csv",
-      "record_id,given_name,family_name,DOB,sex,phone_number," +
-        "household_street_address,household_zip\n" +
-      "pA,ANA,GARCIA,2000-02-29,F,5551234567,205 GARDEN ST,02139\n" +
-      "pB,BOB,SMITH,1999-01-15,M,5559990000,1 MAIN ST,02140\n")
-    write(s"$base/ec/secret.txt", "0123456789abcdef0123456789abcdef\n")
-    write(s"$base/ec/schemas/name-dob.json",
-      """{"fields": ["given_name", "family_name", "DOB"],
-         "hashType": "blakeHash"}""")
-    val common = Map(
-      "input" -> s"$base/ec/pii.csv",
-      "schemadir" -> s"$base/ec/schemas",
-      "secretfile" -> s"$base/ec/secret.txt")
-    val fast = GarbleMain.run(spark,
-      common + ("output" -> s"$base/ec/garbled-fast"))
-    // --exact-crypto must print the uncertified-composition caveat
-    // (VERDICT r04 #7): capture the CLI's stdout
-    val buf = new java.io.ByteArrayOutputStream()
-    val exact = Console.withOut(new java.io.PrintStream(buf)) {
-      GarbleMain.run(spark,
-        common + ("output" -> s"$base/ec/garbled-exact",
-          "exact-crypto" -> "true"))
-    }
-    assert(buf.toString.contains("NOT certified byte-compatible"),
-      s"missing crypto-interop caveat in CLI output:\n$buf")
-    val f = Garble.readClks(spark, fast.head).collect()
-      .map(r => r.getAs[Array[Byte]]("clk").toSeq)
-    val e = Garble.readClks(spark, exact.head).collect()
-      .map(r => r.getAs[Array[Byte]]("clk").toSeq)
-    assert(f.length == 2 && e.length == 2)
-    // same 4096-bit envelope, different encodings
-    assert(e.forall(_.length == 512))
-    assert(f.toSet != e.toSet,
-      "blakeHash CLKs must differ from the murmur stand-in's")
   }
 
   test("CLK export is ONE reference-parseable JSON document") {

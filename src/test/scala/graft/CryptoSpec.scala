@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import graft.linkage.crypto.{Blake2b, ClkCrypto, Hkdf}
 
-/** Crypto primitives behind the exact-CLK path (Garble.clksExact):
+/** Crypto primitives behind the CLK encoder (Garble.clks):
   * BLAKE2b against the RFC 7693 appendix-A vector, HKDF-SHA256 against
   * RFC 5869 appendix-A test cases 1 and 3, plus structural invariants of
   * the clkhash-style blakeHash CLK composition. */
@@ -110,7 +110,7 @@ class CryptoSpec extends AnyFunSuite with SparkFixture {
         "household_street_address", "household_zip")
     val schema = graft.linkage.Garble.ClkSchema(
       Seq("family_name", "phone_number", "household_street_address"))
-    val clks = graft.linkage.Garble.clksExact(recs, schema,
+    val clks = graft.linkage.Garble.clks(recs, schema,
       "0123456789abcdef0123456789abcdef")
     val rows = clks.orderBy("conv_id").collect()
     assert(rows.length == 3)

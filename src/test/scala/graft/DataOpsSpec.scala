@@ -123,7 +123,7 @@ class DataOpsSpec extends AnyFunSuite with SparkFixture {
     val sigs = Dedup.minHashSignaturesOPH(
       Dedup.explodedShingles(tiny), Dedup.MinHashConfig())
       .collect().map(r => r.getLong(0) ->
-        r.getSeq[Long](1)).toMap
+        r.getSeq[java.lang.Long](1)).toMap
     assert(sigs.values.forall(_.length == 64))
     assert(sigs.values.forall(_.forall(_ != null)))
     assert(sigs(1L) == sigs(2L), "identical docs → identical OPH sigs")

@@ -51,9 +51,9 @@ class IncrementalSpec extends AnyFunSuite with SparkFixture {
   test("every documented existingRecords shape feeds incremental") {
     // ADVICE r02: round 2 only worked when existingRecords came from
     // Result.records (which still carries turns + timestamp ts_min/
-    // ts_max); the bucketed table (no turns) and the streaming fold's
-    // toRecords (no turns, day-string ts) threw AnalysisException in the
-    // strict unionByName. incremental now projects both sides to the
+    // ts_max); the written records table (no turns) and the streaming
+    // fold's toRecords (no turns, day-string ts) threw AnalysisException
+    // in the strict unionByName. incremental now projects both sides to the
     // common piiCols schema first.
     val cfg = SynthTranscripts.Config(seed = 23L, nConvs = 150)
     val transcripts = SynthTranscripts.transcripts(spark, cfg).toDF.cache()
@@ -65,12 +65,12 @@ class IncrementalSpec extends AnyFunSuite with SparkFixture {
       .labeledRecords.select("conv_id", "cluster_id")
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
 
-    // shape 1: the conv_id-bucketed table (written without turns)
-    TableIO.writeBucketed(first.records.drop("turns"),
-      "graft_inc_shape_test", "conv_id", 4)
+    // shape 1: the records table LinkageMain writes (without turns), read
+    // back as --previous reads it
+    val dir = java.nio.file.Files.createTempDirectory("incshape").toString
+    TableIO.write(first.records.drop("turns"), s"$dir/records")
     val fromTable = Pipeline.incremental(spark,
-      TableIO.readTable(spark, "graft_inc_shape_test"),
-      first.matchedPairs, t2)
+      TableIO.read(spark, s"$dir/records"), first.matchedPairs, t2)
       .labeledRecords.select("conv_id", "cluster_id")
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(fromTable == expected)
@@ -131,10 +131,5 @@ class IncrementalSpec extends AnyFunSuite with SparkFixture {
         Pipeline.Config(pairsFile = Some("pairs.parquet")))
     }
     assert(pairs.getMessage.contains("pairsFile"))
-    val bucketed = intercept[IllegalArgumentException] {
-      Pipeline.incremental(spark, t, t, t,
-        Pipeline.Config(bucketedRecords = Some(("records_bucketed", 4))))
-    }
-    assert(bucketed.getMessage.contains("bucketedRecords"))
   }
 }

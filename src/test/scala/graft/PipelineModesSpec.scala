@@ -83,24 +83,6 @@ class PipelineModesSpec extends AnyFunSuite with SparkFixture {
     assert(pairs == Set(("c1", "c3"), ("c2", "c4")))
   }
 
-  test("auto-bucketing flips on past the records threshold") {
-    // threshold 1: even this tiny corpus must take the bucketed-table
-    // attribute path, and clusters must match the in-memory path
-    val auto = Pipeline.run(spark, transcripts,
-      Pipeline.Config(autoBucketThreshold = 1))
-    // run-unique table name (concurrent-run safety): match by prefix
-    assert(spark.catalog.listTables().collect()
-      .exists(_.name.startsWith("graft_records_auto_")),
-      "auto path must have written a bucketed records table")
-    val plain = Pipeline.run(spark, transcripts)
-    val a = auto.labeledRecords.select("conv_id", "cluster_id")
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    val b = plain.labeledRecords.select("conv_id", "cluster_id")
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(a == b)
-    auto.unpersist(); plain.unpersist()
-  }
-
   test("householddef: definitions file bypasses inference (households -d)") {
     import graft.linkage.{Extract, LinkageMain}
     val base = java.nio.file.Files.createTempDirectory("hhdef").toString
@@ -249,9 +231,10 @@ class PipelineModesSpec extends AnyFunSuite with SparkFixture {
 
   test("testrun scoring files have the reference shape") {
     import spark.implicits._
-    val labeled = Seq(("a", "k1"), ("b", "k1"), ("c", "k2"))
-      .toDF("conv_id", "cluster_id")
-    val (perMember, perHousehold) = Output.scoringFiles(labeled)
+    // the clusters shape: cluster_id is the representative members[0]
+    val clusters = Seq(("a", Seq("a", "b")), ("c", Seq("c")))
+      .toDF("cluster_id", "members")
+    val (perMember, perHousehold) = Output.scoringFiles(clusters)
     // positions are long now (scale-safe assignment; int overflows at
     // cluster counts past 2^31)
     val pm = perMember.collect().map(r => (r.getLong(0), r.getString(1))).toSet

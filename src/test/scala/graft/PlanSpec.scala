@@ -157,8 +157,10 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     assert(!planOf(scalable).contains("Window"),
       s"global window leaked into positions plan")
     // same for the output-edge consumer (the --testrun scoring files)
-    val labeled = df.withColumn("cluster_id", substring(col("conv_id"), 1, 4))
-    val (perMember, perHousehold) = Output.scoringFiles(labeled)
+    val clusters = df.groupBy(substring(col("conv_id"), 1, 4))
+      .agg(sort_array(collect_list(col("conv_id"))).as("members"))
+      .withColumn("cluster_id", col("members")(0))
+    val (perMember, perHousehold) = Output.scoringFiles(clusters)
     assert(!planOf(perMember).contains("Window"))
     assert(!planOf(perHousehold).contains("Window"))
   }

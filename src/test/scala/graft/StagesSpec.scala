@@ -93,15 +93,44 @@ class StagesSpec extends AnyFunSuite with SparkFixture {
     assert(!java.util.Arrays.equals(c1("c1"), other("c1")))
   }
 
+  test("CLKs key on the whole subkey, not a 32-bit prefix of it") {
+    import spark.implicits._
+    def clk(df: org.apache.spark.sql.DataFrame): Seq[Byte] =
+      df.head().getAs[Array[Byte]]("clk").toSeq
+    def sharePrefix(a: String, b: String, context: String): Boolean =
+      Garble.deriveSubkey(a, context).take(8) ==
+        Garble.deriveSubkey(b, context).take(8)
+    // individuals: these two secrets' subkeys share their first 8 hex
+    // digits, the 32-bit seed an earlier encoder keyed every CLK on
+    val (i1, i2) = ("00000000000000000000000000001d1d",
+      "0000000000000000000000000000397e")
+    assert(sharePrefix(i1, i2, "individuals"))
+    val rec = Seq(("c1", "SMITH", "12 MAIN ST"))
+      .toDF("conv_id", "family_name", "household_street_address")
+    val schema = Garble.ClkSchema(Seq("family_name",
+      "household_street_address"))
+    assert(clk(Garble.clks(rec, schema, i1)) !=
+      clk(Garble.clks(rec, schema, i2)))
+    // households: the same for the households subkey
+    val (h1, h2) = ("000000000000000000000000000072a0",
+      "00000000000000000000000000011aea")
+    assert(sharePrefix(h1, h2, "households"))
+    val hh = Seq(("k1", "SMITH", "5551234", "12 MAIN ST", "02139"))
+      .toDF("cluster_id", "family_name", "phone_number",
+        "household_street_address", "household_zip")
+    assert(clk(Garble.householdClks(hh, h1)) !=
+      clk(Garble.householdClks(hh, h2)))
+  }
+
   test("lambda blocks put near-identical records in a shared block") {
     import spark.implicits._
     val recs = Seq(("a", "JOHN SMITH 42 OAK STREET"),
       ("b", "JON SMITH 42 OAK STREET"),
       ("c", "COMPLETELY DIFFERENT TEXT HERE"))
       .toDF("conv_id", "household_street_address")
-    val clks = recs.select(col("conv_id"),
-      graft.linkage.expr.functions.clk_encode(7,
-        col("household_street_address")).as("clk"))
+    val clks = Garble.clks(recs,
+      Garble.ClkSchema(Seq("household_street_address")),
+      "0123456789abcdef0123456789abcdef")
     val blocks = Garble.lambdaBlocks(clks).collect()
       .map(r => (r.getString(0), r.getLong(1)))
     val byId = blocks.groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
