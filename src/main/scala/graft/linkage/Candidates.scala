@@ -50,8 +50,10 @@ object Candidates {
     * and is also the 100-TB plan: no branch cliff at saltThreshold, skew
     * handled per-block, AQE as backstop. */
   def candidates(records: DataFrame, passes: Seq[Blocking.Pass],
-                 cfg: Config = Config()): DataFrame =
-    saltedPairs(cappedBlocks(records, passes, cfg)._1, cfg)
+                 cfg: Config = Config(),
+                 nRecords: Option[Long] = None): DataFrame =
+    saltedPairs(cappedBlocks(records, nRecords.getOrElse(records.count()),
+      passes, cfg)._1, cfg)
       .dropDuplicates("id_a", "id_b")
 
   /** Incremental candidates: pairs where AT LEAST ONE side is a new
@@ -60,12 +62,13 @@ object Candidates {
     * already in the previous run's output). Block sizes and the 2% cap
     * are evaluated over ALL records, exactly like a full run; a<b
     * normalization dedups the two join orders and new-new pairs. */
-  def incrementalCandidates(allRecords: DataFrame, newRecords: DataFrame,
+  def incrementalCandidates(allRecords: DataFrame, nAll: Long,
+                            newRecords: DataFrame,
                             passes: Seq[Blocking.Pass],
                             cfg: Config = Config()): DataFrame = {
     // same unified single-relation shape as candidates(): block sizes
     // over ALL records, exactly like a full run, then one new×all join
-    val (keptAll, blocks) = cappedBlocks(allRecords, passes, cfg)
+    val (keptAll, blocks) = cappedBlocks(allRecords, nAll, passes, cfg)
     val keptNew = Blocking.keyedAll(newRecords, passes)
       .join(blocks, Seq("pass", "block_key"), "left_semi")
     val l = keptNew.select(col("pass"), col("block_key"),
@@ -83,12 +86,15 @@ object Candidates {
   /** The 2% block cap both generators share: keys `records` under every
     * pass in one relation, sizes each (pass, block_key) block with one
     * hash-aggregate and keeps the blocks of at most
-    * max(minBlockCap, ratioMax·N) records. Returns (kept keyed rows with
-    * their block size `n`, kept blocks with `n`). */
-  private def cappedBlocks(records: DataFrame, passes: Seq[Blocking.Pass],
+    * max(minBlockCap, ratioMax·N) records, N = `nRecords` (the
+    * pipelines pass the count of their persisted records; `candidates`
+    * counts only when its caller holds none). Returns (kept keyed rows
+    * with their block size `n`, kept blocks with `n`). */
+  private def cappedBlocks(records: DataFrame, nRecords: Long,
+                           passes: Seq[Blocking.Pass],
                            cfg: Config): (DataFrame, DataFrame) = {
     val cap = math.max(cfg.minBlockCap,
-      (cfg.ratioMax * records.count()).toLong)
+      (cfg.ratioMax * nRecords).toLong)
     val keyed = Blocking.keyedAll(records, passes)
     val blocks = keyed.groupBy("pass", "block_key")
       .agg(count(lit(1)).as("n"))

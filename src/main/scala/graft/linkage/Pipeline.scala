@@ -83,7 +83,8 @@ object Pipeline {
     val nRecords = records.count() // materializes the persist
     val pairs = cfg.pairsFile match {
       case Some(path) => loadPairs(spark, path)
-      case None => Candidates.candidates(records, passes(cfg))
+      case None => Candidates.candidates(records, passes(cfg),
+        nRecords = Some(nRecords))
     }
     link(spark, cfg, records, pairs, None,
       records.select(piiCols.map(col): _*), Seq(records)) {
@@ -202,12 +203,14 @@ object Pipeline {
       .unionByName(newRecords)
       .persist(lvl)
 
-    val pairs = Candidates.incrementalCandidates(all, newRecords, passes(cfg))
+    val nAll = all.count() // materializes both persists
+    val pairs = Candidates.incrementalCandidates(all, nAll, newRecords,
+      passes(cfg))
     link(spark, cfg, all, pairs, Some(previousMatches), newRecords,
       Seq(newRecords, all)) {
       _ => Seq(
         ("new_records", newRecords.count()),
-        ("records", all.count()),
+        ("records", nAll),
         ("incremental_candidate_pairs", pairs.count()))
     }
   }

@@ -35,11 +35,13 @@ object Scoring {
     * The tree references that comparison THREE times (the `perfect`
     * branch's condition AND value, plus `ignoreSuffix`), and CaseWhen
     * branch values are excluded from Spark's subexpression elimination,
-    * so inline it is evaluated up to 3× per pair — on this corpus the
-    * street fields average ~370 chars and jw is O(len²), making those
-    * re-evaluations ~30% of the whole scoring CPU (perfbench link-dense
-    * on 4 vCPU: `scoring.cpu_us_per_pair` ~322 µs for the full tree,
-    * `sim.jw_ns_per_pair` ~53 µs for one street jw).
+    * so inline it is evaluated up to 3× per pair. On this corpus the
+    * street fields average ~370 chars; the bit-parallel kernel costs
+    * O(l1·⌈l2/64⌉) word operations, and one street jw measures 4.0–7.2
+    * µs single-threaded against 57–59 µs of scoring CPU per pair for the
+    * whole tree (perfbench link-dense seed 1, two traced runs on a shared
+    * 4-vCPU box: `sim.jw_ns_per_pair`, `scoring.cpu_us_per_pair`), so the
+    * two repeats would add ~14–24% to the scoring CPU.
     * Callers that project pairs (scorePairs) hoist the comparison into
     * its own opaque column and pass it here; the default None keeps
     * this function a self-contained 1:1 port (exemplar specs). Values
@@ -146,41 +148,21 @@ object Scoring {
       .join(a, col("id_a") === col("a_conv_id"))
       .join(b, col("id_b") === col("b_conv_id"))
 
-    // Straggler smoothing for the scoring stage (r06, guide §2.6): the
-    // comparator tree is ~100x CPU/byte and runs in whatever stage the
-    // b-side join output lands in. When that stage has about one task
-    // per core (this sandbox's sessions: shuffle.partitions ≈ cores),
-    // the stage wall is the SLOWEST core's time — event logs show this
-    // box runs identical tasks at 0.7–1.0x relative speed (per-task rows
-    // ±2% but CPU time 9.9–14.5 s, slowest partition differing between
-    // reps: speed variance, not data skew). Hash-repartition on the
-    // (uniform by construction) pair identity into ≥4 waves so fast
-    // cores absorb more tasks. GATED on the regime: deployments whose
-    // scoring stage already has ≥4 tasks/core (production
-    // shuffle.partitions) skip the exchange entirely.
-    val spark = records.sparkSession
-    val cores = spark.sparkContext.defaultParallelism
-    val shufflePartitions =
-      spark.conf.get("spark.sql.shuffle.partitions", "200").toInt
-    val pre = if (shufflePartitions < 4 * cores)
-      joined.repartition(4 * cores, col("id_a"), col("id_b"))
-    else joined
     // stage 1: address score + strict prefilter (matching.py:540).
     // addr_score is wrapped in gf.opaque (r06) — without it the
     // optimizer pushes the prefilter below this projection, substituting
     // the FULL composite comparator tree into the filter (and sinking it
-    // below the repartition into the join stage), AND CollapseProject
+    // into the join stage), AND CollapseProject
     // inlines the tree again into total_score: addressDistance evaluated
     // twice per pair (event logs on the 218k-pair scaling kernel:
     // ~108 CPU-s of comparator work in the filter copy + ~90 CPU-s in
     // the projection's own). Opaque pins ONE evaluation here; the filter
-    // and total_score read the column. Measured together with the
-    // smoothing: kernel 16-thread throughput 14.2k → 26k+ pairs/s.
+    // and total_score read the column.
     // The street comparison is hoisted into its own opaque column so
     // the comparator tree's three references read ONE evaluation (see
     // addressDistance's streetJw doc); opaque on both columns keeps
     // CollapseProject from re-inlining either.
-    val withAddr = pre
+    val withAddr = joined
       .withColumn("_street_jw",
         gf.opaque(jw(col("a_addr").getField("street"),
           col("b_addr").getField("street"))))

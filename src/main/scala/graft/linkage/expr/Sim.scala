@@ -24,9 +24,9 @@ import java.text.Normalizer
   */
 object Sim {
 
-  // Reusable per-thread scratch for the Jaro match flags: the scoring
-  // projection calls jaro millions of times per task; per-call array
-  // allocation was measurable GC pressure at 32 executor threads.
+  // Reusable per-thread scratch for the char path's Jaro match flags:
+  // per-call array allocation was measurable GC pressure at 32 executor
+  // threads (the ASCII kernel keeps its own scratch, below).
   private val scratch = new ThreadLocal[Array[Boolean]] {
     override def initialValue(): Array[Boolean] = new Array[Boolean](256)
   }
@@ -37,41 +37,87 @@ object Sim {
     a
   }
 
+  /** Per-thread scratch of the bit-parallel Jaro kernel. `rows` holds one
+    * ⌈l2/64⌉-word match bitvector per ASCII byte value (row `b` at
+    * `b * words`: bit j set iff s2(j) == b); `claimed` marks the s2
+    * positions already matched; `order` collects the matched s1 bytes in
+    * s1 order. Invariant: `rows` is all-zero between calls — each call
+    * zeroes the words it set before it returns, so a later call with a
+    * different s2 (or a different row stride) never reads a stale bit. */
+  private final class JaroScratch {
+    var rows = new Array[Long](128 * 8)
+    var claimed = new Array[Long](8)
+    var order = new Array[Byte](512)
+  }
+  private val jaroScratch = new ThreadLocal[JaroScratch] {
+    override def initialValue(): JaroScratch = new JaroScratch
+  }
+
   /** Jaro over raw UTF-8 bytes — valid when both operands are pure ASCII
     * (one byte = one char). All linkage fields are ASCII by construction
     * (NormalizeAscii), so this is the hot path; general strings fall back
-    * to the char implementation. */
-  private def jaroAsciiBytes(b1: Array[Byte], o1: Int, l1: Int,
-                             b2: Array[Byte], o2: Int, l2: Int): Double = {
+    * to the char implementation, which is also this kernel's test oracle.
+    *
+    * Bit-parallel form of the scan in [[jaro]]: for each i, the free
+    * positions of s2 holding b1(i) are `row(b1(i)) & ~claimed`; masked to
+    * the window [i−w, i+w], their lowest set bit is exactly the first
+    * free match the scan would take, so matches, the floor-divided
+    * transpositions (set bits of `claimed` walked in order against
+    * `order`) and the final double are bit-identical. Cost: O(l2) to
+    * build and clear the rows, then at most ⌈(2w+1)/64⌉+1 word operations
+    * per s1 byte — O(l1·⌈l2/64⌉) instead of the scan's O(l1·window). */
+  private def jaroAsciiBytes(b1: Array[Byte], l1: Int,
+                             b2: Array[Byte], l2: Int): Double = {
+    val s = jaroScratch.get()
+    val words = (l2 + 63) >>> 6
+    if (s.claimed.length < words) {
+      s.rows = new Array[Long](128 * words); s.claimed = new Array[Long](words)
+    }
+    if (s.order.length < l1) s.order = new Array[Byte](l1)
+    val rows = s.rows; val claimed = s.claimed; val order = s.order
+    var j = 0
+    while (j < l2) { rows(b2(j) * words + (j >>> 6)) |= 1L << j; j += 1 }
+    java.util.Arrays.fill(claimed, 0, words, 0L)
+
     val window = math.max(0, math.max(l1, l2) / 2 - 1)
-    val m = flags(l1 + l2)
+    // past l2 + window the window lies beyond s2: nothing left to match
+    val iEnd = math.min(l1, l2 + window)
     var matches = 0
     var i = 0
-    while (i < l1) {
+    while (i < iEnd) {
       val lo = math.max(0, i - window)
       val hi = math.min(l2 - 1, i + window)
-      var j = lo
-      var found = false
-      while (j <= hi && !found) {
-        if (!m(l1 + j) && b1(o1 + i) == b2(o2 + j)) {
-          m(i) = true; m(l1 + j) = true; matches += 1; found = true
-        }
-        j += 1
+      val row = b1(i) * words
+      var k = lo >>> 6
+      val kHi = hi >>> 6
+      var free = rows(row + k) & ~claimed(k) & (-1L << lo)
+      while (free == 0L && k < kHi) { k += 1; free = rows(row + k) & ~claimed(k) }
+      if (free != 0L &&
+          (k << 6) + java.lang.Long.numberOfTrailingZeros(free) <= hi) {
+        claimed(k) |= free & -free
+        order(matches) = b1(i)
+        matches += 1
       }
       i += 1
     }
-    if (matches == 0) return 0.0
-    var k = 0
+
     var halfTrans = 0
-    i = 0
-    while (i < l1) {
-      if (m(i)) {
-        while (!m(l1 + k)) k += 1
-        if (b1(o1 + i) != b2(o2 + k)) halfTrans += 1
-        k += 1
+    var m = 0
+    var k = 0
+    while (m < matches) {
+      var c = claimed(k)
+      while (c != 0L) {
+        if (b2((k << 6) + java.lang.Long.numberOfTrailingZeros(c)) != order(m))
+          halfTrans += 1
+        m += 1
+        c &= c - 1
       }
-      i += 1
+      k += 1
     }
+    j = 0
+    while (j < l2) { rows(b2(j) * words + (j >>> 6)) = 0L; j += 1 }
+
+    if (matches == 0) return 0.0
     val t = halfTrans / 2
     (matches.toDouble / l1 + matches.toDouble / l2 +
       (matches - t).toDouble / matches) / 3.0
@@ -94,7 +140,7 @@ object Sim {
       if (l1 == 0 && l2 == 0) return 1.0
       if (l1 == 0 || l2 == 0) return 0.0
       if (a.equals(b)) return 1.0
-      val j = jaroAsciiBytes(ab, 0, l1, bb, 0, l2)
+      val j = jaroAsciiBytes(ab, l1, bb, l2)
       if (j > 0.7) {
         val maxP = math.min(4, math.min(l1, l2))
         var p = 0

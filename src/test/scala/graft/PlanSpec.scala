@@ -77,6 +77,24 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     }
   }
 
+  test("scoring plan fingerprint: jaro_winkler call count") {
+    // 20 distinct comparisons, one repeat: jw(value, value) is both
+    // secPerfect's and secBoth's last term. The long-field comparisons
+    // (street jw hoisted into _street_jw, drop1, drop2 and the full-text
+    // floor) occur once each. A re-inlined street jw (+2), a comparator
+    // tree pushed into the prefilter (x2) or a new comparison moves these
+    // counts.
+    val calls = Scoring.scorePairs(records,
+        local(Candidates.candidates(records, Blocking.defaultPasses)))
+      .queryExecution.optimizedPlan
+      .flatMap(_.expressions.flatMap(_.collect {
+        case j: graft.linkage.expr.JaroWinkler => j.canonicalized
+      }))
+    assert(calls.size == 21, s"${calls.size} jaro_winkler calls")
+    assert(calls.distinct.size == 20,
+      s"${calls.distinct.size} distinct jaro_winkler calls")
+  }
+
   test("parquet scan: predicate pushdown + column pruning") {
     val df = spark.read.parquet(s"$sf/lineitem.parquet")
       .filter(col("l_quantity") > 30)

@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.unsafe.types.UTF8String
 import graft.linkage.expr.Sim
 
 /** textdistance-parity goldens (reference matching.py:25–31 exemplars and
@@ -76,5 +77,77 @@ class SimSpec extends AnyFunSuite {
       assert(h >= 0.0 && h <= 1.0)
       assert(approx(h, Sim.hammingSim(b, a)))
     }
+  }
+
+  test("bit-parallel ASCII kernel is bit-identical to the scalar char path") {
+    // jaroWinklerUtf8 takes the byte kernel on ASCII operands; the char
+    // path (Sim.jaroWinkler) is the oracle. Covers 64-bit word edges,
+    // 1–3-letter alphabets (heavy transpositions), l1 << l2 and l1 >> l2,
+    // shared 0–4-char prefixes, all 128 ASCII bytes, a > 10k-char pair,
+    // and long/short calls interleaved on one thread (stale scratch rows
+    // from a long call would corrupt the next short one).
+    val rnd = new scala.util.Random(20261019)
+    val alphabets = Seq("A", "AB", "ABC",
+      "ABCDEFGHIJKLMNOPQRSTUVWXYZ 0123456789",
+      (0 until 128).map(_.toChar).mkString)
+    def rs(n: Int, alpha: String): String =
+      Array.fill(n)(alpha(rnd.nextInt(alpha.length))).mkString
+    // a near copy: a shared prefix of exactly p chars (when the alphabet
+    // allows a different next char), then swaps, substitutions and indels
+    def related(a: String, alpha: String): String = {
+      val p = math.min(rnd.nextInt(5), a.length)
+      val sb = new StringBuilder(a.drop(p))
+      (0 until 1 + rnd.nextInt(1 + sb.length / 8)).foreach { _ =>
+        if (sb.nonEmpty) {
+          val q = rnd.nextInt(sb.length)
+          rnd.nextInt(4) match {
+            case 0 if q + 1 < sb.length =>
+              val c = sb(q); sb(q) = sb(q + 1); sb(q + 1) = c
+            case 1 => sb(q) = alpha(rnd.nextInt(alpha.length))
+            case 2 => sb.deleteCharAt(q)
+            case _ => sb.insert(q, alpha(rnd.nextInt(alpha.length)))
+          }
+        }
+      }
+      if (p < a.length && sb.nonEmpty && alpha.length > 1)
+        while (sb(0) == a(p)) sb(0) = alpha(rnd.nextInt(alpha.length))
+      a.take(p) + sb
+    }
+    var checked = 0
+    def check(a: String, b: String): Unit = {
+      val want = Sim.jaroWinkler(a, b)
+      val got = Sim.jaroWinklerUtf8(
+        UTF8String.fromString(a), UTF8String.fromString(b))
+      assert(java.lang.Double.doubleToLongBits(got) ==
+        java.lang.Double.doubleToLongBits(want),
+        s"kernel $got != scalar $want for lengths " +
+          s"${a.length}/${b.length}: '${a.take(80)}' vs '${b.take(80)}'")
+      checked += 1
+    }
+    val lengths = Seq(0, 1, 2, 5, 63, 64, 65, 127, 128, 129, 1000, 1100)
+    for (l1 <- lengths; l2 <- lengths; alpha <- alphabets) {
+      val a = rs(l1, alpha)
+      check(a, rs(l2, alpha))
+      val b = related(a, alpha)
+      check(a, b); check(b, a)
+      check(rs(1 + rnd.nextInt(8), alpha), a) // short after long
+    }
+    (0 until 20000).foreach { n =>
+      val alpha = alphabets(rnd.nextInt(alphabets.length))
+      val l = if (n % 50 == 0) 900 + rnd.nextInt(300) else rnd.nextInt(200)
+      val a = rs(l, alpha)
+      check(a, if (rnd.nextBoolean()) related(a, alpha)
+               else rs(rnd.nextInt(200), alpha))
+    }
+    // a runaway conversation's full text against a near copy, a short
+    // field and a transposed copy; then short calls on the same thread
+    val letters = alphabets(3)
+    val huge = rs(12000, letters)
+    check(huge, related(huge, letters))
+    check(huge, rs(37, letters)); check(rs(37, letters), huge)
+    check(huge, huge.drop(6000) + huge.take(6000))
+    (0 until 100).foreach(_ => check(rs(rnd.nextInt(70), letters),
+      rs(rnd.nextInt(70), letters)))
+    assert(checked > 20000)
   }
 }
