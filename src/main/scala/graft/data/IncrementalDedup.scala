@@ -8,11 +8,11 @@ import org.apache.spark.sql.functions._
   * signed and bucketed, candidates are restricted to pairs TOUCHING at
   * least one new doc (old-old pairs are never regenerated — signatures
   * and verification are deterministic, so the previous run's pairs are
-  * final), the exact-Jaccard verify explodes shingles only for new docs
-  * plus the old docs candidates actually touch, and connected components
-  * run over previous ∪ new edges. Previous buckets are recomputed from
-  * `prevDocs` — one signature pass over the corpus (linear, no joins),
-  * never a corpus × corpus candidate stage.
+  * final), and the exact-Jaccard verify explodes shingles only for new
+  * docs plus the old docs candidates actually touch
+  * ([[CleanCorpus.cleanIncremental]] is the caller). Previous buckets
+  * are recomputed from `prevDocs` — one signature pass over the corpus
+  * (linear, no joins), never a corpus × corpus candidate stage.
   *
   * Equivalence vs a full recompute has the same one documented divergence
   * as the linkage increment: a (band, bucket) that crosses the hot-bucket
@@ -106,44 +106,5 @@ object IncrementalDedup {
     val rel = org.apache.spark.sql.graftbridge.DatasetBridge.releaseCheckpoint _
     rel(all); rel(cands); rel(exploded)
     out
-  }
-
-  /** Labels + cumulative pairs after an increment. Both frames are
-    * localCheckpoint()'d (inert, generation-safe); release each with
-    * DatasetBridge.releaseCheckpoint when done. */
-  case class Result(labels: DataFrame, pairs: DataFrame)
-
-  /** Incremental near-dup CLUSTERS: labels over prev ∪ new docs equal a
-    * full [[Dedup.nearDupClusters]] recompute over the combined corpus
-    * (IncrementalDedupSpec proves it across two increments), at
-    * O(new × neighborhood) candidate/verify cost plus a CC over
-    * previous ∪ new edges. `prevPairs` is the previous run's cumulative
-    * verified-pair set ([[Dedup.minHashNearDups]] output or the previous
-    * increment's Result.pairs). */
-  def incrementalNearDupClusters(prevDocs: DataFrame, newDocs: DataFrame,
-                                 prevPairs: DataFrame,
-                                 cfg: Dedup.MinHashConfig =
-                                   Dedup.MinHashConfig(),
-                                 idCol: String = "doc_id",
-                                 textCol: String = "text",
-                                 ccOptions: graft.linkage.Cluster.Options =
-                                   graft.linkage.Cluster.Options()): Result = {
-    val spark = newDocs.sparkSession
-    val newPairs = incrementalNearDupPairs(prevDocs, newDocs, cfg, idCol,
-      textCol)
-    val allPairs = prevPairs.select(col("id_a"), col("id_b"), col("jaccard"))
-      .unionByName(newPairs.select(col("id_a"), col("id_b"), col("jaccard")))
-      .dropDuplicates("id_a", "id_b")
-      .localCheckpoint()
-    val allIds = prevDocs.select(col(idCol))
-      .unionByName(newDocs.select(col(idCol)))
-    val labels = graft.linkage.Cluster.connectedComponents(spark,
-      allPairs.select(col("id_a"), col("id_b")), ccOptions)
-    val out = graft.linkage.Cluster.labelRecords(allIds, labels, idCol)
-      .select(col(idCol), col("cluster_id"))
-      .localCheckpoint()
-    newPairs.unpersist(blocking = false)
-    labels.unpersist(blocking = false)
-    Result(out, allPairs)
   }
 }

@@ -118,22 +118,6 @@ object Pq {
       .select(col("query_id"), col(idCol), col("adc"), col("rank"))
   }
 
-  /** ADC candidates + exact-cosine refine: the serving shape. The code
-    * sweep picks `refine` candidates per query; only those rows' full
-    * vectors are read again (broadcast id join), scored exactly, and
-    * re-ranked to top-k. refine/k is the recall/cost dial (FAISS
-    * k_factor). */
-  def adcTopKRefined(corpus: DataFrame, queries: DataFrame, k: Int,
-                     codebooks: Array[Array[Array[Double]]],
-                     refine: Int = 50,
-                     idCol: String = "vec_id"): DataFrame = {
-    val cands = adcTopK(encode(corpus, codebooks, idCol), queries,
-      math.max(k, refine), codebooks, idCol)
-      .select(col("query_id"), col(idCol))
-    refineExact(corpus.select(col(idCol), col("embedding")), cands,
-      queries, k, idCol)
-  }
-
   /** Exact-cosine re-rank of (query_id, id) candidate pairs: vectors
     * stay columnar-pruned until here, candidates ride as a broadcast.
     * `joinCols` lets an index-backed caller include the partition column

@@ -69,8 +69,7 @@ object Fold {
     // try_element_at, not element_at: under ANSI mode (on in Spark 4) a
     // conversation with zero user-role turns would throw
     // INVALID_ARRAY_INDEX and kill the whole fold job; try_element_at
-    // nulls out and the coalesce folds it to "" — matching the streaming
-    // fold's (TranscriptStream.foldConv) graceful handling.
+    // nulls out and the coalesce folds it to "".
     val firstUser = coalesce(
       normText(try_element_at(userTurns, lit(1)).getField("text")), lit(""))
     val lastUser = coalesce(
@@ -104,8 +103,8 @@ object Fold {
   /** addr_parse analog (matching.py:34–59): leading token → number,
     * body → street, trailing token → suffix; tool-call signature plays
     * the occupancy (prefix/value) role — weights shift exactly like
-    * second-level addresses do (matching.py:85–98). Shared by the batch
-    * fold and the streaming fold so both emit identical record shapes. */
+    * second-level addresses do (matching.py:85–98). Fields in
+    * [[Schemas.addrStruct]] order, which the scoring kernel reads. */
   def addrStruct(fullText: Column, phone: Column): Column = {
     val toks = split(fullText, " ")
     val n = size(toks)

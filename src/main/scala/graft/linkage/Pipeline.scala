@@ -64,10 +64,9 @@ object Pipeline {
   /** PII record columns every stage downstream of fold actually consumes
     * (blocking: household_zip/addr/family_name; scoring: family_name/
     * phone_number/addr; outputs: those + given_name/DOB/sex passthrough).
-    * This is the COMMON schema across every documented records source —
-    * Fold.fold output (which adds turns + timestamp ts_min/ts_max), the
-    * records table LinkageMain writes (no turns), and
-    * TranscriptStream.toRecords (no turns, day-string ts_min/ts_max). */
+    * This is the COMMON schema across both documented records sources —
+    * Fold.fold output (which adds turns + timestamp ts_min/ts_max) and
+    * the records table LinkageMain writes (no turns). */
   val piiCols: Seq[String] = Seq("conv_id", "given_name", "family_name",
     "DOB", "sex", "phone_number", "household_zip", "addr")
 
@@ -182,13 +181,12 @@ object Pipeline {
     * cap (a full run drops the whole block). Matches found are never
     * retracted, which is the behavior an append-only deployment wants.
     *
-    * `existingRecords` is the previous run's folded records from ANY of
-    * the documented sources — Result.records (still carrying turns +
-    * timestamp ts_min/ts_max), the records table LinkageMain writes (no
-    * turns, read back with TableIO.read, as `--previous` does), or
-    * TranscriptStream.toRecords output (no turns, day-string ts_min/
-    * ts_max); both sides are projected to the common [[piiCols]] schema
-    * before the union, so the source shapes interoperate.
+    * `existingRecords` is the previous run's folded records from either
+    * documented source — Result.records (still carrying turns +
+    * timestamp ts_min/ts_max) or the records table LinkageMain writes (no
+    * turns, read back with TableIO.read, as `--previous` does); both
+    * sides are projected to the common [[piiCols]] schema before the
+    * union, so the source shapes interoperate.
     * `previousMatches` is the previous run's matched pairs. */
   def incremental(spark: SparkSession, existingRecords: DataFrame,
                   previousMatches: DataFrame, newTranscripts: DataFrame,

@@ -1,9 +1,12 @@
 package graft.linkage.expr
 
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult.{TypeCheckFailure, TypeCheckSuccess}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, DoubleType, LongType, StringType}
+import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, DoubleType, LongType, StringType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Custom Catalyst expressions (SURVEY.md §2.8/§2.11). All hot-path
@@ -28,41 +31,6 @@ case class NormalizeAscii(child: Expression)
     copy(child = newChild)
 }
 
-/** Identity wrapper marked non-deterministic: an optimizer BARRIER with
-  * zero runtime cost (eval and codegen delegate straight to the child).
-  * Wrapping a projected column in this stops (a) PushDownPredicates from
-  * pushing a filter on the column below the projection — which would
-  * re-evaluate the full expression tree inside the filter, in whatever
-  * stage the filter sinks to — and (b) CollapseProject from inlining the
-  * tree into every downstream use. Use it for EXPENSIVE columns that a
-  * filter and later projections both consume (Scoring.scorePairs'
-  * addr_score: the pushed-down prefilter re-ran the ~20-JW composite
-  * comparator in the join stage — measured as HALF the scoring wall —
-  * on top of the projection's own evaluation). The wrapped value is
-  * bit-identical to the child's; only optimizer placement changes.
-  *
-  * The barrier is per PROJECTION, not per column: Spark pushes a filter
-  * through a Project only when every projected expression is
-  * deterministic, so one Opaque column blocks pushdown of EVERY
-  * predicate through that projection, including filters on its cheap
-  * columns. Apply a selective cheap filter below the projection by
-  * hand. */
-case class Opaque(child: Expression) extends UnaryExpression {
-  override lazy val deterministic: Boolean = false
-  override def foldable: Boolean = false
-  override def dataType: DataType = child.dataType
-  override def nullable: Boolean = child.nullable
-  override def prettyName: String = "opaque"
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any =
-    child.eval(input)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val c = child.genCode(ctx)
-    ev.copy(code = c.code, isNull = c.isNull, value = c.value)
-  }
-  override protected def withNewChildInternal(newChild: Expression): Opaque =
-    copy(child = newChild)
-}
-
 /** textdistance-parity Jaro-Winkler — reference matching.py:480–491 &
   * 110–247 (see [[Sim.jaroWinkler]] for the pinned semantics). */
 case class JaroWinkler(left: Expression, right: Expression)
@@ -76,6 +44,38 @@ case class JaroWinkler(left: Expression, right: Expression)
       s"graft.linkage.expr.Sim.jaroWinklerUtf8($a, $b)")
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): JaroWinkler =
+    copy(left = newLeft, right = newRight)
+}
+
+/** The address prefilter (matching.py:540) over two addr structs:
+  * `[d]` when d = [[Sim.addressDistance]] exceeds `threshold`, else `[]`.
+  * Scoring explodes it, so the prefilter is the relation's cardinality:
+  * no Filter exists for the optimizer to push below the projection with
+  * the comparator substituted, and the kernel runs once per pair. */
+case class AddressDistanceAbove(left: Expression, right: Expression,
+                                threshold: Double)
+    extends BinaryExpression {
+  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
+  override def prettyName: String = "address_distance_above"
+  // the kernel reads the struct fields by ordinal
+  override def checkInputDataTypes(): TypeCheckResult = {
+    val addr = graft.linkage.Schemas.addrStruct
+    def isAddr(t: DataType): Boolean = t match {
+      case s: StructType => s.fields.toSeq.map(f => (f.name, f.dataType)) ==
+        addr.fields.toSeq.map(f => (f.name, f.dataType))
+      case _ => false
+    }
+    if (isAddr(left.dataType) && isAddr(right.dataType)) TypeCheckSuccess
+    else TypeCheckFailure(s"$prettyName needs two ${addr.simpleString} inputs")
+  }
+  override protected def nullSafeEval(l: Any, r: Any): Any =
+    Sim.addressDistanceAbove(l.asInstanceOf[InternalRow],
+      r.asInstanceOf[InternalRow], threshold)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (a, b) =>
+      s"graft.linkage.expr.Sim.addressDistanceAbove($a, $b, ${threshold}D)")
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): AddressDistanceAbove =
     copy(left = newLeft, right = newRight)
 }
 

@@ -1,6 +1,10 @@
 package graft.linkage.expr
 
 import java.text.Normalizer
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.unsafe.types.UTF8String
 
 /** String-similarity / normalization kernels, written as static methods so
   * both interpreted `nullSafeEval` and whole-stage-codegen paths of the
@@ -132,8 +136,7 @@ object Sim {
 
   /** UTF8String entry point used by the Catalyst expressions: ASCII byte
     * fast path (no String/char[] materialization), char fallback. */
-  def jaroWinklerUtf8(a: org.apache.spark.unsafe.types.UTF8String,
-                      b: org.apache.spark.unsafe.types.UTF8String): Double = {
+  def jaroWinklerUtf8(a: UTF8String, b: UTF8String): Double = {
     val ab = a.getBytes; val bb = b.getBytes
     if (isAscii(ab, 0, ab.length) && isAscii(bb, 0, bb.length)) {
       val l1 = ab.length; val l2 = bb.length
@@ -150,8 +153,7 @@ object Sim {
     } else jaroWinkler(a.toString, b.toString)
   }
 
-  def hammingSimUtf8(a: org.apache.spark.unsafe.types.UTF8String,
-                     b: org.apache.spark.unsafe.types.UTF8String): Double = {
+  def hammingSimUtf8(a: UTF8String, b: UTF8String): Double = {
     val ab = a.getBytes; val bb = b.getBytes
     if (isAscii(ab, 0, ab.length) && isAscii(bb, 0, bb.length)) {
       val l1 = ab.length; val l2 = bb.length
@@ -163,6 +165,119 @@ object Sim {
       while (i < mn) { if (ab(i) != bb(i)) d += 1; i += 1 }
       1.0 - d.toDouble / mx
     } else hammingSim(a.toString, b.toString)
+  }
+
+  private val Space = UTF8String.fromString(" ")
+
+  @inline private def field(r: InternalRow, i: Int): UTF8String =
+    if (r.isNullAt(i)) UTF8String.EMPTY_UTF8 else r.getUTF8String(i)
+
+  /** Composite address comparator, reference matching.py:64–249 (the
+    * FRIL-style matchStreetName logic) over two addr structs in
+    * [[graft.linkage.Schemas.addrStruct]] field order; a null field reads
+    * as empty. Each distinct comparison runs once, and only on the branch
+    * that reads it: the street-street and value-value Jaro-Winkler are
+    * each computed once although three and two terms use them. Arithmetic
+    * follows the reference term by term, so scores are bit-identical to a
+    * Column-tree port of the same lines (AddressDistanceSpec keeps that
+    * tree as its oracle). */
+  def addressDistance(a: InternalRow, b: InternalRow): Double = {
+    val a1 = field(a, 5); val a2 = field(b, 5)
+    // empty → 0 / identical → 1 short-circuits (matching.py:71–83)
+    if (a1.numBytes == 0 || a2.numBytes == 0) return 0.0
+    if (a1 == a2) return 1.0
+    val n1 = field(a, 0); val n2 = field(b, 0)
+    val s1 = field(a, 1); val s2 = field(b, 1)
+    val x1 = field(a, 2); val x2 = field(b, 2)
+    val p1 = field(a, 3); val p2 = field(b, 3)
+    val v1 = field(a, 4); val v2 = field(b, 4)
+    val hasN1 = n1.numBytes > 0; val hasN2 = n2.numBytes > 0
+    val hasS1 = s1.numBytes > 0; val hasS2 = s2.numBytes > 0
+    val hasX1 = x1.numBytes > 0; val hasX2 = x2.numBytes > 0
+    val hasP1 = p1.numBytes > 0; val hasP2 = p2.numBytes > 0
+    val hasV1 = v1.numBytes > 0; val hasV2 = v2.numBytes > 0
+    def jw(l: UTF8String, r: UTF8String): Double = jaroWinklerUtf8(l, r)
+
+    // weight shift on second-level presence (matching.py:85–98)
+    val noSecond = !hasP1 && !hasP2 && !hasV1 && !hasV2
+    val wNumber = if (noSecond) 0.5 else 0.3
+    val wStreet = 0.5
+    val wSecondary = if (noSecond) 0.0 else 0.2
+
+    // number: normalized hamming when both present (matching.py:100–103)
+    val numberScore =
+      if (hasN1 && hasN2) wNumber * hammingSimUtf8(n1, n2) else 0.0
+
+    // street-name block (matching.py:105–175)
+    val maxScoreStr =
+      if (hasS1 && hasS2) {
+        val jw12 = jw(s1, s2)
+        // textdistance short-circuit: the suffix part counts only when
+        // the street part is nonzero (matching.py:109–115)
+        val perfect =
+          if (hasX1 && hasX2 && jw12 * 0.8 != 0.0) jw12 * 0.8 + jw(x1, x2) * 0.2
+          else 0.0
+        val drop1 = if (hasX1) jw(UTF8String.concatWs(Space, s1, x1), s2) else 0.0
+        val drop2 = if (hasX2) jw(UTF8String.concatWs(Space, s2, x2), s1) else 0.0
+        val ignoreSuffix = jw12 * (if (!hasX1 && !hasX2) 1.0 else 0.7)
+        math.max(math.max(math.max(perfect, drop1), drop2), ignoreSuffix)
+      } else {
+        // one/both streets missing: test each street against the other's
+        // suffix (matching.py:137–162; the addr1-only branch at 163–172
+        // is dead code in the reference and is not reproduced)
+        val m1 =
+          if (hasS1 && hasX2)
+            math.max(jw(UTF8String.concatWs(Space, s1, x1), x2) * 0.7,
+              jw(s1, x2) * 0.7)
+          else 0.0
+        val m2 =
+          if (hasS2 && hasX1)
+            math.max(jw(UTF8String.concatWs(Space, s2, x2), x1) * 0.7,
+              jw(s2, x1) * 0.7)
+          else 0.0
+        math.max(m1, m2)
+      }
+    val streetScore = math.max(maxScoreStr, 0.0) * wStreet
+
+    // second-level block (matching.py:177–241)
+    val secondaryScore =
+      if ((hasP1 && hasP2) || (hasV1 && hasV2)) {
+        val pv1 = UTF8String.concat(p1, v1); val pv2 = UTF8String.concat(p2, v2)
+        val sec =
+          if (hasV1 && hasV2) {
+            val jwv = jw(v1, v2)
+            val secPerfect =
+              if (hasP1 && hasP2) jwv * 0.8 + jw(p1, p2) * 0.2 else 0.0
+            val secDrop1 =
+              if (hasP1) jw(UTF8String.concatWs(Space, p1, v1), v2) else 0.0
+            val secDrop2 =
+              if (hasP2) jw(UTF8String.concatWs(Space, p2, v2), v1) else 0.0
+            val secAdj = if (!hasP1 && !hasP2) 1.0 else 0.7
+            math.max(math.max(math.max(secPerfect, secDrop1), secDrop2),
+              jwv * secAdj)
+          } else {
+            val secV1 =
+              if (hasV1) math.max(jw(pv1, p2) * 0.6, jw(v1, p2) * 0.6) else 0.0
+            val secV2 =
+              if (hasV2) math.max(jw(pv2, p1) * 0.6, jw(v2, p1) * 0.6) else 0.0
+            math.max(secV1, secV2)
+          }
+        math.max(sec, jw(pv1, pv2) * 0.8)
+      } else 0.0
+
+    // whole-string floor (matching.py:245–248)
+    val base = numberScore + streetScore
+    val wholeString = jw(a1, a2) * (wNumber + wStreet) * 0.6
+    math.max(base, wholeString) + secondaryScore * wSecondary
+  }
+
+  /** The scoring prefilter's value: `[d]` when d = [[addressDistance]]
+    * exceeds `threshold`, else `[]` (see [[AddressDistanceAbove]]). */
+  def addressDistanceAbove(a: InternalRow, b: InternalRow,
+                           threshold: Double): ArrayData = {
+    val d = addressDistance(a, b)
+    UnsafeArrayData.fromPrimitiveArray(
+      if (d > threshold) Array(d) else Array.emptyDoubleArray)
   }
 
   /** NFKD-normalize, drop non-ASCII, trim, upper-case — exactly the

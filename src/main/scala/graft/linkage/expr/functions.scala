@@ -9,9 +9,10 @@ object functions {
   import ColumnBridge.{column => col_, expression => expr_}
 
   def normalize_ascii(c: Column): Column = col_(NormalizeAscii(expr_(c)))
-  def opaque(c: Column): Column = col_(Opaque(expr_(c)))
   def jaro_winkler(a: Column, b: Column): Column =
     col_(JaroWinkler(expr_(a), expr_(b)))
+  def address_distance_above(a: Column, b: Column, threshold: Double): Column =
+    col_(AddressDistanceAbove(expr_(a), expr_(b), threshold))
   def hamming_sim(a: Column, b: Column): Column =
     col_(HammingSim(expr_(a), expr_(b)))
   def dot_product(a: Column, b: Column): Column =

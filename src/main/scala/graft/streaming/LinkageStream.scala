@@ -42,9 +42,8 @@ import graft.linkage.{Pipeline, TableIO}
   *
   * Contract (same as Pipeline.incremental): a conversation arrives
   * WHOLLY within one micro-batch (append-only corpus of complete
-  * conversations). For raw turn streams, close conversations first with
-  * [[TranscriptStream.foldStream]] and feed a downstream batch join, or
-  * batch the source by conversation.
+  * conversations). Batch a raw turn stream by conversation before it
+  * reaches the sink.
   */
 object LinkageStream {
 

@@ -8,8 +8,8 @@ import graft.data.Dedup
 import graft.linkage.{Cli, Extract}
 import graft.linkage.expr.{functions => gf}
 
-/** Streaming NEAR-dup dedup — the LSH leg of the streaming dedup family
-  * (exact leg: TranscriptStream.dedupStream). A foreachBatch loop keeps
+/** Streaming NEAR-dup dedup (batch analog: Dedup.minHashNearDups). A
+  * foreachBatch loop keeps
   * a persisted MinHash signature store; every micro-batch is deduped
   * against everything already admitted plus itself, and survivors'
   * signatures are appended.

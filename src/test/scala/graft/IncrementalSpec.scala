@@ -51,10 +51,10 @@ class IncrementalSpec extends AnyFunSuite with SparkFixture {
   test("every documented existingRecords shape feeds incremental") {
     // ADVICE r02: round 2 only worked when existingRecords came from
     // Result.records (which still carries turns + timestamp ts_min/
-    // ts_max); the written records table (no turns) and the streaming
-    // fold's toRecords (no turns, day-string ts) threw AnalysisException
-    // in the strict unionByName. incremental now projects both sides to the
-    // common piiCols schema first.
+    // ts_max); the written records table (no turns) and a day-string-ts
+    // record shape threw AnalysisException in the strict unionByName.
+    // incremental now projects both sides to the common piiCols schema
+    // first.
     val cfg = SynthTranscripts.Config(seed = 23L, nConvs = 150)
     val transcripts = SynthTranscripts.transcripts(spark, cfg).toDF.cache()
     val t1 = transcripts.filter(pmod(xxhash64(col("conv_id")), lit(3)) =!= 0)
@@ -75,8 +75,8 @@ class IncrementalSpec extends AnyFunSuite with SparkFixture {
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(fromTable == expected)
 
-    // shape 2: the streaming fold's record shape (no turns, day-string
-    // ts_min/ts_max) — emulated exactly by projecting + stringifying
+    // shape 2: no turns and day-string ts_min/ts_max — the piiCols
+    // projection drops both differences before the union
     val streamShaped = first.records
       .drop("turns")
       .withColumn("ts_min", date_format(col("ts_min"), "yyyy-MM-dd"))

@@ -58,8 +58,7 @@ class LinkagePipelineSpec extends AnyFunSuite with SparkFixture {
   test("fold survives conversations with zero user turns (ANSI mode)") {
     import spark.implicits._
     // under Spark 4 ANSI, element_at on the empty user-turn array would
-    // throw INVALID_ARRAY_INDEX; the fold must instead derive "" — the
-    // same semantics as the streaming fold
+    // throw INVALID_ARRAY_INDEX; the fold must instead derive ""
     val ts0 = java.sql.Timestamp.valueOf("2025-01-01 00:00:00")
     val noUser = Seq(
       ("conv_nouser", 0, "assistant", "hello there", "", ts0),

@@ -5,7 +5,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.data.{Ann, Pq}
 
 /** Product quantization: kernel exactness against a plain-Scala
-  * reference, refine-equals-brute-force, trained-codebook recall, and
+  * reference, and on the served index path refine-equals-brute-force,
+  * trained-codebook recall, and
   * the two at-scale plan properties of the persisted IVF-PQ index —
   * the ADC sweep reads only (id, code) columns, and only the probed
   * partitions (column pruning + DPP). */
@@ -33,6 +34,15 @@ class PqSpec extends AnyFunSuite with SparkFixture {
       .select(col("embedding")).collect()
       .map(_.getSeq[Float](0).map(_.toDouble).toArray)
     Array.tabulate(4)(m => rows.map(_.slice(m * 16, m * 16 + 16)))
+  }
+
+  /** The persisted IVF-PQ index over the corpus (8 cells, M=4, K=8) —
+    * the production serving path ([[graft.data.IndexMain]] --pq). */
+  private lazy val index = {
+    val dir = java.nio.file.Files.createTempDirectory("ivfpq").toString
+    Pq.writeIvfPqIndex(corpus, dir, Ann.IvfConfig(nCentroids = 8),
+      Pq.PqConfig(numSubspaces = 4, codebookSize = 8))
+    dir
   }
 
   test("encode kernel ≡ plain-Scala argmin per subspace (lowest-k ties)") {
@@ -76,10 +86,11 @@ class PqSpec extends AnyFunSuite with SparkFixture {
       assert(math.abs(adc - expect) < 1e-9,
         s"adc diverged for ($q, $id): $adc vs $expect")
     }
-    // with refine covering the whole corpus, the exact re-rank IS brute
-    // force — identical (query, id, rank) triples
-    val refined = Pq.adcTopKRefined(corpus, queries, k = 5, fixedCb,
-      refine = 400)
+    // served with every cell probed and refine covering the whole corpus,
+    // the exact re-rank IS brute force — identical (query, id, rank)
+    // triples
+    val refined = Pq.ivfPqTopKIndexed(spark, index, queries, k = 5,
+      nProbe = 8, refine = 400)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).toSet
     val brute = Ann.bruteForceTopK(corpus, queries, k = 5)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).toSet
@@ -94,10 +105,14 @@ class PqSpec extends AnyFunSuite with SparkFixture {
       cb1.forall(_.forall(_.length == 16)))
     assert(cb1.flatten.flatten.toSeq == cb2.flatten.flatten.toSeq,
       "codebook training is nondeterministic")
-    // recall@5 of the refined search vs brute force, refine=40
+    // the index serves these codebooks; recall@5 of its refined search
+    // (every cell probed, refine=40) vs brute force
+    assert(Pq.readPqCodebooks(spark, index).flatten.flatten.toSeq ==
+      cb1.flatten.flatten.toSeq, "the index does not serve the trained codebooks")
     val brute = Ann.bruteForceTopK(corpus, queries, k = 5)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val pq = Pq.adcTopKRefined(corpus, queries, k = 5, cb1, refine = 40)
+    val pq = Pq.ivfPqTopKIndexed(spark, index, queries, k = 5, nProbe = 8,
+      refine = 40)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val recall = (brute intersect pq).size.toDouble / brute.size
     assert(recall >= 0.9, s"refined PQ recall collapsed: $recall")
@@ -111,11 +126,7 @@ class PqSpec extends AnyFunSuite with SparkFixture {
 
   test("IVF-PQ index: sweep scans only (id, code) of probed partitions; " +
       "refine ≡ flat index results") {
-    val dir = java.nio.file.Files.createTempDirectory("ivfpq").toString
-    Pq.writeIvfPqIndex(corpus, dir,
-      Ann.IvfConfig(nCentroids = 8, nProbe = 2),
-      Pq.PqConfig(numSubspaces = 4, codebookSize = 8))
-    val served = Pq.ivfPqTopKIndexed(spark, dir, queries, k = 5,
+    val served = Pq.ivfPqTopKIndexed(spark, index, queries, k = 5,
       nProbe = 8, refine = 400)
     val plan = served.queryExecution.executedPlan.toString
     // DPP: the cells scans are pruned by the broadcast probe set
@@ -142,7 +153,7 @@ class PqSpec extends AnyFunSuite with SparkFixture {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).toSet
     assert(got == brute, s"full-probe IVF-PQ ≠ brute force: ${got diff brute}")
     // narrow probing still finds each query's own lobe
-    val top1 = Pq.ivfPqTopKIndexed(spark, dir, queries, k = 1,
+    val top1 = Pq.ivfPqTopKIndexed(spark, index, queries, k = 1,
       nProbe = 2, refine = 20).collect()
       .map(r => (r.getLong(0), r.getLong(1)))
     top1.foreach { case (q, hit) =>
