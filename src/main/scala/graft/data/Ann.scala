@@ -2,7 +2,7 @@ package graft.data
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.linkage.{Cli, Extract}
+import graft.linkage.TableIO
 import graft.linkage.expr.{functions => gf}
 
 /** Approximate nearest-neighbor search over an embedding column
@@ -196,15 +196,18 @@ object Ann {
     corpus.withColumn("centroid",
       gf.nearest_centroid(col("embedding"), centroids))
 
+  /** `cfg` with nCentroids = 0 (auto) resolved to max(16, √n) over the
+    * corpus — the one quantizer sizing of every IVF build. */
+  private[data] def sized(cfg: IvfConfig, corpus: DataFrame): IvfConfig =
+    if (cfg.nCentroids > 0) cfg
+    else cfg.copy(nCentroids =
+      math.max(16, math.sqrt(corpus.count().toDouble).toInt))
+
   /** IVF search: per query, probe the nProbe nearest centroids' cells. */
   def ivfTopK(corpus: DataFrame, queries: DataFrame, k: Int,
               cfg: IvfConfig = IvfConfig(),
               idCol: String = "vec_id"): DataFrame = {
-    val sized =
-      if (cfg.nCentroids > 0) cfg
-      else cfg.copy(nCentroids =
-        math.max(16, math.sqrt(corpus.count().toDouble).toInt))
-    val centroids = trainCentroids(corpus, sized, idCol)
+    val centroids = trainCentroids(corpus, sized(cfg, corpus), idCol)
     val cells = assign(corpus, centroids)
       .select(col("centroid"), col(idCol), col("embedding"))
     probeCells(cells, centroids, queries, k, cfg.nProbe, idCol)
@@ -265,51 +268,61 @@ object Ann {
   def writeIvfIndex(corpus: DataFrame, path: String,
                     cfg: IvfConfig = IvfConfig(),
                     idCol: String = "vec_id"): Unit = {
-    val sized =
-      if (cfg.nCentroids > 0) cfg
-      else cfg.copy(nCentroids =
-        math.max(16, math.sqrt(corpus.count().toDouble).toInt))
-    val centroids = trainCentroids(corpus, sized, idCol)
+    val ivf = sized(cfg, corpus)
+    val centroids = trainCentroids(corpus, ivf, idCol)
     assign(corpus, centroids)
       .select(col("centroid"), col(idCol), col("embedding"))
       .write.mode("overwrite").partitionBy("centroid")
       .parquet(s"$path/cells")
-    val json = centroids.zipWithIndex.map { case (c, i) =>
-      s"""{"centroid":$i,"vec":[${c.mkString(",")}]}"""
-    }.mkString("", "\n", "\n")
     val spark = corpus.sparkSession
-    Extract.writeRaw(spark, json, s"$path/centroids.json")
+    writeCentroids(spark, path, centroids)
     // config fingerprint: without it an appendToIvfIndex against an index
     // built with different dims/seed/quantizer assigns new vectors with
     // the WRONG geometry and fails silently downstream. dims is the
     // geometry actually persisted (centroid length — init centroids take
     // the DATA's width, which cfg.dims need not match), so the stamp can
     // never reject the index its own writer just produced.
-    val dims = centroids.headOption.map(_.length).getOrElse(sized.dims)
-    Extract.writeRaw(spark,
-      s"""{"version":$IndexVersion,"nCentroids":${centroids.length},""" +
-        s""""dims":$dims,"seed":${sized.seed}}""" + "\n",
-      s"$path/ivf_meta.json")
+    val dims = centroids.headOption.map(_.length).getOrElse(ivf.dims)
+    TableIO.writeJson(spark, s"$path/ivf_meta.json", TableIO.jsonObject(
+      "version" -> IndexVersion, "nCentroids" -> centroids.length,
+      "dims" -> dims, "seed" -> ivf.seed))
   }
 
   /** Bumped whenever the cell layout or quantizer semantics change. */
   val IndexVersion = 1
 
-  /** Load + validate the index fingerprint against the centroid sidecar
-    * and (on append) the incoming vectors. Indexes written before the
-    * stamp existed fail loudly here rather than mis-assigning. */
-  private def requireCompatible(spark: org.apache.spark.sql.SparkSession,
-                                path: String,
-                                centroids: Array[Array[Double]]): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(new org.apache.hadoop.fs.Path(s"$path/ivf_meta.json")),
-      s"$path/ivf_meta.json missing — index predates the version stamp; " +
-        "rebuild with writeIvfIndex")
-    val meta = spark.read.json(s"$path/ivf_meta.json").collect().head
-    val version = meta.getAs[Long]("version")
-    val nCentroids = meta.getAs[Long]("nCentroids")
-    val dims = meta.getAs[Long]("dims")
+  /** The quantizer sidecar `<path>/centroids.json`, one
+    * {"centroid": i, "vec": [...]} line per centroid — shared by the
+    * IVF and IVF-PQ indexes. */
+  private[data] def writeCentroids(spark: org.apache.spark.sql.SparkSession,
+                                   path: String,
+                                   centroids: Array[Array[Double]]): Unit =
+    TableIO.writeJsonLines(spark, s"$path/centroids.json",
+      centroids.toSeq.zipWithIndex.map { case (c, i) =>
+        TableIO.jsonObject("centroid" -> i, "vec" -> c)
+      })
+
+  /** Quantizer sidecar reader (driver-side; nCentroids rows). */
+  def readIvfCentroids(spark: org.apache.spark.sql.SparkSession,
+                       path: String): Array[Array[Double]] =
+    TableIO.readJsonLines(spark, s"$path/centroids.json")
+      .getOrElse(throw new IllegalArgumentException(
+        s"$path/centroids.json missing — not an IVF index"))
+      .sortBy(_.get("centroid").asLong)
+      .map(n => TableIO.doubles(n.get("vec"))).toArray
+
+  /** The index's centroids, validated against its fingerprint
+    * (ivf_meta.json). Indexes written before the stamp existed fail
+    * loudly here rather than mis-assigning. */
+  private def loadCentroids(spark: org.apache.spark.sql.SparkSession,
+                            path: String): Array[Array[Double]] = {
+    val meta = TableIO.readJson(spark, s"$path/ivf_meta.json").getOrElse(
+      throw new IllegalArgumentException(s"$path/ivf_meta.json missing — " +
+        "index predates the version stamp; rebuild with writeIvfIndex"))
+    val centroids = readIvfCentroids(spark, path)
+    val version = meta.path("version").asLong
+    val nCentroids = meta.path("nCentroids").asLong
+    val dims = meta.path("dims").asLong
     require(version == IndexVersion,
       s"index version $version != supported $IndexVersion ($path)")
     require(nCentroids == centroids.length,
@@ -317,16 +330,8 @@ object Ann {
         s"${centroids.length} ($path)")
     require(centroids.forall(_.length == dims),
       s"dims mismatch: meta says $dims, sidecar centroids disagree ($path)")
+    centroids
   }
-
-  /** Quantizer sidecar reader (driver-side; nCentroids rows). */
-  def readIvfCentroids(spark: org.apache.spark.sql.SparkSession,
-                       path: String): Array[Array[Double]] =
-    spark.read.json(s"$path/centroids.json")
-      .select(col("centroid"), col("vec"))
-      .collect()
-      .sortBy(_.getLong(0))
-      .map(_.getSeq[Double](1).toArray)
 
   /** Append new vectors to an existing index: assign with the PERSISTED
     * quantizer (centroids stay immutable once built — standard IVF
@@ -337,8 +342,7 @@ object Ann {
   def appendToIvfIndex(newVectors: DataFrame, path: String,
                        idCol: String = "vec_id"): Unit = {
     val spark = newVectors.sparkSession
-    val centroids = readIvfCentroids(spark, path)
-    requireCompatible(spark, path, centroids)
+    val centroids = loadCentroids(spark, path)
     assign(newVectors, centroids)
       .select(col("centroid"), col(idCol), col("embedding"))
       .write.mode("append").partitionBy("centroid")
@@ -346,55 +350,16 @@ object Ann {
     spark.catalog.refreshByPath(s"$path/cells")
   }
 
-  /** Per-partition file compaction for an appended-to index:
-    * [[appendToIvfIndex]] adds small files to touched partitions forever,
-    * and a partition's read cost degrades with its file count. Cell
-    * partitions holding more than `maxFilesPerPartition` data files are
-    * rewritten as one file each via DYNAMIC partition overwrite — only
-    * the over-threshold partitions are touched, everything else keeps
-    * its files byte-identical. Returns the number of compacted
-    * partitions. Run after append bursts or on a schedule. */
+  /** Per-partition file compaction for an appended-to index
+    * ([[TableIO.compactPartitions]] over the centroid-partitioned
+    * `cells/`): [[appendToIvfIndex]] adds small files to touched
+    * partitions forever, and a partition's read cost degrades with its
+    * file count. Returns the number of compacted partitions. Run after
+    * append bursts or on a schedule. */
   def compactIvfIndex(spark: org.apache.spark.sql.SparkSession, path: String,
                       maxFilesPerPartition: Int = 8): Int = {
-    val centroids = readIvfCentroids(spark, path)
-    requireCompatible(spark, path, centroids)
-    compactCells(spark, s"$path/cells", maxFilesPerPartition)
-  }
-
-  /** Layout-generic compaction core over a centroid-partitioned cells
-    * dir — shared by the flat-IVF and IVF-PQ indexes (validation happens
-    * in the callers; the cell layout contract is identical). */
-  private[data] def compactCells(spark: org.apache.spark.sql.SparkSession,
-                                 cellsPath: String,
-                                 maxFilesPerPartition: Int): Int = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(cellsPath), spark.sparkContext.hadoopConfiguration)
-    val over = fs.listStatus(new org.apache.hadoop.fs.Path(cellsPath))
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("centroid="))
-      .filter(d => fs.listStatus(d.getPath).count(f =>
-        f.isFile && f.getPath.getName.endsWith(".parquet")) >
-        maxFilesPerPartition)
-      .map(_.getPath.getName.stripPrefix("centroid=").toInt)
-      .toSeq
-    if (over.isEmpty) return 0
-    // materialize BEFORE the overwrite: the rows are read from the very
-    // partitions the write replaces (the self-overwrite class) —
-    // localCheckpoint is eager and lineage-free. repartition(centroid)
-    // lands each centroid's rows in one task → one file per partition.
-    val rows = spark.read.parquet(cellsPath)
-      .filter(col("centroid").isin(over.map(i => i: Any): _*))
-      .repartition(col("centroid"))
-      .localCheckpoint()
-    val prevMode = spark.conf.get(
-      "spark.sql.sources.partitionOverwriteMode", "static")
-    try {
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      rows.write.mode("overwrite").partitionBy("centroid").parquet(cellsPath)
-    } finally
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", prevMode)
-    org.apache.spark.sql.graftbridge.DatasetBridge.releaseCheckpoint(rows)
-    spark.catalog.refreshByPath(cellsPath)
-    over.length
+    loadCentroids(spark, path)
+    TableIO.compactPartitions(spark, s"$path/cells", maxFilesPerPartition)
   }
 
   /** Assignment-shift drift: the fraction of a bounded deterministic
@@ -413,8 +378,7 @@ object Ann {
     * recall decays — rebuild with writeIvfIndex. */
   def ivfDrift(spark: org.apache.spark.sql.SparkSession, path: String,
                lloydIters: Int = 3): Double = {
-    val centroids = readIvfCentroids(spark, path)
-    requireCompatible(spark, path, centroids)
+    val centroids = loadCentroids(spark, path)
     val cells = spark.read.parquet(s"$path/cells")
     val idCol = cells.columns
       .find(c => c != "centroid" && c != "embedding")
@@ -433,20 +397,13 @@ object Ann {
       .agg(avg(col("moved")), count(lit(1))).collect().head
     val (frac, n) = (drift.getDouble(0), drift.getLong(1))
     sample.unpersist(blocking = false)
-    stampMeta(spark, path, Map("drift" -> frac.toString,
-      "driftSample" -> n.toString))
-    frac
-  }
-
-  /** Merge numeric fields into ivf_meta.json, preserving the stamp. */
-  private def stampMeta(spark: org.apache.spark.sql.SparkSession,
-                        path: String, extra: Map[String, String]): Unit = {
+    // merged into the stamp, which keeps every fingerprint field
     val metaPath = s"$path/ivf_meta.json"
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val node = mapper.readTree(Cli.readText(spark, metaPath))
+    val meta = TableIO.readJson(spark, metaPath).get
       .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-    extra.foreach { case (k, v) => node.put(k, v.toDouble) }
-    Extract.writeRaw(spark, mapper.writeValueAsString(node) + "\n", metaPath)
+    TableIO.writeJson(spark, metaPath,
+      meta.put("drift", frac).put("driftSample", n.toDouble))
+    frac
   }
 
   /** Top-k against a persisted index: only the probed cell partitions
@@ -454,8 +411,7 @@ object Ann {
   def ivfTopKIndexed(spark: org.apache.spark.sql.SparkSession, path: String,
                      queries: DataFrame, k: Int, nProbe: Int = 4,
                      idCol: String = "vec_id"): DataFrame = {
-    val centroids = readIvfCentroids(spark, path)
-    requireCompatible(spark, path, centroids)
+    val centroids = loadCentroids(spark, path)
     val cells = spark.read.parquet(s"$path/cells")
     probeCells(cells, centroids, queries, k, nProbe, idCol)
   }

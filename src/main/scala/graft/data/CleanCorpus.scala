@@ -342,7 +342,7 @@ object CleanCorpusMain {
         exactIds.unpersist(blocking = false)
         counts
     }
-    graft.linkage.Extract.writeRaw(spark, counts.toJson, s"$out/stats.json")
+    graft.linkage.TableIO.writeFile(spark, s"$out/stats.json", counts.toJson)
     println(s"[graft] clean-corpus: ${counts.toJson}")
     counts
   }

@@ -2,7 +2,7 @@ package graft.data
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.linkage.Extract
+import graft.linkage.TableIO
 import graft.linkage.expr.{functions => gf}
 
 /** Product quantization for embedding ANN at corpus scales where raw
@@ -159,11 +159,8 @@ object Pq {
                       ivfCfg: Ann.IvfConfig = Ann.IvfConfig(),
                       pqCfg: PqConfig = PqConfig(),
                       idCol: String = "vec_id"): Unit = {
-    val sized =
-      if (ivfCfg.nCentroids > 0) ivfCfg
-      else ivfCfg.copy(nCentroids =
-        math.max(16, math.sqrt(corpus.count().toDouble).toInt))
-    val centroids = Ann.trainCentroids(corpus, sized, idCol)
+    val ivf = Ann.sized(ivfCfg, corpus)
+    val centroids = Ann.trainCentroids(corpus, ivf, idCol)
     val codebooks = trainCodebooks(corpus, pqCfg, idCol)
     Ann.assign(corpus, centroids)
       .select(col("centroid"), col(idCol),
@@ -172,34 +169,31 @@ object Pq {
       .write.mode("overwrite").partitionBy("centroid")
       .parquet(s"$path/cells")
     val spark = corpus.sparkSession
-    val centJson = centroids.zipWithIndex.map { case (c, i) =>
-      s"""{"centroid":$i,"vec":[${c.mkString(",")}]}"""
-    }.mkString("", "\n", "\n")
-    Extract.writeRaw(spark, centJson, s"$path/centroids.json")
-    val cbJson = codebooks.zipWithIndex.flatMap { case (cb, m) =>
-      cb.zipWithIndex.map { case (v, k) =>
-        s"""{"sub":$m,"k":$k,"vec":[${v.mkString(",")}]}"""
-      }
-    }.mkString("", "\n", "\n")
-    Extract.writeRaw(spark, cbJson, s"$path/pq_codebooks.json")
-    val dims = centroids.headOption.map(_.length).getOrElse(0)
-    Extract.writeRaw(spark,
-      s"""{"version":$IndexVersion,"nCentroids":${centroids.length},""" +
-        s""""numSubspaces":${codebooks.length},""" +
-        s""""codebookSize":${codebooks.headOption.map(_.length).getOrElse(0)},""" +
-        s""""dims":$dims,"seed":${sized.seed},"pqSeed":${pqCfg.seed}}""" + "\n",
-      s"$path/ivfpq_meta.json")
+    Ann.writeCentroids(spark, path, centroids)
+    TableIO.writeJsonLines(spark, s"$path/pq_codebooks.json",
+      codebooks.toSeq.zipWithIndex.flatMap { case (cb, m) =>
+        cb.toSeq.zipWithIndex.map { case (v, k) =>
+          TableIO.jsonObject("sub" -> m, "k" -> k, "vec" -> v)
+        }
+      })
+    TableIO.writeJson(spark, s"$path/ivfpq_meta.json", TableIO.jsonObject(
+      "version" -> IndexVersion, "nCentroids" -> centroids.length,
+      "numSubspaces" -> codebooks.length,
+      "codebookSize" -> codebooks.headOption.map(_.length).getOrElse(0),
+      "dims" -> centroids.headOption.map(_.length).getOrElse(0),
+      "seed" -> ivf.seed, "pqSeed" -> pqCfg.seed))
   }
 
   /** Codebook sidecar reader (driver-side; M·K rows). */
   def readPqCodebooks(spark: SparkSession, path: String)
       : Array[Array[Array[Double]]] =
-    spark.read.json(s"$path/pq_codebooks.json")
-      .select(col("sub"), col("k"), col("vec"))
-      .collect()
-      .groupBy(_.getLong(0))
+    TableIO.readJsonLines(spark, s"$path/pq_codebooks.json")
+      .getOrElse(throw new IllegalArgumentException(
+        s"$path/pq_codebooks.json missing"))
+      .groupBy(_.get("sub").asLong)
       .toArray.sortBy(_._1)
-      .map(_._2.sortBy(_.getLong(1)).map(_.getSeq[Double](2).toArray))
+      .map(_._2.sortBy(_.get("k").asLong)
+        .map(n => TableIO.doubles(n.get("vec"))).toArray)
 
   /** Meta-first validation (checked BEFORE the sidecars are read, so a
     * plain-IVF dir or pre-stamp layout refuses loudly instead of dying
@@ -207,23 +201,22 @@ object Pq {
     * quantizers. Returns (centroids, codebooks). */
   private def loadValidated(spark: SparkSession, path: String)
       : (Array[Array[Double]], Array[Array[Array[Double]]]) = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(new org.apache.hadoop.fs.Path(s"$path/ivfpq_meta.json")),
-      s"$path/ivfpq_meta.json missing — not an IVF-PQ index (plain IVF " +
-        "indexes carry ivf_meta.json; rebuild with writeIvfPqIndex)")
-    val meta = spark.read.json(s"$path/ivfpq_meta.json").collect().head
-    require(meta.getAs[Long]("version") == IndexVersion,
-      s"index version ${meta.getAs[Long]("version")} != supported " +
+    val meta = TableIO.readJson(spark, s"$path/ivfpq_meta.json").getOrElse(
+      throw new IllegalArgumentException(s"$path/ivfpq_meta.json missing — " +
+        "not an IVF-PQ index (plain IVF indexes carry ivf_meta.json; " +
+        "rebuild with writeIvfPqIndex)"))
+    def field(key: String) = meta.path(key).asLong
+    require(field("version") == IndexVersion,
+      s"index version ${field("version")} != supported " +
         s"$IndexVersion ($path)")
     val centroids = Ann.readIvfCentroids(spark, path)
     val codebooks = readPqCodebooks(spark, path)
-    require(meta.getAs[Long]("nCentroids") == centroids.length,
+    require(field("nCentroids") == centroids.length,
       s"coarse quantizer mismatch at $path")
-    require(meta.getAs[Long]("numSubspaces") == codebooks.length &&
-        codebooks.forall(_.length == meta.getAs[Long]("codebookSize")),
+    require(field("numSubspaces") == codebooks.length &&
+        codebooks.forall(_.length == field("codebookSize")),
       s"PQ codebook shape mismatch at $path")
-    val dims = meta.getAs[Long]("dims")
+    val dims = field("dims")
     require(centroids.forall(_.length == dims) &&
         codebooks.map(_.head.length).sum == dims,
       s"dims mismatch: meta says $dims ($path)")
@@ -249,12 +242,13 @@ object Pq {
     spark.catalog.refreshByPath(s"$path/cells")
   }
 
-  /** Per-partition file compaction after append bursts — the shared
-    * cells-layout core ([[Ann.compactCells]]) behind IVF-PQ validation. */
+  /** Per-partition file compaction after append bursts
+    * ([[TableIO.compactPartitions]] over `cells/`), behind IVF-PQ
+    * validation. */
   def compactIvfPqIndex(spark: SparkSession, path: String,
                         maxFilesPerPartition: Int = 8): Int = {
     loadValidated(spark, path)
-    Ann.compactCells(spark, s"$path/cells", maxFilesPerPartition)
+    TableIO.compactPartitions(spark, s"$path/cells", maxFilesPerPartition)
   }
 
   /** Serve top-k from a persisted IVF-PQ index. Per query batch:

@@ -201,8 +201,8 @@ object Analyze {
     val spark = df.sparkSession
     val statsPath = s"$outDir/results_$source.json.txt"
     val rawPath = s"$outDir/private_results_$source.json.txt"
-    Extract.writeRaw(spark, toJson(stats), statsPath)
-    Extract.writeRaw(spark, toJson(raw), rawPath)
+    TableIO.writeFile(spark, statsPath, toJson(stats))
+    TableIO.writeFile(spark, rawPath, toJson(raw))
     (statsPath, rawPath)
   }
 }

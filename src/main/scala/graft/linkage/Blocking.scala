@@ -51,13 +51,4 @@ object Blocking {
           blockKey(p.keys).as("block_key"))): _*)).as("pb"))
       .select(col("pb.pass").as("pass"),
         col("pb.block_key").as("block_key"), col("conv_id"))
-
-  /** (pass, block_key, conv_id) for one pass, address-present rows only. */
-  def keyed(records: DataFrame, pass: Pass): DataFrame =
-    records
-      .filter(col("addr.full") =!= "")
-      .select(
-        lit(pass.name).as("pass"),
-        blockKey(pass.keys).as("block_key"),
-        col("conv_id"))
 }

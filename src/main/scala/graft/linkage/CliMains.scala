@@ -92,9 +92,8 @@ private[graft] object Cli {
   }
 
   def readText(spark: SparkSession, path: String): String = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(new org.apache.hadoop.fs.Path(path))
+    val in = TableIO.fileSystem(spark, path)
+      .open(new org.apache.hadoop.fs.Path(path))
     val txt = scala.io.Source.fromInputStream(in).mkString
     in.close()
     txt
@@ -203,9 +202,7 @@ object BlockMain {
 
   private[linkage] def readLambdaSchema(spark: SparkSession,
                                         path: String): LambdaParams = {
-    val txt = Cli.readText(spark, path)
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val cfg = mapper.readTree(txt).path("config")
+    val cfg = TableIO.parseJson(Cli.readText(spark, path)).path("config")
     LambdaParams(
       lambda = cfg.path("Lambda").asInt(3),
       bfLen = cfg.path("bf-len").asInt(64),
@@ -277,7 +274,7 @@ object AnalyzeMain {
   * Prints "Validation Successful/Failed" with the issue count
   * (validate_metadata.py:73–85); returns the issue list for callers.
   * The linkage zip's nested input_system_metadata keys are picked up by
-  * the same flat string-pair reader the metadata sink writes with.
+  * [[Extract.parseMetadata]], the one flat string-pair reader.
   */
 object ValidateMetadataMain {
   def main(args: Array[String]): Unit = {

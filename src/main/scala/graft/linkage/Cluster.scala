@@ -273,14 +273,9 @@ object Cluster {
 
   private def writeState(spark: SparkSession, dir: String, iter: Int,
                          sig: (Long, Long)): Unit =
-    Extract.writeRaw(spark,
-      s"""{"last_completed_iter": $iter, """ +
-        s""""edges_count": ${sig._1}, "edges_hash": ${sig._2}}""",
-      s"$dir/_cc_state.json")
-
-  private def stateField(txt: String, key: String): Option[Long] =
-    (""""""" + key + """"\s*:\s*(-?\d+)""").r
-      .findFirstMatchIn(txt).map(_.group(1).toLong)
+    TableIO.writeJson(spark, s"$dir/_cc_state.json", TableIO.jsonObject(
+      "last_completed_iter" -> iter, "edges_count" -> sig._1,
+      "edges_hash" -> sig._2))
 
   /** Resume from the last completed round iff state exists AND its stored
     * input-edges fingerprint matches the current input — otherwise the
@@ -289,22 +284,20 @@ object Cluster {
   private def resumeOrInit(spark: SparkSession, edges: DataFrame,
                            dir: String,
                            inputSig: (Long, Long)): (DataFrame, Int) = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(dir), spark.sparkContext.hadoopConfiguration)
-    val statePath = new org.apache.hadoop.fs.Path(s"$dir/_cc_state.json")
-    if (fs.exists(statePath)) {
-      val txt = Cli.readText(spark, statePath.toString)
-      val iter = stateField(txt, "last_completed_iter")
-        .map(_.toInt).getOrElse(-1)
-      val sigMatches =
-        stateField(txt, "edges_count").contains(inputSig._1) &&
-          stateField(txt, "edges_hash").contains(inputSig._2)
-      if (sigMatches && iter >= 0 && fs.exists(
-          new org.apache.hadoop.fs.Path(s"$dir/iter_$iter"))) {
-        return (spark.read.parquet(s"$dir/iter_$iter"), iter + 1)
+    val resumable = TableIO.readJson(spark, s"$dir/_cc_state.json")
+      .flatMap { st =>
+        def field(key: String) = Option(st.get(key)).map(_.asLong)
+        if (field("edges_count").contains(inputSig._1) &&
+            field("edges_hash").contains(inputSig._2))
+          field("last_completed_iter").map(_.toInt)
+        else None
       }
+      .filter(iter => iter >= 0 && TableIO.fileSystem(spark, dir)
+        .exists(new org.apache.hadoop.fs.Path(s"$dir/iter_$iter")))
+    resumable match {
+      case Some(iter) => (spark.read.parquet(s"$dir/iter_$iter"), iter + 1)
+      case None => (normalize(edges), 0)
     }
-    (normalize(edges), 0)
   }
 
   /** Attach labels to all records; nodes without edges become their own

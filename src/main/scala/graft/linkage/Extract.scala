@@ -89,9 +89,7 @@ object Extract {
     * sentinels, which behave identically). */
   def readTranslationConf(spark: SparkSession,
                           path: String): TranslationConfig = {
-    val txt = Cli.readText(spark, path)
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val root = mapper.readTree(txt)
+    val root = TableIO.parseJson(Cli.readText(spark, path))
     val tm = root.path("translation_map")
     val dateFmt = Option(root.get("date_format")).map(n =>
       strftimeToJava(n.asText()))
@@ -279,26 +277,19 @@ object Extract {
   }
 
   def writeMetadata(spark: SparkSession, meta: Map[String, String],
-                    path: String): Unit = {
-    val json = meta.toSeq.sortBy(_._1)
-      .map { case (k, v) => s""""$k": "$v"""" }
-      .mkString("{", ", ", "}")
-    writeRaw(spark, json, path)
-  }
+                    path: String): Unit =
+    TableIO.writeJson(spark, path,
+      TableIO.jsonObject(meta.toSeq.sortBy(_._1): _*))
 
-  /** Small sidecar document write through the Hadoop FS (works for any
-    * supported scheme — local, HDFS, object stores). */
-  def writeRaw(spark: SparkSession, content: String, path: String): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(new org.apache.hadoop.fs.Path(path), true)
-    out.write(content.getBytes("UTF-8"))
-    out.close()
-  }
+  def readMetadata(spark: SparkSession, path: String): Map[String, String] =
+    parseMetadata(Cli.readText(spark, path))
 
-  def readMetadata(spark: SparkSession, path: String): Map[String, String] = {
-    val txt = Cli.readText(spark, path)
+  /** The flat `"key": "value"` string pairs of a run-metadata document,
+    * found at any nesting depth: the one reader for the engine's own
+    * metadata files and for the metadata member of an agent's zip
+    * (validate_metadata.py:34–46), which is input from outside the
+    * program and keeps this tolerance. */
+  def parseMetadata(txt: String): Map[String, String] =
     """"([^"]+)"\s*:\s*"([^"]*)"""".r.findAllMatchIn(txt)
       .map(m => m.group(1) -> m.group(2)).toMap
-  }
 }

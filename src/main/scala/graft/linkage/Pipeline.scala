@@ -221,10 +221,9 @@ object Pipeline {
                  answerKey: DataFrame,
                  passes: Seq[Blocking.Pass] = Blocking.defaultPasses)
       : (Double, Double, Double) = {
-    val keyedAll = passes.map(p => Blocking.keyed(records, p))
-      .reduce(_ unionByName _)
-    val l = keyedAll.toDF("pass", "block_key", "id_a")
-    val r = keyedAll.toDF("pass_b", "block_key_b", "id_b")
+    val keyed = Blocking.keyedAll(records, passes)
+    val l = keyed.toDF("pass", "block_key", "id_a")
+    val r = keyed.toDF("pass_b", "block_key_b", "id_b")
     val sameBlock = l.join(r,
         col("pass") === col("pass_b") &&
         col("block_key") === col("block_key_b") &&

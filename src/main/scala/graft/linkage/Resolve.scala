@@ -37,8 +37,9 @@ object Resolve {
   /** get_metadata (validate_metadata.py:34–46): locate the metadata
     * member inside a garbled/linkage zip by name. Zero members → None
     * (the reference warns and returns None); more than one → first in
-    * archive order, like the reference. Flat string-valued JSON parsed
-    * with the same reader the sink uses. */
+    * archive order, like the reference. Parsed by
+    * [[Extract.parseMetadata]], as ValidateMetadataMain and ResolveMain's
+    * own --metadata file are. */
   def metadataFromZip(spark: SparkSession,
                       zipPath: String): Option[Map[String, String]] = {
     val fs = org.apache.hadoop.fs.FileSystem.get(
@@ -49,10 +50,8 @@ object Resolve {
       var entry = zin.getNextEntry
       while (entry != null) {
         if (entry.getName.contains("metadata")) {
-          val txt = scala.io.Source.fromInputStream(zin).mkString
-          return Some(
-            """"([^"]+)"\s*:\s*"([^"]*)"""".r.findAllMatchIn(txt)
-              .map(m => m.group(1) -> m.group(2)).toMap)
+          return Some(Extract.parseMetadata(
+            scala.io.Source.fromInputStream(zin).mkString))
         }
         entry = zin.getNextEntry
       }

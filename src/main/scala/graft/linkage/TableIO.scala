@@ -1,19 +1,33 @@
 package graft.linkage
 
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.node.ObjectNode
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.DatasetBridge
+import scala.jdk.CollectionConverters._
 
-/** Iceberg-like table layout over Parquet (SURVEY.md §7.6: no Iceberg
-  * runtime jar exists in this sandbox — verified /opt/spark/jars).
-  * Every table write produces:
+/** The engine's on-disk state format. Tables are an Iceberg-like layout
+  * over Parquet (SURVEY.md §7.6: no Iceberg runtime jar exists in this
+  * sandbox — verified /opt/spark/jars). Every table write produces:
   *   <path>/data/…parquet        (optionally partitioned)
   *   <path>/_snapshot.json       (row count, schema, file list — the
   *                                manifest/snapshot pointer)
   * giving the north rule's per-partition lineage/metrics + resumability
   * hooks; a real Iceberg catalog can be swapped in behind this interface
   * on a real cluster.
+  *
+  * Small state files (store pointers and metas, index sidecars, CC
+  * checkpoints, snapshots) go through ONE writer, [[writeFile]], and one
+  * driver-side Jackson reader, [[readJson]]/[[readJsonLines]]: every file
+  * becomes visible atomically, the way Delta Lake commits table state.
+  * Partitioned stores that grow by appends share one compactor,
+  * [[compactPartitions]].
   */
 object TableIO {
+
+  private val Json = new ObjectMapper()
 
   /** The snapshot's row_count is observed on the write itself: no
     * read-back pass over the files just written. */
@@ -35,9 +49,8 @@ object TableIO {
     * e.g. pii-YYYYMMDD-HHMMSS). */
   def latestTimestampedPath(spark: SparkSession, dir: String,
                             prefix: String): Option[String] = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(dir), spark.sparkContext.hadoopConfiguration)
-    val p = new org.apache.hadoop.fs.Path(dir)
+    val fs = fileSystem(spark, dir)
+    val p = new Path(dir)
     if (!fs.exists(p)) return None
     val names = fs.listStatus(p).toSeq
       .map(_.getPath.getName)
@@ -45,30 +58,26 @@ object TableIO {
     if (names.isEmpty) None else Some(s"$dir/${names.max}")
   }
 
+  private[graft] def fileSystem(spark: SparkSession, path: String) =
+    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
   private def writeSnapshot(df: DataFrame, path: String,
                             count: Long): Unit = {
     val spark = df.sparkSession
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-    val dataPath = new org.apache.hadoop.fs.Path(s"$path/data")
-    val files = listParquet(fs, dataPath)
+    val files = listParquet(fileSystem(spark, path), new Path(s"$path/data"))
     // the session-shared FileStatusCache may hold the PREVIOUS overwrite's
     // listing for this path — a later read of the table in this session
     // would otherwise see stale files (or FILE_NOT_EXIST)
     spark.catalog.refreshByPath(s"$path/data")
-    val filesJson = files.map(f =>
-      s"""{"path": "${f._1}", "bytes": ${f._2}}""").mkString("[", ",", "]")
-    val schemaJson = df.schema.json.replace("\\", "\\\\").replace("\"", "\\\"")
-    val json =
-      s"""{"row_count": $count, "num_files": ${files.size},
-         |"schema": "$schemaJson",
-         |"files": $filesJson}""".stripMargin
-    Extract.writeRaw(spark, json, s"$path/_snapshot.json")
+    writeJson(spark, s"$path/_snapshot.json", jsonObject(
+      "row_count" -> count, "num_files" -> files.size,
+      "schema" -> df.schema.json,
+      "files" -> files.map { case (f, bytes) =>
+        jsonObject("path" -> f, "bytes" -> bytes)
+      }.asJava))
   }
 
-  private def listParquet(fs: org.apache.hadoop.fs.FileSystem,
-                          dir: org.apache.hadoop.fs.Path)
-      : Seq[(String, Long)] = {
+  private def listParquet(fs: FileSystem, dir: Path): Seq[(String, Long)] = {
     val it = fs.listFiles(dir, true)
     val buf = Seq.newBuilder[(String, Long)]
     while (it.hasNext) {
@@ -77,5 +86,120 @@ object TableIO {
         buf += ((f.getPath.toString, f.getLen))
     }
     buf.result()
+  }
+
+  // ---------- small state files ----------
+
+  /** The one small-file writer (any Hadoop scheme). The content is
+    * written and closed as `<path>.tmp`, then the old file is deleted and
+    * the tmp renamed over it: a crash mid-write leaves the previous file
+    * intact, and a crash between delete and rename leaves a complete tmp
+    * that [[readJson]] falls back to. fs.create(overwrite) in place
+    * would truncate first, and a partial pointer or meta bricks a store
+    * whose data is intact. */
+  def writeFile(spark: SparkSession, path: String, content: String): Unit = {
+    val fs = fileSystem(spark, path)
+    val dst = new Path(path)
+    val tmp = new Path(s"$path.tmp")
+    val out = fs.create(tmp, true)
+    try out.write(content.getBytes("UTF-8")) finally out.close()
+    if (fs.exists(dst)) fs.delete(dst, false)
+    require(fs.rename(tmp, dst), s"rename failed: $tmp -> $dst")
+  }
+
+  def writeJson(spark: SparkSession, path: String, node: JsonNode): Unit =
+    writeFile(spark, path, Json.writeValueAsString(node) + "\n")
+
+  /** One JSON document per line (the centroids/codebook sidecars). */
+  def writeJsonLines(spark: SparkSession, path: String,
+                     nodes: Seq[JsonNode]): Unit =
+    writeFile(spark, path,
+      nodes.map(Json.writeValueAsString).mkString("", "\n", "\n"))
+
+  /** A JSON object with its keys in the given order. Values: boxed
+    * numbers and booleans, strings, `Array[Double]`, Java lists and
+    * other JSON nodes. */
+  def jsonObject(fields: (String, Any)*): ObjectNode = {
+    val m = new java.util.LinkedHashMap[String, Any]()
+    fields.foreach { case (k, v) => m.put(k, v) }
+    Json.valueToTree[ObjectNode](m)
+  }
+
+  /** Parse one JSON document — also the parser for the JSON inputs the
+    * program is given (translation conf, lambda schema). */
+  def parseJson(txt: String): JsonNode = Json.readTree(txt)
+
+  /** A file written by [[writeFile]], parsed; None when it was never
+    * committed. `<path>.tmp` is read only when the main file is missing:
+    * then a crash hit the delete→rename window and the complete tmp IS
+    * the committed file. A tmp beside the main file, or a lone tmp that
+    * does not parse (the file's first write crashed mid-way), is not. */
+  def readJson(spark: SparkSession, path: String): Option[JsonNode] =
+    committed(spark, path)(parseJson)
+
+  /** [[readJson]] for a one-document-per-line file. */
+  def readJsonLines(spark: SparkSession, path: String)
+      : Option[Seq[JsonNode]] =
+    committed(spark, path)(_.linesIterator.filter(_.trim.nonEmpty)
+      .map(parseJson).toVector)
+
+  private def committed[T](spark: SparkSession, path: String)(
+      parse: String => T): Option[T] = {
+    val fs = fileSystem(spark, path)
+    if (fs.exists(new Path(path))) Some(parse(Cli.readText(spark, path)))
+    else if (fs.exists(new Path(s"$path.tmp")))
+      scala.util.Try(parse(Cli.readText(spark, s"$path.tmp"))).toOption
+    else None
+  }
+
+  /** A JSON array of numbers. */
+  def doubles(node: JsonNode): Array[Double] =
+    node.elements().asScala.map(_.asDouble).toArray
+
+  // ---------- partition compaction ----------
+
+  /** Per-partition file compaction of a `k=v`-partitioned parquet dir that
+    * grows by appends: each append adds at most one file per touched
+    * partition, so a hot partition accumulates small files and its read
+    * cost creeps with file count, not data size. Rewrites only the leaf
+    * partitions holding more than `maxFilesPerPartition` parquet files,
+    * as one file each, by dynamic partition overwrite; every other
+    * partition keeps its files byte-identical. The rows are read from
+    * exactly the partitions the write replaces, so they are
+    * localCheckpoint()'d first (the self-overwrite rule) and released
+    * after. Returns the number of partitions rewritten. */
+  def compactPartitions(spark: SparkSession, dir: String,
+                        maxFilesPerPartition: Int): Int = {
+    val fs = fileSystem(spark, dir)
+    // (leaf dir, partition columns from the root down)
+    def overfull(p: Path, cols: Seq[String]): Seq[(Path, Seq[String])] = {
+      val (dirs, files) = fs.listStatus(p).toSeq.partition(_.isDirectory)
+      val parts = dirs.map(_.getPath).filter(_.getName.contains("="))
+      val here =
+        if (cols.nonEmpty && parts.isEmpty &&
+            files.count(_.getPath.getName.endsWith(".parquet")) >
+              maxFilesPerPartition) Seq((p, cols))
+        else Nil
+      here ++ parts.flatMap(d => overfull(d, cols :+ d.getName.split("=")(0)))
+    }
+    val over = overfull(new Path(dir), Nil)
+    if (over.isEmpty) return 0
+    val cols = over.head._2
+    // basePath: the partition columns come back from the leaf paths; one
+    // task per partition → one file per partition
+    val rows = spark.read.option("basePath", dir)
+      .parquet(over.map(_._1.toString): _*)
+      .repartition(cols.map(col): _*)
+      .localCheckpoint()
+    val prevMode = spark.conf.get(
+      "spark.sql.sources.partitionOverwriteMode", "static")
+    try {
+      spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+      rows.write.mode("overwrite").partitionBy(cols: _*).parquet(dir)
+    } finally
+      spark.conf.set("spark.sql.sources.partitionOverwriteMode", prevMode)
+    DatasetBridge.releaseCheckpoint(rows)
+    spark.catalog.refreshByPath(dir)
+    over.length
   }
 }

@@ -18,6 +18,9 @@ import graft.linkage.{Pipeline, TableIO}
   *   g0/, g1/                   alternating GENERATIONS of clusters only
   *   _state.json                {"version":2,"gen":<g>,"batch":<id>}
   *
+  * The pointer is committed by TableIO.writeFile (tmp + rename, so it
+  * becomes visible atomically) and read by TableIO.readJson.
+  *
   * records and matched_pairs are append-only in CONTENT (a conversation
   * folds once; a found match is never retracted), so each batch appends
   * exactly its O(batch) delta to the two logs — v1 rewrote all three
@@ -164,52 +167,24 @@ object LinkageStream {
       throw new IllegalStateException(s"no linkage store at $storeDir"))
 
   private[graft] def readState(spark: SparkSession,
-                               storeDir: String): Option[StoreState] = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(storeDir), spark.sparkContext.hadoopConfiguration)
-    // if only the tmp pointer exists, a crash hit the delete→rename
-    // window: tmp was fully written+closed before the delete, so it IS
-    // the committed state — without this fallback the next batch would
-    // see "no store" and restart from scratch over live generations
-    val main = new org.apache.hadoop.fs.Path(s"$storeDir/_state.json")
-    val tmp = new org.apache.hadoop.fs.Path(s"$storeDir/_state.json.tmp")
-    val p = if (fs.exists(main)) main
-            else if (fs.exists(tmp)) tmp
-            else main
-    if (!fs.exists(p)) None
-    else {
-      val txt = graft.linkage.Cli.readText(spark, p.toString)
-      val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(txt)
+                               storeDir: String): Option[StoreState] =
+    TableIO.readJson(spark, s"$storeDir/_state.json").map { node =>
       // fail LOUDLY on a malformed pointer: path(..).asInt() defaults of
       // a partial file would silently point reads at the wrong
       // generation and re-admit committed batches
       require(node.has("gen") && node.has("batch"),
-        s"corrupt linkage-store pointer $p: '$txt'")
-      val version = if (node.has("version")) node.get("version").asInt() else 1
+        s"corrupt linkage-store pointer $storeDir/_state.json: '$node'")
+      val version = node.path("version").asInt(1)
       require(version == StoreVersion,
         s"linkage store $storeDir is layout v$version, engine supports " +
           s"v$StoreVersion — point the sink at a fresh store")
-      Some(StoreState(node.get("gen").asInt(), node.get("batch").asLong()))
+      StoreState(node.get("gen").asInt(), node.get("batch").asLong())
     }
-  }
 
-  private[graft] def writeState(spark: SparkSession, storeDir: String,
-                                st: StoreState): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(storeDir), spark.sparkContext.hadoopConfiguration)
-    // temp + rename: fs.create(overwrite) truncates in place, so a crash
-    // mid-write would leave an empty/partial pointer and brick the store
-    // even though both generations' data is intact; rename is atomic on
-    // HDFS and the local FS
-    val tmp = new org.apache.hadoop.fs.Path(s"$storeDir/_state.json.tmp")
-    val dst = new org.apache.hadoop.fs.Path(s"$storeDir/_state.json")
-    val out = fs.create(tmp, true)
-    out.write((s"""{"version":$StoreVersion,"gen":${st.gen},""" +
-      s""""batch":${st.batch}}""").getBytes("UTF-8"))
-    out.close()
-    if (fs.exists(dst)) fs.delete(dst, false)
-    require(fs.rename(tmp, dst), s"pointer rename failed: $tmp -> $dst")
-  }
+  private def writeState(spark: SparkSession, storeDir: String,
+                         st: StoreState): Unit =
+    TableIO.writeJson(spark, s"$storeDir/_state.json", TableIO.jsonObject(
+      "version" -> StoreVersion, "gen" -> st.gen, "batch" -> st.batch))
 }
 
 /** spark-submit surface for the continuous-linkage sink:

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.graftbridge.DatasetBridge
 import graft.data.Dedup
-import graft.linkage.{Cli, Extract}
+import graft.linkage.{Cli, TableIO}
 import graft.linkage.expr.{functions => gf}
 
 /** Streaming NEAR-dup dedup (batch analog: Dedup.minHashNearDups). A
@@ -26,6 +26,10 @@ import graft.linkage.expr.{functions => gf}
   *
   *   storePath/sigs/band=<b>/shard=<s>/…parquet   (bucket, doc_id, sig)
   *   storePath/_store_meta.json                   layout + minhash config
+  *
+  * The meta is written once, atomically, by TableIO.writeFile and read
+  * by TableIO.readJson; the sigs dir is compacted by
+  * TableIO.compactPartitions ([[compactStore]]).
   *
   * One row PER BAND per admitted doc, PARTITIONED BY (band, shard) with
   * shard = bucket mod `shards` — the writeIvfIndex cells pattern. A
@@ -67,48 +71,43 @@ object NearDupStream {
                        shingleSize: Int, seed: Long, oph: Boolean,
                        shards: Int)
 
-  private def hadoopFs(spark: SparkSession, path: String) =
-    org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-
   private def readStoreMeta(spark: SparkSession,
                             storePath: String): Option[StoreMeta] = {
-    val fs = hadoopFs(spark, storePath)
-    val metaPath =
-      new org.apache.hadoop.fs.Path(s"$storePath/_store_meta.json")
-    if (!fs.exists(metaPath)) {
-      // a store dir with data but no meta is a pre-v2 (flat) layout:
-      // its flat (doc_id, sig) rows carry no band partitions, so reading
-      // it as v2 would silently see an empty store and re-admit dups
-      require(!fs.exists(new org.apache.hadoop.fs.Path(storePath)) ||
-        fs.listStatus(new org.apache.hadoop.fs.Path(storePath)).isEmpty,
-        s"$storePath exists without _store_meta.json — a v1 flat " +
-          "signature store; point the stream at a fresh store dir")
-      None
-    } else {
-      val txt = Cli.readText(spark, metaPath.toString)
-      val n = new com.fasterxml.jackson.databind.ObjectMapper().readTree(txt)
-      require(Seq("version", "numHashes", "bands", "shingleSize", "seed",
-        "oph", "shards").forall(n.has),
-        s"corrupt store meta $metaPath: '$txt'")
-      val meta = StoreMeta(n.get("version").asInt, n.get("numHashes").asInt,
-        n.get("bands").asInt, n.get("shingleSize").asInt,
-        n.get("seed").asLong, n.get("oph").asBoolean, n.get("shards").asInt)
-      require(meta.version == StoreVersion,
-        s"store $storePath is layout v${meta.version}, engine supports " +
-          s"v$StoreVersion")
-      Some(meta)
+    val metaPath = s"$storePath/_store_meta.json"
+    TableIO.readJson(spark, metaPath) match {
+      case None =>
+        // a store dir with data but no meta is a pre-v2 (flat) layout:
+        // its flat (doc_id, sig) rows carry no band partitions, so reading
+        // it as v2 would silently see an empty store and re-admit dups
+        val fs = TableIO.fileSystem(spark, storePath)
+        val root = new org.apache.hadoop.fs.Path(storePath)
+        require(!fs.exists(root) || fs.listStatus(root)
+            .forall(_.getPath.getName.contains("_store_meta.json")),
+          s"$storePath exists without _store_meta.json — a v1 flat " +
+            "signature store; point the stream at a fresh store dir")
+        None
+      case Some(n) =>
+        require(Seq("version", "numHashes", "bands", "shingleSize", "seed",
+          "oph", "shards").forall(n.has),
+          s"corrupt store meta $metaPath: '$n'")
+        val meta = StoreMeta(n.get("version").asInt, n.get("numHashes").asInt,
+          n.get("bands").asInt, n.get("shingleSize").asInt,
+          n.get("seed").asLong, n.get("oph").asBoolean, n.get("shards").asInt)
+        require(meta.version == StoreVersion,
+          s"store $storePath is layout v${meta.version}, engine supports " +
+            s"v$StoreVersion")
+        Some(meta)
     }
   }
 
   /** Meta of a NEW store: the caller's minhash config, DefaultShards. */
   private def writeStoreMeta(spark: SparkSession, storePath: String,
                              cfg: Dedup.MinHashConfig): Unit =
-    Extract.writeRaw(spark,
-      s"""{"version":$StoreVersion,"numHashes":${cfg.numHashes},""" +
-        s""""bands":${cfg.bands},"shingleSize":${cfg.shingleSize},""" +
-        s""""seed":${cfg.seed},"oph":${cfg.oph},"shards":$DefaultShards}""",
-      s"$storePath/_store_meta.json")
+    TableIO.writeJson(spark, s"$storePath/_store_meta.json",
+      TableIO.jsonObject("version" -> StoreVersion,
+        "numHashes" -> cfg.numHashes, "bands" -> cfg.bands,
+        "shingleSize" -> cfg.shingleSize, "seed" -> cfg.seed,
+        "oph" -> cfg.oph, "shards" -> DefaultShards))
 
   /** A config mismatch against the store silently computes foreign
     * buckets/signatures and re-admits every duplicate — refuse loudly. */
@@ -148,7 +147,7 @@ object NearDupStream {
                         idType: org.apache.spark.sql.types.DataType)
       : DataFrame = {
     val schema = storeSchema(idCol, idType)
-    if (hadoopFs(spark, storePath).exists(
+    if (TableIO.fileSystem(spark, storePath).exists(
         new org.apache.hadoop.fs.Path(s"$storePath/sigs")))
       spark.read.schema(schema).parquet(s"$storePath/sigs")
     else spark.createDataFrame(
@@ -215,46 +214,15 @@ object NearDupStream {
       .write.mode("append").partitionBy("band", "shard")
       .parquet(s"$storePath/sigs")
 
-  /** Per-partition file compaction for the (band, shard) store — run on
-    * a schedule for long-lived streams: every append adds at most one
-    * file per touched partition, so after B batches a hot partition
-    * holds up to B small files and the per-trigger pruned-scan cost
-    * creeps with file count, not data size. Rewrites only partitions
-    * over `maxFilesPerPartition` (dynamic partition overwrite; rows are
-    * localCheckpoint()'d first — the self-overwrite rule). Returns the
-    * number of partitions rewritten. */
+  /** Per-partition file compaction for the (band, shard) store
+    * ([[TableIO.compactPartitions]] over `sigs/`) — run on a schedule for
+    * long-lived streams: every append adds at most one file per touched
+    * partition. Returns the number of partitions rewritten. */
   def compactStore(spark: SparkSession, storePath: String,
                    maxFilesPerPartition: Int = 8): Int = {
-    val meta = readStoreMeta(spark, storePath)
-    require(meta.isDefined, s"no signature store at $storePath")
-    val fs = hadoopFs(spark, storePath)
-    val sigsPath = new org.apache.hadoop.fs.Path(s"$storePath/sigs")
-    val over = for {
-      bandDir <- fs.listStatus(sigsPath).toSeq
-      if bandDir.isDirectory && bandDir.getPath.getName.startsWith("band=")
-      shardDir <- fs.listStatus(bandDir.getPath).toSeq
-      if shardDir.isDirectory && shardDir.getPath.getName.startsWith("shard=")
-      if fs.listStatus(shardDir.getPath).count(f =>
-        f.isFile && f.getPath.getName.endsWith(".parquet")) >
-        maxFilesPerPartition
-    } yield (bandDir.getPath.getName.stripPrefix("band=").toInt,
-      shardDir.getPath.getName.stripPrefix("shard=").toInt)
-    if (over.isEmpty) return 0
-    val rows = spark.read.parquet(s"$storePath/sigs")
-      .filter(inPartitions(over))
-      .repartition(col("band"), col("shard"))
-      .localCheckpoint()
-    val prevMode = spark.conf.get(
-      "spark.sql.sources.partitionOverwriteMode", "static")
-    try {
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      rows.write.mode("overwrite").partitionBy("band", "shard")
-        .parquet(s"$storePath/sigs")
-    } finally
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", prevMode)
-    DatasetBridge.releaseCheckpoint(rows)
-    spark.catalog.refreshByPath(s"$storePath/sigs")
-    over.length
+    require(readStoreMeta(spark, storePath).isDefined,
+      s"no signature store at $storePath")
+    TableIO.compactPartitions(spark, s"$storePath/sigs", maxFilesPerPartition)
   }
 
   /** One micro-batch step (exactly what the foreachBatch sink invokes;

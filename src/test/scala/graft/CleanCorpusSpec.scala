@@ -100,7 +100,7 @@ class CleanCorpusSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("CleanCorpusMain writes cleaned parquet + stats.json") {
-    val dir = java.nio.file.Files.createTempDirectory("cleancorpus").toString
+    val dir = tempDir("cleancorpus")
     corpus.write.mode("overwrite").parquet(s"$dir/in")
     val counts = CleanCorpusMain.run(spark, Map(
       "input" -> s"$dir/in", "output" -> s"$dir/out",

@@ -8,8 +8,7 @@ import graft.linkage._
   * reference-shaped artifacts at every stage. */
 class CliMainsSpec extends AnyFunSuite with SparkFixture {
 
-  private lazy val base =
-    java.nio.file.Files.createTempDirectory("cli").toString
+  private lazy val base = tempDir("cli")
   private def write(path: String, content: String): String = {
     val p = java.nio.file.Paths.get(path)
     java.nio.file.Files.createDirectories(p.getParent)

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.linkage.Cluster
+import graft.linkage.{Cluster, TableIO}
 
 /** Connected components: known graphs, singleton semantics
   * (households.py:247–249), GraphX cross-check, checkpoint resume. Every
@@ -112,18 +112,31 @@ class ClusterSpec extends AnyFunSuite with SparkFixture {
 
   test("resume from checkpoint reproduces identical labels") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("cc-ckpt").toString
+    val dir = tempDir("cc-ckpt")
     val edges = (1L to 50L).map(i => (i, i + 1L)) ++ Seq((200L, 201L))
     val df = edges.toDF("a", "b")
     val full = Cluster.connectedComponents(spark, df,
       Cluster.Options(checkpointDir = Some(dir)))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    // second run finds _cc_state.json from the completed run and resumes
-    // from the final round — labels must be identical
+    // second run finds the state from the completed run and resumes
+    // from the final round — labels must be identical. The state is left
+    // in its commit window (only the complete tmp, as after a crash
+    // between delete and rename): the run must still resume, reading
+    // round 0's files rather than rewriting them
+    val fs = TableIO.fileSystem(spark, dir)
+    val statePath = new org.apache.hadoop.fs.Path(s"$dir/_cc_state.json")
+    def round0(): Set[String] = new java.io.File(s"$dir/iter_0").list().toSet
+    val round0Files = round0()
+    fs.rename(statePath, statePath.suffix(".tmp"))
     val resumed = Cluster.connectedComponents(spark, df,
       Cluster.Options(checkpointDir = Some(dir)))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(full == resumed)
+    assert(round0() == round0Files, "the run re-initialised instead of resuming")
+    // a truncated tmp beside the intact state is ignored
+    fs.rename(statePath.suffix(".tmp"), statePath)
+    val partial = fs.create(statePath.suffix(".tmp"), true)
+    partial.write("""{"last_completed_it""".getBytes("UTF-8")); partial.close()
     // and a partial-state resume: rewind the state to iter 0 (keeping the
     // input fingerprint intact), keep round files → resume mid-computation
     val state = new java.io.File(s"$dir/_cc_state.json")
@@ -141,7 +154,7 @@ class ClusterSpec extends AnyFunSuite with SparkFixture {
 
   test("resume against a checkpoint from DIFFERENT edges re-inits fresh") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("cc-stale").toString
+    val dir = tempDir("cc-stale")
     val first = Seq((1L, 2L), (2L, 3L)).toDF("a", "b")
     Cluster.connectedComponents(spark, first,
       Cluster.Options(checkpointDir = Some(dir))).count()

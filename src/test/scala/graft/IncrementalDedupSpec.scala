@@ -164,7 +164,7 @@ class IncrementalDedupSpec extends AnyFunSuite with SparkFixture {
     val fullExactIds = fullExact.collect().map(_.getLong(0)).toSet
     fullCleaned.unpersist(); fullExact.unpersist()
 
-    val tmp = java.nio.file.Files.createTempDirectory("cleaninc").toString
+    val tmp = tempDir("cleaninc")
     Seq(d1, d2, d3).zipWithIndex.foreach { case (df, i) =>
       df.write.mode("overwrite").parquet(s"$tmp/in${i + 1}")
     }

@@ -67,7 +67,7 @@ class IncrementalSpec extends AnyFunSuite with SparkFixture {
 
     // shape 1: the records table LinkageMain writes (without turns), read
     // back as --previous reads it
-    val dir = java.nio.file.Files.createTempDirectory("incshape").toString
+    val dir = tempDir("incshape")
     TableIO.write(first.records.drop("turns"), s"$dir/records")
     val fromTable = Pipeline.incremental(spark,
       TableIO.read(spark, s"$dir/records"), first.matchedPairs, t2)

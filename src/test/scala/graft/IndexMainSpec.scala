@@ -10,8 +10,7 @@ import graft.data.{Ann, IndexMain, Pq}
   * checked against the library call it fronts. */
 class IndexMainSpec extends AnyFunSuite with SparkFixture {
 
-  private lazy val base =
-    java.nio.file.Files.createTempDirectory("idxcli").toString
+  private lazy val base = tempDir("idxcli")
 
   private lazy val corpusReady: Unit = {
     import spark.implicits._

@@ -10,8 +10,7 @@ import graft.data.Ann
   * probe set). */
 class IvfIndexSpec extends AnyFunSuite with SparkFixture {
 
-  private lazy val dir =
-    java.nio.file.Files.createTempDirectory("ivfidx").toString
+  private lazy val dir = tempDir("ivfidx")
 
   private lazy val corpus = {
     import spark.implicits._
@@ -107,7 +106,7 @@ class IvfIndexSpec extends AnyFunSuite with SparkFixture {
     indexReady
     import spark.implicits._
     // clone the index, then tamper the fingerprint
-    val dir2 = java.nio.file.Files.createTempDirectory("ivfidx2").toString
+    val dir2 = tempDir("ivfidx2")
     def cp(src: java.io.File, dst: java.io.File): Unit = {
       if (src.isDirectory) {
         dst.mkdirs(); src.listFiles.foreach(f =>
@@ -116,6 +115,21 @@ class IvfIndexSpec extends AnyFunSuite with SparkFixture {
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
     }
     cp(new java.io.File(dir), new java.io.File(dir2))
+    // the stamp's commit window: with only the complete tmp left by a
+    // crash between delete and rename, the index still serves — and a
+    // truncated tmp beside the intact stamp is ignored
+    val expected = Ann.ivfTopKIndexed(spark, dir, queries, k = 5, nProbe = 2)
+      .collect().toSet
+    val fs = graft.linkage.TableIO.fileSystem(spark, dir2)
+    val meta = new org.apache.hadoop.fs.Path(s"$dir2/ivf_meta.json")
+    fs.rename(meta, meta.suffix(".tmp"))
+    assert(Ann.ivfTopKIndexed(spark, dir2, queries, k = 5, nProbe = 2)
+      .collect().toSet == expected)
+    fs.rename(meta.suffix(".tmp"), meta)
+    val partial = fs.create(meta.suffix(".tmp"), true)
+    partial.write("""{"version":1,"nCen""".getBytes("UTF-8")); partial.close()
+    assert(Ann.ivfTopKIndexed(spark, dir2, queries, k = 5, nProbe = 2)
+      .collect().toSet == expected)
     // NIO rewrites below would trip the copied Hadoop .crc sidecar
     java.nio.file.Files.deleteIfExists(
       java.nio.file.Paths.get(s"$dir2/.ivf_meta.json.crc"))

@@ -122,7 +122,7 @@ class LinkagePipelineSpec extends AnyFunSuite with SparkFixture {
           e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
         jobs.incrementAndGet()
     }
-    val out = java.nio.file.Files.createTempDirectory("budget").toString
+    val out = tempDir("budget")
     val sc = spark.sparkContext
     org.apache.spark.graftbridge.Bus.drain(sc)
     sc.addSparkListener(listener)

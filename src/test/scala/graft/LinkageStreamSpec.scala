@@ -11,8 +11,7 @@ import graft.streaming.LinkageStream
   * (the restart path of a foreachBatch checkpoint). */
 class LinkageStreamSpec extends AnyFunSuite with SparkFixture {
 
-  private lazy val dir =
-    java.nio.file.Files.createTempDirectory("linkstream").toString
+  private lazy val dir = tempDir("linkstream")
 
   test("streamed batches converge to the full-recompute clusters") {
     import spark.implicits._
@@ -84,6 +83,13 @@ class LinkageStreamSpec extends AnyFunSuite with SparkFixture {
     // no-op; an id BEHIND the pointer means a reset checkpoint against a
     // kept store — refused loudly instead of silently dropping batches
     val st0 = LinkageStream.readState(spark, s"$dir/store").get
+    // the pointer's commit window: a crash between delete and rename
+    // leaves only the complete tmp, which IS the committed pointer — the
+    // replay checks below run against it
+    val fs = TableIO.fileSystem(spark, dir)
+    val ptr = new org.apache.hadoop.fs.Path(s"$dir/store/_state.json")
+    fs.rename(ptr, ptr.suffix(".tmp"))
+    assert(LinkageStream.readState(spark, s"$dir/store").get == st0)
     val replayed = LinkageStream.linkBatch(
       all.toDF.limit(10), st0.batch, s"$dir/store")
     assert(!replayed, "committed batch id must be skipped")
@@ -96,6 +102,11 @@ class LinkageStreamSpec extends AnyFunSuite with SparkFixture {
     // an empty batch commits nothing
     assert(!LinkageStream.linkBatch(
       all.toDF.limit(0), st0.batch + 100, s"$dir/store"))
+    assert(LinkageStream.readState(spark, s"$dir/store").get == st0)
+    // a truncated tmp beside an intact pointer was never committed
+    fs.rename(ptr.suffix(".tmp"), ptr)
+    val partial = fs.create(ptr.suffix(".tmp"), true)
+    partial.write("""{"version":2,"gen""".getBytes("UTF-8")); partial.close()
     assert(LinkageStream.readState(spark, s"$dir/store").get == st0)
     // full-run-only modes are refused up front (they would make matching
     // semantics depend on arrival batch)

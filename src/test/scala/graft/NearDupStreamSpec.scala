@@ -15,8 +15,7 @@ class NearDupStreamSpec extends AnyFunSuite with SparkFixture {
   private def doc(seed: Int): String =
     (0 until 40).map(i => s"tok${(i * 7 + seed * 13) % 97}").mkString(" ")
 
-  private lazy val dir =
-    java.nio.file.Files.createTempDirectory("neardupstream").toString
+  private lazy val dir = tempDir("neardupstream")
 
   test("micro-batches dedup against the persisted store and themselves") {
     import spark.implicits._
@@ -27,6 +26,11 @@ class NearDupStreamSpec extends AnyFunSuite with SparkFixture {
     assert(s1.select("doc_id").collect().map(_.getLong(0)).toSet ==
       Set(1L, 2L, 3L))
     s1.unpersist()
+    // the meta's commit window: a crash between delete and rename leaves
+    // only the complete tmp, and the next batch must still read the store
+    val fs = graft.linkage.TableIO.fileSystem(spark, store)
+    val meta = new org.apache.hadoop.fs.Path(s"$store/_store_meta.json")
+    fs.rename(meta, meta.suffix(".tmp"))
 
     val b2 = Seq(
       (10L, doc(1).replaceFirst("tok20", "EDITED")), // near-dup of stored 1
@@ -48,7 +52,11 @@ class NearDupStreamSpec extends AnyFunSuite with SparkFixture {
     assert(rows.count() == 4L * cfg.bands, "one store row per band per doc")
     assert(rows.columns.toSet ==
       Set("band", "shard", "bucket", "doc_id", "sig"))
-    // a config mismatched against the store meta is refused loudly
+    // a config mismatched against the store meta is refused loudly — also
+    // with a truncated tmp beside the intact meta
+    fs.rename(meta.suffix(".tmp"), meta)
+    val partial = fs.create(meta.suffix(".tmp"), true)
+    partial.write("""{"version":2,"numH""".getBytes("UTF-8")); partial.close()
     val e = intercept[IllegalArgumentException] {
       NearDupStream.nearDupBatch(b2, store,
         cfg.copy(seed = 99L))

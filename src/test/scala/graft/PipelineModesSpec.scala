@@ -38,7 +38,7 @@ class PipelineModesSpec extends AnyFunSuite with SparkFixture {
 
   test("pairsfile bypasses blocking and scoring") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("pairs").toString
+    val dir = tempDir("pairs")
     Seq(("c1", "c3"), ("c2", "c4")).toDF("id_a", "id_b")
       .write.mode("overwrite").parquet(dir)
     val result = Pipeline.run(spark, transcripts,
@@ -53,7 +53,7 @@ class PipelineModesSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("pairsfile accepts the reference's headerless CSV (matching.py:305)") {
-    val base = java.nio.file.Files.createTempDirectory("pairscsv").toString
+    val base = tempDir("pairscsv")
     val csv = s"$base/pairs.csv"
     // reference format: header=None, two positional columns
     java.nio.file.Files.writeString(java.nio.file.Paths.get(csv),
@@ -70,7 +70,7 @@ class PipelineModesSpec extends AnyFunSuite with SparkFixture {
 
   test("pairsfile parquet selects id_a/id_b BY NAME, not position") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("pairsnamed").toString
+    val dir = tempDir("pairsnamed")
     // column order deliberately scrambled + an extra column: positional
     // toDF would mislabel these (round-2 bug)
     Seq((0.9, "c3", "c1"), (0.8, "c4", "c2"))
@@ -85,7 +85,7 @@ class PipelineModesSpec extends AnyFunSuite with SparkFixture {
 
   test("householddef: definitions file bypasses inference (households -d)") {
     import graft.linkage.{Extract, LinkageMain}
-    val base = java.nio.file.Files.createTempDirectory("hhdef").toString
+    val base = tempDir("hhdef")
     val defCsv = s"$base/households.csv"
     java.nio.file.Files.writeString(java.nio.file.Paths.get(defCsv),
       "family_name,phone_number,household_street_address,household_zip,record_ids\n" +
@@ -102,7 +102,7 @@ class PipelineModesSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("LinkageMain --previous: daily-append CLI equals a full recompute") {
-    val base = java.nio.file.Files.createTempDirectory("lmprev").toString
+    val base = tempDir("lmprev")
     val synthCfg = SynthTranscripts.Config(seed = 7L, nConvs = 300)
     val all = SynthTranscripts.transcripts(spark, synthCfg).toDF.cache()
     // split so garbles and their seeds often land in DIFFERENT batches
@@ -148,7 +148,7 @@ class PipelineModesSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("LinkageMain refuses a short --secret before reading or caching") {
-    val out = java.nio.file.Files.createTempDirectory("badsecret").toString
+    val out = tempDir("badsecret")
     val before = spark.sparkContext.getPersistentRDDs.keySet
     intercept[IllegalArgumentException] {
       LinkageMain.run(spark, Map("synthetic" -> "60", "output" -> out,
@@ -159,39 +159,36 @@ class PipelineModesSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("household CLK i and mapping_csv row i belong to --testrun position i") {
-    val tmp = java.nio.file.Files.createTempDirectory("hhclks")
-    val out = tmp.toString
+    val out = tempDir("hhclks")
     val secret = "0123456789abcdef0123456789abcdef"
-    try {
-      LinkageMain.run(spark, Map("synthetic" -> "300", "output" -> out,
-        "testrun" -> "true", "secret" -> secret))
-      val clusters = TableIO.read(spark, s"$out/clusters")
-      // the cached clusters span several partitions: their hash order is
-      // not the cluster_id order the positions follow
-      assert(clusters.inputFiles.length > 1)
-      val clkOf = Garble.householdClks(clusters, secret)
-        .select(col("cluster_id"), base64(col("clk"))).collect()
-        .map(r => r.getString(0) -> r.getString(1)).toMap
-      // household_pos_pid: (household_position, representative id), and a
-      // cluster's id is its representative's
-      val repAt = TableIO.read(spark, s"$out/household_pos_pid").collect()
-        .map(r => r.getLong(0) -> r.getString(1)).toMap
-      val written = Garble.readClks(spark, s"$out/household_clks")
-        .select(col("record_index"), base64(col("clk"))).collect()
-        .map(r => r.getLong(0) -> r.getString(1)).toMap
-      assert(written.size == repAt.size && repAt.size == clkOf.size)
-      val misplaced = repAt.count { case (i, rep) => written(i) != clkOf(rep) }
-      assert(misplaced == 0, s"$misplaced of ${repAt.size} CLKs out of place")
-      // ResolveMain --hhsourcefile numbers mapping_csv rows by scan order
-      val mapped = Positions.withScanPosition(
-          spark.read.option("header", "true").csv(s"$out/mapping_csv"),
-          "household_position")
-        .select(col("household_position"), col("cluster_id")).collect()
-        .map(r => r.getLong(0) -> r.getString(1)).toMap
-      val shifted = repAt.count { case (i, rep) => !mapped.get(i).contains(rep) }
-      assert(mapped.size == repAt.size && shifted == 0,
-        s"$shifted of ${repAt.size} mapping_csv rows out of household order")
-    } finally new scala.reflect.io.Directory(tmp.toFile).deleteRecursively()
+    LinkageMain.run(spark, Map("synthetic" -> "300", "output" -> out,
+      "testrun" -> "true", "secret" -> secret))
+    val clusters = TableIO.read(spark, s"$out/clusters")
+    // the cached clusters span several partitions: their hash order is
+    // not the cluster_id order the positions follow
+    assert(clusters.inputFiles.length > 1)
+    val clkOf = Garble.householdClks(clusters, secret)
+      .select(col("cluster_id"), base64(col("clk"))).collect()
+      .map(r => r.getString(0) -> r.getString(1)).toMap
+    // household_pos_pid: (household_position, representative id), and a
+    // cluster's id is its representative's
+    val repAt = TableIO.read(spark, s"$out/household_pos_pid").collect()
+      .map(r => r.getLong(0) -> r.getString(1)).toMap
+    val written = Garble.readClks(spark, s"$out/household_clks")
+      .select(col("record_index"), base64(col("clk"))).collect()
+      .map(r => r.getLong(0) -> r.getString(1)).toMap
+    assert(written.size == repAt.size && repAt.size == clkOf.size)
+    val misplaced = repAt.count { case (i, rep) => written(i) != clkOf(rep) }
+    assert(misplaced == 0, s"$misplaced of ${repAt.size} CLKs out of place")
+    // ResolveMain --hhsourcefile numbers mapping_csv rows by scan order
+    val mapped = Positions.withScanPosition(
+        spark.read.option("header", "true").csv(s"$out/mapping_csv"),
+        "household_position")
+      .select(col("household_position"), col("cluster_id")).collect()
+      .map(r => r.getLong(0) -> r.getString(1)).toMap
+    val shifted = repAt.count { case (i, rep) => !mapped.get(i).contains(rep) }
+    assert(mapped.size == repAt.size && shifted == 0,
+      s"$shifted of ${repAt.size} mapping_csv rows out of household order")
   }
 
   test("max-turns bounds a runaway mega-conversation's fold") {

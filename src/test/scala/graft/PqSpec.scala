@@ -39,7 +39,7 @@ class PqSpec extends AnyFunSuite with SparkFixture {
   /** The persisted IVF-PQ index over the corpus (8 cells, M=4, K=8) —
     * the production serving path ([[graft.data.IndexMain]] --pq). */
   private lazy val index = {
-    val dir = java.nio.file.Files.createTempDirectory("ivfpq").toString
+    val dir = tempDir("ivfpq")
     Pq.writeIvfPqIndex(corpus, dir, Ann.IvfConfig(nCentroids = 8),
       Pq.PqConfig(numSubspaces = 4, codebookSize = 8))
     dir
@@ -163,7 +163,7 @@ class PqSpec extends AnyFunSuite with SparkFixture {
 
   test("IVF-PQ append + meta refusal") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("ivfpq2").toString
+    val dir = tempDir("ivfpq2")
     Pq.writeIvfPqIndex(corpus, dir,
       Ann.IvfConfig(nCentroids = 8, nProbe = 2),
       Pq.PqConfig(numSubspaces = 4, codebookSize = 8))
@@ -188,7 +188,7 @@ class PqSpec extends AnyFunSuite with SparkFixture {
     }
     assert(e.getMessage.contains("version"))
     // a plain-IVF index is not silently served as IVF-PQ
-    val ivfDir = java.nio.file.Files.createTempDirectory("ivfplain").toString
+    val ivfDir = tempDir("ivfplain")
     Ann.writeIvfIndex(corpus, ivfDir, Ann.IvfConfig(nCentroids = 8))
     val e2 = intercept[IllegalArgumentException] {
       Pq.ivfPqTopKIndexed(spark, ivfDir, q, k = 1)

@@ -6,6 +6,21 @@ import org.scalatest.{BeforeAndAfterAll, Suite}
 /** Shared local SparkSession for specs. */
 trait SparkFixture extends BeforeAndAfterAll { self: Suite =>
   lazy val spark: SparkSession = SparkFixture.session
+
+  private val tempDirs =
+    scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
+
+  /** A fresh temp directory, deleted recursively after the suite. */
+  def tempDir(prefix: String): String = tempDirs.synchronized {
+    val dir = java.nio.file.Files.createTempDirectory(prefix)
+    tempDirs += dir
+    dir.toString
+  }
+
+  override def afterAll(): Unit =
+    try tempDirs.foreach(d =>
+      new scala.reflect.io.Directory(d.toFile).deleteRecursively())
+    finally super.afterAll()
 }
 
 object SparkFixture {

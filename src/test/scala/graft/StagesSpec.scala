@@ -170,7 +170,7 @@ class StagesSpec extends AnyFunSuite with SparkFixture {
 
   test("timestamped pii/metadata pair + newest-source discovery") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("pii").toString
+    val dir = tempDir("pii")
     val mk = (id: String) => Seq((id, "A", "B", "", "M", "1", "2 X ST", "Z"))
       .toDF("record_id", "given_name", "family_name", "DOB", "sex",
         "phone_number", "household_street_address", "household_zip")
@@ -191,7 +191,7 @@ class StagesSpec extends AnyFunSuite with SparkFixture {
 
   test("multi-schema garble flow: per-schema CLKs, garble_time, zip") {
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("garble").toString
+    val base = tempDir("garble")
     val schemaDir = s"$base/schemas"; val outDir = s"$base/output"
     new java.io.File(schemaDir).mkdirs()
     def w(name: String, body: String): Unit =
@@ -300,7 +300,7 @@ class StagesSpec extends AnyFunSuite with SparkFixture {
     assert(emptyStats("total_unique_record_ids") == 0L)
     assert(!emptyRaw.contains("duplicate_record_ids"))
     // reports render to valid-shape JSON documents
-    val dir = java.nio.file.Files.createTempDirectory("analyze").toString
+    val dir = tempDir("analyze")
     val (sp, rp) = Analyze.writeReports(rows, dir)
     assert(java.nio.file.Files.readString(java.nio.file.Paths.get(sp))
       .startsWith("{\"number_of_rows\": 10"))
@@ -310,7 +310,7 @@ class StagesSpec extends AnyFunSuite with SparkFixture {
 
   test("zip roundtrip: clk json sink → zip → zip-member csv scan") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-zip").toString
+    val dir = tempDir("graft-zip")
     // write a small csv shard then zip it and read back through Resolve
     Seq((1, "a"), (2, "b")).toDF("LINK_ID", "position")
       .coalesce(1).write.mode("overwrite")

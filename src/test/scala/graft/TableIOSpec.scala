@@ -6,11 +6,6 @@ import graft.linkage.{Cli, TableIO}
 /** The `_snapshot.json` manifest TableIO writes next to every table. */
 class TableIOSpec extends AnyFunSuite with SparkFixture {
 
-  private def field(json: String, key: String): Long =
-    (""""""" + key + """"\s*:\s*(\d+)""").r.findFirstMatchIn(json)
-      .map(_.group(1).toLong)
-      .getOrElse(fail(s"no $key in $json"))
-
   private def parquetFiles(dir: java.io.File): Int =
     Option(dir.listFiles()).getOrElse(Array.empty[java.io.File]).map(f =>
       if (f.isDirectory) parquetFiles(f)
@@ -18,15 +13,18 @@ class TableIOSpec extends AnyFunSuite with SparkFixture {
 
   test("_snapshot.json row_count and num_files match the written table") {
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("tableio").toString
+    val base = tempDir("tableio")
     val rows = (0 until 500).map(i => (i.toLong, s"k${i % 7}"))
       .toDF("id", "key").repartition(3)
     def check(path: String, expectedRows: Long): Unit = {
-      val snap = Cli.readText(spark, s"$path/_snapshot.json")
-      assert(field(snap, "row_count") == expectedRows, s"$path: $snap")
+      // Jackson, not a regex: the snapshot must be valid JSON
+      val snap = new com.fasterxml.jackson.databind.ObjectMapper()
+        .readTree(Cli.readText(spark, s"$path/_snapshot.json"))
+      assert(snap.get("row_count").asLong == expectedRows, s"$path: $snap")
       assert(TableIO.read(spark, path).count() == expectedRows)
-      assert(field(snap, "num_files") ==
+      assert(snap.get("num_files").asLong ==
         parquetFiles(new java.io.File(s"$path/data")), s"$path: $snap")
+      assert(snap.get("files").size == snap.get("num_files").asInt)
     }
     TableIO.write(rows, s"$base/plain")
     check(s"$base/plain", 500)
@@ -38,5 +36,8 @@ class TableIOSpec extends AnyFunSuite with SparkFixture {
     // the new table, not the files of the first write
     TableIO.write(rows.filter($"id" < 120), s"$base/plain")
     check(s"$base/plain", 120)
+    // a table path holding a quote is escaped in the snapshot's file list
+    TableIO.write(rows, s"$base/quo\"te")
+    check(s"$base/quo\"te", 500)
   }
 }
