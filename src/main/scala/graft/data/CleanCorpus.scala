@@ -1,6 +1,6 @@
 package graft.data
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Training-corpus cleaning pipeline — the composition the individual
@@ -109,24 +109,33 @@ object CleanCorpus {
     // 5. language pin — langGuessDf's explode + conditional-sum plan
     //    (codegen), NOT the per-row langGuess Column whose HOF lambdas
     //    run interpreted (measured 3.4 s vs 0.6 s at sf0.1); in the
-    //    composed full-corpus pipeline this is the hot path
+    //    composed full-corpus pipeline this is the hot path. The quality
+    //    survivors are counted by an observer on langGuessDf's output
+    //    (one row per scored doc, zero-token docs included), not on
+    //    `scored`, which langGuessDf reads twice.
+    val qualityObs = Observation()
     val pinned = cfg.lang
       .map(l => TextAnalysis.langGuessDf(scored, idCol, textCol)
+        .observe(qualityObs, count(lit(1)).as("n"))
         .filter(col("lang_guess") === l).drop("lang_guess"))
       .getOrElse(scored)
-    // 6. PII redaction in place (schema unchanged; row count unchanged)
-    val cleaned = (if (cfg.redactPii)
-      pinned.withColumn(textCol, Redact.redactText(col(textCol)))
-    else pinned).persist(lvl)
+    // 6. PII redaction in place (schema unchanged; row count unchanged);
+    //    the audit count of docs whose text the scrubber changed is
+    //    observed in the projection that still holds both texts
+    val redactObs = Observation()
+    val cleaned = (if (cfg.redactPii) {
+      val cols = pinned.columns.map(c =>
+        if (c == textCol) col("_redacted").as(textCol) else col(c))
+      pinned.withColumn("_redacted", Redact.redactText(col(textCol)))
+        .observe(redactObs, coalesce(sum(when(col("_redacted") =!=
+          col(textCol), 1L).otherwise(0L)), lit(0L)).as("n"))
+        .select(cols: _*)
+    } else pinned).persist(lvl)
+    // one action builds `cleaned` and reports both observed counts
     val nLang = cleaned.count()
-    val nQuality = cfg.lang.map(_ => scored.count()).getOrElse(nLang)
-    // audit count = docs whose text the scrubber changed; computed on
-    // the pre-redact lineage (one extra cached-source pass, only when
-    // redaction is on) because the original text is gone from `cleaned`
-    val nRedacted = if (cfg.redactPii)
-      Some(pinned
-        .filter(Redact.redactText(col(textCol)) =!= col(textCol)).count())
-    else None
+    def observed(o: Observation): Long = o.get("n").asInstanceOf[Long]
+    val nQuality = cfg.lang.map(_ => observed(qualityObs)).getOrElse(nLang)
+    val nRedacted = if (cfg.redactPii) Some(observed(redactObs)) else None
     // release the stage checkpoints (cleaned is materialized above and
     // every audit count is done — nothing reads them again)
     import org.apache.spark.sql.graftbridge.DatasetBridge

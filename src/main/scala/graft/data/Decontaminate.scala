@@ -9,15 +9,16 @@ import org.apache.spark.sql.functions._
   * (GPT-3/PaLM-style 13-gram collision checks).
   *
   * Scale shape: both sides reduce to DISTINCT (id, gram-hash) pairs —
-  * 8-byte xxhash64 keys via [[Dedup.explodedShingles]], never gram
-  * strings — and meet in ONE equi-join. The benchmark side is an eval
+  * 8-byte xxhash64 keys from the MinHash shingle kernel
+  * ([[Dedup.explodedShingles]]: each doc's set is built per row), never
+  * gram strings — and meet in ONE equi-join. The benchmark side is an eval
   * set, orders of magnitude smaller than a training corpus, so its gram
   * relation is BROADCAST by default: the 100-TB scan never shuffles, each
   * task probes an in-memory hash set of benchmark grams (flip
   * `broadcastBench` off for a benchmark set that genuinely doesn't fit a
   * broadcast — the join degrades to a shuffled hash join on 8-byte
   * keys). Short documents fall back to a whole-text gram, exactly like
-  * the near-dup shingle path ([[Dedup.shingles]]).
+  * the near-dup shingle sets.
   */
 object Decontaminate {
 
@@ -25,13 +26,11 @@ object Decontaminate {
     * pair sharing >= `minHits` distinct n-grams, with the shared count.
     * Columns: idCol, benchIdCol, shared_grams.
     *
-    * Shuffle discipline: the corpus-side gram relation is NOT
-    * pre-deduplicated — a distinct there is a full shuffle of every
-    * gram in the corpus before a join that discards almost all of them.
-    * Instead the raw exploded grams stream straight into the broadcast
-    * join, and the (doc, bench, gram) dedup that keeps repeated grams
-    * from inflating shared counts runs AFTER it, over only the matching
-    * rows (tiny). The corpus scan therefore reaches the join with zero
+    * Shuffle discipline: the corpus-side gram relation is never
+    * shuffled — each doc's grams are deduplicated inside its own row by
+    * the shingle kernel and stream straight into the broadcast join; the
+    * (doc, bench, gram) dedup runs AFTER it, over only the matching rows
+    * (tiny). The corpus scan therefore reaches the join with zero
     * exchanges; the benchmark side (an eval set) is hashed once per
     * executor. */
   def contaminationReport(docs: DataFrame, bench: DataFrame,
@@ -41,11 +40,7 @@ object Decontaminate {
                           benchIdCol: String = "bench_id",
                           benchTextCol: String = "text",
                           broadcastBench: Boolean = true): DataFrame = {
-    val docGrams = docs.select(col(idCol),
-      explode(Dedup.shingles(col(textCol), n)).as("_gram"))
-      .select(col(idCol), xxhash64(col("_gram")).as("shingle"))
-    // the benchmark side IS deduplicated (it's small, and a duplicated
-    // bench gram would double-count a single shared gram)
+    val docGrams = Dedup.explodedShingles(docs, idCol, textCol, n)
     val bg = Dedup.explodedShingles(bench, benchIdCol, benchTextCol, n)
     val benchGrams = if (broadcastBench) broadcast(bg) else bg
     docGrams.join(benchGrams, "shingle")

@@ -2,28 +2,25 @@ package graft.data
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.linkage.expr.{functions => gf}
 
 /** Large-scale document deduplication (training-data pipeline ops).
-  * All stages are pure DataFrame transforms — no UDFs — and every
-  * signature (MinHash, SimHash) is a SHUFFLE-FREE per-row projection:
-  * round 1 computed them as 64 independent aggregate columns, which
-  * exploded codegen (1.4–2 MB task binaries) and planning time; round 2
-  * folds the k-hash loop into one `aggregate`/`zip_with` tree per row, so
-  * the only shuffles left are the band join and the verify joins.
+  * Every signature is a SHUFFLE-FREE per-row projection.
   *
   *  - exact:   hash-groupBy keep-min + join-back (one agg + one join;
   *             AQE skew-join absorbs a mega-duplicate group — the round-1
   *             collect_list(ids) materialized the whole group in a single
   *             aggregation buffer, an OOM at web scale)
-  *  - MinHash: shingle → k seeded min-hashes (per-row) → band →
-  *             bucket self-join → exact-Jaccard verification (classic
-  *             LSH; false positives killed by the verify stage, false
-  *             negatives bounded by (1-s^r)^b)
+  *  - MinHash: one codegen'd kernel per document ([[graft.linkage.expr.MinHash]])
+  *             builds its sorted shingle set, signature and LSH band
+  *             buckets from the text alone → bucket self-join → exact
+  *             Jaccard by merging the two sorted shingle arrays of each
+  *             candidate pair (classic LSH; false positives killed by the
+  *             verify, false negatives bounded by (1-s^r)^b)
   *  - SimHash: 64-bit sign-sum signature (per-row); near-dups via
   *             banded bucket join with bands DERIVED from maxDistance
   *             (bands > maxDistance ⇒ pigeonhole-exact recall) +
   *             bit_count(xor) Hamming verify
-  *  - n-gram Jaccard: exact set overlap via explode + count joins
   */
 object Dedup {
 
@@ -50,45 +47,17 @@ object Dedup {
 
   // ---------- shingling ----------
 
-  /** Word n-gram shingles of a normalized text column. Texts shorter than
-    * n words shingle to the whole text.
-    *
-    * Built by zip_with over shifted slices — O(n·k) per doc. (The naive
-    * transform(sequence, i => element_at(toks, i+j)) is O(n²) because
-    * element_at walks the array per index; at 2k-token docs that was the
-    * whole pipeline's bottleneck.) */
-  def shingles(textCol: Column, n: Int = 3): Column = {
-    val toks = split(trim(textCol), "\\s+")
-    val cnt = size(toks)
-    val grams = wordNgrams(toks, cnt, n)
-    when(cnt >= n, grams).otherwise(array(trim(textCol)))
-  }
-
-  /** n-grams of a token array via iterated zip_with against shifted
-    * slices; concat (not concat_ws) so the null padding of the shorter
-    * slice nulls out incomplete grams, which are then filtered. */
-  private[graft] def wordNgrams(toks: Column, cnt: Column, n: Int): Column = {
-    val joined = (2 to n).foldLeft(toks) { (acc, k) =>
-      zip_with(acc, slice(toks, lit(k), greatest(cnt - (k - 1), lit(0))),
-        (a, b) => concat(a, lit(" "), b))
-    }
-    filter(joined, g => g.isNotNull)
-  }
-
-  /** (id, shingle) distinct pairs — `shingle` is the 64-bit xxhash64 of
-    * the gram, not the string: each gram is hashed exactly once here, so
-    * the k seeded signature hashes downstream mix a fixed-width long
-    * instead of re-walking ~25-byte UTF8 grams k times (measured 2× on
-    * the signature stage), and the verify joins/distinct move 8-byte
-    * keys. Set sizes and intersections are preserved up to xxhash64
-    * collisions (2⁻⁶⁴ per pair — the verify-stage Jaccard stays exact in
-    * any corpus that matters). */
+  /** (id, shingle) rows, one per distinct shingle of each doc — `shingle`
+    * is the 64-bit xxhash64 of a word n-gram (texts shorter than n words
+    * shingle to the whole trimmed text). The set is built per document
+    * by the MinHash kernel and exploded, so no distinct shuffle runs;
+    * rows are distinct per (id, shingle) as long as ids are unique. Set
+    * sizes and intersections are exact up to xxhash64 collisions (2⁻⁶⁴
+    * per pair). */
   def explodedShingles(docs: DataFrame, idCol: String = "doc_id",
                        textCol: String = "text", n: Int = 3): DataFrame =
     docs.select(col(idCol),
-        explode(shingles(col(textCol), n)).as("gram"))
-      .select(col(idCol), xxhash64(col("gram")).as("shingle"))
-      .distinct()
+      explode(gf.minhash_shingles(col(textCol), n)).as("shingle"))
 
   // ---------- MinHash + LSH ----------
 
@@ -177,226 +146,139 @@ object Dedup {
       Seq("band", "bucket"), "left_semi"))
   }
 
-  /** MinHash signatures: (id, sig: array<long> of numHashes mins) from
-    * the exploded (id, shingle) relation. hash_i(shingle) =
-    * xxhash64(seed, i, shingle) — same FORMULA as round 1, but over the
-    * hashed shingle domain (explodedShingles now emits xxhash64(gram)
-    * longs, not gram strings), so signature values and band buckets are
-    * NOT comparable with round-1 persisted signatures.
-    *
-    * Plan shape (the codegen-friendly middle ground): explode the k hash
-    * indices against the shingles (GenerateExec, whole-stage codegen),
-    * hash + partial-min map-side, shuffle only the (id, i) → min rows
-    * (k·|docs|, tiny), then assemble the ordered array per doc. Round 1's
-    * 64 independent min-aggregate columns blew up codegen (2 MB task
-    * binaries); the round-2 interim (per-row `aggregate` lambda) dodged
-    * the shuffle but ran INTERPRETED — higher-order-function lambdas are
-    * excluded from codegen, and k string-hashes per shingle in the
-    * interpreter cost more than this shuffle. */
-  def minHashSignatures(exploded: DataFrame, cfg: MinHashConfig,
-                        idCol: String = "doc_id"): DataFrame = {
-    val k = cfg.numHashes
-    // ONE hash-aggregate with k min columns (r06): the r03–r05 shape
-    // exploded the k hash indices (k× generated rows through a
-    // (id, i)-keyed partial agg, a k·|docs|-row shuffle, then an
-    // ObjectHashAggregate assembling collect_list+array_sort — outside
-    // whole-stage codegen). Same k hashes per shingle, but now evaluated
-    // as k independent min-aggregate columns in a single codegen'd
-    // HashAggregate: no generated rows, ONE shuffle of |docs| rows
-    // (k longs each), array assembly as a plain projection. Measured
-    // (sf0.1, q_minhash_neardups end-to-end): 3.30 s → 2.4 s. Values are
-    // identical: sig[i] = min over shingles of xxhash64(seed, i, shingle)
-    // in both shapes.
-    val mins = (0 until k).map(i =>
-      min(xxhash64(lit(cfg.seed), lit(i), col("shingle"))).as(s"_mh$i"))
-    exploded.groupBy(col(idCol)).agg(mins.head, mins.tail: _*)
-      .select(col(idCol),
-        array((0 until k).map(i => col(s"_mh$i")): _*).as("sig"))
-  }
-
-  /** One-permutation MinHash signatures (Li/Owen/Zhang OPH with
-    * rotation densification): ONE xxhash64 per shingle instead of k.
-    * The single hash is range-bucketed into k bins (pmod(h, k)); the
-    * per-bin min is the signature slot; empty bins borrow the next
-    * filled bin's value cyclically, offset by the distance t so
-    * different empty-run lengths can't collide spuriously.
-    *
-    * This is the 100-TB signature path: the standard plan's k-way
-    * explode does k hash ops per shingle and k·|shingles| generated
-    * rows; OPH does 1 hash per shingle and shuffles the same tiny
-    * (id, bin)→min relation. Statistically OPH's pair-collision
-    * probability is the same E[agree] = Jaccard, with slightly higher
-    * variance for docs with ≪ k shingles — and the pipeline's
-    * exact-Jaccard verify stage makes precision exact regardless; only
-    * recall is approximate, as with any LSH. The densification scan is
-    * O(k²) per DOC (interpreted HOF over ≤64-element arrays, once per
-    * doc at assembly) — orders of magnitude below the k hashes per
-    * SHINGLE it replaces. */
-  def minHashSignaturesOPH(exploded: DataFrame, cfg: MinHashConfig,
-                           idCol: String = "doc_id"): DataFrame = {
-    val k = cfg.numHashes
-    // Per-shingle work stays O(1) — one hash, one pmod, one (id, bin)
-    // partial-min probe (the whole point of OPH; a k-conditional-min
-    // single aggregate was tried in r06 and LOST: it charges k branch
-    // evaluations per shingle row, the very k-fold cost OPH removes).
-    // What r06 does change: the SECOND aggregate. The r05 tail built a
-    // bin→min MAP via collect_list + map_from_entries — an
-    // ObjectHashAggregate outside whole-stage codegen. The re-aggregate
-    // runs over ≤ k rows/doc, so k conditional mins ARE cheap there, and
-    // the result lands in a codegen'd HashAggregate with the densified
-    // signature assembled from a plain array column. Empty bins surface
-    // as SQL nulls exactly where the map had no entry, so the rotation
-    // densification reads the same filled-bin set — identical signatures.
-    val mins = (0 until k).map(i =>
-      min(when(col("bin") === i, col("mh"))).as(s"_bm$i"))
-    val agged = exploded
-      .select(col(idCol), xxhash64(lit(cfg.seed), col("shingle")).as("h"))
-      .select(col(idCol), col("h"),
-        pmod(col("h"), lit(k.toLong)).cast("int").as("bin"))
-      .groupBy(col(idCol), col("bin"))
-      .agg(min(col("h")).as("mh"))
-      .groupBy(col(idCol)).agg(mins.head, mins.tail: _*)
-      .select(col(idCol),
-        array((0 until k).map(i => col(s"_bm$i")): _*).as("_arr"))
-      .select(col(idCol), col("_arr"),
-        filter(sequence(lit(0), lit(k - 1)),
-          i => element_at(col("_arr"), i + 1).isNotNull).as("bins"))
-    agged.select(col(idCol),
-      transform(sequence(lit(0), lit(k - 1)), j => {
-        // nearest filled bin at/after j, wrapping to the first
-        // (try_element_at: ANSI element_at throws on the empty
-        // filter() result before coalesce can fall through)
-        val b = coalesce(try_element_at(filter(col("bins"), _ >= j), lit(1)),
-          element_at(col("bins"), 1))
-        val t = when(b >= j, b - j).otherwise(b - j + k)
-        element_at(col("_arr"), b + 1) + t.cast("long")
-      }).as("sig"))
-  }
-
-  /** LSH band buckets: (id, band, bucket). r = numHashes/bands rows per
-    * band hashed together. One pass over the signatures (posexplode of a
-    * per-row bucket array) — round 1 unioned `bands` separate selects,
-    * which re-executed the signature subtree per band. */
-  def lshBuckets(signatures: DataFrame, cfg: MinHashConfig,
-                 idCol: String = "doc_id"): DataFrame = {
+  /** The LSH band buckets of a signature column. */
+  private def bandBuckets(sig: Column, cfg: MinHashConfig): Column = {
     val r = cfg.numHashes / cfg.bands
     require(r * cfg.bands == cfg.numHashes, "bands must divide numHashes")
-    val bandBuckets = transform(
-      sequence(lit(0), lit(cfg.bands - 1)),
-      b => xxhash64(b, concat_ws(",", slice(col("sig"), b * r + 1, lit(r)))))
-    signatures.select(col(idCol), posexplode(bandBuckets))
-      .toDF(idCol, "band", "bucket")
+    gf.lsh_bands(sig, cfg.bands, r)
   }
 
-  /** Candidate pairs from shared (band, bucket), a<b, deduped. */
+  /** (id, shingles, buckets): each doc's sorted distinct shingle set and
+    * its `cfg.bands` LSH buckets, from the text alone — the one per-row
+    * kernel every MinHash caller runs. The shingle set is computed once
+    * per doc: the buckets read it from the projection below (two uses of
+    * a non-trivial expression keep CollapseProject from inlining it). */
+  private[graft] def minHashDocs(docs: DataFrame, cfg: MinHashConfig,
+                                 idCol: String, textCol: String): DataFrame =
+    docs.select(col(idCol),
+        gf.minhash_shingles(col(textCol), cfg.shingleSize).as("shingles"))
+      .select(col(idCol), col("shingles"),
+        bandBuckets(gf.minhash_signature(col("shingles"), cfg.numHashes,
+          cfg.seed, cfg.oph), cfg).as("buckets"))
+
+  /** (id, sig) per doc straight from the text. */
+  private[graft] def docSignatures(docs: DataFrame, cfg: MinHashConfig,
+                                   idCol: String, textCol: String): DataFrame =
+    docs.select(col(idCol), gf.minhash_signature(
+      gf.minhash_shingles(col(textCol), cfg.shingleSize), cfg.numHashes,
+      cfg.seed, cfg.oph).as("sig"))
+
+  /** (id, band, bucket) rows of a per-doc bucket-array relation. */
+  private[graft] def bucketRows(mh: DataFrame, idCol: String): DataFrame =
+    mh.select(col(idCol), posexplode(col("buckets")).as(Seq("band", "bucket")))
+
+  /** Standard k-hash MinHash signatures (id, sig) from an exploded
+    * (id, shingle) relation: sig[i] = min over the doc's shingles of
+    * xxhash64(seed, i, shingle). An adapter over the kernel for callers
+    * that hold exploded shingles; the near-dup paths sign each doc from
+    * its text ([[minHashDocs]]) and never build this relation. */
+  def minHashSignatures(exploded: DataFrame, cfg: MinHashConfig,
+                        idCol: String = "doc_id"): DataFrame =
+    collectedSignatures(exploded, cfg.copy(oph = false), idCol)
+
+  /** One-permutation MinHash signatures (Li/Owen/Zhang OPH with rotation
+    * densification) from an exploded (id, shingle) relation: ONE
+    * xxhash64(seed, shingle) per shingle, range-binned into k bins by
+    * pmod(h, k); the per-bin min is the slot, and an empty bin borrows
+    * the next filled bin's value cyclically, offset by the distance t so
+    * different empty-run lengths can't collide spuriously. Pair collision
+    * probability is still E[agree] = Jaccard, with higher variance (and
+    * correlated slots) for docs with ≪ k shingles; the exact verify keeps
+    * precision exact. Same adapter role as [[minHashSignatures]]. */
+  def minHashSignaturesOPH(exploded: DataFrame, cfg: MinHashConfig,
+                           idCol: String = "doc_id"): DataFrame =
+    collectedSignatures(exploded, cfg.copy(oph = true), idCol)
+
+  private def collectedSignatures(exploded: DataFrame, cfg: MinHashConfig,
+                                  idCol: String): DataFrame =
+    exploded.groupBy(col(idCol))
+      .agg(collect_list(col("shingle")).as("_shingles"))
+      .select(col(idCol), gf.minhash_signature(col("_shingles"),
+        cfg.numHashes, cfg.seed, cfg.oph).as("sig"))
+
+  /** LSH band buckets: (id, band, bucket), r = numHashes/bands slots per
+    * band hashed together — a posexplode of the kernel's per-row bucket
+    * array. */
+  def lshBuckets(signatures: DataFrame, cfg: MinHashConfig,
+                 idCol: String = "doc_id"): DataFrame =
+    bucketRows(signatures.select(col(idCol),
+      bandBuckets(col("sig"), cfg).as("buckets")), idCol)
+
+  /** Candidate pairs from shared (band, bucket), a<b, deduped. Both join
+    * sides are the same projection up to alias names, so the planner
+    * shuffles the bucket relation once and reuses that exchange for the
+    * other side. */
   def lshCandidates(buckets: DataFrame,
                     idCol: String = "doc_id"): DataFrame = {
-    val l = buckets.select(col("band"), col("bucket"),
-      col(idCol).as("id_a"))
-    val r = buckets.select(col("band").as("band_r"),
-      col("bucket").as("bucket_r"), col(idCol).as("id_b"))
-    l.join(r, col("band") === col("band_r") &&
-        col("bucket") === col("bucket_r") && col("id_a") < col("id_b"))
+    def side(s: String) = buckets.select(col("band").as(s"band_$s"),
+      col("bucket").as(s"bucket_$s"), col(idCol).as(s"id_$s"))
+    side("a").join(side("b"), col("band_a") === col("band_b") &&
+        col("bucket_a") === col("bucket_b") && col("id_a") < col("id_b"))
       .select("id_a", "id_b").distinct()
   }
 
-  /** Exact Jaccard on shingle sets for candidate pairs (verify stage).
-    *
-    * r06 shape — TWO joins + TWO aggregates, no set-size pass: attach
-    * each pair to both members' shingle rows, count occurrences per
-    * (pair, shingle) — 2 ⟺ the shingle is in both sets (exploded is
-    * distinct per (id, shingle)) — then per pair |A∪B| = row count and
-    * |A∩B| = count of 2s, so jaccard = i/u with the IDENTICAL integer
-    * numerator/denominator the r05 formula inter/(|A|+|B|−inter)
-    * produced (bit-equal doubles; oracle-checked at both SFs). The r05
-    * shape additionally aggregated set sizes over the WHOLE exploded
-    * corpus and re-joined them twice — an O(corpus) aggregate per
-    * verify call plus three more joins; everything here is
-    * O(candidate neighborhood) (guide §1.2: remove passes).
-    *
-    * Requires `pairs` distinct (both callers dedup) and every pair
-    * member present in `exploded` (true for both: full-corpus and the
-    * incremental new ∪ candidate-touched relation) — pairs whose two
-    * sets are disjoint still surface with jaccard 0 via their members'
-    * own rows. */
-  def jaccardVerify(exploded: DataFrame, pairs: DataFrame,
-                    idCol: String = "doc_id"): DataFrame = {
-    val ea = exploded.toDF("id_a", "shingle")
-    val eb = exploded.toDF("id_b", "shingle")
-    val both = pairs.join(ea, "id_a").select("id_a", "id_b", "shingle")
-      .unionByName(
-        pairs.join(eb, "id_b").select("id_a", "id_b", "shingle"))
-    both.groupBy(col("id_a"), col("id_b"), col("shingle"))
-      .agg(count(lit(1)).as("cnt"))
-      .groupBy(col("id_a"), col("id_b"))
-      .agg(count(lit(1)).as("u"),
-        sum(when(col("cnt") === 2, 1L).otherwise(0L)).as("i"))
+  /** Exact Jaccard (id_a, id_b, jaccard) of candidate pairs: one join of
+    * the sorted shingle arrays (`shingles`: (id, shingles)) per pair side,
+    * then one merge per pair. `pairs` must be distinct and every member
+    * present in `shingles`. */
+  private[graft] def verifyPairs(pairs: DataFrame, shingles: DataFrame,
+                                 idCol: String): DataFrame = {
+    val a = shingles.select(col(idCol).as("id_a"), col("shingles").as("_sa"))
+    val b = shingles.select(col(idCol).as("id_b"), col("shingles").as("_sb"))
+    pairs.join(a, "id_a").join(b, "id_b")
       .select(col("id_a"), col("id_b"),
-        (col("i").cast("double") / col("u")).as("jaccard"))
+        gf.sorted_jaccard(col("_sa"), col("_sb")).as("jaccard"))
   }
 
   /** Full MinHash-LSH near-dup pipeline: returns verified near-dup pairs
     * (id_a, id_b, jaccard ≥ threshold).
     *
-    * Cache lifecycle: the fan-out points (exploded shingles feed the
-    * signatures AND both verify-join sides; candidate pairs are consumed
-    * twice inside verify) are persisted for the duration of this call
-    * only — the result is materialized through them here, then they are
-    * RELEASED before returning (round 2 leaked them for the session,
-    * VERDICT r02 #2). The returned DataFrame is itself persisted (it is
-    * the one handle the caller can see); unpersist it when done. A lost
-    * result block recomputes through the full deterministic lineage —
-    * slow path, never wrong. */
+    * One path: the per-doc kernel projection (id, shingles, buckets) →
+    * posexplode of the buckets → hot-bucket cap → bucket self-join →
+    * one shingle-array join per pair side → sorted merge → threshold.
+    * The per-doc relation is the only fan-out point (the buckets feed
+    * the cap's stats pass and both candidate-join sides, the shingle
+    * arrays both verify sides), and it is a LAZY localCheckpoint: a
+    * checkpoint keeps every downstream plan anchored on one RDD scan
+    * instead of re-embedding the kernel lineage per reference, and the
+    * cap's stats job materializes it (with the cap off nothing else
+    * would before the fan-out, so it is eager then). Its blocks are
+    * released once the result is materialized. The returned DataFrame
+    * is PERSISTED (a checkpointed result would dodge Dataset.unpersist
+    * and the bench's clearCache); unpersist it when done. A lost result
+    * block recomputes through the full deterministic lineage — slow
+    * path, never wrong. */
   def minHashNearDups(docs: DataFrame, cfg: MinHashConfig = MinHashConfig(),
                       idCol: String = "doc_id",
                       textCol: String = "text"): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    // Interior fan-out points are LAZY localCheckpoints, not persists
-    // (r06, same discipline as IncrementalDedup): each downstream
-    // reference of a persisted relation re-embeds its full logical
-    // lineage, so the verify/CC plans over this pipeline carried
-    // ~180k-char trees that Catalyst + AQE re-walked on every one of
-    // ~35 jobs (event logs: ~40% of the query wall was BETWEEN jobs).
-    // The checkpoint truncates the plan at the materialization the
-    // stats pass performs anyway; blocks are released below once the
-    // result is materialized. The returned `out` stays a PERSISTED
-    // handle (callers unpersist it; a checkpointed result would dodge
-    // both Dataset.unpersist and the bench's clearCache and leak).
-    val exploded = explodedShingles(docs, idCol, textCol, cfg.shingleSize)
-      .localCheckpoint(eager = false)
-    val rawBuckets = lshBuckets(sigs(exploded, cfg, idCol), cfg, idCol)
-    // checkpoint only when the cap is live: capBuckets consumes the
-    // bucket relation twice (stats job + candidate join) and an uncut
-    // second pass would recompute the whole signature aggregation
-    val buckets =
-      if (cfg.capOn) rawBuckets.localCheckpoint(eager = false)
-      else rawBuckets
-    val kept = if (cfg.capOn)
-      capBuckets(buckets, cfg.capRatio, cfg.minBucketCap, cfg.maxBucketCap,
-        cfg.bands, "minhash-lsh").getOrElse(buckets)
-    else buckets
-    // NOTE on reference count: block-level materialization dedups
-    // across ACTIONS; AQE runs independent query stages of one action
-    // concurrently — a 4-reference verify draft (candIds semi-join
-    // sizes) made the un-materialized cands branches RACE and re-run
-    // the candidate lineage per branch (measured: the OPH family query
-    // at 5–10 s). The union-count verify keeps cands at two references.
-    val cands = lshCandidates(kept, idCol).localCheckpoint(eager = false)
-    val out = jaccardVerify(exploded, cands, idCol)
-      .filter(col("jaccard") >= cfg.jaccardThreshold)
-      .persist(lvl)
-    out.count() // materialize via the checkpointed fan-out points
-    val rel = org.apache.spark.sql.graftbridge.DatasetBridge.releaseCheckpoint _
-    rel(exploded); if (cfg.capOn) rel(buckets); rel(cands)
+    val mh = minHashDocs(docs, cfg, idCol, textCol)
+      .localCheckpoint(eager = !cfg.capOn)
+    val out = nearDupPairs(mh, cfg, idCol)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    out.count()
+    org.apache.spark.sql.graftbridge.DatasetBridge.releaseCheckpoint(mh)
     out
   }
 
-  /** Signature dispatcher (OPH vs standard) over an exploded shingle
-    * relation. */
-  private[graft] def sigs(exploded: DataFrame, cfg: MinHashConfig,
-                          idCol: String): DataFrame =
-    if (cfg.oph) minHashSignaturesOPH(exploded, cfg, idCol)
-    else minHashSignatures(exploded, cfg, idCol)
+  /** Verified pairs over a per-doc (id, shingles, buckets) relation. */
+  private[graft] def nearDupPairs(mh: DataFrame, cfg: MinHashConfig,
+                                  idCol: String): DataFrame = {
+    val buckets = bucketRows(mh, idCol)
+    val kept = capBuckets(buckets, cfg.capRatio, cfg.minBucketCap,
+      cfg.maxBucketCap, cfg.bands, "minhash-lsh").getOrElse(buckets)
+    verifyPairs(lshCandidates(kept, idCol), mh, idCol)
+      .filter(col("jaccard") >= cfg.jaccardThreshold)
+  }
 
   /** Near-duplicate GROUPS: the linkage engine's large-star/small-star
     * connected components run over the verified near-dup pairs, plus
@@ -431,14 +313,7 @@ object Dedup {
   // ---------- SimHash ----------
 
   /** 64-bit SimHash over word tokens: bit i = sign of Σ_tokens ±1 where
-    * the sign is bit i of xxhash64(token). Returns (id, simhash).
-    *
-    * Plan shape mirrors [[minHashSignatures]]: explode tokens × the 64
-    * bit indices inside whole-stage codegen (one string-hash per token,
-    * reused across bits), partial-sum map-side, shuffle only the
-    * (id, i) → sum rows, then bit_or the set bits into the signature.
-    * Same values as round 1's 64 sum-aggregate columns without their
-    * codegen girth, and no interpreted per-row lambda. */
+    * the sign is bit i of xxhash64(token). Returns (id, simhash). */
   def simHash(docs: DataFrame, idCol: String = "doc_id",
               textCol: String = "text",
               hash: Column => Column = xxhash64(_)): DataFrame = {

@@ -2,17 +2,19 @@ package graft.data
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.linkage.expr.{functions => gf}
 
 /** Daily-append near-dup dedup — the dedup family's analog of the
   * linkage engine's Pipeline.incremental (VERDICT r04 #4): new docs are
   * signed and bucketed, candidates are restricted to pairs TOUCHING at
   * least one new doc (old-old pairs are never regenerated — signatures
   * and verification are deterministic, so the previous run's pairs are
-  * final), and the exact-Jaccard verify explodes shingles only for new
+  * final), and the exact-Jaccard verify builds shingle sets only for new
   * docs plus the old docs candidates actually touch
   * ([[CleanCorpus.cleanIncremental]] is the caller). Previous buckets
-  * are recomputed from `prevDocs` — one signature pass over the corpus
-  * (linear, no joins), never a corpus × corpus candidate stage.
+  * are recomputed from `prevDocs` by the same per-doc MinHash kernel as
+  * the full run ([[Dedup.minHashDocs]]) — one linear projection over the
+  * corpus, no joins, never a corpus × corpus candidate stage.
   *
   * Equivalence vs a full recompute has the same one documented divergence
   * as the linkage increment: a (band, bucket) that crosses the hot-bucket
@@ -31,32 +33,28 @@ object IncrementalDedup {
                               textCol: String = "text")
       : DataFrame = {
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val newExploded = Dedup.explodedShingles(newDocs, idCol, textCol,
-      cfg.shingleSize).persist(lvl)
-    val newBuckets = Dedup.lshBuckets(
-      Dedup.sigs(newExploded, cfg, idCol), cfg, idCol).persist(lvl)
-
-    val prevBuckets = Dedup.lshBuckets(Dedup.sigs(
-      Dedup.explodedShingles(prevDocs, idCol, textCol, cfg.shingleSize),
-      cfg, idCol), cfg, idCol)
+    // new docs' (id, shingles, buckets): their buckets feed the
+    // candidate join, their shingle sets the verify
+    val newMh = Dedup.minHashDocs(newDocs, cfg, idCol, textCol).persist(lvl)
+    val newBuckets = Dedup.bucketRows(newMh, idCol)
+    val prevBuckets = Dedup.bucketRows(
+      Dedup.minHashDocs(prevDocs, cfg, idCol, textCol), idCol)
 
     // hot-bucket cap over the COMBINED relation: `all` is the complete
     // corpus bucket relation (every doc contributes exactly `bands`
     // rows), so the ratio capBuckets sizes the cap from the same stats
     // pass the guard already runs — identical to a full run's cap.
     //
-    // r06: localCheckpoint (lazy) instead of persist — `all` is
-    // referenced by the stats pass, the candidate join AND (through
-    // candIds → prevTouched → the verify shingles) the whole verify
-    // tree, so with plain persist the LOGICAL plan duplicated the full
-    // previous-corpus signature pipeline multiplicatively (measured: a
-    // 3.2 M-char physical plan for q_neardup_incremental; every action
-    // and every AQE re-optimization walked it — job walls of 0.3 s over
-    // 7 ms of tasks). The checkpoint truncates lineage at the
-    // materialization the stats pass performs anyway.
-    val all = prevBuckets
-      .select(col("band"), col("bucket"), col(idCol))
-      .unionByName(newBuckets.select(col("band"), col("bucket"), col(idCol)))
+    // localCheckpoint (lazy) instead of persist — `all` is referenced by
+    // the stats pass, the candidate join AND (through candIds →
+    // prevTouched → the verify shingles) the whole verify tree, so with
+    // plain persist the LOGICAL plan duplicated the full previous-corpus
+    // signature pipeline multiplicatively (measured: a 3.2 M-char
+    // physical plan for q_neardup_incremental; every action and every
+    // AQE re-optimization walked it — job walls of 0.3 s over 7 ms of
+    // tasks). The checkpoint truncates lineage at the materialization
+    // the stats pass performs anyway.
+    val all = prevBuckets.unionByName(newBuckets)
       .localCheckpoint(eager = false)
     val keptOpt = Dedup.capBuckets(all, cfg.capRatio, cfg.minBucketCap,
       cfg.maxBucketCap, cfg.bands, "minhash-lsh-incremental")
@@ -75,7 +73,7 @@ object IncrementalDedup {
     val r = kept.select(col("band").as("band_r"),
       col("bucket").as("bucket_r"), col(idCol).as("other_id"))
     // lazy localCheckpoint (not persist): cands is re-referenced by
-    // candIds (twice) and both verify joins — each reference would embed
+    // candIds (twice) and the verify join — each reference would embed
     // the full candidate-join lineage in the verify plan (the same
     // multiplicative plan-girth term as `all` above)
     val cands = l.join(r, col("band") === col("band_r") &&
@@ -86,25 +84,25 @@ object IncrementalDedup {
       .dropDuplicates("id_a", "id_b")
       .localCheckpoint(eager = false)
 
-    // exact verify: shingles for new docs + ONLY the prev docs that
+    // exact verify: shingle sets for new docs + ONLY the prev docs that
     // appear in candidates (O(new × neighborhood), never the corpus)
     val candIds = cands.select(col("id_a").as(idCol))
       .unionByName(cands.select(col("id_b").as(idCol))).distinct()
     val prevTouched = prevDocs.join(candIds, Seq(idCol), "left_semi")
-    val exploded = newExploded.unionByName(
-        Dedup.explodedShingles(prevTouched, idCol, textCol, cfg.shingleSize))
+    val shingles = newMh.select(col(idCol), col("shingles"))
+      .unionByName(prevTouched.select(col(idCol),
+        gf.minhash_shingles(col(textCol), cfg.shingleSize).as("shingles")))
       .localCheckpoint(eager = false)
-    val out = Dedup.jaccardVerify(exploded, cands, idCol)
+    val out = Dedup.verifyPairs(cands, shingles, idCol)
       .filter(col("jaccard") >= cfg.jaccardThreshold)
       .persist(lvl)
     out.count()
-    newExploded.unpersist(blocking = false)
-    newBuckets.unpersist(blocking = false)
+    newMh.unpersist(blocking = false)
     // checkpointed intermediates: Dataset.unpersist would not free their
     // blocks (see DatasetBridge) — release them now that `out` is
     // materialized; `out` itself stays a recompute-free persisted handle
     val rel = org.apache.spark.sql.graftbridge.DatasetBridge.releaseCheckpoint _
-    rel(all); rel(cands); rel(exploded)
+    rel(all); rel(cands); rel(shingles)
     out
   }
 }

@@ -25,6 +25,19 @@ object TextAnalysis {
   def tokenCount(text: Column): Column = size(wsTokens(text))
   def bpeishTokenCount(text: Column): Column = size(bpeishTokens(text))
 
+  /** n-grams of a token array via iterated zip_with against shifted
+    * slices — O(n·k) per doc (transform(sequence, i => element_at(toks,
+    * i+j)) is O(n²): element_at walks the array per index). concat (not
+    * concat_ws) so the null padding of the shorter slice nulls out
+    * incomplete grams, which are then filtered. */
+  private[graft] def wordNgrams(toks: Column, cnt: Column, n: Int): Column = {
+    val joined = (2 to n).foldLeft(toks) { (acc, k) =>
+      zip_with(acc, slice(toks, lit(k), greatest(cnt - (k - 1), lit(0))),
+        (a, b) => concat(a, lit(" "), b))
+    }
+    filter(joined, g => g.isNotNull)
+  }
+
   // ---------- language ID ----------
 
   /** Tiny per-language stopword profiles (top function words). */
@@ -160,7 +173,7 @@ object TextAnalysis {
     val toks = wsTokens(col(textCol))
     val base = docs.select(col(idCol),
       size(toks).as("_n_tok"), size(array_distinct(toks)).as("_n_uniq"),
-      when(size(toks) >= n, Dedup.wordNgrams(toks, size(toks), n))
+      when(size(toks) >= n, wordNgrams(toks, size(toks), n))
         .otherwise(array().cast("array<string>")).as("_grams"))
     val gramCounts = base
       .select(col(idCol), explode(col("_grams")).as("gram"))
@@ -248,7 +261,7 @@ object TextAnalysis {
     val toks = wsTokens(col(textCol))
     val cnt = size(toks)
     val grams = when(cnt >= k,
-      transform(Dedup.wordNgrams(toks, cnt, k), g => hash(g)))
+      transform(wordNgrams(toks, cnt, k), g => hash(g)))
       .otherwise(array(hash(col(textCol))))
     docs
       .withColumn("content_hash", hash(col(textCol)))

@@ -219,8 +219,7 @@ object BlockMain {
     val p = opts.get("schemafile")
       .map(readLambdaSchema(spark, _)).getOrElse(LambdaParams())
 
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(clkPath), spark.sparkContext.hadoopConfiguration)
+    val fs = TableIO.fileSystem(spark, clkPath)
     val clkTables = fs.listStatus(new org.apache.hadoop.fs.Path(clkPath))
       .toSeq.filter(_.isDirectory).map(_.getPath).sortBy(_.getName)
     require(clkTables.nonEmpty, s"no CLK table dirs under $clkPath")

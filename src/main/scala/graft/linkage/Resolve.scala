@@ -42,8 +42,7 @@ object Resolve {
     * own --metadata file are. */
   def metadataFromZip(spark: SparkSession,
                       zipPath: String): Option[Map[String, String]] = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(zipPath), spark.sparkContext.hadoopConfiguration)
+    val fs = TableIO.fileSystem(spark, zipPath)
     val zin = new java.util.zip.ZipInputStream(
       fs.open(new org.apache.hadoop.fs.Path(zipPath)))
     try {
@@ -64,8 +63,7 @@ object Resolve {
     * the member's lines into a Dataset for a normal csv parse: nothing is
     * unpacked to disk, so no copy of the link file outlives the run. */
   def readZipMemberCsv(spark: SparkSession, zipPath: String): DataFrame = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(zipPath), spark.sparkContext.hadoopConfiguration)
+    val fs = TableIO.fileSystem(spark, zipPath)
     val zin = new java.util.zip.ZipInputStream(
       fs.open(new org.apache.hadoop.fs.Path(zipPath)))
     var lines: Option[Seq[String]] = None

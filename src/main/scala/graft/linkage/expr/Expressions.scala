@@ -4,8 +4,9 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult.{TypeCheckFailure, TypeCheckSuccess}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, CodegenFallback, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, DoubleType, LongType, StringType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -509,6 +510,75 @@ case class SigAgreement(left: Expression, right: Expression)
       s"graft.linkage.expr.VecOps.sigAgreement($a, $b)")
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): SigAgreement =
+    copy(left = newLeft, right = newRight)
+}
+
+/** A document's MinHash shingle set: array<bigint> of the sorted
+  * distinct xxhash64 word-`n`-grams of `child` ([[MinHash.shingles]]).
+  * Never null: a null text is the one-element set of the null gram. */
+case class MinHashShingles(child: Expression, n: Int)
+    extends UnaryExpression {
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def nullable: Boolean = false
+  override def prettyName: String = "minhash_shingles"
+  override def eval(input: InternalRow): Any =
+    MinHash.shingles(child.eval(input).asInstanceOf[UTF8String], n)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val c = child.genCode(ctx)
+    ev.copy(code = code"""
+      ${c.code}
+      ${CodeGenerator.javaType(dataType)} ${ev.value} =
+        graft.linkage.expr.MinHash.shingles(${c.isNull} ? null : ${c.value}, $n);
+      """, isNull = FalseLiteral)
+  }
+  override protected def withNewChildInternal(newChild: Expression): MinHashShingles =
+    copy(child = newChild)
+}
+
+/** MinHash signature (array<bigint> of `numHashes` slots) of a shingle
+  * array — standard k-hash or one-permutation ([[MinHash.signature]]). */
+case class MinHashSignature(child: Expression, numHashes: Int, seed: Long,
+                            oph: Boolean)
+    extends UnaryExpression {
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def prettyName: String = "minhash_signature"
+  override protected def nullSafeEval(input: Any): Any =
+    MinHash.signature(input.asInstanceOf[ArrayData], numHashes, seed, oph)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c =>
+      s"graft.linkage.expr.MinHash.signature($c, $numHashes, ${seed}L, $oph)")
+  override protected def withNewChildInternal(newChild: Expression): MinHashSignature =
+    copy(child = newChild)
+}
+
+/** LSH band buckets (array<bigint> of `bands` hashes of `rows` slots
+  * each) of a MinHash signature ([[MinHash.bands]]). */
+case class LshBands(child: Expression, bands: Int, rows: Int)
+    extends UnaryExpression {
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def prettyName: String = "lsh_bands"
+  override protected def nullSafeEval(input: Any): Any =
+    MinHash.bands(input.asInstanceOf[ArrayData], bands, rows)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c =>
+      s"graft.linkage.expr.MinHash.bands($c, $bands, $rows)")
+  override protected def withNewChildInternal(newChild: Expression): LshBands =
+    copy(child = newChild)
+}
+
+/** Exact Jaccard of two sorted distinct shingle arrays by one merge
+  * ([[MinHash.sortedJaccard]]). */
+case class SortedJaccard(left: Expression, right: Expression)
+    extends BinaryExpression {
+  override def dataType: DataType = DoubleType
+  override def prettyName: String = "sorted_jaccard"
+  override protected def nullSafeEval(l: Any, r: Any): Any =
+    MinHash.sortedJaccard(l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (a, b) =>
+      s"graft.linkage.expr.MinHash.sortedJaccard($a, $b)")
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): SortedJaccard =
     copy(left = newLeft, right = newRight)
 }
 

@@ -22,6 +22,15 @@ object functions {
   def nearest_centroids(emb: Column, centroids: Array[Array[Double]],
                         nProbe: Int): Column =
     col_(NearestCentroids(expr_(emb), centroids, nProbe))
+  def minhash_shingles(text: Column, n: Int): Column =
+    col_(MinHashShingles(expr_(text), n))
+  def minhash_signature(shingles: Column, numHashes: Int, seed: Long,
+                        oph: Boolean): Column =
+    col_(MinHashSignature(expr_(shingles), numHashes, seed, oph))
+  def lsh_bands(sig: Column, bands: Int, rows: Int): Column =
+    col_(LshBands(expr_(sig), bands, rows))
+  def sorted_jaccard(a: Column, b: Column): Column =
+    col_(SortedJaccard(expr_(a), expr_(b)))
   def sig_agreement(a: Column, b: Column): Column =
     col_(SigAgreement(expr_(a), expr_(b)))
   def pq_encode(emb: Column, codebooks: Array[Array[Array[Double]]]): Column =

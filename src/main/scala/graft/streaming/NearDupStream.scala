@@ -238,8 +238,7 @@ object NearDupStream {
       : DataFrame = {
     val spark = batch.sparkSession
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val sigs = Dedup.sigs(Dedup.explodedShingles(batch, idCol, textCol,
-      cfg.shingleSize), cfg, idCol).persist(lvl)
+    val sigs = Dedup.docSignatures(batch, cfg, idCol, textCol).persist(lvl)
     sigs.count()
     val idType = batch.schema(idCol).dataType
 
@@ -433,10 +432,8 @@ object NearDupStream {
 
     // dropped docs vs admitted: LSH candidates + exact verify, then keep
     // docs whose best exact Jaccard never reaches the threshold
-    val exploded = Dedup.explodedShingles(corpusP, idCol, textCol,
-      cfg.shingleSize).persist(lvl)
-    val buckets = Dedup.lshBuckets(Dedup.sigs(exploded, cfg, idCol),
-      auditCfg, idCol).persist(lvl)
+    val mh = Dedup.minHashDocs(corpusP, auditCfg, idCol, textCol).persist(lvl)
+    val buckets = Dedup.bucketRows(mh, idCol)
     val dB = buckets.join(admittedIds, Seq(idCol), "left_anti")
       .select(col("band"), col("bucket"), col(idCol).as("id_a"))
     val aB = buckets.join(admittedIds, Seq(idCol), "left_semi")
@@ -445,7 +442,7 @@ object NearDupStream {
     val cands = dB.join(aB, col("band") === col("band_r") &&
         col("bucket") === col("bucket_r"))
       .select("id_a", "id_b").distinct()
-    val best = Dedup.jaccardVerify(exploded, cands, idCol)
+    val best = Dedup.verifyPairs(cands, mh, idCol)
       .groupBy(col("id_a"))
       .agg(max(struct(col("jaccard"), col("id_b"))).as("b"))
       .select(col("id_a"), col("b.id_b").as("id_b"),
@@ -460,8 +457,7 @@ object NearDupStream {
 
     val out = falseAdmits.unionByName(falseDrops).localCheckpoint()
     admitPairs.unpersist(blocking = false)
-    exploded.unpersist(blocking = false)
-    buckets.unpersist(blocking = false)
+    mh.unpersist(blocking = false)
     admittedIds.unpersist(blocking = false)
     corpusP.unpersist(blocking = false)
     out

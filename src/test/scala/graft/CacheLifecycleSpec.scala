@@ -48,10 +48,34 @@ class CacheLifecycleSpec extends AnyFunSuite with SparkFixture {
   test("Dedup.minHashNearDups releases internals; caller owns the result") {
     clearAll()
     import spark.implicits._
+    import org.apache.spark.sql.execution.{RDDScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    // every checkpointed RDD the pipeline's queries scan
+    def scanned(p: SparkPlan): Seq[Int] = p match {
+      case r: RDDScanExec => Seq(r.rdd.id)
+      case a: AdaptiveSparkPlanExec => scanned(a.executedPlan)
+      case s: QueryStageExec => scanned(s.plan)
+      case i: InMemoryTableScanExec => scanned(i.relation.cachedPlan)
+      case _ => p.children.flatMap(scanned)
+    }
+    val rdds = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                    ns: Long): Unit = scanned(qe.executedPlan).foreach(rdds.add)
+      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                    e: Exception): Unit = ()
+    }
     val docs = (0 until 40).map(i =>
       (i.toLong, s"alpha beta gamma delta epsilon zeta eta theta doc$i"))
       .toDF("doc_id", "text")
-    val out = graft.data.Dedup.minHashNearDups(docs)
+    spark.listenerManager.register(listener)
+    val out = try graft.data.Dedup.minHashNearDups(docs) finally {
+      org.apache.spark.graftbridge.Bus.drain(spark.sparkContext)
+      spark.listenerManager.unregister(listener)
+    }
+    // the per-doc (id, shingles, buckets) relation is the one checkpoint
+    assert(rdds.size == 1, s"checkpoints scanned: $rdds")
     out.collect()
     assert(persisted == 1, "exactly the returned handle stays cached")
     out.unpersist(true)

@@ -99,6 +99,30 @@ class CleanCorpusSpec extends AnyFunSuite with SparkFixture {
       "optional stages must not strand cached blocks")
   }
 
+  test("observed audit counts: nothing to redact, zero-token docs") {
+    import spark.implicits._
+    spark.catalog.clearCache()
+    // no PII anywhere: the redaction observer sums over rows that all
+    // compare equal, and must report 0
+    val (c1, counts1, e1) = CleanCorpus.clean(corpus, CleanCorpus.Config(
+      minhash = Dedup.MinHashConfig(jaccardThreshold = 0.6, bands = 32),
+      redactPii = true))
+    assert(counts1.redactedDocs == Some(0L))
+    assert(counts1.toJson.contains("\"redacted_docs\":0"))
+    assert(counts1.afterQuality == 4 && counts1.afterLang == 3)
+    c1.unpersist(); e1.unpersist()
+    // a zero-token doc passes a zero quality floor and is a quality
+    // survivor (langGuessDf keeps it as "und"), then fails the pin
+    val docs = corpus.unionByName(Seq((9L, "   ")).toDF("doc_id", "text"))
+    val (c2, counts2, e2) = CleanCorpus.clean(docs, CleanCorpus.Config(
+      minQuality = 0.0,
+      minhash = Dedup.MinHashConfig(jaccardThreshold = 0.6, bands = 32)))
+    assert(counts2.afterNearDup == 6)
+    assert(counts2.afterQuality == 6, s"${counts2.toJson}")
+    assert(counts2.afterLang == 3, s"${counts2.toJson}")
+    c2.unpersist(); e2.unpersist()
+  }
+
   test("CleanCorpusMain writes cleaned parquet + stats.json") {
     val dir = tempDir("cleancorpus")
     corpus.write.mode("overwrite").parquet(s"$dir/in")

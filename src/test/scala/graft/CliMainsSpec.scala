@@ -226,6 +226,48 @@ class CliMainsSpec extends AnyFunSuite with SparkFixture {
     assert(hh == Set(("H1", "pA"), ("H1", "pB"), ("H2", "pC")))
   }
 
+  test("garble → block → resolve round trip under a path with a blank") {
+    // every CLI file access resolves paths with Hadoop Path; a
+    // java.net.URI lookup rejects the blank with URISyntaxException
+    val dir = s"$base/run dir"
+    write(s"$dir/secret.txt", "0123456789abcdef0123456789abcdef\n")
+    write(s"$dir/schemas/name-dob.json",
+      """{"fields": ["given_name", "family_name", "DOB"],
+         "hashType": "blakeHash"}""")
+    write(s"$dir/pii.csv",
+      "record_id,given_name,family_name,DOB,sex,phone_number," +
+        "household_street_address,household_zip\n" +
+      "pA,ANA,GARCIA,2000-02-29,F,1,1 A ST,0\n" +
+      "pB,BOB,SMITH,1999-01-15,M,2,2 B ST,0\n")
+    val dirs = Console.withOut(new java.io.ByteArrayOutputStream()) {
+      GarbleMain.run(spark, Map("input" -> s"$dir/pii.csv",
+        "schemadir" -> s"$dir/schemas", "secretfile" -> s"$dir/secret.txt",
+        "output" -> s"$dir/garbled"))
+    }
+    assert(dirs.size == 1 && new java.io.File(s"$dir/garbled.zip").exists())
+    assert(Garble.readClks(spark, dirs.head).count() == 2)
+    BlockMain.run(spark, Map("clkpath" -> s"$dir/garbled",
+      "output" -> s"$dir/blockout"))
+    assert(new java.io.File(s"$dir/blockout/garbled_blocked.zip").exists())
+    // the agent's answer: the run's metadata and its links, zipped
+    val zip = new java.util.zip.ZipOutputStream(
+      new java.io.FileOutputStream(s"$dir/links.zip"))
+    zip.putNextEntry(new java.util.zip.ZipEntry("metadata.json"))
+    zip.write(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(s"$dir/garbled/metadata.json")))
+    zip.closeEntry()
+    zip.putNextEntry(new java.util.zip.ZipEntry("links.csv"))
+    zip.write("LINK_ID,position\nL1,1\nL0,0\n".getBytes("UTF-8"))
+    zip.closeEntry(); zip.close()
+    ResolveMain.run(spark, Map("metadata" -> s"$dir/garbled/metadata.json",
+      "linkszip" -> s"$dir/links.zip", "sourcefile" -> s"$dir/pii.csv",
+      "output" -> s"$dir/resolved"))
+    val links = spark.read.option("header", "true")
+      .csv(s"$dir/resolved/linkid_to_patid_csv")
+      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    assert(links == Map("L0" -> "pA", "L1" -> "pB"))
+  }
+
   test("CLK export is ONE reference-parseable JSON document") {
     import spark.implicits._
     // the wire shape garble.py's validate_clks json.load()s: a single

@@ -264,9 +264,11 @@ class DataOpsSpec extends AnyFunSuite with SparkFixture {
     import spark.implicits._
     val docs = Seq((1L, "a b c d e"), (2L, "a b c d x"),
       (3L, "p q r s t")).toDF("doc_id", "text")
-    val exploded = Dedup.explodedShingles(docs, n = 3)
+    val shingles = docs.select(col("doc_id"),
+      graft.linkage.expr.functions.minhash_shingles(col("text"), 3)
+        .as("shingles"))
     val pairs = Seq((1L, 2L), (1L, 3L)).toDF("id_a", "id_b")
-    val j = Dedup.jaccardVerify(exploded, pairs).collect()
+    val j = Dedup.verifyPairs(pairs, shingles, "doc_id").collect()
       .map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
     // shingles(1)={abc,bcd,cde}, shingles(2)={abc,bcd,cdx}: 2/4
     assert(math.abs(j((1L, 2L)) - 0.5) < 1e-12)

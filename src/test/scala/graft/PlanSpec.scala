@@ -97,6 +97,45 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
       s"nondeterministic scoring expressions: ${exprs.filterNot(_.deterministic)}")
   }
 
+  test("minHashNearDups plan fingerprint: one kernel pass per doc") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.expressions.{ArrayFilter, ArrayTransform, ZipWith}
+    import graft.data.Dedup
+    import graft.linkage.expr.MinHashShingles
+    val cfg = Dedup.MinHashConfig(oph = true)
+    val texts = spark.sparkContext.parallelize((0 until 60).map(i =>
+      (i.toLong, s"alpha beta gamma delta doc${i % 20} epsilon zeta")), 4)
+      .toDF("doc_id", "text")
+    def exprsOf(df: DataFrame) = df.queryExecution.optimizedPlan
+      .flatMap(_.expressions.flatMap(_.collect { case e => e }))
+    // the per-doc projection — the pipeline's one checkpoint — builds
+    // each doc's shingle set once and reads its buckets off it
+    val mh = Dedup.minHashDocs(texts, cfg, "doc_id", "text")
+    assert(exprsOf(mh).count(_.isInstanceOf[MinHashShingles]) == 1,
+      mh.queryExecution.optimizedPlan.toString)
+    // downstream of the checkpoint: posexplode → cap → candidates →
+    // shingle-array joins → merge; no kernel re-run, no interpreted HOF,
+    // no object aggregate, and one band posexplode
+    val pairs = Dedup.nearDupPairs(mh.localCheckpoint(), cfg, "doc_id")
+    pairs.collect()
+    val exprs = exprsOf(pairs)
+    assert(!exprs.exists(_.isInstanceOf[MinHashShingles]))
+    assert(!exprs.exists(e => e.isInstanceOf[ArrayTransform] ||
+      e.isInstanceOf[ArrayFilter] || e.isInstanceOf[ZipWith]),
+      pairs.queryExecution.optimizedPlan.toString)
+    val plan = planOf(pairs)
+    assert(!plan.contains("ObjectHashAggregate"), plan)
+    val Array(finalPlan, initialPlan) = plan.split("== Initial Plan ==")
+    // both candidate-join sides read ONE shuffle of the exploded buckets
+    val generates = "Generate posexplode".r.findAllIn(finalPlan).length
+    assert(generates == 1, s"$generates band posexplodes:\n$finalPlan")
+    // before AQE turns small sides into broadcasts: the band join's two
+    // sides, the candidate distinct, and two per verify join (measured 7)
+    val shuffles = """(?m)^[\s:|+-]*Exchange """.r.findAllIn(initialPlan).length
+    info(s"$shuffles shuffle exchanges")
+    assert(shuffles <= 7, s"$shuffles exchanges:\n$initialPlan")
+  }
+
   test("parquet scan: predicate pushdown + column pruning") {
     val df = spark.read.parquet(s"$sf/lineitem.parquet")
       .filter(col("l_quantity") > 30)
