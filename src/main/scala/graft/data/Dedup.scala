@@ -227,17 +227,22 @@ object Dedup {
       .select("id_a", "id_b").distinct()
   }
 
-  /** Exact Jaccard (id_a, id_b, jaccard) of candidate pairs: one join of
+  /** Exact Jaccard (id_a, id_b, jaccard) of the candidate pairs whose
+    * Jaccard is at least `threshold` (default: every pair): one join of
     * the sorted shingle arrays (`shingles`: (id, shingles)) per pair side,
-    * then one merge per pair. `pairs` must be distinct and every member
-    * present in `shingles`. */
+    * then one merge per pair. The threshold is the cardinality of the
+    * explode over the kernel, not a Filter: a filter on the projected
+    * Jaccard is pushed into the second join's condition with the kernel
+    * copied in, and every passing pair would be merged twice. `pairs`
+    * must be distinct and every member present in `shingles`. */
   private[graft] def verifyPairs(pairs: DataFrame, shingles: DataFrame,
-                                 idCol: String): DataFrame = {
+                                 idCol: String,
+                                 threshold: Double = 0.0): DataFrame = {
     val a = shingles.select(col(idCol).as("id_a"), col("shingles").as("_sa"))
     val b = shingles.select(col(idCol).as("id_b"), col("shingles").as("_sb"))
     pairs.join(a, "id_a").join(b, "id_b")
-      .select(col("id_a"), col("id_b"),
-        gf.sorted_jaccard(col("_sa"), col("_sb")).as("jaccard"))
+      .select(col("id_a"), col("id_b"), explode(gf.sorted_jaccard_above(
+        col("_sa"), col("_sb"), threshold)).as("jaccard"))
   }
 
   /** Full MinHash-LSH near-dup pipeline: returns verified near-dup pairs
@@ -276,8 +281,7 @@ object Dedup {
     val buckets = bucketRows(mh, idCol)
     val kept = capBuckets(buckets, cfg.capRatio, cfg.minBucketCap,
       cfg.maxBucketCap, cfg.bands, "minhash-lsh").getOrElse(buckets)
-    verifyPairs(lshCandidates(kept, idCol), mh, idCol)
-      .filter(col("jaccard") >= cfg.jaccardThreshold)
+    verifyPairs(lshCandidates(kept, idCol), mh, idCol, cfg.jaccardThreshold)
   }
 
   /** Near-duplicate GROUPS: the linkage engine's large-star/small-star

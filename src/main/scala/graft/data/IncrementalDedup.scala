@@ -93,8 +93,7 @@ object IncrementalDedup {
       .unionByName(prevTouched.select(col(idCol),
         gf.minhash_shingles(col(textCol), cfg.shingleSize).as("shingles")))
       .localCheckpoint(eager = false)
-    val out = Dedup.verifyPairs(cands, shingles, idCol)
-      .filter(col("jaccard") >= cfg.jaccardThreshold)
+    val out = Dedup.verifyPairs(cands, shingles, idCol, cfg.jaccardThreshold)
       .persist(lvl)
     out.count()
     newMh.unpersist(blocking = false)

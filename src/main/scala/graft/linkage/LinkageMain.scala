@@ -31,7 +31,11 @@ import org.apache.spark.sql.functions._
   *                                reading --input
   *
   * Writes TableIO-layout tables under --output: records, matched_pairs,
-  * clusters, mapping, metrics (+ household_clks, scoring files).
+  * clusters, mapping, metrics (+ household_clks, scoring files). Order:
+  * the pipeline counts its metric rows in one job beside the clusters
+  * count that materializes the cached clusters; then every output is
+  * written side by side; the run's caches are released once the last
+  * writer has returned.
   * Cluster sizing (partitions, AQE) comes from spark-submit conf; set
   * spark.sql.adaptive.advisoryPartitionSizeInBytes low (8m) — scoring is
   * CPU-bound, not byte-bound (see BASELINE.md).
@@ -115,41 +119,54 @@ object LinkageMain {
     finally result.unpersist() // release the run's internal cache handles
   }
 
-  /** Every table and file of a linkage run; the clusters are cached, so
-    * each output below reads them without re-running the aggregation. */
+  /** Every table and file of a linkage run. None of them reads another,
+    * and every cache they read is materialized by the time `result` is
+    * returned (the clusters by the metrics' clusters count), so they are
+    * written side by side ([[Actions.together]]): the four tables,
+    * mapping_csv, households_metadata.json, and the --testrun files and
+    * household CLKs when asked for. This returns, or throws the first
+    * failure, only once every writer has returned, so the caller's
+    * unpersist never races a write. */
   private def writeOutputs(spark: SparkSession, opts: Map[String, String],
                            out: String, result: Pipeline.Result): Unit = {
     val metrics = result.metrics.collect()
       .map(r => r.getString(0) -> r.getLong(1))
-    TableIO.write(result.metrics, s"$out/metrics")
-    TableIO.write(result.records.drop("turns"), s"$out/records")
-    TableIO.write(result.matchedPairs, s"$out/matched_pairs")
-    TableIO.write(result.clusters, s"$out/clusters")
-    // households metadata document (households.py:370–390 analog)
-    Extract.writeMetadata(spark, Map(
-      "number_of_households" -> metrics.toMap.apply("clusters").toString,
-      "households_inferred" -> "true"), s"$out/households_metadata.json")
     // household position i is the i-th cluster by cluster_id: mapping_csv
     // row i (which ResolveMain --hhsourcefile numbers by scan order) and
-    // household CLK i both follow that order. coalesce(1) after the global
-    // sort keeps it; writeClksJson streams partitions in index order.
-    val ordered = result.clusters.orderBy(col("cluster_id"))
-    // comma-joined ids only at the CSV edge (households.py:268–276 shape)
-    ordered.select(col("cluster_id"),
-        concat_ws(",", col("members")).as("record_ids"), col("size"))
-      .coalesce(1).write.mode("overwrite").option("header", "true")
-      .csv(s"$out/mapping_csv")
-
-    if (opts.contains("testrun")) {
-      val (perMember, perHousehold) = Output.scoringFiles(result.clusters)
-      TableIO.write(perMember, s"$out/hh_pos_patids")
-      TableIO.write(perHousehold, s"$out/household_pos_pid")
-    }
-    opts.get("secret").foreach { secret =>
-      val clks = Garble.householdClks(ordered, secret)
-      Garble.writeClksJson(
-        clks.withColumnRenamed("cluster_id", "conv_id"), s"$out/household_clks")
-    }
+    // household CLK i both follow that order. The CLKs are encoded at full
+    // parallelism over the global sort, and writeClksJson streams its
+    // partitions in index order. The single-file CSV sorts inside its one
+    // write task: after coalesce(1) a global sort would run there too,
+    // behind a sampling job and a range shuffle. The multi-job outputs are
+    // submitted first: jobs are scheduled in submission order.
+    val writers: Seq[() => Unit] =
+      Option.when(opts.contains("testrun")) { () =>
+        val (perMember, perHousehold) = Output.scoringFiles(result.clusters)
+        TableIO.write(perMember, s"$out/hh_pos_patids")
+        TableIO.write(perHousehold, s"$out/household_pos_pid")
+      }.toSeq ++
+      opts.get("secret").map { secret => () =>
+        val clks = Garble.householdClks(
+          result.clusters.orderBy(col("cluster_id")), secret)
+        Garble.writeClksJson(
+          clks.withColumnRenamed("cluster_id", "conv_id"), s"$out/household_clks")
+        ()
+      } ++ Seq(
+      // comma-joined ids only at the CSV edge (households.py:268–276 shape)
+      () => result.clusters.select(col("cluster_id"),
+          concat_ws(",", col("members")).as("record_ids"), col("size"))
+        .coalesce(1).sortWithinPartitions("cluster_id")
+        .write.mode("overwrite").option("header", "true")
+        .csv(s"$out/mapping_csv"),
+      () => TableIO.write(result.clusters, s"$out/clusters"),
+      () => TableIO.write(result.records.drop("turns"), s"$out/records"),
+      () => TableIO.write(result.matchedPairs, s"$out/matched_pairs"),
+      () => TableIO.write(result.metrics, s"$out/metrics"),
+      // households metadata document (households.py:370–390 analog)
+      () => Extract.writeMetadata(spark, Map(
+        "number_of_households" -> metrics.toMap.apply("clusters").toString,
+        "households_inferred" -> "true"), s"$out/households_metadata.json"))
+    Actions.together(writers: _*)
     println(s"[graft] linkage complete: " +
       metrics.map { case (k, v) => s"$k=$v" }.mkString(", "))
   }

@@ -88,9 +88,9 @@ object Pipeline {
     link(spark, cfg, records, pairs, None,
       records.select(piiCols.map(col): _*), Seq(records)) {
       scored => Seq(
-        ("records", nRecords),
-        ("candidate_pairs", pairs.count()),
-        ("scored_pairs_past_addr_prefilter", scored.count()))
+        "records" -> records,
+        "candidate_pairs" -> pairs,
+        "scored_pairs_past_addr_prefilter" -> scored)
     }
   }
 
@@ -121,15 +121,18 @@ object Pipeline {
     * matches, CC over xxhash64(conv_id) node ids (collision odds n²/2⁶⁴)
     * with singletons keeping their own id, and build the clusters once,
     * each named by its min(conv_id); the labelled records are the
-    * clusters' exploded members. `counts` supplies the caller's leading
-    * metric rows given the scored pairs; it runs after CC (so a count of
-    * the pairs reads their cache), followed by matched_pairs and
-    * clusters, whose count materializes the cached clusters every output
-    * then reads. */
+    * clusters' exploded members.
+    *
+    * Metrics, after CC: `counts` names the caller's leading metric rows,
+    * relations given the scored pairs; they and matched_pairs are counted
+    * in ONE job ([[countRows]]), over caches CC has already materialized.
+    * That job runs beside the clusters count ([[Actions.together]]),
+    * which materializes the cached clusters every output then reads. The
+    * metric rows keep their order: the caller's, matched_pairs, clusters. */
   private def link(spark: SparkSession, cfg: Config, records: DataFrame,
                    pairs: DataFrame, previous: Option[DataFrame],
                    deltaRecords: DataFrame, cached: Seq[DataFrame])
-                  (counts: DataFrame => Seq[(String, Long)]): Result = {
+                  (counts: DataFrame => Seq[(String, DataFrame)]): Result = {
     pairs.persist(lvl)
     val (scored, newMatches, scoredHandle) =
       if (cfg.pairsFile.isDefined || cfg.exactAddresses) (pairs, pairs, Nil)
@@ -156,13 +159,33 @@ object Pipeline {
       col("cluster_id"))
 
     import spark.implicits._
-    val metrics = (counts(scored) ++ Seq(
-      ("matched_pairs", matched.count()),
-      ("clusters", clustersDf.count()))).toDF("metric", "value")
+    val named = counts(scored) :+ ("matched_pairs" -> matched)
+    // the clusters build, the longer of the two, is submitted first
+    val Seq(clusters, leading) = Actions.together(
+      () => Seq("clusters" -> clustersDf.count()),
+      () => countRows(named))
+    val metrics = (leading ++ clusters).toDF("metric", "value")
 
     Result(records, pairs, matched, labeled, clustersDf, metrics,
       deltaRecords, newMatches,
       cached ++ Seq(pairs) ++ scoredHandle ++ Seq(labels, clustersDf))
+  }
+
+  /** The row count of each named relation, all in one Spark job: a
+    * global aggregate over the union of the relations, each tagged by its
+    * index and counted once however many names it carries (exact mode's
+    * candidates, scored pairs and matches are one relation). The union is
+    * coalesced to one task per core: every task deserializes the lineage
+    * of all the relations, which costs more than counting a partition. */
+  private def countRows(named: Seq[(String, DataFrame)]): Seq[(String, Long)] = {
+    val rels = named.map(_._2).distinct // by reference
+    val tagged = rels.zipWithIndex
+      .map { case (df, i) => df.select(lit(i).as("rel")) }
+      .reduce(_ union _)
+      .coalesce(rels.head.sparkSession.sparkContext.defaultParallelism)
+    val cs = rels.indices.map(i => count_if(col("rel") === i))
+    val row = tagged.agg(cs.head, cs.tail: _*).head()
+    named.map { case (name, df) => name -> row.getLong(rels.indexOf(df)) }
   }
 
   /** Incremental linkage — the daily-increment path a 100-TB deployment
@@ -207,9 +230,9 @@ object Pipeline {
     link(spark, cfg, all, pairs, Some(previousMatches), newRecords,
       Seq(newRecords, all)) {
       _ => Seq(
-        ("new_records", newRecords.count()),
-        ("records", nAll),
-        ("incremental_candidate_pairs", pairs.count()))
+        "new_records" -> newRecords,
+        "records" -> all,
+        "incremental_candidate_pairs" -> pairs)
     }
   }
 

@@ -566,19 +566,25 @@ case class LshBands(child: Expression, bands: Int, rows: Int)
     copy(child = newChild)
 }
 
-/** Exact Jaccard of two sorted distinct shingle arrays by one merge
-  * ([[MinHash.sortedJaccard]]). */
-case class SortedJaccard(left: Expression, right: Expression)
+/** The near-dup verify: `[j]` when the exact Jaccard j of two sorted
+  * distinct shingle arrays (one merge, [[MinHash.sortedJaccard]]) is at
+  * least `threshold`, else `[]`. Called directly inside explode(), the
+  * threshold is the Generate's cardinality: the optimizer can neither
+  * push it below the projection nor re-inline it, so each candidate pair
+  * is merged once (the shape of [[AddressDistanceAbove]]). */
+case class SortedJaccardAbove(left: Expression, right: Expression,
+                              threshold: Double)
     extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "sorted_jaccard"
+  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
+  override def prettyName: String = "sorted_jaccard_above"
   override protected def nullSafeEval(l: Any, r: Any): Any =
-    MinHash.sortedJaccard(l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData])
+    MinHash.sortedJaccardAbove(l.asInstanceOf[ArrayData],
+      r.asInstanceOf[ArrayData], threshold)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.linkage.expr.MinHash.sortedJaccard($a, $b)")
+      s"graft.linkage.expr.MinHash.sortedJaccardAbove($a, $b, ${threshold}D)")
   override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): SortedJaccard =
+      newLeft: Expression, newRight: Expression): SortedJaccardAbove =
     copy(left = newLeft, right = newRight)
 }
 

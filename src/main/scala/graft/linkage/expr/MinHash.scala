@@ -29,7 +29,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - [[bands]]: LSH band b of r rows = `xxhash64(b, concat_ws(",",
   *    slots b·r until b·r+r))`.
   *  - [[sortedJaccard]]: |A∩B| / |A∪B| of two sorted distinct sets by one
-  *    merge — the same integer quotient as a union-count verify.
+  *    merge — the same integer quotient as a union-count verify;
+  *    [[sortedJaccardAbove]] is it as `[j]` when j passes a threshold.
   */
 object MinHash {
 
@@ -148,6 +149,15 @@ object MinHash {
       b += 1
     }
     UnsafeArrayData.fromPrimitiveArray(out)
+  }
+
+  /** The verify's value: `[j]` when j = [[sortedJaccard]] is at least
+    * `threshold`, else `[]` (see [[SortedJaccardAbove]]). */
+  def sortedJaccardAbove(a: ArrayData, b: ArrayData,
+                         threshold: Double): ArrayData = {
+    val j = sortedJaccard(a, b)
+    UnsafeArrayData.fromPrimitiveArray(
+      if (j >= threshold) Array(j) else Array.emptyDoubleArray)
   }
 
   /** Exact Jaccard |A∩B| / |A∪B| of two ascending distinct shingle

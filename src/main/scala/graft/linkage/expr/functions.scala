@@ -29,8 +29,8 @@ object functions {
     col_(MinHashSignature(expr_(shingles), numHashes, seed, oph))
   def lsh_bands(sig: Column, bands: Int, rows: Int): Column =
     col_(LshBands(expr_(sig), bands, rows))
-  def sorted_jaccard(a: Column, b: Column): Column =
-    col_(SortedJaccard(expr_(a), expr_(b)))
+  def sorted_jaccard_above(a: Column, b: Column, threshold: Double): Column =
+    col_(SortedJaccardAbove(expr_(a), expr_(b), threshold))
   def sig_agreement(a: Column, b: Column): Column =
     col_(SigAgreement(expr_(a), expr_(b)))
   def pq_encode(emb: Column, codebooks: Array[Array[Array[Double]]]): Column =

@@ -119,11 +119,15 @@ object LinkageStream {
       .parquet(s"$storeDir/records_log/batch=$batchId")
     result.deltaMatches.write.mode("overwrite")
       .parquet(s"$storeDir/matches_log/batch=$batchId")
+    // the clusters are written from their cache BEFORE the refresh: the
+    // cached plan reads records_log, and refreshByPath drops every cache
+    // whose plan reads the path, so a write after it would rebuild the
+    // clusters from lineage, an O(corpus) step on every trigger
+    TableIO.write(result.clusters, s"$storeDir/g$nextGen/clusters")
     // new partition dirs dodge the self-overwrite class, but the session
     // FileStatusCache may still hold the roots' pre-append listings
     spark.catalog.refreshByPath(s"$storeDir/records_log")
     spark.catalog.refreshByPath(s"$storeDir/matches_log")
-    TableIO.write(result.clusters, s"$storeDir/g$nextGen/clusters")
     result.unpersist()
     writeState(spark, storeDir, StoreState(nextGen, batchId))
     true

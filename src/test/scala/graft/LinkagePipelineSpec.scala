@@ -130,8 +130,10 @@ class LinkagePipelineSpec extends AnyFunSuite with SparkFixture {
       LinkageMain.run(spark, Map("synthetic" -> "150", "output" -> out))
       org.apache.spark.graftbridge.Bus.drain(sc)
     } finally sc.removeSparkListener(listener)
-    // the run took 38 jobs on local[4] when this budget was set; the rest
-    // is headroom for AQE replanning
-    assert(jobs.get <= 45, s"${jobs.get} Spark jobs, budget 45")
+    info(s"${jobs.get} Spark jobs")
+    // the run took 33 jobs on local[4] when this budget was set (the
+    // metric counts are one job since the concurrent tail); the rest is
+    // headroom for AQE replanning
+    assert(jobs.get <= 40, s"${jobs.get} Spark jobs, budget 40")
   }
 }

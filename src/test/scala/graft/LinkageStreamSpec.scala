@@ -136,6 +136,48 @@ class LinkageStreamSpec extends AnyFunSuite with SparkFixture {
     assert(triggers.last.cumRecords == triggers.map(_.recordsAppended).sum)
   }
 
+  test("a trigger writes its clusters from their cache, not from lineage") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
+      SparkListenerJobStart}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val all = SynthTranscripts.transcripts(spark,
+      SynthTranscripts.Config(seed = 17L, nConvs = 150)).toDF.cache()
+    val half = pmod(xxhash64(col("conv_id")), lit(2))
+    val store = s"$dir/cachedwrite"
+    assert(LinkageStream.linkBatch(all.filter(half === 0), 0L, store))
+    // the second trigger is incremental: its cached clusters read
+    // records_log, the path the trigger refreshes after appending to it.
+    // A clusters write that rebuilds the dropped cache runs the cluster
+    // aggregation's stages as jobs of the write's own query, whose call
+    // site is TableIO.write's.
+    val sc = spark.sparkContext
+    val sites = new java.util.concurrent.ConcurrentHashMap[Long, String]
+    val jobQueries = new java.util.concurrent.ConcurrentLinkedQueue[Long]
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart =>
+          sites.put(s.executionId, s.description)
+        case _ =>
+      }
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+          .foreach(id => jobQueries.add(id.toLong))
+    }
+    org.apache.spark.graftbridge.Bus.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      assert(LinkageStream.linkBatch(all.filter(half === 1), 1L, store))
+      org.apache.spark.graftbridge.Bus.drain(sc)
+    } finally sc.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    val writeJobs = jobQueries.asScala.toSeq
+      .filter(q => String.valueOf(sites.get(q)).contains("TableIO.scala"))
+    assert(writeJobs.size == 1,
+      s"${writeJobs.size} jobs in the clusters write's query")
+    all.unpersist()
+  }
+
   test("v1 stores are refused loudly") {
     val batch = SynthTranscripts.transcripts(spark,
       SynthTranscripts.Config(seed = 21L, nConvs = 20)).toDF

@@ -9,7 +9,7 @@ import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 import graft.data.Dedup
 import graft.linkage.expr.{LshBands, MinHashShingles, MinHashSignature,
-  SortedJaccard, functions => gf}
+  SortedJaccardAbove, functions => gf}
 
 /** Pins the MinHash kernel (expr.MinHash: shingle set, standard and OPH
   * signatures, LSH bands, sorted-merge Jaccard) bit for bit — through its
@@ -254,8 +254,9 @@ class MinHashKernelSpec extends AnyFunSuite with SparkFixture {
     assert(want.size == pairs.size && got.size == pairs.size)
     pairs.foreach { p =>
       assert(bits(got(p)) == bits(want(p)), s"$p: ${got(p)} vs ${want(p)}")
-      val interpreted = SortedJaccard(arrayLit(shingles(p._1)),
-        arrayLit(shingles(p._2))).eval().asInstanceOf[Double]
+      val interpreted = SortedJaccardAbove(arrayLit(shingles(p._1)),
+        arrayLit(shingles(p._2)), 0.0).eval().asInstanceOf[ArrayData]
+        .getDouble(0)
       assert(bits(interpreted) == bits(want(p)), s"$p (eval)")
     }
     // the pairs reach both ends and the middle of the range

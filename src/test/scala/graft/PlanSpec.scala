@@ -101,7 +101,7 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     import spark.implicits._
     import org.apache.spark.sql.catalyst.expressions.{ArrayFilter, ArrayTransform, ZipWith}
     import graft.data.Dedup
-    import graft.linkage.expr.MinHashShingles
+    import graft.linkage.expr.{MinHashShingles, SortedJaccardAbove}
     val cfg = Dedup.MinHashConfig(oph = true)
     val texts = spark.sparkContext.parallelize((0 until 60).map(i =>
       (i.toLong, s"alpha beta gamma delta doc${i % 20} epsilon zeta")), 4)
@@ -129,6 +129,13 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     // both candidate-join sides read ONE shuffle of the exploded buckets
     val generates = "Generate posexplode".r.findAllIn(finalPlan).length
     assert(generates == 1, s"$generates band posexplodes:\n$finalPlan")
+    // one sorted merge per candidate pair: the threshold is the verify
+    // explode's cardinality, so no filter or join condition carries a
+    // second copy of the kernel
+    assert(exprs.count(_.isInstanceOf[SortedJaccardAbove]) == 1,
+      pairs.queryExecution.optimizedPlan.toString)
+    val merges = "sorted_jaccard".r.findAllIn(finalPlan).length
+    assert(merges == 1, s"$merges sorted_jaccard calls:\n$finalPlan")
     // before AQE turns small sides into broadcasts: the band join's two
     // sides, the candidate distinct, and two per verify join (measured 7)
     val shuffles = """(?m)^[\s:|+-]*Exchange """.r.findAllIn(initialPlan).length
