@@ -485,13 +485,14 @@ object Queries {
     }),
 
     // INCREMENTAL near-dup pairs (the daily-append dedup path,
-    // IncrementalDedup): the planted garbles arrive as the NEW slice
-    // against the full documents table as the previous corpus —
-    // candidates restricted to pairs touching a new doc, exact verify
-    // over new shingles + candidate-touched old docs only. Equivalence
-    // with the full run is the path's contract (IncrementalDedupSpec),
-    // so the expected output is the SAME planted-pair oracle the
-    // full-corpus q_minhash_neardups verifies against.
+    // Dedup.minHashNearDups with a previous corpus): the planted garbles
+    // arrive as the NEW slice against the full documents table as the
+    // previous corpus — the candidate join keeps only pairs whose larger
+    // id is new, and the verify reads both shingle sets from the one
+    // kernel checkpoint. Equivalence with the full run is the path's
+    // contract (IncrementalDedupSpec), so the expected output is the SAME
+    // planted-pair oracle the full-corpus q_minhash_neardups verifies
+    // against.
     "q_neardup_incremental" -> ((s, dir) => {
       val docs = tText(s, dir, "documents").select(col("doc_id"), col("text"))
       val planted = docs
@@ -506,9 +507,9 @@ object Queries {
       // validity is unchanged: the oracle checks exact Jaccard of the
       // planted pairs, and OPH banding recall on this ≥48-shingle family
       // is the property q_minhash_oph already value-certifies.
-      graft.data.IncrementalDedup.incrementalNearDupPairs(docs, planted,
+      graft.data.Dedup.minHashNearDups(planted,
         graft.data.Dedup.MinHashConfig(bands = 8, jaccardThreshold = 0.5,
-          oph = true))
+          oph = true), previous = Some(docs))
         .filter(col("id_a") < 50 && col("id_b") === col("id_a") + 100000)
         .orderBy(col("id_a"))
         .select(col("id_a"), col("id_b"), round(col("jaccard"), 4)

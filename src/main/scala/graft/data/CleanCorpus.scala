@@ -18,9 +18,10 @@ import org.apache.spark.sql.functions._
   *
   * The optional stages are DOC-LOCAL (each document is judged against a
   * fixed benchmark set / its own text only), and they run AFTER the
-  * near-dup stage, so [[cleanIncremental]]'s full-run-equivalence
-  * contract is untouched: the near-dup prev side stays the exact
-  * survivors, and doc-local verdicts commute with the increment split.
+  * near-dup stage, so the daily-append mode's full-run equivalence
+  * ([[clean]] with `previous`) is untouched: the near-dup previous side
+  * stays the exact survivors, and doc-local verdicts commute with the
+  * increment split.
   */
 object CleanCorpus {
 
@@ -49,42 +50,82 @@ object CleanCorpus {
                          afterDecontaminate: Option[Long] = None,
                          redactedDocs: Option[Long] = None,
                          afterRepetition: Option[Long] = None) {
-    def toJson: String =
-      s"""{"input":$input,"after_exact_dedup":$afterExact,""" +
-      s""""after_neardup":$afterNearDup,""" +
-      afterDecontaminate.map(n => s""""after_decontaminate":$n,""")
-        .getOrElse("") +
-      afterRepetition.map(n => s""""after_repetition":$n,""")
-        .getOrElse("") +
-      s""""after_quality":$afterQuality,"after_lang":$afterLang""" +
-      redactedDocs.map(n => s""","redacted_docs":$n""").getOrElse("") +
-      "}"
+    def toJson: String = graft.linkage.TableIO.jsonObject(Seq(
+      Some("input" -> input), Some("after_exact_dedup" -> afterExact),
+      Some("after_neardup" -> afterNearDup),
+      afterDecontaminate.map("after_decontaminate" -> _),
+      afterRepetition.map("after_repetition" -> _),
+      Some("after_quality" -> afterQuality), Some("after_lang" -> afterLang),
+      redactedDocs.map("redacted_docs" -> _)).flatten: _*).toString
   }
 
-  /** Doc-local stage tail shared by [[clean]] and [[cleanIncremental]]:
-    * optional decontamination → optional repetition ceiling → quality
-    * floor → language pin → optional redaction. Returns (persisted
-    * cleaned frame, afterDecontaminate, afterRepetition, afterQuality,
-    * afterLang, redactedDocs). `nearDeduped` must be persisted by the
-    * caller (this tail consumes it several times when options are on).
+  /** Returns (cleaned docs with quality columns attached, stage counts,
+    * the ids of the exact-dedup survivors — the store a later increment
+    * dedups against). Both DataFrames are persisted and materialized
+    * (caller-owned handles); unpersist when done. Interior fan-out caches
+    * are released here.
     *
-    * The optional stage outputs are localCheckpoint'd, NOT persisted:
-    * each downstream stage references its input subtree 2–4× (dedup
-    * anti-join + report, repetition base + counts + semi-join, lang
-    * base + hits, redact audit), so with plain persists the LOGICAL
-    * tree multiplies ~50× across the tail — measured a 1.25 GB plan
-    * string whose mere rendering OOM'd an 8 GB driver, plus minutes of
-    * optimizer walk over duplicated subtrees. Checkpointing truncates
-    * the lineage at each stage boundary, keeping every downstream plan
-    * anchored on a flat scan. The checkpoint blocks are released before
-    * return (cleaned is materialized first); a later lost block of
-    * `cleaned` therefore cannot recompute through the released stage —
-    * the same documented trade the near-dup sink makes. */
-  private def finishStages(nearDeduped: DataFrame, cfg: Config,
-                           idCol: String, textCol: String)
-      : (DataFrame, Option[Long], Option[Long], Long, Long,
-         Option[Long]) = {
+    * `previous` is the daily-append mode: `docs` are the NEW docs, cleaned
+    * against the previous run's EXACT-survivor corpus, with survivors
+    * equal to a full rerun (IncrementalDedupSpec proves it across two
+    * increments):
+    *
+    *   clean(prev ∪ new).cleaned
+    *     == clean(prev).cleaned ∪ clean(new, previous = prevExact).cleaned
+    *
+    * `previous` must be the cumulative EXACT-stage survivor set (docs
+    * that survived exact dedup, BEFORE the near-dup/quality stages —
+    * CleanCorpusMain persists their ids per run as exact_survivor_ids).
+    * Post-near-dup or post-quality sets are NOT sufficient: the full
+    * run's drop-the-larger-id near-dup policy drops a new doc that pairs
+    * with an exact survivor even when that survivor itself later dies at
+    * near-dup or quality. Every new id must be GREATER than every
+    * previous id — the append-only discipline under which keep-the-
+    * smallest policies decide identically in both orders; it is checked
+    * before any stage runs. The counts and the exact ids then cover the
+    * new docs only (append the ids to the cumulative store). */
+  def clean(docs: DataFrame, cfg: Config = Config(),
+            idCol: String = "doc_id", textCol: String = "text",
+            previous: Option[DataFrame] = None)
+      : (DataFrame, StageCounts, DataFrame) = {
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+    val above = previous.flatMap(Dedup.previousMaxId(_, docs, idCol))
+    val nIn = docs.count()
+
+    // 1. exact dedup: keep each group's min-id representative; the narrow
+    //    keeper ids are cached by the same action that materializes exact.
+    //    A new doc whose text a previous exact survivor holds goes first:
+    //    its keeper is that smaller previous id, as in the full run (a
+    //    whole text group goes at once, so the new keepers are unchanged)
+    val fresh = previous.fold(docs)(p => docs.join(
+      p.select(xxhash64(col(textCol)).as("_prev_hash")).distinct(),
+      xxhash64(col(textCol)) === col("_prev_hash"), "left_anti"))
+    val keepers = Dedup.exact(fresh, idCol, textCol)
+      .filter(col(idCol) === col("keeper")).select(idCol).persist(lvl)
+    val exact = fresh.join(keepers, Seq(idCol), "left_semi").persist(lvl)
+    val nExact = exact.count()
+
+    // 2. near-dup dedup: drop the larger id of every verified pair (with a
+    //    previous corpus, always the new side)
+    val pairs = Dedup.minHashNearDupsAbove(exact, previous, above,
+      cfg.minhash, idCol, textCol)
+    val drops = pairs.select(col("id_b").as(idCol)).distinct()
+    val nearDeduped = exact.join(drops, Seq(idCol), "left_anti").persist(lvl)
+    val nNear = nearDeduped.count()
+    pairs.unpersist(blocking = false)
+    exact.unpersist(blocking = false)
+
+    // doc-local tail: each doc is judged against the fixed
+    // benchmark set / its own text only, so the verdicts commute with the
+    // increment split. The optional stage outputs are localCheckpoint'd,
+    // NOT persisted: each downstream stage references its input subtree
+    // 2–4× (dedup anti-join + report, repetition base + counts +
+    // semi-join, lang base + hits, redact audit), so with plain persists
+    // the LOGICAL tree multiplies ~50× across the tail — measured a
+    // 1.25 GB plan string whose mere rendering OOM'd an 8 GB driver.
+    // Their blocks are released once `cleaned` is materialized; a later
+    // lost block of `cleaned` therefore cannot recompute through the
+    // released stage — the same documented trade the near-dup sink makes.
     // 3. benchmark decontamination (optional; benchmark grams broadcast)
     val decont = cfg.benchmarks
       .map(bench => Decontaminate.decontaminate(nearDeduped, bench,
@@ -141,120 +182,10 @@ object CleanCorpus {
     import org.apache.spark.sql.graftbridge.DatasetBridge
     cfg.maxDupNgramFrac.foreach(_ => DatasetBridge.releaseCheckpoint(repOk))
     cfg.benchmarks.foreach(_ => DatasetBridge.releaseCheckpoint(decont))
-    (cleaned, nDecont, nRep, nQuality, nLang, nRedacted)
-  }
-
-  /** Returns (cleaned docs with quality columns attached, stage counts,
-    * the ids of the exact-dedup survivors — the store a later
-    * [[cleanIncremental]] dedups against). Both DataFrames are persisted
-    * and materialized (caller-owned handles); unpersist when done.
-    * Interior fan-out caches are released here. */
-  def clean(docs: DataFrame, cfg: Config = Config(),
-            idCol: String = "doc_id", textCol: String = "text")
-      : (DataFrame, StageCounts, DataFrame) = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val nIn = docs.count()
-
-    // 1. exact dedup: keep each group's min-id representative; the narrow
-    //    keeper ids are cached by the same action that materializes exact
-    val keepers = Dedup.exact(docs, idCol, textCol)
-      .filter(col(idCol) === col("keeper")).select(idCol).persist(lvl)
-    val exact = docs.join(keepers, Seq(idCol), "left_semi").persist(lvl)
-    val nExact = exact.count()
-
-    // 2. near-dup dedup: drop the larger id of every verified pair
-    val pairs = Dedup.minHashNearDups(exact, cfg.minhash, idCol, textCol)
-    val drops = pairs.select(col("id_b").as(idCol)).distinct()
-    val nearDeduped = exact.join(drops, Seq(idCol), "left_anti").persist(lvl)
-    val nNear = nearDeduped.count()
-    pairs.unpersist(blocking = false)
-    exact.unpersist(blocking = false)
-
-    val (cleaned, nDecont, nRep, nQuality, nLang, nRedacted) =
-      finishStages(nearDeduped, cfg, idCol, textCol)
     nearDeduped.unpersist(blocking = false)
 
     (cleaned, StageCounts(nIn, nExact, nNear, nQuality, nLang,
       nDecont, nRedacted, nRep), keepers)
-  }
-
-  /** Incremental clean — the daily-append mode: clean ONLY `newDocs`
-    * against the previous run's EXACT-survivor corpus, with survivors
-    * provably equal to a full `clean(prev ∪ new)` rerun (CleanCorpusSpec
-    * proves it across two increments):
-    *
-    *   clean(prev ∪ new).cleaned
-    *     == clean(prev).cleaned ∪ cleanIncremental(prevExact, new).cleaned
-    *
-    * `prevExactSurvivors` must be the previous cumulative EXACT-stage
-    * survivor set (docs that survived exact dedup, BEFORE the near-dup/
-    * quality stages — CleanCorpusMain persists their ids per run as
-    * exact_survivor_ids). Post-near-dup or post-quality sets are NOT
-    * sufficient: the full run's drop-the-larger-id near-dup policy drops
-    * a new doc that pairs with an exact-survivor even when that survivor
-    * itself later dies at near-dup or quality, so the incremental run
-    * must see every exact survivor to reproduce the decision.
-    *
-    * Precondition (enforced): every new id is GREATER than every
-    * previous id — the append-only id discipline under which
-    * keep-the-smallest policies decide identically in both orders.
-    *
-    * Returns (newly cleaned docs, stage counts for the new slice, the
-    * new docs that survived exact dedup — append their ids to the
-    * cumulative exact-survivor store for the next increment). The first
-    * two mirror [[clean]]; all three DataFrames are caller-owned
-    * (cleaned is persisted — unpersist when done). */
-  def cleanIncremental(prevExactSurvivors: DataFrame, newDocs: DataFrame,
-                       cfg: Config = Config(),
-                       idCol: String = "doc_id", textCol: String = "text")
-      : (DataFrame, StageCounts, DataFrame) = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val nIn = newDocs.count()
-    val bounds = prevExactSurvivors.agg(max(col(idCol))).collect().head
-    val newMin = newDocs.agg(min(col(idCol))).collect().head
-    if (!bounds.isNullAt(0) && !newMin.isNullAt(0)) {
-      val ordered = (bounds.get(0), newMin.get(0)) match {
-        case (a: Number, b: Number) => a.longValue() < b.longValue()
-        case (a, b) => s"$a" < s"$b"
-      }
-      require(ordered,
-        s"append-only id discipline violated: max previous id " +
-          s"${bounds.get(0)} >= min new id ${newMin.get(0)}")
-    }
-
-    // 1. exact: keep each NEW group's min id, then drop any new doc whose
-    //    text already exists among previous exact survivors (its keeper
-    //    is the smaller previous id — exactly the full run's outcome)
-    val newKeepers = Dedup.exact(newDocs, idCol, textCol)
-      .filter(col(idCol) === col("keeper")).select(idCol)
-    val prevHashes = prevExactSurvivors
-      .select(xxhash64(col(textCol)).as("text_hash")).distinct()
-    val exact = newDocs.join(newKeepers, Seq(idCol), "left_semi")
-      .join(prevHashes,
-        xxhash64(col(textCol)) === col("text_hash"), "left_anti")
-      .persist(lvl)
-    val nExact = exact.count()
-
-    // 2. near-dup: pairs touching a new doc; the larger id of every pair
-    //    is always the new side (id discipline), matching the full run's
-    //    drop-the-larger policy
-    val pairs = IncrementalDedup.incrementalNearDupPairs(
-      prevExactSurvivors, exact, cfg.minhash, idCol, textCol)
-    val drops = pairs.select(col("id_b").as(idCol)).distinct()
-    val nearDeduped = exact.join(drops, Seq(idCol), "left_anti").persist(lvl)
-    val nNear = nearDeduped.count()
-    pairs.unpersist(blocking = false)
-
-    // 3.–6. doc-local tail, identical to clean(): each new doc is judged
-    // against the fixed benchmark set / its own text only, so the
-    // verdicts commute with the increment split and full-run
-    // equivalence is preserved
-    val (cleaned, nDecont, nRep, nQuality, nLang, nRedacted) =
-      finishStages(nearDeduped, cfg, idCol, textCol)
-    nearDeduped.unpersist(blocking = false)
-
-    (cleaned, StageCounts(nIn, nExact, nNear, nQuality, nLang,
-      nDecont, nRedacted, nRep), exact)
   }
 }
 
@@ -281,15 +212,15 @@ object CleanCorpus {
   * exact-dedup survivor ids — the handle future increments dedup
   * against) and `<output>/stats.json` (per-stage survivor counts).
   *
-  * `--previous` is the daily-append mode (CleanCorpus.cleanIncremental):
-  * ONLY --input's new docs are cleaned, against the previous run's
-  * exact-survivor corpus (reconstructed as --previous-input semi-joined
-  * with --previous/exact_survivor_ids — ids are tiny; the raw corpus
-  * stays wherever it lives). `cleaned` holds the NEW survivors only
-  * (append it to the corpus downstream); exact_survivor_ids is written
-  * CUMULATIVE, so the next increment passes this run's --output as its
-  * --previous and a path list covering all raw inputs so far as its
-  * --previous-input. New doc ids must all exceed previous ids
+  * `--previous` is the daily-append mode (CleanCorpus.clean's
+  * `previous`): ONLY --input's new docs are cleaned, against the previous
+  * run's exact-survivor corpus (reconstructed as --previous-input
+  * semi-joined with --previous/exact_survivor_ids — ids are tiny; the raw
+  * corpus stays wherever it lives). `cleaned` holds the NEW survivors
+  * only (append it to the corpus downstream); exact_survivor_ids is
+  * written CUMULATIVE, so the next increment passes this run's --output
+  * as its --previous and a path list covering all raw inputs so far as
+  * its --previous-input. New doc ids must all exceed previous ids
   * (append-only discipline, enforced).
   */
 object CleanCorpusMain {
@@ -325,32 +256,22 @@ object CleanCorpusMain {
       maxDupNgramFrac = opts.get("max-dup-ngram-frac").map(_.toDouble),
       repNgram = opts.getOrElse("rep-ngram", "2").toInt)
 
-    val counts = opts.get("previous") match {
-      case Some(prev) =>
-        // the cumulative exact_survivor_ids write below unions a LAZY scan
-        // of $prev/exact_survivor_ids (ADVICE r05)
-        Cli.requireOutputDiffers(spark, prev, out)
-        val prevIds = spark.read.parquet(s"$prev/exact_survivor_ids")
-        val prevRaw = readMulti(spark,
-          Cli.required(opts, "previous-input"))
-        val prevSurv = prevRaw.join(prevIds, Seq("doc_id"), "left_semi")
-        val (cleaned, counts, newExact) =
-          CleanCorpus.cleanIncremental(prevSurv, docs, cfg)
-        cleaned.write.mode("overwrite").parquet(s"$out/cleaned")
-        cleaned.unpersist(blocking = false)
-        prevIds.select(col("doc_id"))
-          .unionByName(newExact.select(col("doc_id")))
-          .write.mode("overwrite").parquet(s"$out/exact_survivor_ids")
-        newExact.unpersist(blocking = false)
-        counts
-      case None =>
-        val (cleaned, counts, exactIds) = CleanCorpus.clean(docs, cfg)
-        cleaned.write.mode("overwrite").parquet(s"$out/cleaned")
-        cleaned.unpersist(blocking = false)
-        exactIds.write.mode("overwrite").parquet(s"$out/exact_survivor_ids")
-        exactIds.unpersist(blocking = false)
-        counts
+    // the cumulative exact_survivor_ids write below unions a LAZY scan of
+    // $prev/exact_survivor_ids (ADVICE r05)
+    val prevIds = opts.get("previous").map { prev =>
+      Cli.requireOutputDiffers(spark, prev, out)
+      spark.read.parquet(s"$prev/exact_survivor_ids").select(col("doc_id"))
     }
+    val previous = prevIds.map(ids =>
+      readMulti(spark, Cli.required(opts, "previous-input"))
+        .join(ids, Seq("doc_id"), "left_semi"))
+    val (cleaned, counts, exactIds) =
+      CleanCorpus.clean(docs, cfg, previous = previous)
+    cleaned.write.mode("overwrite").parquet(s"$out/cleaned")
+    cleaned.unpersist(blocking = false)
+    prevIds.fold(exactIds)(_.unionByName(exactIds))
+      .write.mode("overwrite").parquet(s"$out/exact_survivor_ids")
+    exactIds.unpersist(blocking = false)
     graft.linkage.TableIO.writeFile(spark, s"$out/stats.json", counts.toJson)
     println(s"[graft] clean-corpus: ${counts.toJson}")
     counts

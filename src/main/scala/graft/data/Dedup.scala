@@ -177,15 +177,6 @@ object Dedup {
   private[graft] def bucketRows(mh: DataFrame, idCol: String): DataFrame =
     mh.select(col(idCol), posexplode(col("buckets")).as(Seq("band", "bucket")))
 
-  /** Standard k-hash MinHash signatures (id, sig) from an exploded
-    * (id, shingle) relation: sig[i] = min over the doc's shingles of
-    * xxhash64(seed, i, shingle). An adapter over the kernel for callers
-    * that hold exploded shingles; the near-dup paths sign each doc from
-    * its text ([[minHashDocs]]) and never build this relation. */
-  def minHashSignatures(exploded: DataFrame, cfg: MinHashConfig,
-                        idCol: String = "doc_id"): DataFrame =
-    collectedSignatures(exploded, cfg.copy(oph = false), idCol)
-
   /** One-permutation MinHash signatures (Li/Owen/Zhang OPH with rotation
     * densification) from an exploded (id, shingle) relation: ONE
     * xxhash64(seed, shingle) per shingle, range-binned into k bins by
@@ -194,17 +185,15 @@ object Dedup {
     * different empty-run lengths can't collide spuriously. Pair collision
     * probability is still E[agree] = Jaccard, with higher variance (and
     * correlated slots) for docs with ≪ k shingles; the exact verify keeps
-    * precision exact. Same adapter role as [[minHashSignatures]]. */
+    * precision exact. An adapter over the kernel for callers that hold
+    * exploded shingles; the near-dup paths sign each doc from its text
+    * ([[minHashDocs]]) and never build this relation. */
   def minHashSignaturesOPH(exploded: DataFrame, cfg: MinHashConfig,
                            idCol: String = "doc_id"): DataFrame =
-    collectedSignatures(exploded, cfg.copy(oph = true), idCol)
-
-  private def collectedSignatures(exploded: DataFrame, cfg: MinHashConfig,
-                                  idCol: String): DataFrame =
     exploded.groupBy(col(idCol))
       .agg(collect_list(col("shingle")).as("_shingles"))
       .select(col(idCol), gf.minhash_signature(col("_shingles"),
-        cfg.numHashes, cfg.seed, cfg.oph).as("sig"))
+        cfg.numHashes, cfg.seed, oph = true).as("sig"))
 
   /** LSH band buckets: (id, band, bucket), r = numHashes/bands slots per
     * band hashed together — a posexplode of the kernel's per-row bucket
@@ -217,12 +206,15 @@ object Dedup {
   /** Candidate pairs from shared (band, bucket), a<b, deduped. Both join
     * sides are the same projection up to alias names, so the planner
     * shuffles the bucket relation once and reuses that exchange for the
-    * other side. */
-  def lshCandidates(buckets: DataFrame,
-                    idCol: String = "doc_id"): DataFrame = {
+    * other side. With `above` (the previous corpus's largest id, see
+    * [[minHashNearDups]]) the right side keeps only the ids above it. */
+  def lshCandidates(buckets: DataFrame, idCol: String = "doc_id",
+                    above: Option[Column] = None): DataFrame = {
     def side(s: String) = buckets.select(col("band").as(s"band_$s"),
       col("bucket").as(s"bucket_$s"), col(idCol).as(s"id_$s"))
-    side("a").join(side("b"), col("band_a") === col("band_b") &&
+    val b = side("b")
+    side("a").join(above.fold(b)(m => b.filter(col("id_b") > m)),
+        col("band_a") === col("band_b") &&
         col("bucket_a") === col("bucket_b") && col("id_a") < col("id_b"))
       .select("id_a", "id_b").distinct()
   }
@@ -262,26 +254,75 @@ object Dedup {
     * is PERSISTED (a checkpointed result would dodge Dataset.unpersist
     * and the bench's clearCache); unpersist it when done. A lost result
     * block recomputes through the full deterministic lineage — slow
-    * path, never wrong. */
+    * path, never wrong.
+    *
+    * `previous` is the daily-append form (the linkage increment's
+    * analog): `docs` are the NEW docs and `previous` the corpus they
+    * join, under the append-only id rule — every new id is above every
+    * previous id ([[previousMaxId]] refuses otherwise). The kernel
+    * relation covers previous ∪ new and the cap is sized over it, as in
+    * a full run over both; the one difference is that the candidate
+    * join's right side keeps only new ids. Under the rule a pair touches
+    * a new doc exactly when its larger id is new, so the result is the
+    * full run's pairs that touch a new doc, each once: pairs among
+    * previous docs are final from the earlier run (the kernel and the
+    * verify are deterministic). One divergence from a full recompute: a
+    * (band, bucket) that crosses the cap only after an increment keeps
+    * the pairs found while it was under it — matches are never
+    * retracted. */
   def minHashNearDups(docs: DataFrame, cfg: MinHashConfig = MinHashConfig(),
                       idCol: String = "doc_id",
-                      textCol: String = "text"): DataFrame = {
-    val mh = minHashDocs(docs, cfg, idCol, textCol)
+                      textCol: String = "text",
+                      previous: Option[DataFrame] = None): DataFrame =
+    minHashNearDupsAbove(docs, previous,
+      previous.flatMap(previousMaxId(_, docs, idCol)), cfg, idCol, textCol)
+
+  /** [[minHashNearDups]] with the previous corpus's largest id already
+    * checked by [[previousMaxId]] (a caller that checks before its own
+    * first stage passes the bound on instead of aggregating twice). */
+  private[data] def minHashNearDupsAbove(docs: DataFrame,
+                                         previous: Option[DataFrame],
+                                         above: Option[Column],
+                                         cfg: MinHashConfig, idCol: String,
+                                         textCol: String): DataFrame = {
+    def narrow(df: DataFrame) = df.select(col(idCol), col(textCol))
+    val all = previous.fold(docs)(p => narrow(p).unionByName(narrow(docs)))
+    val mh = minHashDocs(all, cfg, idCol, textCol)
       .localCheckpoint(eager = !cfg.capOn)
-    val out = nearDupPairs(mh, cfg, idCol)
+    val out = nearDupPairs(mh, cfg, idCol, above)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     out.count()
     org.apache.spark.sql.graftbridge.DatasetBridge.releaseCheckpoint(mh)
     out
   }
 
-  /** Verified pairs over a per-doc (id, shingles, buckets) relation. */
+  /** The largest id of `previous`, once the append-only id rule is
+    * checked: every id of `docs` must be above it. The bounds are
+    * compared in Spark, in the ordering its aggregates and joins use
+    * (strings by UTF-8 bytes, numbers by value), so the check and the
+    * candidate filter it feeds agree. One action with one aggregate per
+    * side; None when `previous` is empty. */
+  private[data] def previousMaxId(previous: DataFrame, docs: DataFrame,
+                                  idCol: String): Option[Column] = {
+    val r = previous.agg(max(col(idCol)).as("p"))
+      .crossJoin(docs.agg(min(col(idCol)).as("n")))
+      .select(col("p"), col("n"), col("p") < col("n")).head()
+    require(r.isNullAt(2) || r.getBoolean(2),
+      s"append-only id discipline violated: max previous id ${r.get(0)} " +
+        s">= min new id ${r.get(1)}")
+    if (r.isNullAt(0)) None else Some(lit(r.get(0)))
+  }
+
+  /** Verified pairs over a per-doc (id, shingles, buckets) relation;
+    * `above` restricts the larger id of each pair (see [[lshCandidates]]). */
   private[graft] def nearDupPairs(mh: DataFrame, cfg: MinHashConfig,
-                                  idCol: String): DataFrame = {
+                                  idCol: String,
+                                  above: Option[Column] = None): DataFrame = {
     val buckets = bucketRows(mh, idCol)
     val kept = capBuckets(buckets, cfg.capRatio, cfg.minBucketCap,
       cfg.maxBucketCap, cfg.bands, "minhash-lsh").getOrElse(buckets)
-    verifyPairs(lshCandidates(kept, idCol), mh, idCol, cfg.jaccardThreshold)
+    verifyPairs(lshCandidates(kept, idCol, above), mh, idCol,
+      cfg.jaccardThreshold)
   }
 
   /** Near-duplicate GROUPS: the linkage engine's large-star/small-star

@@ -83,12 +83,10 @@ object LinkageStream {
   def linkBatch(batch: DataFrame, batchId: Long, storeDir: String,
                 cfg: Pipeline.Config = Pipeline.Config()): Boolean = {
     // the sink runs Pipeline.run for the FIRST batch and incremental for
-    // the rest — pairsFile exists only on the full-run path, and exact
-    // mode has no stream-equivalence spec yet (a trigger sequence must
-    // provably equal one exact full run), so both are refused rather than
-    // left to make matching depend on arrival batch
-    require(!cfg.exactAddresses && cfg.pairsFile.isEmpty,
-      "exactAddresses/pairsFile are unsupported in the continuous sink")
+    // the rest — pairsFile exists only on the full-run path, so it is
+    // refused rather than left to make matching depend on arrival batch
+    require(cfg.pairsFile.isEmpty,
+      "pairsFile is unsupported in the continuous sink")
     val spark = batch.sparkSession
     val st = readState(spark, storeDir)
     st.foreach { s =>

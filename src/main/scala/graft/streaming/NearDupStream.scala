@@ -46,8 +46,8 @@ import graft.linkage.expr.{functions => gf}
   *
   * The store holds ADMITTED docs only — a dropped near-dup never lands
   * in it — so it is the stream's gate state, not a signature index of
-  * the corpus: batch dedup (Dedup, IncrementalDedup) re-signs its input
-  * instead of reading it.
+  * the corpus: batch dedup (Dedup.minHashNearDups, with or without a
+  * previous corpus) re-signs its input instead of reading it.
   *
   * Delivery semantics: survivors append to the caller's out path
   * at-least-once (foreachBatch replays after a crash). The store append

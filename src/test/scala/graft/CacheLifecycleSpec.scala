@@ -69,17 +69,23 @@ class CacheLifecycleSpec extends AnyFunSuite with SparkFixture {
     val docs = (0 until 40).map(i =>
       (i.toLong, s"alpha beta gamma delta epsilon zeta eta theta doc$i"))
       .toDF("doc_id", "text")
-    spark.listenerManager.register(listener)
-    val out = try graft.data.Dedup.minHashNearDups(docs) finally {
-      org.apache.spark.graftbridge.Bus.drain(spark.sparkContext)
-      spark.listenerManager.unregister(listener)
+    // a full run, and the daily-append form over the same 40 docs
+    Seq(None, Some(docs.filter(col("doc_id") < 20))).foreach { previous =>
+      rdds.clear()
+      val next = previous.fold(docs)(_ => docs.filter(col("doc_id") >= 20))
+      spark.listenerManager.register(listener)
+      val out = try graft.data.Dedup.minHashNearDups(next,
+          previous = previous) finally {
+        org.apache.spark.graftbridge.Bus.drain(spark.sparkContext)
+        spark.listenerManager.unregister(listener)
+      }
+      // the per-doc (id, shingles, buckets) relation is the one checkpoint
+      assert(rdds.size == 1, s"checkpoints scanned: $rdds")
+      out.collect()
+      assert(persisted == 1, "exactly the returned handle stays cached")
+      out.unpersist(true)
+      assert(persisted == 0)
     }
-    // the per-doc (id, shingles, buckets) relation is the one checkpoint
-    assert(rdds.size == 1, s"checkpoints scanned: $rdds")
-    out.collect()
-    assert(persisted == 1, "exactly the returned handle stays cached")
-    out.unpersist(true)
-    assert(persisted == 0)
   }
 
   test("connectedComponents releases round state; caller owns the labels") {

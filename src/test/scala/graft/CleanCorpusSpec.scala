@@ -138,20 +138,23 @@ class CleanCorpusSpec extends AnyFunSuite with SparkFixture {
     assert(stats.contains("\"after_lang\":3"))
 
     // optional-stage flags wire through: a benchmark overlapping doc 0/1
-    // (and 6's near-dup family: none) plus --redact
+    // (and 6's near-dup family: none), the repetition ceiling and --redact
     import spark.implicits._
     Seq((100L, "over the lazy dog")).toDF("bench_id", "text")
       .write.mode("overwrite").parquet(s"$dir/bench")
     val counts2 = CleanCorpusMain.run(spark, Map(
       "input" -> s"$dir/in", "output" -> s"$dir/out2",
       "neardup-jaccard" -> "0.6", "benchmarks" -> s"$dir/bench",
-      "decont-ngram" -> "3", "redact" -> "true"))
+      "decont-ngram" -> "3", "max-dup-ngram-frac" -> "0.5",
+      "redact" -> "true"))
     assert(counts2.afterDecontaminate == Some(4L)) // doc 0 contaminated
     assert(counts2.afterLang == 2)
     assert(counts2.redactedDocs == Some(0L))
+    // every optional key, in the fixed order
     val stats2 = java.nio.file.Files.readString(
       java.nio.file.Paths.get(s"$dir/out2/stats.json"))
-    assert(stats2.contains("\"after_decontaminate\":4"))
-    assert(stats2.contains("\"redacted_docs\":0"))
+    assert(stats2 == """{"input":7,"after_exact_dedup":6,""" +
+      """"after_neardup":5,"after_decontaminate":4,"after_repetition":4,""" +
+      """"after_quality":3,"after_lang":2,"redacted_docs":0}""", stats2)
   }
 }

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.data.{CleanCorpus, Dedup, IncrementalDedup}
+import graft.data.{CleanCorpus, Dedup}
 
 /** Daily-append dedup: the CleanCorpus --previous mode must equal full
   * recomputes over the combined corpus, across TWO increments, including
@@ -51,13 +51,13 @@ class IncrementalDedupSpec extends AnyFunSuite with SparkFixture {
     // maxPlanStringLength). r06 cuts lineage at those fan-out points with
     // lazy localCheckpoints; this pins the cut so a regression trips a
     // test, not a log line.
-    val out = IncrementalDedup.incrementalNearDupPairs(d1, d2, cfg)
+    val out = Dedup.minHashNearDups(d2, cfg, previous = Some(d1))
     val len = out.queryExecution.explainString(
       org.apache.spark.sql.execution.ExplainMode.fromString("formatted")).length
     out.unpersist(blocking = false)
     assert(len < 200000,
       s"incremental verify plan re-inflated to $len chars — a fan-out " +
-        "point lost its lineage cut (IncrementalDedup localCheckpoints)")
+        "point lost its lineage cut (the minHashDocs localCheckpoint)")
   }
 
   test("incremental hot-bucket cap is sized from the combined corpus") {
@@ -65,20 +65,22 @@ class IncrementalDedupSpec extends AnyFunSuite with SparkFixture {
     // rows per bucket stays under the cap (floor lowered to 50 for test
     // scale) in either slice alone, but the combined 60 exceed it — an
     // increment that sized the cap from its own slice would admit the
-    // flood pairs a full run drops
+    // flood pairs a full run drops. The previous flood ids sit below the
+    // new slice's (append-only id rule)
     val capCfg = cfg.copy(minBucketCap = 50)
     def flood(from: Long) = spark.range(30).select(
       (col("id") + from).as("doc_id"),
       lit("flood of identical tokens repeated here").as("text"))
-    val prev = d1.unionByName(flood(5000L))
+    def isFlood(id: Long) = (id >= 500L && id < 530L) || id >= 6000L
+    val prev = d1.unionByName(flood(500L))
     val next = d2.unionByName(flood(6000L))
     def pairSet(df: org.apache.spark.sql.DataFrame) =
       df.select("id_a", "id_b").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
 
-    val inc = IncrementalDedup.incrementalNearDupPairs(prev, next, capCfg)
+    val inc = Dedup.minHashNearDups(next, capCfg, previous = Some(prev))
     val incPairs = pairSet(inc)
-    assert(!incPairs.exists { case (a, b) => a >= 5000L || b >= 5000L },
+    assert(!incPairs.exists { case (a, b) => isFlood(a) || isFlood(b) },
       s"flood pairs must be dropped by the combined-corpus cap: $incPairs")
     (0 until 10).foreach { i =>
       assert(incPairs.contains((100L + i, 1100L + i)),
@@ -130,15 +132,15 @@ class IncrementalDedupSpec extends AnyFunSuite with SparkFixture {
     val (c1, _, ids1) = CleanCorpus.clean(d1, ccfg)
     val exact1 = d1.join(ids1, Seq("doc_id"), "left_semi").localCheckpoint()
     ids1.unpersist()
-    val (c2, _, e2) = CleanCorpus.cleanIncremental(exact1, p2, ccfg)
-    val exact12 = exact1.unionByName(e2.select("doc_id", "text"))
+    val (c2, _, ids2) = CleanCorpus.clean(p2, ccfg, previous = Some(exact1))
+    val exact12 = exact1.unionByName(p2.join(ids2, Seq("doc_id"), "left_semi"))
       .localCheckpoint()
-    val (c3, _, e3) = CleanCorpus.cleanIncremental(exact12, d3, ccfg)
+    val (c3, _, ids3) = CleanCorpus.clean(d3, ccfg, previous = Some(exact12))
     val incRows = (c1.select("doc_id", "text").collect() ++
       c2.select("doc_id", "text").collect() ++
       c3.select("doc_id", "text").collect())
       .map(r => r.getLong(0) -> r.getString(1)).toMap
-    Seq(c1, c2, c3, e2, e3).foreach(_.unpersist())
+    Seq(c1, c2, c3, ids2, ids3).foreach(_.unpersist())
 
     assert(incRows.keySet == fullRows.keySet,
       s"missing=${fullRows.keySet -- incRows.keySet} " +
@@ -212,10 +214,44 @@ class IncrementalDedupSpec extends AnyFunSuite with SparkFixture {
 
     // id-discipline violation is refused loudly
     val e = intercept[IllegalArgumentException] {
-      CleanCorpus.cleanIncremental(
-        d2, Seq((1L, "way too small id")).toDF("doc_id", "text"), ccfg)
+      CleanCorpus.clean(Seq((1L, "way too small id")).toDF("doc_id", "text"),
+        ccfg, previous = Some(d2))
     }
     assert(e.getMessage.contains("append-only"))
     assert(fullCounts.input == 62) // 30 + 20 + 12
+  }
+
+  test("append-only id check orders ids as Spark does, before any stage") {
+    import spark.implicits._
+    val ccfg = CleanCorpus.Config(lang = None, minhash = cfg)
+    val text = "alpha bravo charlie delta echo foxtrot golf hotel"
+    // Spark orders strings by UTF-8 bytes: U+FF21 (EF BC A1) sorts below
+    // U+1F600 (F0 9F 98 80), while Java's UTF-16 order puts U+1F600's
+    // surrogate pair (D83D …) first — a previous "😀" and a new "Ａ"
+    // break the rule
+    val prevS = Seq(("\uD83D\uDE00", text)).toDF("doc_id", "text")
+    val newS = Seq(("\uFF21", s"$text india")).toDF("doc_id", "text")
+    spark.catalog.clearCache()
+    val cached = spark.sparkContext.getPersistentRDDs.size
+    val e = intercept[IllegalArgumentException] {
+      CleanCorpus.clean(newS, ccfg, previous = Some(prevS))
+    }
+    assert(e.getMessage.contains("append-only"), e.getMessage)
+    assert(spark.sparkContext.getPersistentRDDs.size == cached,
+      "refused after the exact stage had cached its keepers")
+    intercept[IllegalArgumentException] {
+      Dedup.minHashNearDups(newS, cfg, previous = Some(prevS))
+    }
+    // numbers compare by value: a previous 1.9 and a new 1.95 keep the
+    // rule, and the cross-increment near-dup pair is found (the larger id
+    // passes the candidate filter above 1.9) and drops the new doc
+    val prevD = Seq((1.9, text)).toDF("doc_id", "text")
+    val newD = Seq((1.95, s"$text india")).toDF("doc_id", "text")
+    val (cleaned, counts, ids) =
+      CleanCorpus.clean(newD, ccfg, previous = Some(prevD))
+    assert(ids.collect().map(_.getDouble(0)).toSeq == Seq(1.95))
+    assert(counts.afterExact == 1 && counts.afterNearDup == 0,
+      counts.toJson)
+    cleaned.unpersist(); ids.unpersist()
   }
 }

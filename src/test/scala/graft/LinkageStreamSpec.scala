@@ -13,24 +13,27 @@ class LinkageStreamSpec extends AnyFunSuite with SparkFixture {
 
   private lazy val dir = tempDir("linkstream")
 
-  test("streamed batches converge to the full-recompute clusters") {
-    import spark.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-
-    val cfg = SynthTranscripts.Config(seed = 7L, nConvs = 250)
-    val all = SynthTranscripts.transcripts(spark, cfg).cache()
-    // THREE batches split by seed-conversation so garbles often cross
-    // batch boundaries (cross-batch matches required) — and so the store
-    // walks g0 → g1 → back over g0: the third batch re-overwrites a
-    // generation this session already wrote AND read, the in-session
-    // overwrite class FileStatusCache staleness bites on
+  // THREE batches split by seed-conversation so garbles often cross batch
+  // boundaries (cross-batch matches required) — and so the store walks
+  // g0 → g1 → back over g0: the third batch re-overwrites a generation
+  // this session already wrote AND read, the in-session overwrite class
+  // FileStatusCache staleness bites on
+  private lazy val (all, t1, t2, t3) = {
+    val all = SynthTranscripts.transcripts(spark,
+      SynthTranscripts.Config(seed = 7L, nConvs = 250)).cache()
     val seedId = regexp_extract(col("conv_id"), "^(c\\d+)", 1)
     val bucket = pmod(xxhash64(seedId), lit(3))
     val t1 = all.filter(bucket === 0 || col("conv_id").contains("~")).collect()
     val t2 = all.filter(bucket === 1 && !col("conv_id").contains("~")).collect()
     val t3 = all.filter(bucket === 2 && !col("conv_id").contains("~")).collect()
     assert(t2.nonEmpty && t3.nonEmpty)
+    (all, t1, t2, t3)
+  }
+
+  test("streamed batches converge to the full-recompute clusters") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
 
     val input = MemoryStream[Turn]
     val q = LinkageStream.linkageSink(input.toDF(), s"$dir/store",
@@ -108,12 +111,30 @@ class LinkageStreamSpec extends AnyFunSuite with SparkFixture {
     val partial = fs.create(ptr.suffix(".tmp"), true)
     partial.write("""{"version":2,"gen""".getBytes("UTF-8")); partial.close()
     assert(LinkageStream.readState(spark, s"$dir/store").get == st0)
-    // full-run-only modes are refused up front (they would make matching
-    // semantics depend on arrival batch)
+    // the full-run-only pairs-file mode is refused up front (it would make
+    // matching semantics depend on arrival batch)
     intercept[IllegalArgumentException] {
       LinkageStream.linkBatch(all.toDF.limit(10), st0.batch + 101,
-        s"$dir/store", Pipeline.Config(exactAddresses = true))
+        s"$dir/store", Pipeline.Config(pairsFile = Some(s"$dir/pairs.csv")))
     }
+  }
+
+  test("exact-mode triggers converge to one exact full run") {
+    import spark.implicits._
+    val exact = Pipeline.Config(exactAddresses = true)
+    val store = s"$dir/exactstore"
+    Seq(t1, t2, t3).zipWithIndex.foreach { case (t, i) =>
+      assert(LinkageStream.linkBatch(t.toSeq.toDF(), i.toLong, store, exact))
+    }
+    val full = Pipeline.run(spark, all.toDF, exact)
+    val ca = full.clusters.select(col("cluster_id"), col("members"))
+    val cb = LinkageStream.currentClusters(spark, store)
+      .select(col("cluster_id"), col("members"))
+    assert(ca.filter(size(col("members")) > 1).count() > 0,
+      "exact mode linked nothing: the comparison would be vacuous")
+    assert(ca.exceptAll(cb).isEmpty && cb.exceptAll(ca).isEmpty,
+      s"full=${ca.count()} streamed=${cb.count()}")
+    full.unpersist()
     all.unpersist()
   }
 

@@ -264,9 +264,8 @@ class NearDupStreamSpec extends AnyFunSuite with SparkFixture {
     val allDocs = pairs.flatMap { case (i, b, e) =>
       Seq((i * 2L, b), (i * 2L + 1L, e))
     }.toDF("doc_id", "text")
-    val buckets = Dedup.lshBuckets(Dedup.minHashSignatures(
-        Dedup.explodedShingles(allDocs, "doc_id", "text", cfg.shingleSize),
-        cfg), cfg)
+    val buckets = Dedup.lshBuckets(Dedup.docSignatures(
+        allDocs, cfg.copy(oph = false), "doc_id", "text"), cfg)
       .collect().groupBy(_.getLong(0))
       .view.mapValues(_.map(r => (r.getInt(1), r.getLong(2))).toSet).toMap
     val miss = pairs.find { case (i, b, e) =>
