@@ -633,7 +633,7 @@ object Queries {
 
     // language-ID heuristic over documents (oracle: the same stopword
     // argmax with alphabetical tie-break, replicated in DuckDB);
-    // langGuessDf = codegen'd explode+agg path, not the per-row HOF form
+    // langGuessDf is a per-row projection of the codegen'd text kernel
     "q_lang_guess" -> ((s, dir) =>
       graft.data.TextAnalysis.langGuessDf(t(s, dir, "documents"))
         .select(col("doc_id"), col("lang"), col("lang_guess"))

@@ -117,16 +117,16 @@ object CleanCorpus {
 
     // doc-local tail: each doc is judged against the fixed
     // benchmark set / its own text only, so the verdicts commute with the
-    // increment split. The optional stage outputs are localCheckpoint'd,
-    // NOT persisted: each downstream stage references its input subtree
-    // 2–4× (dedup anti-join + report, repetition base + counts +
-    // semi-join, lang base + hits, redact audit), so with plain persists
-    // the LOGICAL tree multiplies ~50× across the tail — measured a
-    // 1.25 GB plan string whose mere rendering OOM'd an 8 GB driver.
-    // Their blocks are released once `cleaned` is materialized; a later
-    // lost block of `cleaned` therefore cannot recompute through the
-    // released stage — the same documented trade the near-dup sink makes.
-    // 3. benchmark decontamination (optional; benchmark grams broadcast)
+    // increment split.
+    // 3. benchmark decontamination (optional; benchmark grams broadcast).
+    //    Its output is localCheckpoint'd, NOT persisted: the report
+    //    references its input subtree twice beside the anti-join, and with
+    //    plain persists the LOGICAL tree multiplied ~50× across the old
+    //    multi-join tail (a 1.25 GB plan string whose mere rendering OOM'd
+    //    an 8 GB driver). Its blocks are released once `cleaned` is
+    //    materialized; a later lost block of `cleaned` therefore cannot
+    //    recompute through the released stage — the same documented trade
+    //    the near-dup sink makes.
     val decont = cfg.benchmarks
       .map(bench => Decontaminate.decontaminate(nearDeduped, bench,
         cfg.decontNgram, idCol = idCol, textCol = textCol,
@@ -134,53 +134,52 @@ object CleanCorpus {
         .localCheckpoint())
       .getOrElse(nearDeduped)
     val nDecont = cfg.benchmarks.map(_ => decont.count())
-    // 3b. repetition ceiling (optional, Gopher-style): drop docs whose
-    //     duplicated-n-gram character mass exceeds the threshold
+    // 4–7. repetition ceiling (optional, Gopher-style), quality floor,
+    //    language pin, PII redaction (optional): ONE narrow stage over
+    //    `decont`. One text-kernel pass per doc gives every field the
+    //    filters read (TextAnalysis.withTextFeatures: a Generate, so no
+    //    filter copies the kernel call). Each stage's survivors are
+    //    counted by an observer on the rows that reach the next filter,
+    //    and the redaction audit count in the projection that still holds
+    //    both texts; the one action that builds `cleaned` reports them all
+    val repNgram = cfg.maxDupNgramFrac.fold(0)(_ => math.max(cfg.repNgram, 1))
+    val feats = TextAnalysis.withTextFeatures(decont, textCol, repNgram)
+    def f(name: String) = col(TextAnalysis.Prefix + name)
+    val repObs = Observation()
     val repOk = cfg.maxDupNgramFrac
-      .map(t => decont.join(
-        TextAnalysis.repetitionFeatures(decont, cfg.repNgram, idCol,
-            textCol)
-          .filter(col("dup_ngram_char_frac") <= t).select(idCol),
-        Seq(idCol), "left_semi").localCheckpoint())
-      .getOrElse(decont)
-    val nRep = cfg.maxDupNgramFrac.map(_ => repOk.count())
-    // 4. quality floor (codegen'd feature projection, no shuffle)
-    val scored = TextAnalysis.qualityFeatures(repOk, textCol)
-      .filter(col("quality_score") >= cfg.minQuality)
-    // 5. language pin — langGuessDf's explode + conditional-sum plan
-    //    (codegen), NOT the per-row langGuess Column whose HOF lambdas
-    //    run interpreted (measured 3.4 s vs 0.6 s at sf0.1); in the
-    //    composed full-corpus pipeline this is the hot path. The quality
-    //    survivors are counted by an observer on langGuessDf's output
-    //    (one row per scored doc, zero-token docs included), not on
-    //    `scored`, which langGuessDf reads twice.
+      .map(t => feats.filter(f("dup_ngram_char_frac") <= t)
+        .observe(repObs, count(lit(1)).as("n")))
+      .getOrElse(feats)
+    val scored = repOk.filter(f("quality_score") >= cfg.minQuality)
     val qualityObs = Observation()
     val pinned = cfg.lang
-      .map(l => TextAnalysis.langGuessDf(scored, idCol, textCol)
-        .observe(qualityObs, count(lit(1)).as("n"))
-        .filter(col("lang_guess") === l).drop("lang_guess"))
+      .map(l => scored.observe(qualityObs, count(lit(1)).as("n"))
+        .filter(f("lang_guess") === l))
       .getOrElse(scored)
-    // 6. PII redaction in place (schema unchanged; row count unchanged);
-    //    the audit count of docs whose text the scrubber changed is
-    //    observed in the projection that still holds both texts
+    // the document columns (the id first under a language pin, as the
+    // lang stage's old join-back ordered them), then the quality features
+    val docCols = decont.columns.toSeq
+    val kept = TextAnalysis.selectFeatures(pinned,
+      if (cfg.lang.isDefined) idCol +: docCols.filterNot(_ == idCol)
+      else docCols,
+      TextAnalysis.QualityFields)
     val redactObs = Observation()
     val cleaned = (if (cfg.redactPii) {
-      val cols = pinned.columns.map(c =>
+      val cols = kept.columns.map(c =>
         if (c == textCol) col("_redacted").as(textCol) else col(c))
-      pinned.withColumn("_redacted", Redact.redactText(col(textCol)))
+      kept.withColumn("_redacted", Redact.redactText(col(textCol)))
         .observe(redactObs, coalesce(sum(when(col("_redacted") =!=
           col(textCol), 1L).otherwise(0L)), lit(0L)).as("n"))
         .select(cols: _*)
-    } else pinned).persist(lvl)
-    // one action builds `cleaned` and reports both observed counts
+    } else kept).persist(lvl)
     val nLang = cleaned.count()
     def observed(o: Observation): Long = o.get("n").asInstanceOf[Long]
+    val nRep = cfg.maxDupNgramFrac.map(_ => observed(repObs))
     val nQuality = cfg.lang.map(_ => observed(qualityObs)).getOrElse(nLang)
     val nRedacted = if (cfg.redactPii) Some(observed(redactObs)) else None
-    // release the stage checkpoints (cleaned is materialized above and
-    // every audit count is done — nothing reads them again)
+    // release the stage checkpoint (cleaned is materialized above and
+    // every audit count is done — nothing reads it again)
     import org.apache.spark.sql.graftbridge.DatasetBridge
-    cfg.maxDupNgramFrac.foreach(_ => DatasetBridge.releaseCheckpoint(repOk))
     cfg.benchmarks.foreach(_ => DatasetBridge.releaseCheckpoint(decont))
     nearDeduped.unpersist(blocking = false)
 
@@ -267,12 +266,18 @@ object CleanCorpusMain {
         .join(ids, Seq("doc_id"), "left_semi"))
     val (cleaned, counts, exactIds) =
       CleanCorpus.clean(docs, cfg, previous = previous)
-    cleaned.write.mode("overwrite").parquet(s"$out/cleaned")
+    // clean returns both handles materialized (`cleaned` by its count, the
+    // exact ids by the exact stage's count) and no output reads another,
+    // so the three are written side by side; the caches are released once
+    // every writer has returned
+    graft.linkage.Actions.together(
+      () => cleaned.write.mode("overwrite").parquet(s"$out/cleaned"),
+      () => prevIds.fold(exactIds)(_.unionByName(exactIds))
+        .write.mode("overwrite").parquet(s"$out/exact_survivor_ids"),
+      () => graft.linkage.TableIO.writeFile(spark, s"$out/stats.json",
+        counts.toJson))
     cleaned.unpersist(blocking = false)
-    prevIds.fold(exactIds)(_.unionByName(exactIds))
-      .write.mode("overwrite").parquet(s"$out/exact_survivor_ids")
     exactIds.unpersist(blocking = false)
-    graft.linkage.TableIO.writeFile(spark, s"$out/stats.json", counts.toJson)
     println(s"[graft] clean-corpus: ${counts.toJson}")
     counts
   }

@@ -31,11 +31,18 @@ object Redact {
 
   /** Text with all five PII classes replaced by their placeholders, in
     * rule order (a card never half-matches as two phones because CARD
-    * runs first; an IP inside an email is gone before the IP rule). */
+    * runs first; an IP inside an email is gone before the IP rule).
+    *
+    * Every rule needs an '@' or an ASCII digit, so a valid UTF-8 text
+    * holding neither is returned as it is, without the five regex
+    * passes. A malformed text still runs the chain, whose Java-string
+    * round trip replaces its bad bytes by U+FFFD: the output is the
+    * chain's, byte for byte. */
   def redactText(text: Column): Column =
-    rules.foldLeft(text) { case (acc, (re, tok)) =>
-      regexp_replace(acc, re, tok)
-    }
+    when(!text.rlike("[0-9@]") && is_valid_utf8(text), text)
+      .otherwise(rules.foldLeft(text) { case (acc, (re, tok)) =>
+        regexp_replace(acc, re, tok)
+      })
 
   /** Count of matches for one rule BEFORE any replacement. Counts are
     * taken on the raw text for every class independently — audit

@@ -2,11 +2,14 @@ package graft.data
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.linkage.expr.{TextKernel, functions => gf}
 
 /** Text analysis for training-data curation: language ID (stopword-profile
-  * heuristic), quality scoring, tokenization (whitespace + BPE-ish regex),
-  * and document fingerprinting. Pure Column expressions — codegen'd,
-  * shuffle-free (per-row projections).
+  * heuristic), quality scoring, repetition signals, tokenization
+  * (whitespace + BPE-ish regex), TF-IDF and document fingerprinting.
+  * Language ID, quality and repetition are per-row projections of one
+  * codegen'd kernel pass over each text (expr.TextKernel); the rest are
+  * Column expressions.
   */
 object TextAnalysis {
 
@@ -38,117 +41,61 @@ object TextAnalysis {
     filter(joined, g => g.isNotNull)
   }
 
+  // ---------- the per-document kernel ----------
+
+  /** Prefix of the kernel's columns in a [[withTextFeatures]] frame. */
+  private[graft] val Prefix = "_tf_"
+
+  /** The columns [[qualityFeatures]] adds, in order. */
+  val QualityFields: Seq[String] = Seq("n_tokens", "punct_ratio", "ttr",
+    "mean_word_len", "stopword_ratio", "quality_score")
+
+  /** `docs` plus every [[TextKernel]] field as a `_tf_<field>` column,
+    * `ngram` ≥ 1 adding the repetition signals. One Generate over
+    * `inline(array(text_features(text)))`: the kernel runs once per row,
+    * and a filter on one of its fields stays above the Generate. (Over a
+    * plain projection of the struct, filter pushdown would copy the whole
+    * kernel call into the Filter and run it twice per row.) */
+  private[graft] def withTextFeatures(docs: DataFrame, textCol: String,
+                                      ngram: Int = 0): DataFrame =
+    docs.select(col("*"),
+      inline(array(gf.text_features(col(textCol), ngram)))
+        .as(TextKernel.Schema.fieldNames.toSeq.map(Prefix + _)))
+
+  /** `cols` of a [[withTextFeatures]] frame, then the kernel `fields`
+    * under their own names; a field named like one of `cols` replaces
+    * it in place, as `withColumn` does. */
+  private[graft] def selectFeatures(feats: DataFrame, cols: Seq[String],
+                                    fields: Seq[String]): DataFrame = {
+    def named(c: String) = col("`" + c.replace("`", "``") + "`")
+    feats.select(cols.map(c =>
+      if (fields.contains(c)) col(Prefix + c).as(c) else named(c)) ++
+      fields.filterNot(cols.contains).map(f => col(Prefix + f).as(f)): _*)
+  }
+
   // ---------- language ID ----------
 
-  /** Tiny per-language stopword profiles (top function words). */
-  val stopwords: Map[String, Seq[String]] = Map(
-    "en" -> Seq("the", "a", "and", "of", "to", "in", "is", "that", "it",
-      "for"),
-    "de" -> Seq("der", "die", "das", "und", "ist", "nicht", "ein", "zu",
-      "mit", "den"),
-    "fr" -> Seq("le", "la", "les", "et", "est", "un", "une", "des", "que",
-      "pour"),
-    "es" -> Seq("el", "la", "los", "y", "es", "un", "una", "que", "de",
-      "por"))
-
-  /** Per-language hit count: |tokens ∩ stopwords(lang)| weighted by
-    * occurrence. */
-  def langHits(tokens: Column, lang: String): Column =
-    size(filter(tokens, t =>
-      t.isin(stopwords(lang).map(s => lit(s): Any): _*)))
-
-  /** DataFrame-level language ID: adds `lang_guess` with the exact
-    * [[langGuess]] semantics (argmax stopword hits, earliest-alphabetical
-    * tie-break, CJK ratio routes to "zh", no hits → "und").
-    *
-    * Plan shape for the hot path: [[langGuess]]'s per-row `filter` HOFs
-    * run interpreted (HOF lambdas are excluded from whole-stage codegen
-    * — measured 3.4 s at sf0.1); this explodes tokens and counts the four
-    * profiles as codegen'd conditional sums, shuffling only (id, 4 ints).
-    */
+  /** Adds `lang_guess`: the stopword profile with the most hits among the
+    * lowered whitespace tokens (earliest-alphabetical tie-break), "zh"
+    * first when more than half the characters are CJK ideographs, "und"
+    * (undetermined) when no profile hits. The id column comes first, then
+    * the other columns of `docs`. A per-row projection of the text
+    * kernel: no token rows, no shuffle, and each row gets its own guess
+    * whatever ids it shares. */
   def langGuessDf(docs: DataFrame, idCol: String = "doc_id",
-                  textCol: String = "text"): DataFrame = {
-    val langs = stopwords.keys.toSeq.sorted
-    val tok = lower(col("_tok"))
-    val hitSums = langs.map(l =>
-      sum(when(tok.isin(stopwords(l).map(x => x: Any): _*), 1).otherwise(0))
-        .as(s"_h_$l"))
-    val hits = docs
-      .select(col(idCol), explode(wsTokens(col(textCol))).as("_tok"))
-      .groupBy(col(idCol)).agg(hitSums.head, hitSums.tail: _*)
-    val joined = docs.join(hits, Seq(idCol), "left") // 0-token docs drop out
-    val h = langs.map(l => coalesce(col(s"_h_$l"), lit(0)))
-    // argmax with earliest-alphabetical tie-break — identical to the
-    // stable descending sort in langGuess (first among equal hits wins)
-    def wins(i: Int): Column =
-      (i + 1 until langs.size).map(j => h(i) >= h(j))
-        .reduceOption(_ && _).getOrElse(lit(true))
-    val best = (0 until langs.size - 1)
-      .foldRight(lit(langs.last): Column) { (i, acc) =>
-        when(wins(i), lit(langs(i))).otherwise(acc)
-      }
-    val cjk = length(regexp_replace(col(textCol), "[^\\u4e00-\\u9fff]", ""))
-    joined
-      .withColumn("lang_guess",
-        when(cjk * 2 > length(col(textCol)), lit("zh"))
-          .when(greatest(h: _*) > 0, best)
-          .otherwise(lit("und")))
-      .drop(langs.map(l => s"_h_$l"): _*)
-  }
-
-  /** Argmax language guess; "und" (undetermined) when no profile hits.
-    * A CJK ratio check routes ideographic text to "zh" first.
-    * Per-row Column form — convenient for single expressions; the HOFs
-    * inside run interpreted, so batch scoring should use [[langGuessDf]].
-    */
-  def langGuess(text: Column): Column = {
-    val toks = transform(wsTokens(text), t => lower(t))
-    val scored = array(stopwords.keys.toSeq.sorted.map(l =>
-      struct(langHits(toks, l).as("hits"), lit(l).as("lang"))): _*)
-    val best = element_at(array_sort(scored, (a, b) =>
-      when(a.getField("hits") > b.getField("hits"), -1)
-        .when(a.getField("hits") < b.getField("hits"), 1)
-        .otherwise(0)), 1)
-    val cjk = length(regexp_replace(text, "[^\\u4e00-\\u9fff]", ""))
-    when(cjk * 2 > length(text), lit("zh"))
-      .when(best.getField("hits") > 0, best.getField("lang"))
-      .otherwise(lit("und"))
-  }
+                  textCol: String = "text"): DataFrame =
+    selectFeatures(withTextFeatures(docs, textCol),
+      idCol +: docs.columns.toSeq.filterNot(_ == idCol), Seq("lang_guess"))
 
   // ---------- quality scoring ----------
 
   /** Heuristic quality features + a composite score in [0,1]:
     * length band, type-token ratio, punctuation ratio, mean word length
-    * band, stopword presence. */
-  def qualityFeatures(docs: DataFrame, textCol: String = "text"): DataFrame = {
-    val text = col(textCol)
-    val toks = wsTokens(text)
-    val nTok = size(toks)
-    val nChar = length(text)
-    val punct = nChar - length(regexp_replace(text, "[^A-Za-z0-9\\s]", ""))
-    val ttr = when(nTok > 0,
-      size(array_distinct(toks)).cast("double") / nTok).otherwise(0.0)
-    val meanWordLen = when(nTok > 0,
-      (nChar - (nTok - 1)).cast("double") / nTok).otherwise(0.0)
-    val stopRatio = when(nTok > 0,
-      langHits(transform(toks, lower(_)), "en").cast("double") / nTok)
-      .otherwise(0.0)
-    docs
-      .withColumn("n_tokens", nTok)
-      .withColumn("punct_ratio",
-        when(nChar > 0, punct.cast("double") / nChar).otherwise(0.0))
-      .withColumn("ttr", ttr)
-      .withColumn("mean_word_len", meanWordLen)
-      .withColumn("stopword_ratio", stopRatio)
-      .withColumn("quality_score",
-        round(
-          (when(nTok.between(10, 5000), 0.3).otherwise(0.0)) +
-          (when(col("ttr").between(0.2, 0.95), 0.25).otherwise(0.0)) +
-          (when(col("punct_ratio") < 0.2, 0.2).otherwise(0.0)) +
-          (when(col("mean_word_len").between(2.0, 12.0), 0.15)
-            .otherwise(0.0)) +
-          (when(col("stopword_ratio") > 0.02, 0.1).otherwise(0.0)), 4))
-  }
+    * band, stopword presence ([[QualityFields]], see [[TextKernel]]). A
+    * per-row projection of the text kernel. */
+  def qualityFeatures(docs: DataFrame, textCol: String = "text"): DataFrame =
+    selectFeatures(withTextFeatures(docs, textCol), docs.columns.toSeq,
+      QualityFields)
 
   /** Gopher-style repetition signals per document (the published
     * quality heuristics a boilerplate/spam filter keys on):
@@ -157,46 +104,21 @@ object TextAnalysis {
     *   - dup_ngram_char_frac: gram-character mass sitting in n-grams
     *     that occur more than once, over total gram-character mass
     *   - top_ngram / top_ngram_frac: the single most frequent n-gram
-    *     (count ties broken by lexicographically GREATEST gram — the
-    *     max of the (count, gram) struct, deterministic) and its share
-    *     of gram-character mass
+    *     (count ties broken by the lexicographically GREATEST gram,
+    *     deterministic) and its share of gram-character mass
     *
-    * Plan shape: explode word n-grams (duplicates KEPT — multiplicity
-    * is the signal) → partial-agg count per (doc, gram) → one per-doc
-    * aggregate with max_by on the (count, gram) struct. Two shuffles of
-    * small rows, everything codegen'd; fractions rounded to 6 so the
-    * cross-engine oracle can't diverge on FP division ulps. Docs with
-    * fewer than n tokens get 0 fractions and an empty top gram. */
+    * Duplicate grams are kept (multiplicity is the signal); fractions are
+    * rounded to 6 so the cross-engine oracle can't diverge on FP division
+    * ulps. Docs with fewer than n tokens get 0 fractions and an empty top
+    * gram; an n below 1 counts single words. A per-row projection of the
+    * text kernel: no gram rows, no shuffle, one row out per row in. */
   def repetitionFeatures(docs: DataFrame, n: Int = 2,
                          idCol: String = "doc_id",
                          textCol: String = "text"): DataFrame = {
-    val toks = wsTokens(col(textCol))
-    val base = docs.select(col(idCol),
-      size(toks).as("_n_tok"), size(array_distinct(toks)).as("_n_uniq"),
-      when(size(toks) >= n, wordNgrams(toks, size(toks), n))
-        .otherwise(array().cast("array<string>")).as("_grams"))
-    val gramCounts = base
-      .select(col(idCol), explode(col("_grams")).as("gram"))
-      .groupBy(col(idCol), col("gram"))
-      .agg(count(lit(1)).as("cnt"))
-    val mass = col("cnt") * length(col("gram"))
-    val perDoc = gramCounts.groupBy(col(idCol)).agg(
-      sum(mass).as("_total_mass"),
-      sum(when(col("cnt") > 1, mass).otherwise(0L)).as("_dup_mass"),
-      max_by(col("gram"), struct(col("cnt"), col("gram"))).as("top_ngram"),
-      max(struct(col("cnt"), col("gram"))).getField("cnt").as("_top_cnt"))
-    base.join(perDoc, Seq(idCol), "left")
-      .select(col(idCol),
-        round(when(col("_n_tok") > 0,
-          lit(1.0) - col("_n_uniq").cast("double") / col("_n_tok"))
-          .otherwise(0.0), 6).as("dup_word_frac"),
-        round(when(col("_total_mass") > 0,
-          col("_dup_mass").cast("double") / col("_total_mass"))
-          .otherwise(0.0), 6).as("dup_ngram_char_frac"),
-        coalesce(col("top_ngram"), lit("")).as("top_ngram"),
-        round(when(col("_total_mass") > 0,
-          (col("_top_cnt") * length(col("top_ngram"))).cast("double") /
-            col("_total_mass")).otherwise(0.0), 6).as("top_ngram_frac"))
+    val fields = Seq("dup_word_frac", "dup_ngram_char_frac", "top_ngram",
+      "top_ngram_frac")
+    withTextFeatures(docs, textCol, math.max(n, 1))
+      .select(col(idCol) +: fields.map(f => col(Prefix + f).as(f)): _*)
   }
 
   // ---------- TF-IDF ----------

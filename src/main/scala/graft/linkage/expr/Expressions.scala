@@ -588,6 +588,35 @@ case class SortedJaccardAbove(left: Expression, right: Expression,
     copy(left = newLeft, right = newRight)
 }
 
+/** One document's [[TextKernel]] features: a struct of the quality
+  * features, the four stopword-profile hits, `lang_guess` and (when
+  * `ngram` ≥ 1) the repetition signals over word `ngram`-grams, all from
+  * one pass over the text. Never null. `icuLower` is the session's
+  * `spark.sql.icu.caseMappings.enabled`, the `lower` the hits use.
+  * Callers read it through `inline(array(...))` so the kernel runs once
+  * per row: a Filter on a projected field would copy the whole call into
+  * the filter (see [[AddressDistanceAbove]]). */
+case class TextFeatures(child: Expression, ngram: Int, icuLower: Boolean)
+    extends UnaryExpression {
+  override def dataType: DataType = TextKernel.schema(ngram)
+  override def nullable: Boolean = false
+  override def prettyName: String = "text_features"
+  override def eval(input: InternalRow): Any =
+    TextKernel.features(child.eval(input).asInstanceOf[UTF8String], ngram,
+      icuLower)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val c = child.genCode(ctx)
+    ev.copy(code = code"""
+      ${c.code}
+      ${CodeGenerator.javaType(dataType)} ${ev.value} =
+        graft.linkage.expr.TextKernel.features(${c.isNull} ? null : ${c.value},
+          $ngram, $icuLower);
+      """, isNull = FalseLiteral)
+  }
+  override protected def withNewChildInternal(newChild: Expression): TextFeatures =
+    copy(child = newChild)
+}
+
 /** λ-fold blocking over CLKs (the CLK encoder itself is
   * [[ClkEncodeBlake]]). */
 object Clk {

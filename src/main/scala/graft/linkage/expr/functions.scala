@@ -2,6 +2,7 @@ package graft.linkage.expr
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.internal.SQLConf
 
 /** Column-level facade over the custom Catalyst expressions — the graft
   * analog of `org.apache.spark.sql.functions`. */
@@ -29,6 +30,10 @@ object functions {
     col_(MinHashSignature(expr_(shingles), numHashes, seed, oph))
   def lsh_bands(sig: Column, bands: Int, rows: Int): Column =
     col_(LshBands(expr_(sig), bands, rows))
+  /** [[TextFeatures]] under the session's case mapping. */
+  def text_features(text: Column, ngram: Int = 0): Column =
+    col_(TextFeatures(expr_(text), ngram,
+      SQLConf.get.getConf(SQLConf.ICU_CASE_MAPPINGS_ENABLED)))
   def sorted_jaccard_above(a: Column, b: Column, threshold: Double): Column =
     col_(SortedJaccardAbove(expr_(a), expr_(b), threshold))
   def sig_agreement(a: Column, b: Column): Column =

@@ -372,23 +372,35 @@ class DataOpsSpec extends AnyFunSuite with SparkFixture {
       (4L, "el perro es un animal y la casa es de los padres por ahora"),
       (5L, "你好 世界 这是 中文 文本 测试"),
       (6L, "zzz qqq xxx www")).toDF("doc_id", "text")
-    val out = docs.select(col("doc_id"),
-      TextAnalysis.langGuess(col("text")).as("lang")).collect()
+    // (the per-row Column form it once matched is TextKernelSpec's oracle)
+    val withEmpty = docs.unionByName(Seq((7L, "")).toDF("doc_id", "text"))
+    val out = TextAnalysis.langGuessDf(withEmpty)
+      .select(col("doc_id"), col("lang_guess")).collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(out(1L) == "en"); assert(out(2L) == "de")
     assert(out(3L) == "fr"); assert(out(4L) == "es")
     assert(out(5L) == "zh"); assert(out(6L) == "und")
-    // the codegen'd batch path agrees with the per-row form everywhere
-    // (incl. an empty doc, which has no exploded tokens at all)
-    val withEmpty = docs.unionByName(Seq((7L, "")).toDF("doc_id", "text"))
-    val batch = TextAnalysis.langGuessDf(withEmpty)
-      .select(col("doc_id"), col("lang_guess")).collect()
-      .map(r => r.getLong(0) -> r.getString(1)).toMap
-    val perRow = withEmpty.select(col("doc_id"),
-      TextAnalysis.langGuess(col("text")).as("g")).collect()
-      .map(r => r.getLong(0) -> r.getString(1)).toMap
-    assert(batch == perRow)
-    assert(batch(7L) == "und")
+    assert(out(7L) == "und")
+  }
+
+  test("rows sharing an id each get their own guess and repetition") {
+    import spark.implicits._
+    // one English and one German text under the same doc_id: per-id
+    // grouping would hand both rows the combined hits (de 6 > en 3) and
+    // the combined gram counts
+    val en = "the cat and the dog"
+    val de = "der hund und die katze und der vogel ist da"
+    val docs = Seq((1L, en), (1L, de)).toDF("doc_id", "text")
+    val guesses = TextAnalysis.langGuessDf(docs)
+      .select("text", "lang_guess").collect()
+      .map(r => r.getString(0) -> r.getString(1)).toMap
+    assert(guesses == Map(en -> "en", de -> "de"), s"$guesses")
+    val rep = TextAnalysis.repetitionFeatures(docs, n = 1)
+      .select("dup_word_frac", "top_ngram").collect()
+      .map(r => (r.getDouble(0), r.getString(1))).toSet
+    // en: "the" twice of 5 words; de: "der"/"und" twice of 10, "und" the
+    // greatest of the tied top words
+    assert(rep == Set((0.2, "the"), (0.2, "und")), s"$rep")
   }
 
   test("tokenization + quality + fingerprints") {

@@ -126,4 +126,52 @@ class DecontRedactSpec extends AnyFunSuite with SparkFixture {
       "n_email", "n_ssn", "n_card", "n_phone", "n_ip").head()
     assert((0 until 5).map(counts2.getLong) == Seq(0L, 0L, 0L, 0L, 0L))
   }
+
+  test("redaction prefilter ≡ the full rule chain, byte for byte") {
+    import spark.implicits._
+    // fragments around the prefilter's edges: non-ASCII digits (never
+    // [0-9]), '@' without a domain, \b traps (a non-ASCII letter is a
+    // \b boundary, '_' is not), and each PII class
+    val parts = Seq("mail", "bob@", "@", "a@b", "x@y.c", "@corp.org",
+      "bob.smith+x@corp.example.org", "٣٣٣-٤٥-٦٧٨٩", "１２３-４５-６７８９",
+      "²³", "123-45-6789", "a123-45-6789b", "_415-555-0199",
+      "é415-555-0199é", "4111 1111 1111 1111", "4111-1111-1111-1111x",
+      "10.0.0.1", "1.2.3.4.5", "999.1.1.1", "straße", "日本", "😀", "no",
+      "pii", "here", "7", "--", ".")
+    val seps = Seq(" ", "", "\t", "\n", ", ")
+    val rnd = new scala.util.Random(4242L)
+    def utf8(s: String) = Some(s.getBytes("UTF-8"))
+    val fixed = Seq(None, utf8(""), utf8("@"), utf8("no pii here"),
+      utf8("٣ ٤ ٥"), Some(Array[Byte]('a', 0xC3.toByte, ' ', 'b')),
+      Some(Array[Byte]('1', 0xFF.toByte, '@')))
+    val random = (0 until 600).map { _ =>
+      // half the docs draw only from fragments without [0-9@]
+      val pool = if (rnd.nextBoolean()) parts
+                 else parts.filterNot(_.exists(c => c == '@' || c.isDigit &&
+                   c < 128))
+      utf8(Seq.fill(1 + rnd.nextInt(8))(pool(rnd.nextInt(pool.size)) +
+        seps(rnd.nextInt(seps.size))).mkString)
+    }
+    val texts = (fixed ++ random).zipWithIndex.map { case (t, i) =>
+      (i.toLong, t) }
+    val docs = spark.sparkContext.parallelize(texts, 4).toDF("id", "bin")
+      .select(col("id"), col("bin").cast("string").as("text"))
+    val chain = Redact.rules.foldLeft(col("text")) { case (acc, (re, tok)) =>
+      regexp_replace(acc, re, tok)
+    }
+    val rows = docs.select(col("id"), col("text").cast("binary"),
+      Redact.redactText(col("text")).cast("binary"), chain.cast("binary"))
+      .collect()
+    assert(rows.length == texts.size)
+    rows.foreach { r =>
+      assert(java.util.Arrays.equals(r.getAs[Array[Byte]](2),
+        r.getAs[Array[Byte]](3)), s"doc ${r.getLong(0)}")
+    }
+    // both sides of the prefilter are reached: texts it returns as they
+    // are, and texts the chain rewrites
+    val unchanged = rows.count(r => r.get(1) != null &&
+      java.util.Arrays.equals(r.getAs[Array[Byte]](1), r.getAs[Array[Byte]](2)))
+    assert(unchanged > 200 && rows.length - unchanged > 100,
+      s"$unchanged of ${rows.length} unchanged")
+  }
 }

@@ -49,8 +49,9 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
   // into every use grows exponentially (a rule-grammar address tagger
   // analyzed to 27,677 nodes for one column and 2.7M once scored, ~87 s
   // to plan one row). Ceilings are ~3x the measured count (333, 372,
-  // 132, 24, 304, 21, 56, 7), so ordinary growth passes and a
-  // re-inlining blowup fails here in seconds.
+  // 132, 33, 52, 21, 56, 7), so ordinary growth passes and a
+  // re-inlining blowup fails here in seconds. The redaction ceiling
+  // stays at its 24-node sizing with the prefilter in.
   Seq[(String, () => DataFrame, Long)](
     ("Fold.fold", () => Fold.fold(transcripts), 1000L),
     ("Candidates.candidates",
@@ -61,7 +62,7 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     ("Redact.redactText",
       () => docs.select(graft.data.Redact.redactText(col("text"))), 75L),
     ("TextAnalysis.qualityFeatures",
-      () => graft.data.TextAnalysis.qualityFeatures(docs), 1000L),
+      () => graft.data.TextAnalysis.qualityFeatures(docs), 150L),
     ("Mix.sampleByDomain", () => graft.data.Mix.sampleByDomain(mixDocs,
       Map("code" -> 0.2, "forum" -> 0.05)), 65L),
     ("Mix.repeatByDomain", () => graft.data.Mix.repeatByDomain(mixDocs,
@@ -141,6 +142,67 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     val shuffles = """(?m)^[\s:|+-]*Exchange """.r.findAllIn(initialPlan).length
     info(s"$shuffles shuffle exchanges")
     assert(shuffles <= 7, s"$shuffles exchanges:\n$initialPlan")
+  }
+
+  test("text operators are per-row kernel projections: no shuffle") {
+    import graft.data.TextAnalysis
+    import graft.linkage.expr.TextFeatures
+    Seq(
+      "langGuessDf" -> TextAnalysis.langGuessDf(docs),
+      "qualityFeatures" -> TextAnalysis.qualityFeatures(docs),
+      "repetitionFeatures" -> TextAnalysis.repetitionFeatures(docs)
+    ).foreach { case (name, df) =>
+      val kernels = df.queryExecution.optimizedPlan
+        .flatMap(_.expressions.flatMap(_.collect { case t: TextFeatures => t }))
+      assert(kernels.size == 1, s"$name: ${kernels.size} text_features calls")
+      val plan = planOf(df)
+      assert(!plan.contains("Exchange"), s"$name shuffles:\n$plan")
+    }
+  }
+
+  test("clean tail plan fingerprint: one kernel pass, one narrow stage") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.expressions.Inline
+    import org.apache.spark.sql.execution.{GenerateExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import graft.data.CleanCorpus
+    import graft.linkage.expr.TextFeatures
+    val texts = spark.sparkContext.parallelize((0 until 40).map(i =>
+      (i.toLong, s"the cat $i and the dog sat on a mat in the house " +
+        s"mail user$i@example.org")), 4).toDF("doc_id", "text")
+    val (cleaned, _, ids) = CleanCorpus.clean(texts,
+      CleanCorpus.Config(lang = Some("en"), redactPii = true))
+    val cache = cleaned.queryExecution.withCachedData
+      .collectFirst { case r: InMemoryRelation => r }.get.cacheBuilder
+    // the optimized plan the cache was built from calls the kernel once
+    val logical = cache.logicalPlan
+      .flatMap(_.expressions.flatMap(_.collect { case t: TextFeatures => t }))
+    assert(logical.size == 1, s"${logical.size} text_features calls:\n" +
+      cache.logicalPlan)
+    // the executed plan from the nearDeduped cache scan up: no shuffle,
+    // no aggregate, one Generate (the kernel's inline), one kernel call
+    def tail(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => tail(a.executedPlan)
+      case s: QueryStageExec => s +: tail(s.plan)
+      case i: InMemoryTableScanExec => Seq(i)
+      case _ => p +: p.children.flatMap(tail)
+    }
+    val nodes = tail(cache.cachedPlan)
+    val shown = cache.cachedPlan.toString
+    assert(nodes.exists(_.isInstanceOf[InMemoryTableScanExec]), shown)
+    assert(!nodes.exists(p => p.isInstanceOf[Exchange] ||
+      p.isInstanceOf[BaseAggregateExec]), shown)
+    val generators = nodes.collect { case g: GenerateExec => g.generator }
+    assert(generators.size == 1 && generators.head.isInstanceOf[Inline],
+      shown)
+    val kernels = nodes.flatMap(_.expressions.flatMap(_.collect {
+      case t: TextFeatures => t }))
+    assert(kernels.size == 1, shown)
+    cleaned.unpersist()
+    ids.unpersist()
   }
 
   test("parquet scan: predicate pushdown + column pruning") {
