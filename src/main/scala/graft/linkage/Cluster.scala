@@ -51,6 +51,14 @@ object Cluster {
     * object doc for how it is sized). */
   val LocalFinishEdges: Long = 1L << 20
 
+  /** Storage of the engine's local checkpoints: CC's lazy rounds and the
+    * linkage stage outputs (Pipeline). Serialized rows, spilled to disk
+    * under memory pressure: compact for the text-heavy records, which a
+    * columnar cache would encode column by column. Fixed, not an option;
+    * the disk level is what a local checkpoint requires anyway. */
+  private[linkage] val CheckpointLevel: StorageLevel =
+    StorageLevel.MEMORY_AND_DISK_SER
+
   /** edges: (id_a, id_b), undirected, self-loop-free. The id columns may
     * be ANY orderable type whose values compare by value (every atomic
     * type but binary) — longs are the cheap default, but string conv_ids
@@ -96,7 +104,7 @@ object Cluster {
     // a resumed state is already parquet-backed; re-checkpointing it would
     // overwrite the very files being read (self-overwrite ⇒ FILE_NOT_EXIST)
     if (startIter == 0) {
-      cur = cur.localCheckpoint(eager = false)
+      cur = cur.localCheckpoint(eager = false, CheckpointLevel)
     }
     var converged = false
     var iter = startIter
@@ -268,7 +276,7 @@ object Cluster {
         // single materializing job. Truncation means a lost block is not
         // recomputable — local-mode semantics; reliable deployments pass
         // checkpointDir and get parquet-backed rounds instead.
-        df.localCheckpoint(eager = false)
+        df.localCheckpoint(eager = false, CheckpointLevel)
     }
 
   private def writeState(spark: SparkSession, dir: String, iter: Int,

@@ -211,19 +211,17 @@ object Garble {
     val fs = TableIO.fileSystem(spark, dir)
     val out = new java.util.zip.ZipOutputStream(
       fs.create(new org.apache.hadoop.fs.Path(zipPath), true))
-    val it = fs.listFiles(new org.apache.hadoop.fs.Path(dir), true)
-    while (it.hasNext) {
-      val f = it.next()
-      val name = f.getPath.getName
-      if (!name.startsWith("_") && !name.startsWith(".")) {
-        out.putNextEntry(new java.util.zip.ZipEntry(name))
-        val in = fs.open(f.getPath)
-        val buf = new Array[Byte](64 * 1024)
-        var n = in.read(buf)
-        while (n > 0) { out.write(buf, 0, n); n = in.read(buf) }
-        in.close()
-        out.closeEntry()
-      }
+    val files = TableIO.listFilesRecursive(fs,
+      new org.apache.hadoop.fs.Path(dir)).map(_.getPath)
+      .filterNot(p => p.getName.startsWith("_") || p.getName.startsWith("."))
+    files.foreach { path =>
+      out.putNextEntry(new java.util.zip.ZipEntry(path.getName))
+      val in = fs.open(path)
+      val buf = new Array[Byte](64 * 1024)
+      var n = in.read(buf)
+      while (n > 0) { out.write(buf, 0, n); n = in.read(buf) }
+      in.close()
+      out.closeEntry()
     }
     out.close()
   }

@@ -32,10 +32,11 @@ import org.apache.spark.sql.functions._
   *
   * Writes TableIO-layout tables under --output: records, matched_pairs,
   * clusters, mapping, metrics (+ household_clks, scoring files). Order:
-  * the pipeline counts its metric rows in one job beside the clusters
-  * count that materializes the cached clusters; then every output is
-  * written side by side; the run's caches are released once the last
-  * writer has returned.
+  * the pipeline builds each stage output (records, candidate pairs,
+  * scored pairs, clusters) once into a local checkpoint and counts its
+  * metric rows on those builds; then every output is written side by
+  * side from the checkpoints; they are released once the last writer has
+  * returned.
   * Cluster sizing (partitions, AQE) comes from spark-submit conf; set
   * spark.sql.adaptive.advisoryPartitionSizeInBytes low (8m) — scoring is
   * CPU-bound, not byte-bound (see BASELINE.md).
@@ -106,8 +107,9 @@ object LinkageMain {
     // costs O(new × blocked-neighborhood), not O(corpus²).
     val result = opts.get("previous") match {
       case Some(prev) =>
-        // the result's records/matched_pairs plans READ prev's tables —
-        // daily appends alternate output dirs (or snapshot generations)
+        // the result's matched_pairs plan READS prev's matched_pairs
+        // table (its records are a checkpoint) — daily appends alternate
+        // output dirs (or snapshot generations)
         Cli.requireOutputDiffers(spark, prev, out)
         val prevRecords = TableIO.read(spark, s"$prev/records")
         val prevMatches = TableIO.read(spark, s"$prev/matched_pairs")
@@ -116,17 +118,17 @@ object LinkageMain {
     }
 
     try writeOutputs(spark, opts, out, result)
-    finally result.unpersist() // release the run's internal cache handles
+    finally result.unpersist() // release the run's stage checkpoints
   }
 
   /** Every table and file of a linkage run. None of them reads another,
-    * and every cache they read is materialized by the time `result` is
-    * returned (the clusters by the metrics' clusters count), so they are
-    * written side by side ([[Actions.together]]): the four tables,
-    * mapping_csv, households_metadata.json, and the --testrun files and
-    * household CLKs when asked for. This returns, or throws the first
-    * failure, only once every writer has returned, so the caller's
-    * unpersist never races a write. */
+    * and every checkpoint they read is materialized by the time `result`
+    * is returned, so they are written side by side
+    * ([[Actions.together]]): the four tables, mapping_csv,
+    * households_metadata.json, and the --testrun files and household
+    * CLKs when asked for. This returns, or throws the first failure,
+    * only once every writer has returned, so the caller's unpersist
+    * never races a write. */
   private def writeOutputs(spark: SparkSession, opts: Map[String, String],
                            out: String, result: Pipeline.Result): Unit = {
     val metrics = result.metrics.collect()
@@ -159,7 +161,7 @@ object LinkageMain {
         .write.mode("overwrite").option("header", "true")
         .csv(s"$out/mapping_csv"),
       () => TableIO.write(result.clusters, s"$out/clusters"),
-      () => TableIO.write(result.records.drop("turns"), s"$out/records"),
+      () => TableIO.write(result.records, s"$out/records"),
       () => TableIO.write(result.matchedPairs, s"$out/matched_pairs"),
       () => TableIO.write(result.metrics, s"$out/metrics"),
       // households metadata document (households.py:370–390 analog)

@@ -1,7 +1,8 @@
 package graft.linkage
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.DatasetBridge
 
 /** End-to-end linkage pipeline (reference flagship `households.py`
   * lifecycle, SURVEY.md §3.1):
@@ -15,6 +16,13 @@ import org.apache.spark.sql.functions._
   * #k+1 cluster aggregation. Node ids inside CC are xxhash64(conv_id)
   * (collision odds n²/2⁶⁴ — negligible below ~10⁹ records; swap for a
   * 128-bit id at full 10¹² scale).
+  *
+  * Records, candidate pairs, scored pairs and clusters are each built
+  * once, as their own query, into a serialized local checkpoint
+  * ([[checkpoint]]), so no later query carries the fold's plan (or any
+  * other stage's): with persisted relations, whose plans every
+  * downstream query re-embeds, the link-dense tail rendered plans past
+  * 100k characters.
   */
 object Pipeline {
 
@@ -38,11 +46,16 @@ object Pipeline {
       maxTurns: Int = 0)
 
   case class Result(
+      /** The folded records without `turns` (the table LinkageMain
+        * writes; no stage downstream of the fold reads the turn arrays,
+        * which are only the caller's input regrouped by conversation);
+        * on an incremental run, the previous records ∪ the new ones, in
+        * the [[piiCols]] shape. */
       records: DataFrame,
       candidatePairs: DataFrame,
       matchedPairs: DataFrame,
       /** (conv_id, cluster_id), one row per record: the exploded members
-        * of the cached [[clusters]]. */
+        * of the checkpointed [[clusters]]. */
       labeledRecords: DataFrame,
       clusters: DataFrame,
       metrics: DataFrame,
@@ -53,12 +66,13 @@ object Pipeline {
         * run the delta is the result itself. */
       deltaRecords: DataFrame,
       deltaMatches: DataFrame,
-      /** Internal cache handles (records/scored/CC labels). The library
-        * persists exactly these during a run; callers release them when
-        * done with the Result's DataFrames via [[unpersist]] — the round-2
-        * API gave callers no handle and leaked them for the session. */
-      cached: Seq[DataFrame]) {
-    def unpersist(): Unit = cached.foreach(_.unpersist(false))
+      /** The stage checkpoints the run built (records, candidate pairs,
+        * scored pairs, clusters, and an incremental run's new records).
+        * Every DataFrame of the Result reads them; callers release them
+        * via [[unpersist]] once done, after which those DataFrames are
+        * unusable (a checkpoint has no lineage to recompute from). */
+      checkpoints: Seq[DataFrame]) {
+    def unpersist(): Unit = checkpoints.foreach(DatasetBridge.releaseCheckpoint)
   }
 
   /** PII record columns every stage downstream of fold actually consumes
@@ -70,27 +84,48 @@ object Pipeline {
   val piiCols: Seq[String] = Seq("conv_id", "given_name", "family_name",
     "DOB", "sex", "phone_number", "household_zip", "addr")
 
-  private val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-
   /** Blocking passes: exact mode blocks on [zip, full text]. */
   private def passes(cfg: Config): Seq[Blocking.Pass] =
     if (cfg.exactAddresses) Blocking.exactPasses else Blocking.defaultPasses
 
+  /** A stage output (records, candidate pairs, scored pairs, clusters)
+    * built once, as its own query, into an eager local checkpoint at
+    * [[Cluster.CheckpointLevel]]; returned with its row count, observed
+    * on that build. Every later query starts from the checkpoint's
+    * `LogicalRDD` leaf instead of re-embedding the plan that built it
+    * (a persisted relation's `InMemoryRelation` carries its whole plan
+    * into every query that reads it). A lost block is not recomputable:
+    * the read fails with a SparkException naming the checkpointed RDD.
+    * `drill` sees each checkpoint right after its build: a test seam for
+    * removing its blocks there, not an option. */
+  private def checkpoint(df: DataFrame,
+                         drill: DataFrame => Unit): (DataFrame, Long) = {
+    val rows = Observation()
+    val cp = df.observe(rows, count(lit(1)).as("rows"))
+      .localCheckpoint(eager = true, Cluster.CheckpointLevel)
+    drill(cp)
+    (cp, rows.get("rows").asInstanceOf[Long])
+  }
+
   def run(spark: SparkSession, transcripts: DataFrame,
-          cfg: Config = Config()): Result = {
-    val records = Fold.fold(transcripts, cfg.maxTurns).persist(lvl)
-    val nRecords = records.count() // materializes the persist
-    val pairs = cfg.pairsFile match {
+          cfg: Config = Config()): Result =
+    run(spark, transcripts, cfg, _ => ())
+
+  private[graft] def run(spark: SparkSession, transcripts: DataFrame,
+                         cfg: Config, drill: DataFrame => Unit): Result = {
+    val (records, nRecords) = checkpoint(
+      Fold.fold(transcripts, cfg.maxTurns).drop("turns"), drill)
+    val (pairs, nPairs) = checkpoint(cfg.pairsFile match {
       case Some(path) => loadPairs(spark, path)
       case None => Candidates.candidates(records, passes(cfg),
         nRecords = Some(nRecords))
-    }
-    link(spark, cfg, records, pairs, None,
-      records.select(piiCols.map(col): _*), Seq(records)) {
-      scored => Seq(
-        "records" -> records,
-        "candidate_pairs" -> pairs,
-        "scored_pairs_past_addr_prefilter" -> scored)
+    }, drill)
+    link(spark, cfg, records, pairs, nPairs, None,
+      records.select(piiCols.map(col): _*), Seq(records, pairs), drill) {
+      nScored => Seq(
+        "records" -> nRecords,
+        "candidate_pairs" -> nPairs,
+        "scored_pairs_past_addr_prefilter" -> nScored)
     }
   }
 
@@ -115,31 +150,34 @@ object Pipeline {
     }
 
   /** The linkage tail both entry points share, everything after the
-    * candidate pairs: persist them (their count and the scoring or
-    * linking read one copy), score them (exact mode and a pairs file link
-    * the candidates as they are, matching.py:333–335), union `previous`
-    * matches, CC over xxhash64(conv_id) node ids (collision odds n²/2⁶⁴)
-    * with singletons keeping their own id, and build the clusters once,
-    * each named by its min(conv_id); the labelled records are the
+    * checkpointed candidate pairs: score them into a checkpoint (exact
+    * mode and a pairs file link the candidates as they are,
+    * matching.py:333–335), union `previous` matches, CC over
+    * xxhash64(conv_id) node ids (collision odds n²/2⁶⁴) with singletons
+    * keeping their own id, and build the clusters checkpoint, each
+    * cluster named by its min(conv_id); the labelled records are the
     * clusters' exploded members.
     *
-    * Metrics, after CC: `counts` names the caller's leading metric rows,
-    * relations given the scored pairs; they and matched_pairs are counted
-    * in ONE job ([[countRows]]), over caches CC has already materialized.
-    * That job runs beside the clusters count ([[Actions.together]]),
-    * which materializes the cached clusters every output then reads. The
-    * metric rows keep their order: the caller's, matched_pairs, clusters. */
+    * Metrics: `counts` names the caller's leading metric rows, given the
+    * scored pairs' count. Every count but matched_pairs is observed on
+    * its checkpoint's build; matched_pairs, when it is not itself a
+    * checkpoint, is counted in one job beside the clusters build
+    * ([[Actions.together]]). The metric rows keep their order: the
+    * caller's, matched_pairs, clusters. */
   private def link(spark: SparkSession, cfg: Config, records: DataFrame,
-                   pairs: DataFrame, previous: Option[DataFrame],
-                   deltaRecords: DataFrame, cached: Seq[DataFrame])
-                  (counts: DataFrame => Seq[(String, DataFrame)]): Result = {
-    pairs.persist(lvl)
-    val (scored, newMatches, scoredHandle) =
-      if (cfg.pairsFile.isDefined || cfg.exactAddresses) (pairs, pairs, Nil)
-      else {
-        val sc = Scoring.scorePairs(records, pairs).persist(lvl)
-        (sc, Scoring.matches(sc), Seq(sc))
-      }
+                   pairs: DataFrame, nPairs: Long,
+                   previous: Option[DataFrame], deltaRecords: DataFrame,
+                   checkpoints: Seq[DataFrame], drill: DataFrame => Unit)
+                  (counts: Long => Seq[(String, Long)]): Result = {
+    val (scored, nScored) =
+      if (cfg.pairsFile.isDefined || cfg.exactAddresses) (pairs, nPairs)
+      // the kernel runs where the pairs stream past the broadcast
+      // attribute sides, one task per pairs partition; AQE sized the
+      // pairs build by bytes (2 tasks at link-dense scale), and scoring
+      // costs ~100x more CPU per byte, so spread the pairs over the cores
+      else checkpoint(Scoring.scorePairs(records,
+        pairs.repartition(spark.sparkContext.defaultParallelism)), drill)
+    val newMatches = if (scored eq pairs) pairs else Scoring.matches(scored)
     // no overlap to dedup across the union in practice — incremental
     // candidates always touch a new record, previous matches never do —
     // but keep the belt: a caller-supplied previousMatches overlapping
@@ -151,41 +189,24 @@ object Pipeline {
       matched.select(xxhash64(col("id_a")).as("a"),
         xxhash64(col("id_b")).as("b")), cfg.ccOptions)
     // members are sorted, so members[0] is the cluster's min(conv_id)
-    val clustersDf = Output.clusters(Cluster.labelRecords(
+    val clustersPlan = Output.clusters(Cluster.labelRecords(
         records.withColumn("node_id", xxhash64(col("conv_id"))), labels))
       .withColumn("cluster_id", col("members")(0))
-      .persist(lvl)
-    val labeled = clustersDf.select(explode(col("members")).as("conv_id"),
+    // the clusters build, the longer of the two, is submitted first;
+    // matched rides along so both actions return a (relation, count)
+    val Seq((clusters, nClusters), (_, nMatched)) = Actions.together(
+      () => checkpoint(clustersPlan, drill),
+      () => (matched, if (matched eq pairs) nPairs else matched.count()))
+    labels.unpersist(false) // the clusters checkpoint was its one reader
+    val labeled = clusters.select(explode(col("members")).as("conv_id"),
       col("cluster_id"))
 
     import spark.implicits._
-    val named = counts(scored) :+ ("matched_pairs" -> matched)
-    // the clusters build, the longer of the two, is submitted first
-    val Seq(clusters, leading) = Actions.together(
-      () => Seq("clusters" -> clustersDf.count()),
-      () => countRows(named))
-    val metrics = (leading ++ clusters).toDF("metric", "value")
-
-    Result(records, pairs, matched, labeled, clustersDf, metrics,
+    val metrics = (counts(nScored) ++ Seq("matched_pairs" -> nMatched,
+      "clusters" -> nClusters)).toDF("metric", "value")
+    Result(records, pairs, matched, labeled, clusters, metrics,
       deltaRecords, newMatches,
-      cached ++ Seq(pairs) ++ scoredHandle ++ Seq(labels, clustersDf))
-  }
-
-  /** The row count of each named relation, all in one Spark job: a
-    * global aggregate over the union of the relations, each tagged by its
-    * index and counted once however many names it carries (exact mode's
-    * candidates, scored pairs and matches are one relation). The union is
-    * coalesced to one task per core: every task deserializes the lineage
-    * of all the relations, which costs more than counting a partition. */
-  private def countRows(named: Seq[(String, DataFrame)]): Seq[(String, Long)] = {
-    val rels = named.map(_._2).distinct // by reference
-    val tagged = rels.zipWithIndex
-      .map { case (df, i) => df.select(lit(i).as("rel")) }
-      .reduce(_ union _)
-      .coalesce(rels.head.sparkSession.sparkContext.defaultParallelism)
-    val cs = rels.indices.map(i => count_if(col("rel") === i))
-    val row = tagged.agg(cs.head, cs.tail: _*).head()
-    named.map { case (name, df) => name -> row.getLong(rels.indexOf(df)) }
+      checkpoints ++ Seq(scored, clusters).filterNot(_ eq pairs))
   }
 
   /** Incremental linkage — the daily-increment path a 100-TB deployment
@@ -204,35 +225,39 @@ object Pipeline {
     * cap (a full run drops the whole block). Matches found are never
     * retracted, which is the behavior an append-only deployment wants.
     *
-    * `existingRecords` is the previous run's folded records from either
-    * documented source — Result.records (still carrying turns +
-    * timestamp ts_min/ts_max) or the records table LinkageMain writes (no
-    * turns, read back with TableIO.read, as `--previous` does); both
-    * sides are projected to the common [[piiCols]] schema before the
-    * union, so the source shapes interoperate.
+    * `existingRecords` is the previous run's folded records in any shape
+    * that carries the [[piiCols]]: Result.records, the records table
+    * LinkageMain writes (read back with TableIO.read, as `--previous`
+    * does), or a stream's records log; it is projected to [[piiCols]]
+    * before the union, so the shapes interoperate.
     * `previousMatches` is the previous run's matched pairs. */
   def incremental(spark: SparkSession, existingRecords: DataFrame,
                   previousMatches: DataFrame, newTranscripts: DataFrame,
-                  cfg: Config = Config()): Result = {
+                  cfg: Config = Config()): Result =
+    incremental(spark, existingRecords, previousMatches, newTranscripts,
+      cfg, _ => ())
+
+  private[graft] def incremental(spark: SparkSession,
+                                 existingRecords: DataFrame,
+                                 previousMatches: DataFrame,
+                                 newTranscripts: DataFrame, cfg: Config,
+                                 drill: DataFrame => Unit): Result = {
     require(cfg.pairsFile.isEmpty,
       "pairsFile is a full-run-only mode: the incremental path does not " +
         "bypass blocking")
-    val newRecords = Fold.fold(newTranscripts, cfg.maxTurns)
-      .select(piiCols.map(col): _*)
-      .persist(lvl)
-    val all = existingRecords.select(piiCols.map(col): _*)
-      .unionByName(newRecords)
-      .persist(lvl)
-
-    val nAll = all.count() // materializes both persists
-    val pairs = Candidates.incrementalCandidates(all, nAll, newRecords,
-      passes(cfg))
-    link(spark, cfg, all, pairs, Some(previousMatches), newRecords,
-      Seq(newRecords, all)) {
+    val (newRecords, nNew) = checkpoint(
+      Fold.fold(newTranscripts, cfg.maxTurns).select(piiCols.map(col): _*),
+      drill)
+    val (all, nAll) = checkpoint(existingRecords.select(piiCols.map(col): _*)
+      .unionByName(newRecords), drill)
+    val (pairs, nPairs) = checkpoint(Candidates.incrementalCandidates(all,
+      nAll, newRecords, passes(cfg)), drill)
+    link(spark, cfg, all, pairs, nPairs, Some(previousMatches), newRecords,
+      Seq(newRecords, all, pairs), drill) {
       _ => Seq(
-        "new_records" -> newRecords,
-        "records" -> all,
-        "incremental_candidate_pairs" -> pairs)
+        "new_records" -> nNew,
+        "records" -> nAll,
+        "incremental_candidate_pairs" -> nPairs)
     }
   }
 

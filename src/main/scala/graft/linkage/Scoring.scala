@@ -36,7 +36,10 @@ object Scoring {
     // so the fat attribute side streams in place for the a-side join; the
     // b-side join then shuffles the joined rows once. Do NOT pre-shuffle
     // attrs here — measured slower: it forces an exchange of the wide
-    // structs that the broadcast plan avoids entirely.
+    // structs that the broadcast plan avoids entirely. Over Pipeline's
+    // checkpointed inputs the planner broadcasts both attribute sides
+    // instead while they are small (link-dense: 5.4k records), and the
+    // pairs stream in place (Pipeline.link spreads them over the cores).
     val attrs = records.select(
       col("conv_id"), col("family_name"), col("phone_number"), col("addr"))
     val a = attrs.toDF(attrs.columns.map("a_" + _): _*)

@@ -2,7 +2,7 @@ package graft.linkage
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.ObjectNode
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.DatasetBridge
@@ -77,16 +77,20 @@ object TableIO {
       }.asJava))
   }
 
-  private def listParquet(fs: FileSystem, dir: Path): Seq[(String, Long)] = {
-    val it = fs.listFiles(dir, true)
-    val buf = Seq.newBuilder[(String, Long)]
-    while (it.hasNext) {
-      val f = it.next()
-      if (f.getPath.getName.endsWith(".parquet"))
-        buf += ((f.getPath.toString, f.getLen))
-    }
-    buf.result()
-  }
+  private def listParquet(fs: FileSystem, dir: Path): Seq[(String, Long)] =
+    listFilesRecursive(fs, dir)
+      .filter(_.getPath.getName.endsWith(".parquet"))
+      .map(f => (f.getPath.toString, f.getLen))
+
+  /** Every file under `dir`, depth first in listing order: the files and
+    * order `fs.listFiles(dir, true)` yields, through plain `listStatus`
+    * calls. `listFiles` wraps each file in a LocatedFileStatus, which on
+    * the local file system without Hadoop native IO forks `ls -ld` per
+    * file to read its permissions. */
+  private[graft] def listFilesRecursive(fs: FileSystem,
+                                        dir: Path): Seq[FileStatus] =
+    fs.listStatus(dir).toSeq.flatMap(s =>
+      if (s.isDirectory) listFilesRecursive(fs, s.getPath) else Seq(s))
 
   // ---------- small state files ----------
 

@@ -117,10 +117,10 @@ object LinkageStream {
       .parquet(s"$storeDir/records_log/batch=$batchId")
     result.deltaMatches.write.mode("overwrite")
       .parquet(s"$storeDir/matches_log/batch=$batchId")
-    // the clusters are written from their cache BEFORE the refresh: the
-    // cached plan reads records_log, and refreshByPath drops every cache
-    // whose plan reads the path, so a write after it would rebuild the
-    // clusters from lineage, an O(corpus) step on every trigger
+    // the clusters are written from their stage checkpoint, which has no
+    // plan behind it: the refreshes below drop only CacheManager entries
+    // whose plans read the logs, so they cannot send this write (or any
+    // later read of the result) back through the O(corpus) lineage
     TableIO.write(result.clusters, s"$storeDir/g$nextGen/clusters")
     // new partition dirs dodge the self-overwrite class, but the session
     // FileStatusCache may still hold the roots' pre-append listings

@@ -50,7 +50,7 @@ class IncrementalSpec extends AnyFunSuite with SparkFixture {
 
   test("every documented existingRecords shape feeds incremental") {
     // ADVICE r02: round 2 only worked when existingRecords came from
-    // Result.records (which still carries turns + timestamp ts_min/
+    // Result.records (which then still carried turns + timestamp ts_min/
     // ts_max); the written records table (no turns) and a day-string-ts
     // record shape threw AnalysisException in the strict unionByName.
     // incremental now projects both sides to the common piiCols schema
@@ -65,20 +65,19 @@ class IncrementalSpec extends AnyFunSuite with SparkFixture {
       .labeledRecords.select("conv_id", "cluster_id")
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
 
-    // shape 1: the records table LinkageMain writes (without turns), read
-    // back as --previous reads it
+    // shape 1: the records table LinkageMain writes (Result.records as
+    // it is, without turns), read back as --previous reads it
     val dir = tempDir("incshape")
-    TableIO.write(first.records.drop("turns"), s"$dir/records")
+    TableIO.write(first.records, s"$dir/records")
     val fromTable = Pipeline.incremental(spark,
       TableIO.read(spark, s"$dir/records"), first.matchedPairs, t2)
       .labeledRecords.select("conv_id", "cluster_id")
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(fromTable == expected)
 
-    // shape 2: no turns and day-string ts_min/ts_max — the piiCols
-    // projection drops both differences before the union
+    // shape 2: day-string ts_min/ts_max — the piiCols projection drops
+    // the difference before the union
     val streamShaped = first.records
-      .drop("turns")
       .withColumn("ts_min", date_format(col("ts_min"), "yyyy-MM-dd"))
       .withColumn("ts_max", date_format(col("ts_max"), "yyyy-MM-dd"))
     val fromStream = Pipeline.incremental(spark,

@@ -6,9 +6,10 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.linkage._
 
-/** The linkage tail after CC: the metric counts merged into one job, run
-  * beside the clusters count, and LinkageMain's outputs written side by
-  * side through [[Actions.together]]. */
+/** The linkage tail after CC: the metric counts observed on the stage
+  * checkpoint builds (matched_pairs counted beside the clusters build),
+  * and LinkageMain's outputs written side by side through
+  * [[Actions.together]]. */
 class LinkageTailSpec extends AnyFunSuite with SparkFixture {
 
   private val synth = SynthTranscripts.Config(seed = 5L, nConvs = 150)

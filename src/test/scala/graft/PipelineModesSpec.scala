@@ -161,11 +161,14 @@ class PipelineModesSpec extends AnyFunSuite with SparkFixture {
   test("household CLK i and mapping_csv row i belong to --testrun position i") {
     val out = tempDir("hhclks")
     val secret = "0123456789abcdef0123456789abcdef"
-    LinkageMain.run(spark, Map("synthetic" -> "300", "output" -> out,
+    // 10k conversations: AQE sizes the clusters build by bytes, and below
+    // about 1 MB of shuffled clusters (5k conversations) it writes one
+    // file, which would leave the order under test unexercised
+    LinkageMain.run(spark, Map("synthetic" -> "10000", "output" -> out,
       "testrun" -> "true", "secret" -> secret))
     val clusters = TableIO.read(spark, s"$out/clusters")
-    // the cached clusters span several partitions: their hash order is
-    // not the cluster_id order the positions follow
+    // the clusters span several partitions: their hash order is not the
+    // cluster_id order the positions follow
     assert(clusters.inputFiles.length > 1)
     val clkOf = Garble.householdClks(clusters, secret)
       .select(col("cluster_id"), base64(col("clk"))).collect()
@@ -205,24 +208,35 @@ class PipelineModesSpec extends AnyFunSuite with SparkFixture {
         java.sql.Timestamp.valueOf("2026-01-02 00:00:00"))))
     val t = (mega ++ normal)
       .toDF("conv_id", "turn_idx", "role", "text", "tool", "ts")
-    val bounded = Pipeline.run(spark, t, Pipeline.Config(maxTurns = 20))
-    val megaRec = bounded.records.filter(col("conv_id") === "mega")
-      .select(size(col("turns"))).head().getInt(0)
-    assert(megaRec == 20, s"fold buffer not bounded: $megaRec turns kept")
+    val isMega = col("conv_id") === "mega"
+    val folded = Fold.fold(t, 20)
     // truncation is deterministic: the LOWEST turn_idx rows survive
-    val kept = bounded.records.filter(col("conv_id") === "mega")
+    val kept = folded.filter(isMega)
       .select(transform(col("turns"), x => x.getField("turn_idx")))
       .head().getSeq[Int](0)
     assert(kept == (0 until 20), s"unexpected truncation window: $kept")
-    // documented invariant breakage: the truncated record's full-text
-    // derivation no longer equals the unbounded fold's
-    val full = Pipeline.run(spark, t, Pipeline.Config())
-    val fullMega = full.records.filter(col("conv_id") === "mega")
+    val fullMega = Fold.fold(t).filter(isMega)
       .select(size(col("turns"))).head().getInt(0)
     assert(fullMega == 50000)
     // normal conversations are untouched by the guard
-    assert(bounded.records.filter(col("conv_id") =!= "mega")
+    assert(folded.filter(!isMega)
       .select(size(col("turns"))).collect().forall(_.getInt(0) == 4))
+
+    // the pipeline's records are that bounded fold: the mega record's
+    // derived columns are Fold.fold(t, 20)'s and — the documented
+    // invariant breakage — differ from the unbounded run's
+    val bounded = Pipeline.run(spark, t, Pipeline.Config(maxTurns = 20))
+    val full = Pipeline.run(spark, t, Pipeline.Config())
+    val derived = bounded.records.columns.map(col).toSeq
+    def megaOf(records: org.apache.spark.sql.DataFrame) =
+      records.filter(isMega).select(derived: _*).head()
+    assert(megaOf(bounded.records) == megaOf(folded))
+    assert(megaOf(full.records) == megaOf(Fold.fold(t)))
+    assert(megaOf(bounded.records) != megaOf(full.records))
+    val normalBounded = bounded.records.filter(!isMega).select(derived: _*)
+    val normalFull = full.records.filter(!isMega).select(derived: _*)
+    assert(normalBounded.exceptAll(normalFull).isEmpty &&
+      normalFull.exceptAll(normalBounded).isEmpty)
     bounded.unpersist(); full.unpersist()
   }
 

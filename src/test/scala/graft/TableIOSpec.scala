@@ -25,6 +25,18 @@ class TableIOSpec extends AnyFunSuite with SparkFixture {
       assert(snap.get("num_files").asLong ==
         parquetFiles(new java.io.File(s"$path/data")), s"$path: $snap")
       assert(snap.get("files").size == snap.get("num_files").asInt)
+      // the listing walk records exactly what Hadoop's recursive
+      // listFiles yields, in its order, partition directories included
+      val it = TableIO.fileSystem(spark, path)
+        .listFiles(new org.apache.hadoop.fs.Path(s"$path/data"), true)
+      val listed = Iterator.continually(it).takeWhile(_.hasNext)
+        .map(_.next()).filter(_.getPath.getName.endsWith(".parquet"))
+        .map(f => (f.getPath.toString, f.getLen)).toSeq
+      val recorded = (0 until snap.get("files").size).map { i =>
+        val f = snap.get("files").get(i)
+        (f.get("path").asText, f.get("bytes").asLong)
+      }
+      assert(recorded == listed, s"$path: $snap")
     }
     TableIO.write(rows, s"$base/plain")
     check(s"$base/plain", 500)
