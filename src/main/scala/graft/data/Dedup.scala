@@ -78,8 +78,8 @@ object Dedup {
         * slice) otherwise makes one join partition quadratic. The trade
         * is RECALL: pairs living only in a capped bucket are never
         * verified, so every drop is logged loudly (never silent).
-        * capRatio >= 1.0 disables the cap (reconcile audits run uncapped
-        * by design).
+        * capRatio >= 1.0 disables the cap. The streaming gate
+        * (NearDupStream) never caps: its join is batch × bucket.
         *
         * The FLOOR keeps the ratio term from firing on small corpora,
         * where a bucket holding a few percent of the docs is a genuine
@@ -165,13 +165,6 @@ object Dedup {
       .select(col(idCol), col("shingles"),
         bandBuckets(gf.minhash_signature(col("shingles"), cfg.numHashes,
           cfg.seed, cfg.oph), cfg).as("buckets"))
-
-  /** (id, sig) per doc straight from the text. */
-  private[graft] def docSignatures(docs: DataFrame, cfg: MinHashConfig,
-                                   idCol: String, textCol: String): DataFrame =
-    docs.select(col(idCol), gf.minhash_signature(
-      gf.minhash_shingles(col(textCol), cfg.shingleSize), cfg.numHashes,
-      cfg.seed, cfg.oph).as("sig"))
 
   /** (id, band, bucket) rows of a per-doc bucket-array relation. */
   private[graft] def bucketRows(mh: DataFrame, idCol: String): DataFrame =

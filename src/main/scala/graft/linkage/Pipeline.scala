@@ -1,5 +1,6 @@
 package graft.linkage
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.DatasetBridge
@@ -19,7 +20,7 @@ import org.apache.spark.sql.graftbridge.DatasetBridge
   *
   * Records, candidate pairs, scored pairs and clusters are each built
   * once, as their own query, into a serialized local checkpoint
-  * ([[checkpoint]]), so no later query carries the fold's plan (or any
+  * ([[Stages.checkpoint]]), so no later query carries the fold's plan (or any
   * other stage's): with persisted relations, whose plans every
   * downstream query re-embeds, the link-dense tail rendered plans past
   * 100k characters.
@@ -70,9 +71,10 @@ object Pipeline {
         * scored pairs, clusters, and an incremental run's new records).
         * Every DataFrame of the Result reads them; callers release them
         * via [[unpersist]] once done, after which those DataFrames are
-        * unusable (a checkpoint has no lineage to recompute from). */
-      checkpoints: Seq[DataFrame]) {
-    def unpersist(): Unit = checkpoints.foreach(DatasetBridge.releaseCheckpoint)
+        * unusable (a checkpoint has no lineage to recompute from). A run
+        * that fails releases them itself before the failure propagates. */
+      checkpoints: Seq[RDD[_]]) {
+    def unpersist(): Unit = checkpoints.foreach(_.unpersist(blocking = false))
   }
 
   /** PII record columns every stage downstream of fold actually consumes
@@ -88,23 +90,43 @@ object Pipeline {
   private def passes(cfg: Config): Seq[Blocking.Pass] =
     if (cfg.exactAddresses) Blocking.exactPasses else Blocking.defaultPasses
 
-  /** A stage output (records, candidate pairs, scored pairs, clusters)
-    * built once, as its own query, into an eager local checkpoint at
-    * [[Cluster.CheckpointLevel]]; returned with its row count, observed
-    * on that build. Every later query starts from the checkpoint's
-    * `LogicalRDD` leaf instead of re-embedding the plan that built it
-    * (a persisted relation's `InMemoryRelation` carries its whole plan
-    * into every query that reads it). A lost block is not recomputable:
-    * the read fails with a SparkException naming the checkpointed RDD.
-    * `drill` sees each checkpoint right after its build: a test seam for
-    * removing its blocks there, not an option. */
-  private def checkpoint(df: DataFrame,
-                         drill: DataFrame => Unit): (DataFrame, Long) = {
-    val rows = Observation()
-    val cp = df.observe(rows, count(lit(1)).as("rows"))
-      .localCheckpoint(eager = true, Cluster.CheckpointLevel)
-    drill(cp)
-    (cp, rows.get("rows").asInstanceOf[Long])
+  /** The stage checkpoints of one run, in build order. A run's body
+    * goes through [[releasingOnFailure]]: if it throws, every checkpoint
+    * built so far (the one whose build failed included) is released
+    * before the failure propagates, since no Result carries them to the
+    * caller's unpersist. `drill` sees each checkpoint right after its
+    * build: a test seam for removing its blocks there, not an option. */
+  private final class Stages(drill: DataFrame => Unit) {
+    private val built = new java.util.concurrent.ConcurrentLinkedQueue[RDD[_]]
+
+    def all: Seq[RDD[_]] = built.toArray(Array.empty[RDD[_]]).toSeq
+
+    /** A stage output (records, candidate pairs, scored pairs, clusters)
+      * built once, as its own query, into an eager local checkpoint at
+      * [[Cluster.CheckpointLevel]]; returned with its row count, observed
+      * on that build. Every later query starts from the checkpoint's
+      * `LogicalRDD` leaf instead of re-embedding the plan that built it
+      * (a persisted relation's `InMemoryRelation` carries its whole plan
+      * into every query that reads it). A lost block is not recomputable:
+      * the read fails with a SparkException naming the checkpointed RDD.
+      * The backing RDD is recorded before the build job runs, so a failed
+      * build's blocks are released too. */
+    def checkpoint(df: DataFrame): (DataFrame, Long) = {
+      val rows = Observation()
+      val cp = DatasetBridge.localCheckpoint(
+        df.observe(rows, count(lit(1)).as("rows")), Cluster.CheckpointLevel,
+        built.add)
+      drill(cp)
+      (cp, rows.get("rows").asInstanceOf[Long])
+    }
+
+    def releasingOnFailure[A](body: => A): A =
+      try body
+      catch {
+        case t: Throwable =>
+          all.foreach(_.unpersist(blocking = false))
+          throw t
+      }
   }
 
   def run(spark: SparkSession, transcripts: DataFrame,
@@ -113,19 +135,22 @@ object Pipeline {
 
   private[graft] def run(spark: SparkSession, transcripts: DataFrame,
                          cfg: Config, drill: DataFrame => Unit): Result = {
-    val (records, nRecords) = checkpoint(
-      Fold.fold(transcripts, cfg.maxTurns).drop("turns"), drill)
-    val (pairs, nPairs) = checkpoint(cfg.pairsFile match {
-      case Some(path) => loadPairs(spark, path)
-      case None => Candidates.candidates(records, passes(cfg),
-        nRecords = Some(nRecords))
-    }, drill)
-    link(spark, cfg, records, pairs, nPairs, None,
-      records.select(piiCols.map(col): _*), Seq(records, pairs), drill) {
-      nScored => Seq(
-        "records" -> nRecords,
-        "candidate_pairs" -> nPairs,
-        "scored_pairs_past_addr_prefilter" -> nScored)
+    val stages = new Stages(drill)
+    stages.releasingOnFailure {
+      val (records, nRecords) = stages.checkpoint(
+        Fold.fold(transcripts, cfg.maxTurns).drop("turns"))
+      val (pairs, nPairs) = stages.checkpoint(cfg.pairsFile match {
+        case Some(path) => loadPairs(spark, path)
+        case None => Candidates.candidates(records, passes(cfg),
+          nRecords = Some(nRecords))
+      })
+      link(spark, cfg, records, pairs, nPairs, None,
+        records.select(piiCols.map(col): _*), stages) {
+        nScored => Seq(
+          "records" -> nRecords,
+          "candidate_pairs" -> nPairs,
+          "scored_pairs_past_addr_prefilter" -> nScored)
+      }
     }
   }
 
@@ -167,7 +192,7 @@ object Pipeline {
   private def link(spark: SparkSession, cfg: Config, records: DataFrame,
                    pairs: DataFrame, nPairs: Long,
                    previous: Option[DataFrame], deltaRecords: DataFrame,
-                   checkpoints: Seq[DataFrame], drill: DataFrame => Unit)
+                   stages: Stages)
                   (counts: Long => Seq[(String, Long)]): Result = {
     val (scored, nScored) =
       if (cfg.pairsFile.isDefined || cfg.exactAddresses) (pairs, nPairs)
@@ -175,8 +200,8 @@ object Pipeline {
       // attribute sides, one task per pairs partition; AQE sized the
       // pairs build by bytes (2 tasks at link-dense scale), and scoring
       // costs ~100x more CPU per byte, so spread the pairs over the cores
-      else checkpoint(Scoring.scorePairs(records,
-        pairs.repartition(spark.sparkContext.defaultParallelism)), drill)
+      else stages.checkpoint(Scoring.scorePairs(records,
+        pairs.repartition(spark.sparkContext.defaultParallelism)))
     val newMatches = if (scored eq pairs) pairs else Scoring.matches(scored)
     // no overlap to dedup across the union in practice — incremental
     // candidates always touch a new record, previous matches never do —
@@ -193,11 +218,14 @@ object Pipeline {
         records.withColumn("node_id", xxhash64(col("conv_id"))), labels))
       .withColumn("cluster_id", col("members")(0))
     // the clusters build, the longer of the two, is submitted first;
-    // matched rides along so both actions return a (relation, count)
-    val Seq((clusters, nClusters), (_, nMatched)) = Actions.together(
-      () => checkpoint(clustersPlan, drill),
-      () => (matched, if (matched eq pairs) nPairs else matched.count()))
-    labels.unpersist(false) // the clusters checkpoint was its one reader
+    // matched rides along so both actions return a (relation, count).
+    // The clusters checkpoint is the labels' one reader, so they go
+    // once it is built, or once the build has failed.
+    val Seq((clusters, nClusters), (_, nMatched)) =
+      try Actions.together(
+        () => stages.checkpoint(clustersPlan),
+        () => (matched, if (matched eq pairs) nPairs else matched.count()))
+      finally labels.unpersist(false)
     val labeled = clusters.select(explode(col("members")).as("conv_id"),
       col("cluster_id"))
 
@@ -205,8 +233,7 @@ object Pipeline {
     val metrics = (counts(nScored) ++ Seq("matched_pairs" -> nMatched,
       "clusters" -> nClusters)).toDF("metric", "value")
     Result(records, pairs, matched, labeled, clusters, metrics,
-      deltaRecords, newMatches,
-      checkpoints ++ Seq(scored, clusters).filterNot(_ eq pairs))
+      deltaRecords, newMatches, stages.all)
   }
 
   /** Incremental linkage — the daily-increment path a 100-TB deployment
@@ -245,19 +272,21 @@ object Pipeline {
     require(cfg.pairsFile.isEmpty,
       "pairsFile is a full-run-only mode: the incremental path does not " +
         "bypass blocking")
-    val (newRecords, nNew) = checkpoint(
-      Fold.fold(newTranscripts, cfg.maxTurns).select(piiCols.map(col): _*),
-      drill)
-    val (all, nAll) = checkpoint(existingRecords.select(piiCols.map(col): _*)
-      .unionByName(newRecords), drill)
-    val (pairs, nPairs) = checkpoint(Candidates.incrementalCandidates(all,
-      nAll, newRecords, passes(cfg)), drill)
-    link(spark, cfg, all, pairs, nPairs, Some(previousMatches), newRecords,
-      Seq(newRecords, all, pairs), drill) {
-      _ => Seq(
-        "new_records" -> nNew,
-        "records" -> nAll,
-        "incremental_candidate_pairs" -> nPairs)
+    val stages = new Stages(drill)
+    stages.releasingOnFailure {
+      val (newRecords, nNew) = stages.checkpoint(
+        Fold.fold(newTranscripts, cfg.maxTurns).select(piiCols.map(col): _*))
+      val (all, nAll) = stages.checkpoint(
+        existingRecords.select(piiCols.map(col): _*).unionByName(newRecords))
+      val (pairs, nPairs) = stages.checkpoint(
+        Candidates.incrementalCandidates(all, nAll, newRecords, passes(cfg)))
+      link(spark, cfg, all, pairs, nPairs, Some(previousMatches), newRecords,
+        stages) {
+        _ => Seq(
+          "new_records" -> nNew,
+          "records" -> nAll,
+          "incremental_candidate_pairs" -> nPairs)
+      }
     }
   }
 

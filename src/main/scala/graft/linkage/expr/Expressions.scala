@@ -313,23 +313,6 @@ object VecOps {
     }
     d
   }
-
-  /** Count of equal slots between two long-array signatures (the
-    * MinHash estimated-Jaccard numerator). Length mismatch: unmatched
-    * slots of the longer array count as disagreement, matching the
-    * null-padded zip_with form this replaces. */
-  def sigAgreement(a: org.apache.spark.sql.catalyst.util.ArrayData,
-                   b: org.apache.spark.sql.catalyst.util.ArrayData): Int = {
-    val n = math.min(a.numElements(), b.numElements())
-    var s = 0
-    var i = 0
-    while (i < n) {
-      if (!a.isNullAt(i) && !b.isNullAt(i) && a.getLong(i) == b.getLong(i))
-        s += 1
-      i += 1
-    }
-    s
-  }
 }
 
 /** Codegen'd dot product over array<float|double> columns — the shared
@@ -490,26 +473,6 @@ case class PqAdcExpr(left: Expression, right: Expression, k: Int)
       s"graft.linkage.expr.VecOps.pqAdc($a, $b, $k)")
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): PqAdcExpr =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Count of agreeing slots between two array<long> MinHash signatures —
-  * the estimated-Jaccard numerator (agreement / k). Replaces the
-  * interpreted aggregate(zip_with(..)) form in the streaming near-dup
-  * gate (HOF lambdas are excluded from whole-stage codegen). */
-case class SigAgreement(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = org.apache.spark.sql.types.IntegerType
-  override def prettyName: String = "sig_agreement"
-  override protected def nullSafeEval(l: Any, r: Any): Any =
-    VecOps.sigAgreement(
-      l.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      r.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.linkage.expr.VecOps.sigAgreement($a, $b)")
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): SigAgreement =
     copy(left = newLeft, right = newRight)
 }
 

@@ -36,8 +36,6 @@ object functions {
       SQLConf.get.getConf(SQLConf.ICU_CASE_MAPPINGS_ENABLED)))
   def sorted_jaccard_above(a: Column, b: Column, threshold: Double): Column =
     col_(SortedJaccardAbove(expr_(a), expr_(b), threshold))
-  def sig_agreement(a: Column, b: Column): Column =
-    col_(SigAgreement(expr_(a), expr_(b)))
   def pq_encode(emb: Column, codebooks: Array[Array[Array[Double]]]): Column =
     col_(PqEncodeExpr(expr_(emb), codebooks))
   def pq_lut(emb: Column, codebooks: Array[Array[Array[Double]]]): Column =

@@ -1,8 +1,9 @@
 package org.apache.spark.sql.graftbridge
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.{DataFrame, Row, classic}
+import org.apache.spark.sql.execution.{LogicalRDD, QueryExecution, SQLExecution}
+import org.apache.spark.storage.StorageLevel
 
 /** Dataset internals bridge (Spark 4 classic implementation).
   *
@@ -32,4 +33,27 @@ object DatasetBridge {
     * plan-backed DataFrames (e.g. parquet-backed checkpoint rounds). */
   def releaseCheckpoint(df: DataFrame): Unit =
     backingRdd(df).foreach(_.unpersist(blocking = false))
+
+  /** `df.localCheckpoint(eager = true, level)`, as Spark builds it (one
+    * SQL execution whose job fills the checkpoint), except that the
+    * backing RDD is handed to `built` before that job runs: a caller can
+    * then release the blocks of a build that fails, which
+    * `Dataset.localCheckpoint` persists but never returns. */
+  def localCheckpoint(df: DataFrame, level: StorageLevel,
+                      built: RDD[_] => Unit): DataFrame = {
+    val ds = df.asInstanceOf[classic.Dataset[Row]]
+    val qe = ds.queryExecution
+    SQLExecution.withNewExecutionId(qe, Some("localCheckpoint")) {
+      QueryExecution.withInternalError(
+          "The \"localCheckpoint\" action failed.") {
+        qe.executedPlan.resetMetrics()
+        val rdd = qe.executedPlan.execute().map(_.copy())
+        rdd.persist(level).localCheckpoint()
+        built(rdd)
+        rdd.doCheckpoint()
+        classic.Dataset.ofRows(ds.sparkSession,
+          LogicalRDD.fromDataset(rdd, ds, ds.isStreaming))
+      }
+    }
+  }
 }

@@ -100,6 +100,23 @@ class CacheLifecycleSpec extends AnyFunSuite with SparkFixture {
     assert(persisted == 0)
   }
 
+  test("NearDupStream trigger: releasing its survivors leaves nothing") {
+    clearAll()
+    import spark.implicits._
+    val store = s"${tempDir("cachestream")}/store"
+    val text = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+    // the second trigger reads the store the first one wrote
+    Seq(Seq((1L, text), (2L, s"$text lambda")),
+        Seq((3L, text), (4L, "mu nu xi omicron pi rho sigma"))).foreach { b =>
+      val survivors = graft.streaming.NearDupStream.nearDupBatch(
+        b.toDF("doc_id", "text"), store)
+      survivors.collect()
+      org.apache.spark.sql.graftbridge.DatasetBridge
+        .releaseCheckpoint(survivors)
+      assert(persisted == 0)
+    }
+  }
+
   test("Pipeline.run exposes every cache handle; Result.unpersist clears") {
     clearAll()
     val transcripts = SynthTranscripts.transcripts(spark,

@@ -33,12 +33,6 @@ class LinkageCheckpointSpec extends AnyFunSuite with SparkFixture {
   private def persistentRdds: Set[Int] =
     spark.sparkContext.getPersistentRDDs.keySet.toSet
 
-  /** Unpersists every RDD but those in `keep`. */
-  private def releaseAllBut(keep: Set[Int]): Unit =
-    spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-      if (!keep(id)) rdd.unpersist(true)
-    }
-
   /** Per SQL execution of `body`: the longest physical plan description
     * Spark rendered for it (at its start and at each AQE re-plan), and
     * the node count of its analyzed plan, subqueries included; plus the
@@ -141,14 +135,16 @@ class LinkageCheckpointSpec extends AnyFunSuite with SparkFixture {
   /** For each of the `cuts` checkpoints `pipeline` builds: run it with
     * that checkpoint's blocks removed right after its build, then read
     * every relation of its result. The run must fail with a
-    * SparkException naming the lost block's RDD; an undrilled run builds
-    * exactly `cuts` checkpoints. */
+    * SparkException naming the lost block's RDD, and a run that fails
+    * before returning leaves no persistent RDD behind; an undrilled run
+    * builds exactly `cuts` checkpoints. */
   private def drill(cuts: Int)(
       pipeline: (DataFrame => Unit) => Pipeline.Result): Unit = {
-    val keep = persistentRdds
     val built = new AtomicInteger
     pipeline(_ => built.incrementAndGet()).unpersist()
     assert(built.get == cuts)
+    // after the undrilled run: any input cache it filled stays
+    val keep = persistentRdds
     (0 until cuts).foreach { k =>
       val seen = new AtomicInteger
       val lost = new AtomicReference[Option[Int]](None)
@@ -170,7 +166,8 @@ class LinkageCheckpointSpec extends AnyFunSuite with SparkFixture {
         .takeWhile(_ != null).map(t => String.valueOf(t.getMessage)).toSeq
       assert(chain.exists(_.contains(s"rdd_${rdd}_")),
         s"cut $k: the failure does not name RDD $rdd:\n${chain.mkString("\n")}")
-      releaseAllBut(keep) // the failed run's other checkpoints
+      assert(persistentRdds == keep,
+        s"cut $k: the failed run left RDDs ${persistentRdds -- keep}")
     }
   }
 

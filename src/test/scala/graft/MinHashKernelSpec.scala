@@ -201,7 +201,8 @@ class MinHashKernelSpec extends AnyFunSuite with SparkFixture {
                  else oracleStandard(exploded, k, seed)
       val wantSigs = collectArrays(want)
       val cfg = Dedup.MinHashConfig(numHashes = k, seed = seed, oph = oph)
-      val gotSigs = collectArrays(Dedup.docSignatures(docs, cfg, "doc_id", "text"))
+      val gotSigs = collectArrays(docs.select(col("doc_id"), gf.minhash_signature(
+        gf.minhash_shingles(col("text"), cfg.shingleSize), k, seed, oph)))
       // the exploded-shingle adapter exists for OPH only
       val adapter = if (oph)
         Some(collectArrays(Dedup.minHashSignaturesOPH(exploded, cfg)))

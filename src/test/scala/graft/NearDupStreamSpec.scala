@@ -1,19 +1,41 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.DatasetBridge.releaseCheckpoint
 import org.scalatest.funsuite.AnyFunSuite
+import graft.data.Dedup
+import graft.linkage.TableIO
 import graft.streaming.NearDupStream
 
-/** Streaming near-dup dedup over the bucketed (v2) signature store:
-  * batch-2 docs that near-duplicate stored batch-1 docs (or smaller ids
-  * in their own batch) are refused; the store accumulates bucket rows
-  * for admitted docs only, PARTITIONED BY (band, shard); and a
-  * micro-batch provably reads ONLY the store partitions its own bucket
-  * footprint touches (poison-file proof). */
+/** Streaming near-dup dedup over the v3 store: every doc's bucket rows,
+  * PARTITIONED BY (band, shard), and its sorted shingle array, sharded by
+  * id. A micro-batch drops the larger id of every exactly verified pair
+  * among itself and the store — the full run's rule, so the stream's
+  * survivors over a sequence of batches equal one Dedup.minHashNearDups
+  * over their concatenation — and provably reads ONLY the store
+  * partitions its own footprint touches (poison-file proof). */
 class NearDupStreamSpec extends AnyFunSuite with SparkFixture {
 
   private def doc(seed: Int): String =
     (0 until 40).map(i => s"tok${(i * 7 + seed * 13) % 97}").mkString(" ")
+
+  /** `text` with the tokens at `positions` replaced by fresh ones. */
+  private def edit(text: String, tag: String, positions: Int*): String =
+    text.split(" ").zipWithIndex.map { case (t, i) =>
+      if (positions.contains(i)) s"$tag$i" else t
+    }.mkString(" ")
+
+  private def ids(df: DataFrame): Set[Long] =
+    df.select("doc_id").collect().map(_.getLong(0)).toSet
+
+  /** The ids `nearDupBatch` admits; its result is released after. */
+  private def admitted(batch: DataFrame, store: String,
+                       cfg: Dedup.MinHashConfig =
+                         Dedup.MinHashConfig(oph = true)): Set[Long] = {
+    val s = NearDupStream.nearDupBatch(batch, store, cfg)
+    try ids(s) finally releaseCheckpoint(s)
+  }
 
   private lazy val dir = tempDir("neardupstream")
 
@@ -22,13 +44,10 @@ class NearDupStreamSpec extends AnyFunSuite with SparkFixture {
     val store = s"$dir/store"
     val b1 = Seq((1L, doc(1)), (2L, doc(2)), (3L, doc(3)))
       .toDF("doc_id", "text")
-    val s1 = NearDupStream.nearDupBatch(b1, store)
-    assert(s1.select("doc_id").collect().map(_.getLong(0)).toSet ==
-      Set(1L, 2L, 3L))
-    s1.unpersist()
+    assert(admitted(b1, store) == Set(1L, 2L, 3L))
     // the meta's commit window: a crash between delete and rename leaves
     // only the complete tmp, and the next batch must still read the store
-    val fs = graft.linkage.TableIO.fileSystem(spark, store)
+    val fs = TableIO.fileSystem(spark, store)
     val meta = new org.apache.hadoop.fs.Path(s"$store/_store_meta.json")
     fs.rename(meta, meta.suffix(".tmp"))
 
@@ -38,25 +57,27 @@ class NearDupStreamSpec extends AnyFunSuite with SparkFixture {
       (12L, doc(2)),                                 // exact copy of stored 2
       (13L, doc(7).replaceFirst("tok90", "EDITED"))  // near-dup of 11 (same batch)
     ).toDF("doc_id", "text")
-    val s2 = NearDupStream.nearDupBatch(b2, store)
-    assert(s2.select("doc_id").collect().map(_.getLong(0)).toSet == Set(11L),
+    assert(admitted(b2, store) == Set(11L),
       "10/12 must lose to the store, 13 to its smaller in-batch sibling")
-    s2.unpersist()
 
-    // the store holds bucket rows for admitted docs only — one row per
-    // band per doc, partitioned by (band, shard)
-    val rows = spark.read.parquet(s"$store/sigs")
-    assert(rows.select("doc_id").distinct()
-      .collect().map(_.getLong(0)).toSet == Set(1L, 2L, 3L, 11L))
-    val cfg = graft.data.Dedup.MinHashConfig(oph = true)
-    assert(rows.count() == 4L * cfg.bands, "one store row per band per doc")
-    assert(rows.columns.toSet ==
-      Set("band", "shard", "bucket", "doc_id", "sig"))
+    // the store holds EVERY doc seen, dropped ones too: one bucket row
+    // per band per doc, partitioned by (band, shard), and one shingle
+    // array per doc, partitioned by shard
+    val cfg = Dedup.MinHashConfig(oph = true)
+    val all = Set(1L, 2L, 3L, 10L, 11L, 12L, 13L)
+    val buckets = spark.read.parquet(s"$store/buckets")
+    assert(ids(buckets.select("doc_id").distinct()) == all)
+    assert(buckets.count() == all.size.toLong * cfg.bands,
+      "one bucket row per band per doc")
+    assert(buckets.columns.toSet == Set("band", "shard", "bucket", "doc_id"))
+    val shingles = spark.read.parquet(s"$store/shingles")
+    assert(ids(shingles) == all && shingles.count() == all.size)
+    assert(shingles.columns.toSet == Set("shard", "doc_id", "shingles"))
     // a config mismatched against the store meta is refused loudly — also
     // with a truncated tmp beside the intact meta
     fs.rename(meta.suffix(".tmp"), meta)
     val partial = fs.create(meta.suffix(".tmp"), true)
-    partial.write("""{"version":2,"numH""".getBytes("UTF-8")); partial.close()
+    partial.write("""{"version":3,"numH""".getBytes("UTF-8")); partial.close()
     val e = intercept[IllegalArgumentException] {
       NearDupStream.nearDupBatch(b2, store,
         cfg.copy(seed = 99L))
@@ -67,70 +88,100 @@ class NearDupStreamSpec extends AnyFunSuite with SparkFixture {
   test("a batch reads ONLY its matched store partitions (poison proof)") {
     import spark.implicits._
     val store = s"$dir/prunestore"
-    val cfg = graft.data.Dedup.MinHashConfig(oph = true)
+    val cfg = Dedup.MinHashConfig(oph = true)
+    val shards = NearDupStream.DefaultShards
     // seeds chosen off the doc() construction's cyclic-shift aliases:
     // doc(a) and doc(b) share 40 - min(85Δ mod 97, 97 - 85Δ mod 97)
     // tokens (Δ = b - a), so e.g. Δ=16 is a ~0.85-Jaccard near-dup —
     // 60..62 are mutually ≤ 0.52, doc(64) is ≤ 0.26 against all three
     val b1 = (0 until 3).map(i => (i.toLong, doc(i + 60))).toDF("doc_id", "text")
-    NearDupStream.nearDupBatch(b1, store, cfg).unpersist()
+    admitted(b1, store, cfg)
 
-    // compute batch 2's (band, shard) footprint with the same library
-    // calls the batch step uses, then poison a partition OUTSIDE it
+    // batch 2's (band, shard) footprint, computed with the library calls
+    // the batch step uses; poison a bucket partition OUTSIDE it
     val b2 = Seq((100L, doc(61).replaceFirst("tok", "EDITEDtok")),
       (101L, doc(64))).toDF("doc_id", "text")
-    val sigs2 = graft.data.Dedup.minHashSignaturesOPH(
-      graft.data.Dedup.explodedShingles(b2, "doc_id", "text",
-        cfg.shingleSize), cfg)
-    val touched = graft.data.Dedup.lshBuckets(sigs2, cfg)
-      .withColumn("shard", pmod(col("bucket"),
-        lit(NearDupStream.DefaultShards.toLong)).cast("int"))
-      .select("band", "shard").distinct()
-      .collect().map(r => (r.getInt(0), r.getInt(1))).toSet
-    val poison = (0 until cfg.bands).iterator
-      .flatMap(b => (0 until NearDupStream.DefaultShards).map(s => (b, s)))
+    val touched = Dedup.bucketRows(
+        Dedup.minHashDocs(b2, cfg, "doc_id", "text"), "doc_id")
+      .select(col("band"), pmod(col("bucket"), lit(shards.toLong))
+        .cast("int"))
+      .distinct().collect().map(r => (r.getInt(0), r.getInt(1))).toSet
+    val (pb, ps) = (0 until cfg.bands).iterator
+      .flatMap(b => (0 until shards).map(s => (b, s)))
       .find(!touched.contains(_))
-    assert(poison.isDefined, "footprint covered every partition — widen shards")
-    val (pb, ps) = poison.get
-    val poisonDir = new java.io.File(s"$store/sigs/band=$pb/shard=$ps")
-    poisonDir.mkdirs()
-    val poisonFile = new java.io.File(poisonDir, "part-00000-poison.parquet")
-    val w = new java.io.FileOutputStream(poisonFile)
-    w.write("this is not a parquet file".getBytes("UTF-8"))
-    w.close()
-    spark.catalog.refreshByPath(s"$store/sigs")
-
-    // the batch must succeed — its pruned scan never opens the poison —
-    // and still catch 100 (near-dup of stored doc 1) while admitting 101
-    val s2 = NearDupStream.nearDupBatch(b2, store, cfg)
-    assert(s2.select("doc_id").collect().map(_.getLong(0)).toSet ==
-      Set(101L))
-    s2.unpersist()
-
-    // control: an UNPRUNED scan of the same store trips over the poison,
-    // proving the file would have been read absent partition pruning
-    spark.catalog.refreshByPath(s"$store/sigs")
-    intercept[Exception] {
-      spark.read.parquet(s"$store/sigs")
-        .filter(col("bucket").isNotNull).count()
+      .getOrElse(fail("footprint covered every partition — widen shards"))
+    // ... and a shingle shard no stored doc hashes to, so no stored
+    // candidate can need it
+    val storedShards = b1.select(pmod(xxhash64(col("doc_id")),
+      lit(shards.toLong)).cast("int")).collect().map(_.getInt(0)).toSet
+    val sx = (0 until shards).find(!storedShards(_)).get
+    val poisons = Seq(s"$store/buckets/band=$pb/shard=$ps",
+        s"$store/shingles/shard=$sx").map { d =>
+      new java.io.File(d).mkdirs()
+      val f = new java.io.File(d, "part-00000-poison.parquet")
+      val w = new java.io.FileOutputStream(f)
+      w.write("this is not a parquet file".getBytes("UTF-8"))
+      w.close()
+      f
     }
-    poisonFile.delete()
-    spark.catalog.refreshByPath(s"$store/sigs")
+    Seq("buckets", "shingles").foreach(t =>
+      spark.catalog.refreshByPath(s"$store/$t"))
+
+    // the batch must succeed — its pruned scans never open a poison —
+    // and still catch 100 (near-dup of stored doc 1, verified against its
+    // stored shingles) while admitting 101
+    assert(admitted(b2, store, cfg) == Set(101L))
+
+    // control: an UNPRUNED scan of either table trips over its poison,
+    // proving the file would have been read absent partition pruning
+    Seq("buckets", "shingles").foreach { t =>
+      spark.catalog.refreshByPath(s"$store/$t")
+      intercept[Exception] {
+        spark.read.parquet(s"$store/$t").filter(col("doc_id").isNotNull)
+          .count()
+      }
+    }
+    poisons.foreach(_.delete())
+    Seq("buckets", "shingles").foreach(t =>
+      spark.catalog.refreshByPath(s"$store/$t"))
   }
 
   test("v1 flat stores are refused") {
     import spark.implicits._
-    val cfg = graft.data.Dedup.MinHashConfig(oph = true)
+    val cfg = Dedup.MinHashConfig(oph = true)
     val docs = Seq((1L, doc(40)), (2L, doc(41))).toDF("doc_id", "text")
-    val sigs = graft.data.Dedup.minHashSignaturesOPH(
-      graft.data.Dedup.explodedShingles(docs, "doc_id", "text",
-        cfg.shingleSize), cfg)
+    val sigs = Dedup.minHashSignaturesOPH(
+      Dedup.explodedShingles(docs, "doc_id", "text", cfg.shingleSize), cfg)
     sigs.write.mode("overwrite").parquet(s"$dir/v1store")
 
     val e = intercept[IllegalArgumentException] {
       NearDupStream.nearDupBatch(docs, s"$dir/v1store", cfg)
     }
     assert(e.getMessage.contains("v1") &&
+      e.getMessage.contains("fresh store"), e.getMessage)
+  }
+
+  test("v2 signature stores are refused") {
+    import spark.implicits._
+    val cfg = Dedup.MinHashConfig(oph = true)
+    val store = s"$dir/v2store"
+    // a v2 store: admitted docs' (bucket, doc_id, sig) rows under sigs/,
+    // with a meta that matches the caller's config in everything but the
+    // layout version
+    TableIO.writeJson(spark, s"$store/_store_meta.json",
+      TableIO.jsonObject("version" -> 2, "numHashes" -> cfg.numHashes,
+        "bands" -> cfg.bands, "shingleSize" -> cfg.shingleSize,
+        "seed" -> cfg.seed, "oph" -> cfg.oph,
+        "shards" -> NearDupStream.DefaultShards))
+    Seq((7L, 1L, Seq(1L, 2L), 0, 7)).toDF("bucket", "doc_id", "sig", "band",
+        "shard")
+      .write.partitionBy("band", "shard").parquet(s"$store/sigs")
+
+    val docs = Seq((1L, doc(40)), (2L, doc(41))).toDF("doc_id", "text")
+    val e = intercept[IllegalArgumentException] {
+      NearDupStream.nearDupBatch(docs, store, cfg)
+    }
+    assert(e.getMessage.contains("v2") &&
       e.getMessage.contains("fresh store"), e.getMessage)
   }
 
@@ -149,20 +200,71 @@ class NearDupStreamSpec extends AnyFunSuite with SparkFixture {
         (103L, doc(52)))
       q.processAllAvailable()
     } finally q.stop()
-    val admitted = spark.read.parquet(s"$dir/sinkout")
-      .select("doc_id").collect().map(_.getLong(0)).toSet
+    val admitted = ids(spark.read.parquet(s"$dir/sinkout"))
     assert(admitted == Set(100L, 101L, 103L),
       s"102 duplicates stored 100; admitted: $admitted")
   }
 
-  test("reconcile catches a borderline drop (estimate ≥ t, exact < t)") {
+  test("stream survivors over batches ≡ one full run over their concatenation") {
     import spark.implicits._
-    import graft.data.Dedup
+    // a chain a~b~c spread over batches 1-3: J(a,b) = J(b,c) = 32/44 ≈
+    // 0.73 (two well-spread edits of a 40-token doc each), J(a,c) = 26/50
+    // = 0.52. The full run drops b (pair a,b) AND c (pair b,c): c's only
+    // near-dup is itself dropped, so the stream must keep dropped docs in
+    // its store to agree.
+    val a = doc(500)
+    val b = edit(a, "CHb", 5, 20)
+    val c = edit(b, "CHc", 12, 30)
+    // batch 5 floods one family: six copies of a novel doc share every
+    // (band, bucket), the capped full run's trigger below
+    val batches = Seq(
+      Seq((1L, a), (2L, doc(501)), (3L, doc(502)),
+        (4L, edit(doc(502), "X", 7))),          // in-batch near-dup of 3
+      Seq((10L, b), (11L, doc(503)), (12L, doc(501))), // 12 copies stored 2
+      Seq((20L, c), (21L, doc(504)), (22L, edit(doc(503), "Y", 9, 33))),
+      Seq((30L, doc(505)), (31L, edit(doc(504), "Z", 2)), (32L, doc(506))),
+      (40L until 46L).map(i => (i, doc(507))) :+ ((46L, doc(508))))
+    val cfg = Dedup.MinHashConfig(oph = true, capRatio = 0.02,
+      minBucketCap = 3, maxBucketCap = 3)
+
+    // the stream, batch by batch, with the capped config: it never caps
+    val store = s"$dir/equivstore"
+    val streamed = batches.flatMap(bs =>
+      admitted(bs.toDF("doc_id", "text"), store, cfg)).toSet
+
+    // one full run over the concatenation: survivors = input − id_b
+    val all = batches.flatten.toDF("doc_id", "text")
+    def fullRun(c: Dedup.MinHashConfig): Set[Long] = {
+      val pairs = Dedup.minHashNearDups(all, c)
+      try ids(all) -- pairs.select("id_b").collect().map(_.getLong(0))
+      finally pairs.unpersist()
+    }
+    val uncapped = fullRun(cfg.copy(capRatio = 1.0))
+    assert(streamed == uncapped,
+      s"stream-only ${streamed -- uncapped}, full-run-only ${uncapped -- streamed}")
+    assert(uncapped(1L) && !uncapped(10L) && !uncapped(20L),
+      "the chain keeps a and drops b and c")
+    assert(!uncapped(4L) && !uncapped(12L) && !uncapped(22L) &&
+      !uncapped(31L), "the planted near-dups are dropped")
+    assert(uncapped(40L) && (41L until 46L).forall(!uncapped(_)))
+
+    // the one divergence: the capped full run drops the flood's hot
+    // buckets (6 rows > cap 3) and so keeps every copy, while the stream,
+    // whose batch × bucket join needs no cap, drops all but the first
+    val capped = fullRun(cfg)
+    assert(streamed.subsetOf(capped))
+    assert((41L until 46L).forall(i => capped(i) && !streamed(i)),
+      s"capped-run survivors $capped")
+  }
+
+  test("a borderline pair (estimate ≥ t, exact < t) is admitted") {
+    import spark.implicits._
     val cfg = Dedup.MinHashConfig(oph = true, jaccardThreshold = 0.7)
 
     // deterministic search for a doc pair whose SIGNATURE-estimated
     // Jaccard crosses the 0.7 gate while the exact shingle Jaccard stays
-    // below it — the ±1/√k estimator noise the streaming trade documents
+    // below it: a gate on the ±1/√k estimate drops the second doc, the
+    // exact verify admits it
     def exactJac(a: String, b: String): Double = {
       def sh(t: String) = t.split("\\s+").sliding(3).map(_.mkString(" ")).toSet
       val (sa, sb) = (sh(a), sh(b))
@@ -175,10 +277,7 @@ class NearDupStreamSpec extends AnyFunSuite with SparkFixture {
     // noise can still push the signature estimate over t for SOME (o, m)
     val combos = for (m <- 2 to 4; o <- 0 until 12) yield (m, o)
     val variants = combos.map { case (m, o) =>
-      val pos = (0 until m).map(j => (o + 11 * j) % toks.length).toSet
-      toks.zipWithIndex.map { case (t, i) =>
-        if (pos(i)) s"ED$i" else t
-      }.mkString(" ")
+      edit(base, "ED", (0 until m).map(j => (o + 11 * j) % toks.length): _*)
     }
     // ONE batched signature pass over base + all variants
     val varDf = ((0L, base) +: variants.zipWithIndex.map {
@@ -196,153 +295,56 @@ class NearDupStreamSpec extends AnyFunSuite with SparkFixture {
     }
     assert(borderline.isDefined,
       "no borderline variant in the deterministic search window — widen it")
-    val edited = borderline.get._1
 
-    val store = s"$dir/reconcilestore"
-    val s1 = NearDupStream.nearDupBatch(
-      Seq((1L, base)).toDF("doc_id", "text"), store, cfg)
-    assert(s1.count() == 1)
-    val s2 = NearDupStream.nearDupBatch(
-      Seq((2L, edited)).toDF("doc_id", "text"), store, cfg)
-    assert(s2.count() == 0, "the estimate should (wrongly) drop doc 2")
-
-    val corpus = Seq((1L, base), (2L, edited)).toDF("doc_id", "text")
-    val rec = NearDupStream.reconcileStore(store, corpus, cfg)
-    val diffs = rec.collect()
-    val falseDrops = diffs.filter(_.getString(3) == "false_drop")
-    assert(falseDrops.length == 1 && falseDrops.head.getLong(0) == 2L,
-      s"reconcile missed the borderline drop: ${diffs.mkString(";")}")
-    assert(falseDrops.head.getDouble(2) < cfg.jaccardThreshold)
-    assert(!diffs.exists(_.getString(3) == "false_admit"))
-    org.apache.spark.sql.graftbridge.DatasetBridge.releaseCheckpoint(rec)
-
-    // CLI wrapper over the same store
-    val cdir = s"$dir/reccorpus"
-    corpus.write.mode("overwrite").parquet(cdir)
-    val (fa, fd) = graft.streaming.ReconcileMain.run(spark, Map(
-      "store" -> store, "corpus" -> cdir, "output" -> s"$dir/recout",
-      "jaccard" -> cfg.jaccardThreshold.toString))
-    assert(fa == 0L && fd == 1L)
-    val persisted = spark.read.parquet(s"$dir/recout/diffs").collect()
-    assert(persisted.length == 1 && persisted.head.getString(3) == "false_drop")
-  }
-
-  test("reconcile catches a BANDING miss the stream's own LSH cannot") {
-    import spark.implicits._
-    import graft.data.Dedup
-    // STANDARD signatures here, not OPH: slot agreement equals the exact
-    // Jaccard (s ≈ 0.73 → band-miss ≈ (1-s⁴)¹⁶ ≈ 0.5%), whereas OPH's
-    // rotation densification on short docs correlates slots and pushes
-    // agreement toward 0.9 — banding misses become ~1e-5-rare and the
-    // deterministic search below would need millions of candidates
-    val cfg = Dedup.MinHashConfig(oph = false, jaccardThreshold = 0.7)
-
-    // deterministic search for a TRUE near-dup pair (exact Jaccard ≥ t)
-    // that shares NO (band, bucket) at the stream's bands=16 — the
-    // banding-miss false_admit class: the stream admits both (no
-    // candidate is ever formed), and a reconcile that re-used the
-    // stream's banding would reproduce the identical miss (ADVICE r04).
-    // m=2 well-spread edits on a 40-token doc give exact ≈ 32/44 = 0.727;
-    // per-variant P(no band collision) ≈ (1-s^4)^16 ≈ 1% — search many
-    // bases × offsets in ONE batched signature pass.
-    def exactJac(a: String, b: String): Double = {
-      def sh(t: String) = t.split("\\s+").sliding(3).map(_.mkString(" ")).toSet
-      val (sa, sb) = (sh(a), sh(b))
-      sa.intersect(sb).size.toDouble / sa.union(sb).size
-    }
-    val cases = for (b <- 0 until 40; o <- 0 until 20; sp <- Seq(13, 17))
-      yield (b, o, sp)
-    val pairs = cases.zipWithIndex.map { case ((b, o, sp), i) =>
-      val baseText = doc(b + 300)
-      val toks = baseText.split(" ")
-      val pos = Set(o, (o + sp) % toks.length)
-      val edited = toks.zipWithIndex.map { case (t, j) =>
-        if (pos(j)) s"ZX$j$sp" else t
-      }.mkString(" ")
-      (i, baseText, edited)
-    }
-    val allDocs = pairs.flatMap { case (i, b, e) =>
-      Seq((i * 2L, b), (i * 2L + 1L, e))
-    }.toDF("doc_id", "text")
-    val buckets = Dedup.lshBuckets(Dedup.docSignatures(
-        allDocs, cfg.copy(oph = false), "doc_id", "text"), cfg)
-      .collect().groupBy(_.getLong(0))
-      .view.mapValues(_.map(r => (r.getInt(1), r.getLong(2))).toSet).toMap
-    val miss = pairs.find { case (i, b, e) =>
-      exactJac(b, e) >= cfg.jaccardThreshold &&
-        buckets(i * 2L).intersect(buckets(i * 2L + 1L)).isEmpty
-    }
-    assert(miss.isDefined,
-      "no banding-missed pair in the search window — widen it")
-    val (_, baseText, editedText) = miss.get
-
-    val store = s"$dir/bandmissstore"
-    val s1 = NearDupStream.nearDupBatch(
-      Seq((1L, baseText)).toDF("doc_id", "text"), store, cfg)
-    assert(s1.count() == 1)
-    val s2 = NearDupStream.nearDupBatch(
-      Seq((2L, editedText)).toDF("doc_id", "text"), store, cfg)
-    assert(s2.count() == 1,
-      "the banding miss must ADMIT doc 2 — no candidate pair forms")
-    s1.unpersist(); s2.unpersist()
-
-    val corpus = Seq((1L, baseText), (2L, editedText)).toDF("doc_id", "text")
-    val rec = NearDupStream.reconcileStore(store, corpus, cfg)
-    val diffs = rec.collect()
-    val falseAdmits = diffs.filter(_.getString(3) == "false_admit")
-    assert(falseAdmits.length == 1,
-      s"max-recall reconcile missed the banding miss: ${diffs.mkString(";")}")
-    assert(falseAdmits.head.getDouble(2) >= cfg.jaccardThreshold)
-    org.apache.spark.sql.graftbridge.DatasetBridge.releaseCheckpoint(rec)
+    val store = s"$dir/borderlinestore"
+    assert(admitted(Seq((1L, base)).toDF("doc_id", "text"), store, cfg) ==
+      Set(1L))
+    assert(admitted(Seq((2L, borderline.get._1)).toDF("doc_id", "text"),
+      store, cfg) == Set(2L), "exact Jaccard < t: doc 2 is no near-dup")
   }
 
   test("appends write one file per touched partition; compactStore bounds them") {
     import spark.implicits._
     val store = s"$dir/compactstore"
-    val cfg = graft.data.Dedup.MinHashConfig(oph = true)
+    val cfg = Dedup.MinHashConfig(oph = true)
     // 6 append bursts of novel docs → up to 6 files in a hot partition
     for (b <- 0 until 6) {
       val batch = (0 until 8)
         .map(i => (b * 100L + i, doc(b * 31 + i * 7 + 1000)))
         .toDF("doc_id", "text")
-      NearDupStream.nearDupBatch(batch, store, cfg).unpersist()
+      admitted(batch, store, cfg)
     }
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(store), spark.sparkContext.hadoopConfiguration)
-    def partFiles(): Map[String, Int] = {
-      val it = fs.listFiles(
-        new org.apache.hadoop.fs.Path(s"$store/sigs"), true)
-      val counts = scala.collection.mutable.Map.empty[String, Int]
-      while (it.hasNext) {
-        val f = it.next()
-        if (f.getPath.getName.endsWith(".parquet")) {
-          val part = f.getPath.getParent.toString
-          counts(part) = counts.getOrElse(part, 0) + 1
-        }
-      }
-      counts.toMap
+    val fs = TableIO.fileSystem(spark, store)
+    val tables = Seq("buckets", "shingles")
+    // parquet files per leaf partition dir, per table
+    def partFiles(table: String): Map[String, Int] =
+      TableIO.listFilesRecursive(fs,
+          new org.apache.hadoop.fs.Path(s"$store/$table"))
+        .filter(_.getPath.getName.endsWith(".parquet"))
+        .groupBy(_.getPath.getParent.toString).view.mapValues(_.size).toMap
+    def storedIds(table: String): Set[Long] =
+      ids(spark.read.parquet(s"$store/$table").select("doc_id").distinct())
+    val idsBefore = tables.map(storedIds)
+    tables.foreach { t =>
+      val before = partFiles(t)
+      // clustered writes: no partition ever exceeds one file per append
+      assert(before.values.max <= 6, s"$t files/partition: ${before.values.max}")
+      assert(before.values.max > 2, s"$t: test needs a multi-file partition")
     }
-    val before = partFiles()
-    // clustered writes: no partition ever exceeds one file per append
-    assert(before.values.max <= 6, s"files/partition: ${before.values.max}")
-    assert(before.values.max > 2, "test needs a multi-file partition")
-    val idsBefore = spark.read.parquet(s"$store/sigs")
-      .select("doc_id").distinct().collect().map(_.getLong(0)).toSet
 
     val rewritten = NearDupStream.compactStore(spark, store,
       maxFilesPerPartition = 2)
     assert(rewritten > 0)
-    val after = partFiles()
-    assert(after.values.max <= 2,
-      s"compaction left ${after.values.max} files in a partition")
+    tables.foreach { t =>
+      val after = partFiles(t)
+      assert(after.values.max <= 2,
+        s"compaction left ${after.values.max} files in a $t partition")
+    }
     // content is preserved and the store still serves dedup decisions
-    val idsAfter = spark.read.parquet(s"$store/sigs")
-      .select("doc_id").distinct().collect().map(_.getLong(0)).toSet
-    assert(idsAfter == idsBefore)
+    assert(tables.map(storedIds) == idsBefore)
     val dupe = Seq((9999L, doc(1000))).toDF("doc_id", "text") // copy of 0
-    val s = NearDupStream.nearDupBatch(dupe, store, cfg)
-    assert(s.count() == 0, "post-compaction store must still refuse dups")
-    s.unpersist()
+    assert(admitted(dupe, store, cfg).isEmpty,
+      "post-compaction store must still refuse dups")
     // a second pass is a no-op
     assert(NearDupStream.compactStore(spark, store,
       maxFilesPerPartition = 2) == 0)
@@ -359,8 +361,7 @@ class NearDupStreamSpec extends AnyFunSuite with SparkFixture {
       "source" -> s"$base/src/*", "store" -> s"$base/store",
       "output" -> s"$base/out", "checkpoint" -> s"$base/ckpt",
       "once" -> "true"))
-    assert(spark.read.parquet(s"$base/out")
-      .select("doc_id").collect().map(_.getLong(0)).toSet == Set(1L, 2L, 3L))
+    assert(ids(spark.read.parquet(s"$base/out")) == Set(1L, 2L, 3L))
 
     // drop 2 lands: a near-dup of stored 1, a novel doc, and an exact
     // copy of stored 2 — a SECOND invocation resumes from the same
@@ -372,9 +373,7 @@ class NearDupStreamSpec extends AnyFunSuite with SparkFixture {
       "source" -> s"$base/src/*", "store" -> s"$base/store",
       "output" -> s"$base/out", "checkpoint" -> s"$base/ckpt",
       "once" -> "true", "compact" -> "1"))
-    assert(spark.read.parquet(s"$base/out")
-      .select("doc_id").collect().map(_.getLong(0)).toSet ==
-      Set(1L, 2L, 3L, 11L),
+    assert(ids(spark.read.parquet(s"$base/out")) == Set(1L, 2L, 3L, 11L),
       "second invocation must admit only the novel doc")
     // config mismatch against the store meta is refused through the CLI
     val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
