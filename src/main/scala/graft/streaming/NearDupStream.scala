@@ -15,15 +15,19 @@ import graft.linkage.{Cli, TableIO}
   * "Highly Efficient String Similarity Search and Join over Compressed
   * Indexes", ICDE 2022). Candidates are the batch × store and in-batch
   * pairs sharing a (band, bucket); each is verified EXACTLY, by merging
-  * the two sorted shingle arrays (Dedup.verifyPairs); and the larger id
-  * of every verified pair is dropped. Under append-only ids the stream's
-  * cumulative survivors are the input minus `distinct(id_b)` of one
-  * minHashNearDups over all batches: a doc that near-duplicates only a
-  * dropped doc is dropped too, because the store holds dropped docs as
-  * well. The one divergence is the hot-bucket cap, which the stream
-  * never applies: its candidate join is batch × bucket, linear in a
-  * bucket's stored rows rather than quadratic, so a capped full run can
-  * keep docs the stream drops (NearDupStreamSpec exercises it).
+  * the two sorted shingle arrays (Dedup.verifyPairs); and the batch doc
+  * of every verified pair is dropped — the larger id of an in-batch
+  * pair, the batch side of a batch × store pair, so a stored doc beats a
+  * batch doc whatever the ids. Under append-only ids that is the full
+  * run's rule, and the stream's cumulative survivors are the input minus
+  * `distinct(id_b)` of one minHashNearDups over all batches: a doc that
+  * near-duplicates only a dropped doc is dropped too, because the store
+  * holds dropped docs as well. The one divergence is the hot-bucket cap,
+  * which the stream never applies: its candidate join is batch × bucket,
+  * linear in a bucket's stored rows rather than quadratic, so a capped
+  * full run can keep docs the stream drops (NearDupStreamSpec exercises
+  * it). A bucket's stored rows stay bounded under floods because a doc
+  * dropped at Jaccard 1.0 is not stored (see nearDupBatch).
   *
   * Store layout (v3):
   *
@@ -32,14 +36,17 @@ import graft.linkage.{Cli, TableIO}
   *   storePath/_store_meta.json                      layout + minhash config
   *
   * Both tables hold one entry per doc the stream has seen, admitted or
-  * dropped: one bucket row per band, partitioned by (band, shard =
-  * bucket mod `shards`), and one sorted shingle array, partitioned by
-  * shard = xxhash64(id) mod `shards`. A micro-batch collects its own
-  * (band, shard) footprint (bounded by bands×shards however large the
-  * batch) and reads ONLY those bucket partitions, then the shingle
-  * shards its stored candidates hash to (at most `shards` values);
-  * nothing scans the whole store, and partitions a batch does not touch
-  * are never opened. A new store gets `DefaultShards`; an existing store
+  * dropped, except exact shingle-set copies: one bucket row per band,
+  * partitioned by (band, shard = bucket mod `shards`), and one sorted
+  * shingle array, partitioned by shard = xxhash64(id) mod `shards`. A
+  * micro-batch collects its own (band, shard) footprint (bounded by
+  * bands×shards however large the batch) and reads ONLY those bucket
+  * partitions, then the shingle shards its stored candidates hash to.
+  * Partitions a batch does not touch are never opened, but the shingle
+  * pruning is per id shard: once a batch's stored candidates span about
+  * `shards` ids it reads every shard, so per-trigger shingle IO scales
+  * with the store (only the candidates' rows reach the verify join). A
+  * new store gets `DefaultShards`; an existing store
   * keeps the shard count its meta records. The meta is written once,
   * atomically, by TableIO.writeFile and read by TableIO.readJson; both
   * tables are compacted by TableIO.compactPartitions ([[compactStore]]).
@@ -47,8 +54,9 @@ import graft.linkage.{Cli, TableIO}
   * Delivery semantics: survivors append to the caller's out path
   * at-least-once (foreachBatch replays after a crash). The store append
   * itself is replay-safe for RESULTS — a replayed batch anti-joins its
-  * own earlier rows out of both store views (see nearDupBatch), so it
-  * recomputes identical survivors; the duplicate rows a replay appends
+  * own earlier rows out of the bucket view, and reads shingle rows of
+  * stored candidates only (see nearDupBatch), so it recomputes identical
+  * survivors; the duplicate rows a replay appends
   * are content-identical, candidates are distinct pairs, and a verified
   * pair seen twice drops the same id, so decisions never change. Dedup
   * the out path downstream when exactly-once matters (or front it with
@@ -204,12 +212,13 @@ object NearDupStream {
 
   /** One micro-batch step (exactly what the foreachBatch sink invokes;
     * exposed for deterministic testing). Returns the batch's survivors
-    * — the batch minus the larger id of every verified near-dup pair
-    * among the batch and the store — and appends every batch doc's
-    * shingle array and bucket rows to `storePath`. Only bucket partitions
-    * matching the batch's own (band, shard) footprint and shingle shards
-    * holding a stored candidate are read. `cfg`'s cap fields are not
-    * used (see the object doc).
+    * — the batch minus the batch doc of every verified near-dup pair
+    * among the batch and the store — and appends the shingle array and
+    * bucket rows of every batch doc but those dropped at Jaccard 1.0 to
+    * `storePath`. Only bucket partitions matching the batch's own
+    * (band, shard) footprint and shingle shards holding a stored
+    * candidate are read. `cfg`'s cap fields are not used (see the object
+    * doc).
     *
     * The result is localCheckpoint()'d: `unpersist()` does NOT free its
     * blocks; release it with `DatasetBridge.releaseCheckpoint(result)`
@@ -255,45 +264,56 @@ object NearDupStream {
         .select("stored_id", "batch_id").distinct()
         .persist(lvl)
     }
-    // the shingle shards those candidates live in — at most `shards`
-    // values; the verify reads only them
+    // the stored candidates' shingle arrays: the id shards they hash to
+    // (at most `shards` values) are read, and only the candidates' rows
+    // cross the verify shuffle
     val storedShingles = stored.map { sc =>
-      val needed = sc.select(idShard(col("stored_id"), shards)).distinct()
+      val ids = sc.select(col("stored_id").as(idCol)).distinct()
+      val needed = ids.select(idShard(col(idCol), shards)).distinct()
         .collect().map(_.getInt(0)).toSeq
       readTable(spark, storePath, Shingles, idCol, idType,
           col("shard").isin(needed: _*))
-        .join(batchIds, Seq(idCol), "left_anti")
+        .join(ids, Seq(idCol), "left_semi")
         .select(col(idCol), col("shingles"))
     }
 
-    // the full run's pairs (id_a < id_b) restricted to those touching the
-    // batch: batch × store plus the batch's own self-join
-    val pairs = stored.map(_.select(
-        least(col("stored_id"), col("batch_id")).as("id_a"),
-        greatest(col("stored_id"), col("batch_id")).as("id_b")))
+    // the full run's pairs restricted to those touching the batch: the
+    // batch's self-join (smaller id first) plus batch × store with the
+    // STORED doc first, so a stored doc beats a batch doc whatever the
+    // ids (under append-only ids both legs are the smaller-id rule)
+    val pairs = stored.map(_.select(col("stored_id").as("id_a"),
+        col("batch_id").as("id_b")))
       .foldLeft(Dedup.lshCandidates(buckets, idCol))(_.unionByName(_))
     val shingles = storedShingles
       .foldLeft(mh.select(col(idCol), col("shingles")))(_.unionByName(_))
+    // every dropped batch doc with its best verified Jaccard. Survivors
+    // and the store appends must stop depending on the store path BEFORE
+    // the first append: an append invalidates every cache over its path,
+    // and a recompute would re-read the store. localCheckpoint is eager
+    // and lineage-free, so both derive from an inert relation.
     val dropped = Dedup.verifyPairs(pairs, shingles, idCol,
         cfg.jaccardThreshold)
-      .select(col("id_b").as(idCol))
-
-    // survivors must stop depending on the store path BEFORE the append:
-    // the append's refreshByPath invalidates every cache over that path,
-    // and a lazy recompute after the append would find the batch's own
-    // rows in the store and drop the whole batch as self-duplicates
-    // (measured: batch 2 returned empty). localCheckpoint is eager and
-    // lineage-free, so the returned frame is inert.
+      .groupBy(col("id_b").as(idCol)).agg(max(col("jaccard")).as("_j"))
+      .localCheckpoint()
     val survivors = batch.join(dropped, Seq(idCol), "left_anti")
       .localCheckpoint()
+    // a doc dropped at Jaccard 1.0 has the shingle set, hence the buckets
+    // and every near-dup relation, of a partner that stays stored (a
+    // stored doc, or a smaller in-batch id that is stored or is itself
+    // such a copy), so storing it changes no decision — and skipping it
+    // keeps a flood of identical docs at one stored copy instead of a
+    // bucket that grows, and is joined against, with every copy
+    val copies = dropped.filter(col("_j") >= 1.0).select(col(idCol))
+    def kept(rows: DataFrame) = rows.join(copies, Seq(idCol), "left_anti")
     // meta BEFORE the first data append: a crash between them leaves a
     // valid empty store, whereas data-without-meta would read as a v1
     // layout and refuse to start. Shingles BEFORE buckets: every bucket
     // row's doc then has its array, whatever crash comes between.
     if (meta.isEmpty) writeStoreMeta(spark, storePath, cfg)
-    append(mh.select(col(idCol), col("shingles"),
+    append(kept(mh).select(col(idCol), col("shingles"),
       idShard(col(idCol), shards).as("shard")), storePath, Shingles)
-    append(buckets, storePath, Buckets)
+    append(kept(buckets), storePath, Buckets)
+    DatasetBridge.releaseCheckpoint(dropped)
     mh.unpersist(blocking = false)
     stored.foreach(_.unpersist(blocking = false))
     survivors

@@ -55,16 +55,17 @@ class NearDupStreamSpec extends AnyFunSuite with SparkFixture {
       (10L, doc(1).replaceFirst("tok20", "EDITED")), // near-dup of stored 1
       (11L, doc(7)),                                 // novel
       (12L, doc(2)),                                 // exact copy of stored 2
-      (13L, doc(7).replaceFirst("tok90", "EDITED"))  // near-dup of 11 (same batch)
+      (13L, edit(doc(7), "EDITED", 20))              // near-dup of 11 (same batch)
     ).toDF("doc_id", "text")
     assert(admitted(b2, store) == Set(11L),
       "10/12 must lose to the store, 13 to its smaller in-batch sibling")
 
-    // the store holds EVERY doc seen, dropped ones too: one bucket row
-    // per band per doc, partitioned by (band, shard), and one shingle
-    // array per doc, partitioned by shard
+    // the store holds every doc seen, dropped near-dups too, but not 12,
+    // an exact copy of stored 2: one bucket row per band per doc,
+    // partitioned by (band, shard), and one shingle array per doc,
+    // partitioned by shard
     val cfg = Dedup.MinHashConfig(oph = true)
-    val all = Set(1L, 2L, 3L, 10L, 11L, 12L, 13L)
+    val all = Set(1L, 2L, 3L, 10L, 11L, 13L)
     val buckets = spark.read.parquet(s"$store/buckets")
     assert(ids(buckets.select("doc_id").distinct()) == all)
     assert(buckets.count() == all.size.toLong * cfg.bands,
@@ -83,6 +84,34 @@ class NearDupStreamSpec extends AnyFunSuite with SparkFixture {
         cfg.copy(seed = 99L))
     }
     assert(e.getMessage.contains("mismatch"))
+  }
+
+  test("a stored doc beats a batch doc with a smaller id") {
+    import spark.implicits._
+    val store = s"$dir/orderstore"
+    assert(admitted(Seq((100L, doc(700))).toDF("doc_id", "text"), store) ==
+      Set(100L))
+    // 5 near-duplicates stored 100 (one edit, J ≈ 0.85): 100 is already
+    // in the out path, so 5 must go although its id is smaller
+    val b2 = Seq((5L, edit(doc(700), "S", 10)), (6L, doc(703)))
+      .toDF("doc_id", "text")
+    assert(admitted(b2, store) == Set(6L))
+  }
+
+  test("a flood of identical docs over several triggers stores one copy") {
+    import spark.implicits._
+    val store = s"$dir/floodstore"
+    val cfg = Dedup.MinHashConfig(oph = true)
+    val admittedPerTrigger = (0 until 3).map { t =>
+      admitted((1L to 4L).map(i => (t * 10L + i, doc(800)))
+        .toDF("doc_id", "text"), store, cfg)
+    }
+    assert(admittedPerTrigger == Seq(Set(1L), Set.empty[Long], Set.empty[Long]))
+    // copies dropped at Jaccard 1.0 are not stored, so the flood's
+    // buckets keep one row per band and later copies join one stored row
+    val buckets = spark.read.parquet(s"$store/buckets")
+    assert(ids(buckets) == Set(1L) && buckets.count() == cfg.bands)
+    assert(spark.read.parquet(s"$store/shingles").count() == 1L)
   }
 
   test("a batch reads ONLY its matched store partitions (poison proof)") {
