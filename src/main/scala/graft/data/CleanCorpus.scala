@@ -1,16 +1,19 @@
 package graft.data
 
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.linkage.Stages
+import graft.linkage.Stages.counted
 
 /** Training-corpus cleaning pipeline — the composition the individual
   * data ops exist for: exact dedup → MinHash near-dup dedup → benchmark
   * decontamination (optional) → repetition ceiling (optional) → quality
   * filter → language filter → PII redaction (optional), with per-stage
-  * survivor counts. Each stage is
-  * the library operator (Dedup / Decontaminate / TextAnalysis / Redact),
-  * so every plan-shape property those carry (join-back exact dedup,
-  * banded LSH + exact verify, broadcast benchmark grams, codegen'd
+  * survivor counts. After the exact stage (a keep-min window over each
+  * text group) each stage is the library operator (Dedup / Decontaminate
+  * / TextAnalysis / Redact), so every plan-shape property those carry
+  * (banded LSH + exact verify, broadcast benchmark grams, codegen'd
   * quality/lang/redact projections) holds for the composed run.
   * Survivor policy is deterministic: exact groups keep the minimum id;
   * near-dup pairs drop the LARGER id of every qualifying pair (so a
@@ -59,11 +62,25 @@ object CleanCorpus {
       redactedDocs.map("redacted_docs" -> _)).flatten: _*).toString
   }
 
-  /** Returns (cleaned docs with quality columns attached, stage counts,
-    * the ids of the exact-dedup survivors — the store a later increment
-    * dedups against). Both DataFrames are persisted and materialized
-    * (caller-owned handles); unpersist when done. Interior fan-out caches
-    * are released here.
+  /** Cleans `docs` and hands the result to `write`: (cleaned docs with
+    * quality columns attached, the ids of the exact-dedup survivors — the
+    * store a later increment dedups against). Returns the stage counts
+    * once `write` has returned.
+    *
+    * Two cuts and one write. The exact stage is built first, as an eager
+    * local checkpoint with the input and exact counts observed on its
+    * build; the MinHash kernel relation is the second cut, its observed
+    * row count sizing the hot-bucket cap ([[Dedup.kernelCut]]). Everything
+    * after — candidates with the cap in-plan, verify, the near-dup
+    * anti-join, the text kernel, redaction — is the LAZY `cleaned` plan:
+    * `write` runs it once, and the near-dup, repetition, quality, language
+    * and redaction counts are observed on that action. (With
+    * `benchmarks`, decontamination reads its input twice, so the near-dup
+    * output is a third cut.) `write` must run one action over `cleaned`
+    * (clean fails loudly when a count was not observed) and may read the
+    * exact ids beside it: both read only built cuts. Every cut is
+    * released when clean returns or fails, so no handle outlives `write`
+    * and the caller owns no cache.
     *
     * `previous` is the daily-append mode: `docs` are the NEW docs, cleaned
     * against the previous run's EXACT-survivor corpus, with survivors
@@ -87,104 +104,107 @@ object CleanCorpus {
   def clean(docs: DataFrame, cfg: Config = Config(),
             idCol: String = "doc_id", textCol: String = "text",
             previous: Option[DataFrame] = None)
-      : (DataFrame, StageCounts, DataFrame) = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+           (write: (DataFrame, DataFrame) => Unit): StageCounts =
+    clean(docs, cfg, idCol, textCol, previous, _ => ())(write)
+
+  /** [[clean]] with the cuts' test seam ([[Stages]]). */
+  private[graft] def clean(docs: DataFrame, cfg: Config, idCol: String,
+                           textCol: String, previous: Option[DataFrame],
+                           drill: DataFrame => Unit)
+                          (write: (DataFrame, DataFrame) => Unit)
+      : StageCounts = {
     val above = previous.flatMap(Dedup.previousMaxId(_, docs, idCol))
-    val nIn = docs.count()
+    val stages = new Stages(drill)
+    stages.releasing {
+      // 1. exact dedup: a doc survives when its id is the smallest of its
+      //    text group (the rows Dedup.exact marks as their group's keeper;
+      //    two rows sharing that id and text both survive). A new doc
+      //    whose text a previous exact survivor holds goes first: its
+      //    keeper is that smaller previous id, as in the full run (a whole
+      //    text group goes at once, so the new keepers are unchanged)
+      val inputObs = Observation()
+      val input = counted(docs, inputObs)
+      val h = xxhash64(col(textCol))
+      val fresh = previous.fold(input)(p => input.join(
+        p.select(h.as("_prev_hash")).distinct(), h === col("_prev_hash"),
+        "left_anti"))
+      val (exact, nExact) = stages.checkpoint(fresh
+        .withColumn("_keeper", min(col(idCol)).over(Window.partitionBy(h)))
+        .filter(col(idCol) === col("_keeper")).drop("_keeper"))
 
-    // 1. exact dedup: keep each group's min-id representative; the narrow
-    //    keeper ids are cached by the same action that materializes exact.
-    //    A new doc whose text a previous exact survivor holds goes first:
-    //    its keeper is that smaller previous id, as in the full run (a
-    //    whole text group goes at once, so the new keepers are unchanged)
-    val fresh = previous.fold(docs)(p => docs.join(
-      p.select(xxhash64(col(textCol)).as("_prev_hash")).distinct(),
-      xxhash64(col(textCol)) === col("_prev_hash"), "left_anti"))
-    val keepers = Dedup.exact(fresh, idCol, textCol)
-      .filter(col(idCol) === col("keeper")).select(idCol).persist(lvl)
-    val exact = fresh.join(keepers, Seq(idCol), "left_semi").persist(lvl)
-    val nExact = exact.count()
+      // 2. near-dup dedup: drop the larger id of every verified pair (with
+      //    a previous corpus, always the new side)
+      val (pairs, cap) = Dedup.kernelCut(exact, previous, above, cfg.minhash,
+        idCol, textCol, stages)
+      val drops = pairs.select(col("id_b").as(idCol)).distinct()
+      val nearObs = Observation()
+      val nearDeduped = exact.join(drops, Seq(idCol), "left_anti")
 
-    // 2. near-dup dedup: drop the larger id of every verified pair (with a
-    //    previous corpus, always the new side)
-    val pairs = Dedup.minHashNearDupsAbove(exact, previous, above,
-      cfg.minhash, idCol, textCol)
-    val drops = pairs.select(col("id_b").as(idCol)).distinct()
-    val nearDeduped = exact.join(drops, Seq(idCol), "left_anti").persist(lvl)
-    val nNear = nearDeduped.count()
-    pairs.unpersist(blocking = false)
-    exact.unpersist(blocking = false)
+      // doc-local tail: each doc is judged against the fixed benchmark
+      // set / its own text only, so the verdicts commute with the
+      // increment split.
+      // 3. benchmark decontamination (optional; benchmark grams
+      //    broadcast). It reads its input twice (the report beside the
+      //    anti-join), so the near-dup survivors are a cut here, with
+      //    their count observed on its build.
+      val decontObs = Observation()
+      val (decont, nNearCut) = cfg.benchmarks match {
+        case Some(bench) =>
+          val (nd, n) = stages.checkpoint(nearDeduped)
+          (counted(Decontaminate.decontaminate(nd, bench, cfg.decontNgram,
+            idCol = idCol, textCol = textCol, benchIdCol = cfg.benchIdCol,
+            benchTextCol = textCol), decontObs), Some(n))
+        case None => (counted(nearDeduped, nearObs), None)
+      }
+      // 4–7. repetition ceiling (optional, Gopher-style), quality floor,
+      //    language pin, PII redaction (optional): ONE narrow stage over
+      //    `decont`. One text-kernel pass per doc gives every field the
+      //    filters read (TextAnalysis.withTextFeatures: a Generate, so no
+      //    filter copies the kernel call). Each stage's survivors are
+      //    counted by an observer on the rows that reach the next filter,
+      //    and the redaction audit count in the projection that still
+      //    holds both texts; the write that builds `cleaned` reports them
+      //    all
+      val repNgram = cfg.maxDupNgramFrac.fold(0)(_ => math.max(cfg.repNgram, 1))
+      val feats = TextAnalysis.withTextFeatures(decont, textCol, repNgram)
+      def f(name: String) = col(TextAnalysis.Prefix + name)
+      val repObs = Observation()
+      val repOk = cfg.maxDupNgramFrac
+        .map(t => counted(feats.filter(f("dup_ngram_char_frac") <= t), repObs))
+        .getOrElse(feats)
+      val scored = repOk.filter(f("quality_score") >= cfg.minQuality)
+      val qualityObs = Observation()
+      val pinned = cfg.lang
+        .map(l => counted(scored, qualityObs).filter(f("lang_guess") === l))
+        .getOrElse(scored)
+      // the document columns (the id first under a language pin, as the
+      // lang stage's old join-back ordered them), then the quality features
+      val docCols = decont.columns.toSeq
+      val kept = TextAnalysis.selectFeatures(pinned,
+        if (cfg.lang.isDefined) idCol +: docCols.filterNot(_ == idCol)
+        else docCols,
+        TextAnalysis.QualityFields)
+      val redactObs = Observation()
+      val cleaned = if (cfg.redactPii) {
+        val cols = kept.columns.map(c =>
+          if (c == textCol) col("_redacted").as(textCol) else col(c))
+        kept.withColumn("_redacted", Redact.redactText(col(textCol)))
+          .observe(redactObs, coalesce(sum(when(col("_redacted") =!=
+            col(textCol), 1L).otherwise(0L)), lit(0L)).as("n"))
+          .select(cols: _*)
+      } else kept
+      val langObs = Observation()
+      write(counted(cleaned, langObs), exact.select(idCol))
 
-    // doc-local tail: each doc is judged against the fixed
-    // benchmark set / its own text only, so the verdicts commute with the
-    // increment split.
-    // 3. benchmark decontamination (optional; benchmark grams broadcast).
-    //    Its output is localCheckpoint'd, NOT persisted: the report
-    //    references its input subtree twice beside the anti-join, and with
-    //    plain persists the LOGICAL tree multiplied ~50× across the old
-    //    multi-join tail (a 1.25 GB plan string whose mere rendering OOM'd
-    //    an 8 GB driver). Its blocks are released once `cleaned` is
-    //    materialized; a later lost block of `cleaned` therefore cannot
-    //    recompute through the released stage — the same documented trade
-    //    the near-dup sink makes.
-    val decont = cfg.benchmarks
-      .map(bench => Decontaminate.decontaminate(nearDeduped, bench,
-        cfg.decontNgram, idCol = idCol, textCol = textCol,
-        benchIdCol = cfg.benchIdCol, benchTextCol = textCol)
-        .localCheckpoint())
-      .getOrElse(nearDeduped)
-    val nDecont = cfg.benchmarks.map(_ => decont.count())
-    // 4–7. repetition ceiling (optional, Gopher-style), quality floor,
-    //    language pin, PII redaction (optional): ONE narrow stage over
-    //    `decont`. One text-kernel pass per doc gives every field the
-    //    filters read (TextAnalysis.withTextFeatures: a Generate, so no
-    //    filter copies the kernel call). Each stage's survivors are
-    //    counted by an observer on the rows that reach the next filter,
-    //    and the redaction audit count in the projection that still holds
-    //    both texts; the one action that builds `cleaned` reports them all
-    val repNgram = cfg.maxDupNgramFrac.fold(0)(_ => math.max(cfg.repNgram, 1))
-    val feats = TextAnalysis.withTextFeatures(decont, textCol, repNgram)
-    def f(name: String) = col(TextAnalysis.Prefix + name)
-    val repObs = Observation()
-    val repOk = cfg.maxDupNgramFrac
-      .map(t => feats.filter(f("dup_ngram_char_frac") <= t)
-        .observe(repObs, count(lit(1)).as("n")))
-      .getOrElse(feats)
-    val scored = repOk.filter(f("quality_score") >= cfg.minQuality)
-    val qualityObs = Observation()
-    val pinned = cfg.lang
-      .map(l => scored.observe(qualityObs, count(lit(1)).as("n"))
-        .filter(f("lang_guess") === l))
-      .getOrElse(scored)
-    // the document columns (the id first under a language pin, as the
-    // lang stage's old join-back ordered them), then the quality features
-    val docCols = decont.columns.toSeq
-    val kept = TextAnalysis.selectFeatures(pinned,
-      if (cfg.lang.isDefined) idCol +: docCols.filterNot(_ == idCol)
-      else docCols,
-      TextAnalysis.QualityFields)
-    val redactObs = Observation()
-    val cleaned = (if (cfg.redactPii) {
-      val cols = kept.columns.map(c =>
-        if (c == textCol) col("_redacted").as(textCol) else col(c))
-      kept.withColumn("_redacted", Redact.redactText(col(textCol)))
-        .observe(redactObs, coalesce(sum(when(col("_redacted") =!=
-          col(textCol), 1L).otherwise(0L)), lit(0L)).as("n"))
-        .select(cols: _*)
-    } else kept).persist(lvl)
-    val nLang = cleaned.count()
-    def observed(o: Observation): Long = o.get("n").asInstanceOf[Long]
-    val nRep = cfg.maxDupNgramFrac.map(_ => observed(repObs))
-    val nQuality = cfg.lang.map(_ => observed(qualityObs)).getOrElse(nLang)
-    val nRedacted = if (cfg.redactPii) Some(observed(redactObs)) else None
-    // release the stage checkpoint (cleaned is materialized above and
-    // every audit count is done — nothing reads it again)
-    import org.apache.spark.sql.graftbridge.DatasetBridge
-    cfg.benchmarks.foreach(_ => DatasetBridge.releaseCheckpoint(decont))
-    nearDeduped.unpersist(blocking = false)
-
-    (cleaned, StageCounts(nIn, nExact, nNear, nQuality, nLang,
-      nDecont, nRedacted, nRep), keepers)
+      def n(o: Observation) = Stages.observedCount(o)
+      cap.foreach(_.report())
+      val nLang = n(langObs)
+      StageCounts(n(inputObs), nExact, nNearCut.getOrElse(n(nearObs)),
+        cfg.lang.fold(nLang)(_ => n(qualityObs)), nLang,
+        cfg.benchmarks.map(_ => n(decontObs)),
+        if (cfg.redactPii) Some(n(redactObs)) else None,
+        cfg.maxDupNgramFrac.map(_ => n(repObs)))
+    }
   }
 }
 
@@ -209,7 +229,9 @@ object CleanCorpus {
   * Full mode writes `<output>/cleaned` (parquet, original columns +
   * quality features), `<output>/exact_survivor_ids` (the cumulative
   * exact-dedup survivor ids — the handle future increments dedup
-  * against) and `<output>/stats.json` (per-stage survivor counts).
+  * against) and `<output>/stats.json` (per-stage survivor counts). The
+  * first two are CleanCorpus.clean's writer, run side by side; stats.json
+  * follows once both have returned, so a run that fails writes none.
   *
   * `--previous` is the daily-append mode (CleanCorpus.clean's
   * `previous`): ONLY --input's new docs are cleaned, against the previous
@@ -236,7 +258,12 @@ object CleanCorpusMain {
     spark.read.parquet(paths.split(",").map(_.trim).filter(_.nonEmpty): _*)
 
   def run(spark: SparkSession,
-          opts: Map[String, String]): CleanCorpus.StageCounts = {
+          opts: Map[String, String]): CleanCorpus.StageCounts =
+    run(spark, opts, _ => ())
+
+  /** [[run]] with the cuts' test seam (CleanCorpus.clean's `drill`). */
+  private[graft] def run(spark: SparkSession, opts: Map[String, String],
+                         drill: DataFrame => Unit): CleanCorpus.StageCounts = {
     val out = Cli.required(opts, "output")
     val docs = readMulti(spark, Cli.required(opts, "input"))
     val lang = opts.getOrElse("lang", "en") match {
@@ -264,20 +291,17 @@ object CleanCorpusMain {
     val previous = prevIds.map(ids =>
       readMulti(spark, Cli.required(opts, "previous-input"))
         .join(ids, Seq("doc_id"), "left_semi"))
-    val (cleaned, counts, exactIds) =
-      CleanCorpus.clean(docs, cfg, previous = previous)
-    // clean returns both handles materialized (`cleaned` by its count, the
-    // exact ids by the exact stage's count) and no output reads another,
-    // so the three are written side by side; the caches are released once
-    // every writer has returned
-    graft.linkage.Actions.together(
-      () => cleaned.write.mode("overwrite").parquet(s"$out/cleaned"),
-      () => prevIds.fold(exactIds)(_.unionByName(exactIds))
-        .write.mode("overwrite").parquet(s"$out/exact_survivor_ids"),
-      () => graft.linkage.TableIO.writeFile(spark, s"$out/stats.json",
-        counts.toJson))
-    cleaned.unpersist(blocking = false)
-    exactIds.unpersist(blocking = false)
+    // `cleaned` is the one query that runs the near-dup and text stages;
+    // the exact ids read a built cut, so the two writes run side by side.
+    // The stage counts exist once both have returned
+    val counts = CleanCorpus.clean(docs, cfg, "doc_id", "text", previous,
+        drill) { (cleaned, exactIds) =>
+      graft.linkage.Actions.together(
+        () => cleaned.write.mode("overwrite").parquet(s"$out/cleaned"),
+        () => prevIds.fold(exactIds)(_.unionByName(exactIds))
+          .write.mode("overwrite").parquet(s"$out/exact_survivor_ids"))
+    }
+    graft.linkage.TableIO.writeFile(spark, s"$out/stats.json", counts.toJson)
     println(s"[graft] clean-corpus: ${counts.toJson}")
     counts
   }

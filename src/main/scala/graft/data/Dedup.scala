@@ -1,6 +1,6 @@
 package graft.data
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 import graft.linkage.expr.{functions => gf}
 
@@ -94,56 +94,63 @@ object Dedup {
         * a bounded straggler. */
       capRatio: Double = 0.02,
       minBucketCap: Long = 5000,
-      maxBucketCap: Long = 20000) {
-    /** Is the oversized-bucket guard live at this config? */
-    def capOn: Boolean = capRatio < 1.0
+      maxBucketCap: Long = 20000)
+
+  /** The oversized-bucket guard over a (band, bucket, …) relation of
+    * `docs` documents: a (band, bucket) holding more than
+    * min(maxBucketCap, max(minBucketCap, capRatio·docs)) rows is dropped
+    * from the candidate join (a capped bucket is lost RECALL — never drop
+    * silently). [[kept]] applies the cap inside the candidate query, as a
+    * bucket-size aggregate and a left-semi join, and observes the dropped
+    * buckets and rows on the sizes; [[report]] logs them once that query
+    * has run. `docs` is the row count observed on the build of the
+    * relation the buckets come from (the kernel relation, simhash's
+    * signature relation), so the guard runs no job of its own. */
+  private[graft] final class BucketCap private (buckets: DataFrame,
+                                                cap: Long, tag: String) {
+    private val dropped = Observation()
+    private val sizes = buckets.groupBy("band", "bucket")
+      .agg(count(lit(1)).as("_n"))
+    private val over = col("_n") > cap
+    private val stats = Seq(count(when(over, 1)).as("buckets"),
+      coalesce(sum(when(over, col("_n"))), lit(0L)).as("rows"))
+
+    /** `buckets` without the rows of its over-cap buckets. */
+    val kept: DataFrame = buckets.join(
+      sizes.observe(dropped, stats.head, stats.tail: _*).filter(!over)
+        .select("band", "bucket"),
+      Seq("band", "bucket"), "left_semi")
+
+    /** Logs the dropped buckets and rows once the query that read [[kept]]
+      * has run. When a stage above the cap turned out empty (no candidate
+      * pair survived), AQE dropped the cap's branch from the final plan
+      * and its observation with it; the sizes are then aggregated again,
+      * in one query of their own. */
+    def report(): Unit = {
+      val r = graft.linkage.Stages.observed(dropped)
+        .getOrElse(sizes.agg(stats.head, stats.tail: _*).head())
+      val rows = r.getAs[Long]("rows")
+      if (rows > 0)
+        println(s"[graft] $tag: dropped ${r.getAs[Long]("buckets")} hot " +
+          s"bucket(s) holding $rows rows over cap=$cap — bounded join " +
+          "partitions traded for recall in those buckets " +
+          "(MinHashConfig.capRatio/minBucketCap/maxBucketCap)")
+    }
   }
 
-  /** Drop (band, bucket) groups holding more than
-    * min(maxBucketCap, max(minBucketCap, capRatio·|docs|)) rows from a
-    * bucket relation, logging the dropped bucket/row counts (a capped
-    * bucket is lost RECALL — never drop silently). Returns None when NO
-    * bucket exceeds the cap — the steady state for every non-degenerate
-    * corpus — so the caller can keep its original single-job plan
-    * untouched (no semi-join, no materialization barrier). `buckets` is
-    * consumed by the stats job AND (in the degenerate case) the
-    * kept-side semi-join — the caller must make it cheap to evaluate
-    * twice, either by persisting it or (better, simhash) by persisting
-    * the narrow relation it derives from.
-    *
-    * The corpus size is DERIVED from the bucket relation itself — each
-    * doc contributes exactly `rowsPerDoc` rows (one per band), so
-    * |docs| = total/rowsPerDoc — rather than counted with a separate
-    * action: a `docs.count()`/`sigs.count()` job re-ran the whole
-    * signature computation once more per call (measured ~2 s of the
-    * sf0.1 simhash query). One agg over the bucket relation yields total
-    * AND the max bucket size, so the guard's steady-state cost is that
-    * single stats pass. */
-  private[graft] def capBuckets(buckets: DataFrame, capRatio: Double,
-                                minBucketCap: Long, maxBucketCap: Long,
-                                rowsPerDoc: Int,
-                                tag: String): Option[DataFrame] = {
-    if (capRatio >= 1.0) return None
-    val counts = buckets.groupBy(col("band"), col("bucket"))
-      .agg(count(lit(1)).as("n"))
-    val head = counts
-      .agg(coalesce(sum(col("n")), lit(0L)).as("total"),
-        coalesce(max(col("n")), lit(0L)).as("biggest"))
-      .collect().head
-    val (total, biggest) = (head.getLong(0), head.getLong(1))
-    val cap = math.min(maxBucketCap, math.max(minBucketCap,
-      (capRatio * (total / math.max(rowsPerDoc, 1))).toLong))
-    if (biggest <= cap) return None
-    val over = counts.filter(col("n") > cap)
-      .agg(count(lit(1)).as("b"), coalesce(sum(col("n")), lit(0L)).as("r"))
-      .collect().head
-    println(s"[graft] $tag: dropped ${over.getLong(0)} hot bucket(s) " +
-      s"holding ${over.getLong(1)} rows over cap=$cap — bounded join " +
-      "partitions traded for recall in those buckets " +
-      "(MinHashConfig.capRatio/minBucketCap/maxBucketCap)")
-    Some(buckets.join(
-      counts.filter(col("n") <= cap).select("band", "bucket"),
-      Seq("band", "bucket"), "left_semi"))
+  private[graft] object BucketCap {
+    /** The guard over `buckets`; None when it is off (capRatio >= 1.0) or
+      * cannot drop anything: a bucket holds at most one row per document,
+      * so no bucket of `docs` documents exceeds a cap of at least `docs`
+      * rows, and the candidate query keeps its uncapped plan. */
+    def apply(buckets: DataFrame, docs: Long, capRatio: Double,
+              minBucketCap: Long, maxBucketCap: Long,
+              tag: String): Option[BucketCap] = {
+      val cap = math.min(maxBucketCap,
+        math.max(minBucketCap, (capRatio * docs).toLong))
+      if (capRatio >= 1.0 || docs <= cap) None
+      else Some(new BucketCap(buckets, cap, tag))
+    }
   }
 
   /** The LSH band buckets of a signature column. */
@@ -234,20 +241,19 @@ object Dedup {
     * (id_a, id_b, jaccard ≥ threshold).
     *
     * One path: the per-doc kernel projection (id, shingles, buckets) →
-    * posexplode of the buckets → hot-bucket cap → bucket self-join →
-    * one shingle-array join per pair side → sorted merge → threshold.
-    * The per-doc relation is the only fan-out point (the buckets feed
-    * the cap's stats pass and both candidate-join sides, the shingle
-    * arrays both verify sides), and it is a LAZY localCheckpoint: a
-    * checkpoint keeps every downstream plan anchored on one RDD scan
-    * instead of re-embedding the kernel lineage per reference, and the
-    * cap's stats job materializes it (with the cap off nothing else
-    * would before the fan-out, so it is eager then). Its blocks are
-    * released once the result is materialized. The returned DataFrame
-    * is PERSISTED (a checkpointed result would dodge Dataset.unpersist
-    * and the bench's clearCache); unpersist it when done. A lost result
-    * block recomputes through the full deterministic lineage — slow
-    * path, never wrong.
+    * posexplode of the buckets → hot-bucket cap → bucket self-join → one
+    * shingle-array join per pair side → sorted merge → threshold. The
+    * per-doc relation is the only fan-out point (the buckets feed both
+    * candidate-join sides, the shingle arrays both verify sides), so it is
+    * built first as an eager local checkpoint ([[kernelCut]]): every later
+    * plan starts from one RDD scan instead of re-embedding the kernel
+    * lineage per reference, and the row count observed on that build
+    * sizes the cap, which the candidate query applies itself
+    * ([[BucketCap]]). Its blocks are released once the result is
+    * materialized. The returned DataFrame is PERSISTED (a checkpointed
+    * result would dodge Dataset.unpersist and the bench's clearCache);
+    * unpersist it when done. A lost result block recomputes through the
+    * full deterministic lineage — slow path, never wrong.
     *
     * `previous` is the daily-append form (the linkage increment's
     * analog): `docs` are the NEW docs and `previous` the corpus they
@@ -266,27 +272,38 @@ object Dedup {
   def minHashNearDups(docs: DataFrame, cfg: MinHashConfig = MinHashConfig(),
                       idCol: String = "doc_id",
                       textCol: String = "text",
-                      previous: Option[DataFrame] = None): DataFrame =
-    minHashNearDupsAbove(docs, previous,
-      previous.flatMap(previousMaxId(_, docs, idCol)), cfg, idCol, textCol)
+                      previous: Option[DataFrame] = None): DataFrame = {
+    val above = previous.flatMap(previousMaxId(_, docs, idCol))
+    val stages = new graft.linkage.Stages()
+    stages.releasing {
+      val (pairs, cap) =
+        kernelCut(docs, previous, above, cfg, idCol, textCol, stages)
+      val out = pairs
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      out.count()
+      cap.foreach(_.report())
+      out
+    }
+  }
 
-  /** [[minHashNearDups]] with the previous corpus's largest id already
-    * checked by [[previousMaxId]] (a caller that checks before its own
-    * first stage passes the bound on instead of aggregating twice). */
-  private[data] def minHashNearDupsAbove(docs: DataFrame,
-                                         previous: Option[DataFrame],
-                                         above: Option[Column],
-                                         cfg: MinHashConfig, idCol: String,
-                                         textCol: String): DataFrame = {
+  /** The near-dup body every full run and daily append shares: the kernel
+    * relation over previous ∪ `docs` is built as an eager checkpoint on
+    * `stages`, and the verified pairs over it ([[nearDupPairs]], the cap
+    * sized by the observed kernel row count) come back LAZY, with the cap
+    * whose [[BucketCap.report]] the caller runs after the action that
+    * reads them. `above` is [[previousMaxId]]'s bound. Docs without text
+    * have no buckets and never pair, so they are left out of the kernel
+    * relation and of the count that sizes the cap. */
+  private[data] def kernelCut(docs: DataFrame, previous: Option[DataFrame],
+                              above: Option[Column], cfg: MinHashConfig,
+                              idCol: String, textCol: String,
+                              stages: graft.linkage.Stages)
+      : (DataFrame, Option[BucketCap]) = {
     def narrow(df: DataFrame) = df.select(col(idCol), col(textCol))
     val all = previous.fold(docs)(p => narrow(p).unionByName(narrow(docs)))
-    val mh = minHashDocs(all, cfg, idCol, textCol)
-      .localCheckpoint(eager = !cfg.capOn)
-    val out = nearDupPairs(mh, cfg, idCol, above)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    org.apache.spark.sql.graftbridge.DatasetBridge.releaseCheckpoint(mh)
-    out
+    val (mh, n) = stages.checkpoint(
+      minHashDocs(all.filter(col(textCol).isNotNull), cfg, idCol, textCol))
+    nearDupPairs(mh, n, cfg, idCol, above)
   }
 
   /** The largest id of `previous`, once the append-only id rule is
@@ -306,16 +323,20 @@ object Dedup {
     if (r.isNullAt(0)) None else Some(lit(r.get(0)))
   }
 
-  /** Verified pairs over a per-doc (id, shingles, buckets) relation;
-    * `above` restricts the larger id of each pair (see [[lshCandidates]]). */
-  private[graft] def nearDupPairs(mh: DataFrame, cfg: MinHashConfig,
-                                  idCol: String,
-                                  above: Option[Column] = None): DataFrame = {
+  /** Verified pairs over a per-doc (id, shingles, buckets) relation of
+    * `docs` rows, with the hot-bucket cap sized from `docs` applied to its
+    * buckets; `above` restricts the larger id of each pair (see
+    * [[lshCandidates]]). The pairs are lazy: run [[BucketCap.report]]
+    * after the action that reads them. */
+  private[graft] def nearDupPairs(mh: DataFrame, docs: Long,
+                                  cfg: MinHashConfig, idCol: String,
+                                  above: Option[Column] = None)
+      : (DataFrame, Option[BucketCap]) = {
     val buckets = bucketRows(mh, idCol)
-    val kept = capBuckets(buckets, cfg.capRatio, cfg.minBucketCap,
-      cfg.maxBucketCap, cfg.bands, "minhash-lsh").getOrElse(buckets)
-    verifyPairs(lshCandidates(kept, idCol, above), mh, idCol,
-      cfg.jaccardThreshold)
+    val cap = BucketCap(buckets, docs, cfg.capRatio, cfg.minBucketCap,
+      cfg.maxBucketCap, "minhash-lsh")
+    (verifyPairs(lshCandidates(cap.fold(buckets)(_.kept), idCol, above), mh,
+      idCol, cfg.jaccardThreshold), cap)
   }
 
   /** Near-duplicate GROUPS: the linkage engine's large-star/small-star
@@ -442,41 +463,33 @@ object Dedup {
         .filter(col("hamming") <= maxDistance)
     }
     if (!capOn) return pairsOver(bandedOf(sigs))
-    // The guard's stats job and both join sides all consume the
-    // signatures; cache the NARROW (id, simhash) projection (16
-    // bytes/row) so the expensive signature compute runs once and the
-    // cheap band-explode re-derives from cache per consumer. Caching the
-    // exploded banded relation instead (an earlier draft) measured 4.3 s
-    // vs 2.0 s uncapped at sf0.1 — columnar-caching the wide fan-out and
-    // re-reading it dwarfed the compute it saved. Handing the steady
-    // state back the caller's ORIGINAL uncached plan (another draft)
-    // re-paid the whole signature compute on top of the stats pass
-    // (5.5 s vs 2.4 s uncapped — `sigs.count()` prunes the hash
-    // expressions, so the compute the stats job shares with the join is
-    // most of the query). The .select wrapper gives this call its OWN
-    // storage handle: persisting the caller's frame directly would
-    // clobber their cache state. Corpus size for the cap falls out of
-    // the same stats job (|docs| = rows/nBands — every doc has a
-    // simhash).
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    // lazy localCheckpoint, not persist (r06): the banded join's two
-    // sides and the stats pass each re-embedded the full signature
-    // aggregation in their logical plans — the checkpoint truncates the
-    // lineage at the materialization the stats pass performs anyway
-    // (same planning-girth lesson as minHashNearDups; the simhash plan
-    // dump shrank 70k → ~8k chars)
-    val sigRel = sigs.select(col(idCol), col("simhash"))
-      .localCheckpoint(eager = false)
-    val rawBanded = bandedOf(sigRel)
-    val kept = capBuckets(rawBanded, capRatio, minBucketCap, maxBucketCap,
-      nBands, "simhash").getOrElse(rawBanded)
-    // materialize through the checkpointed signature relation, then
-    // release it; the returned (persisted) frame is the caller-owned
-    // handle (a checkpointed result would dodge Dataset.unpersist)
-    val p = pairsOver(kept).persist(lvl)
-    p.count()
-    org.apache.spark.sql.graftbridge.DatasetBridge.releaseCheckpoint(sigRel)
-    p
+    // Both join sides consume the signatures; cut the NARROW (id, simhash)
+    // projection (16 bytes/row) so the expensive signature compute runs
+    // once and the cheap band-explode re-derives from it per side.
+    // Caching the exploded banded relation instead (an earlier draft)
+    // measured 4.3 s vs 2.0 s uncapped at sf0.1 — columnar-caching the
+    // wide fan-out and re-reading it dwarfed the compute it saved. The cut
+    // is an eager local checkpoint, not a persist (r06): each join side
+    // re-embedded the full signature aggregation in its logical plan (the
+    // simhash plan dump shrank 70k → ~8k chars). Its row count, observed
+    // on the build, is |docs| for the cap (every doc has a simhash).
+    val stages = new graft.linkage.Stages()
+    stages.releasing {
+      val (sigRel, n) = stages.checkpoint(sigs.select(col(idCol),
+        col("simhash")))
+      val rawBanded = bandedOf(sigRel)
+      val cap = BucketCap(rawBanded, n, capRatio, minBucketCap, maxBucketCap,
+        "simhash")
+      // materialize through the checkpointed signature relation, which is
+      // released on return; the returned (persisted) frame is the
+      // caller-owned handle (a checkpointed result would dodge
+      // Dataset.unpersist)
+      val p = pairsOver(cap.fold(rawBanded)(_.kept))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      p.count()
+      cap.foreach(_.report())
+      p
+    }
   }
 
   // ---------- span-level (substring) dedup ----------

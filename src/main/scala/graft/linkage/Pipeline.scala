@@ -1,9 +1,8 @@
 package graft.linkage
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.DatasetBridge
 
 /** End-to-end linkage pipeline (reference flagship `households.py`
   * lifecycle, SURVEY.md §3.1):
@@ -89,45 +88,6 @@ object Pipeline {
   /** Blocking passes: exact mode blocks on [zip, full text]. */
   private def passes(cfg: Config): Seq[Blocking.Pass] =
     if (cfg.exactAddresses) Blocking.exactPasses else Blocking.defaultPasses
-
-  /** The stage checkpoints of one run, in build order. A run's body
-    * goes through [[releasingOnFailure]]: if it throws, every checkpoint
-    * built so far (the one whose build failed included) is released
-    * before the failure propagates, since no Result carries them to the
-    * caller's unpersist. `drill` sees each checkpoint right after its
-    * build: a test seam for removing its blocks there, not an option. */
-  private final class Stages(drill: DataFrame => Unit) {
-    private val built = new java.util.concurrent.ConcurrentLinkedQueue[RDD[_]]
-
-    def all: Seq[RDD[_]] = built.toArray(Array.empty[RDD[_]]).toSeq
-
-    /** A stage output (records, candidate pairs, scored pairs, clusters)
-      * built once, as its own query, into an eager local checkpoint at
-      * [[Cluster.CheckpointLevel]]; returned with its row count, observed
-      * on that build. Every later query starts from the checkpoint's
-      * `LogicalRDD` leaf instead of re-embedding the plan that built it
-      * (a persisted relation's `InMemoryRelation` carries its whole plan
-      * into every query that reads it). A lost block is not recomputable:
-      * the read fails with a SparkException naming the checkpointed RDD.
-      * The backing RDD is recorded before the build job runs, so a failed
-      * build's blocks are released too. */
-    def checkpoint(df: DataFrame): (DataFrame, Long) = {
-      val rows = Observation()
-      val cp = DatasetBridge.localCheckpoint(
-        df.observe(rows, count(lit(1)).as("rows")), Cluster.CheckpointLevel,
-        built.add)
-      drill(cp)
-      (cp, rows.get("rows").asInstanceOf[Long])
-    }
-
-    def releasingOnFailure[A](body: => A): A =
-      try body
-      catch {
-        case t: Throwable =>
-          all.foreach(_.unpersist(blocking = false))
-          throw t
-      }
-  }
 
   def run(spark: SparkSession, transcripts: DataFrame,
           cfg: Config = Config()): Result =

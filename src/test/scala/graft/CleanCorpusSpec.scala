@@ -31,14 +31,13 @@ class CleanCorpusSpec extends AnyFunSuite with SparkFixture {
 
   test("clean(): stagewise survivors and deterministic keep policy") {
     spark.catalog.clearCache() // isolate the strand-check from prior suites
-    val (cleaned, counts, exactIds) = CleanCorpus.clean(corpus,
+    val (cleaned, counts, exactIds) = cleanWritten(corpus,
       CleanCorpus.Config(
         lang = Some("en"), minQuality = 0.5,
         minhash = Dedup.MinHashConfig(jaccardThreshold = 0.6, bands = 32)))
-    // both handles come back fully cached: the exact ids by the action
-    // that counted the exact stage, not by a pass of their own
-    assert(spark.sparkContext.getRDDStorageInfo
-      .count(i => i.numCachedPartitions == i.numPartitions) == 2)
+    // the writer had the outputs; clean leaves no cache behind it
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty,
+      s"persistent RDDs after clean: ${spark.sparkContext.getPersistentRDDs}")
     val ids = cleaned.select("doc_id").collect().map(_.getLong(0)).toSet
     // 1 drops as exact dup, 3 as near-dup, 4 as junk, 5 as German
     assert(ids == Set(0L, 2L, 6L), s"survivors: $ids")
@@ -53,8 +52,6 @@ class CleanCorpusSpec extends AnyFunSuite with SparkFixture {
     assert(counts.afterLang == 3)      // -5 (German)
     // quality features ride along on the survivors
     assert(cleaned.columns.contains("quality_score"))
-    cleaned.unpersist()
-    exactIds.unpersist()
     // interior caches released
     assert(spark.sparkContext.getPersistentRDDs.isEmpty,
       "clean() must not strand cached blocks")
@@ -73,7 +70,7 @@ class CleanCorpusSpec extends AnyFunSuite with SparkFixture {
     ).toDF("doc_id", "text")
     val bench = Seq((100L, "over the lazy dog"))
       .toDF("bench_id", "text")
-    val (cleaned, counts, exactIds) = CleanCorpus.clean(docs,
+    val (cleaned, counts, _) = cleanWritten(docs,
       CleanCorpus.Config(
         lang = Some("en"), minQuality = 0.5,
         minhash = Dedup.MinHashConfig(jaccardThreshold = 0.6, bands = 32),
@@ -93,8 +90,6 @@ class CleanCorpusSpec extends AnyFunSuite with SparkFixture {
     assert(counts.toJson.contains("\"after_decontaminate\":3") &&
       counts.toJson.contains("\"after_repetition\":2") &&
       counts.toJson.contains("\"redacted_docs\":1"))
-    cleaned.unpersist()
-    exactIds.unpersist()
     assert(spark.sparkContext.getPersistentRDDs.isEmpty,
       "optional stages must not strand cached blocks")
   }
@@ -104,23 +99,21 @@ class CleanCorpusSpec extends AnyFunSuite with SparkFixture {
     spark.catalog.clearCache()
     // no PII anywhere: the redaction observer sums over rows that all
     // compare equal, and must report 0
-    val (c1, counts1, e1) = CleanCorpus.clean(corpus, CleanCorpus.Config(
+    val (_, counts1, _) = cleanWritten(corpus, CleanCorpus.Config(
       minhash = Dedup.MinHashConfig(jaccardThreshold = 0.6, bands = 32),
       redactPii = true))
     assert(counts1.redactedDocs == Some(0L))
     assert(counts1.toJson.contains("\"redacted_docs\":0"))
     assert(counts1.afterQuality == 4 && counts1.afterLang == 3)
-    c1.unpersist(); e1.unpersist()
     // a zero-token doc passes a zero quality floor and is a quality
     // survivor (langGuessDf keeps it as "und"), then fails the pin
     val docs = corpus.unionByName(Seq((9L, "   ")).toDF("doc_id", "text"))
-    val (c2, counts2, e2) = CleanCorpus.clean(docs, CleanCorpus.Config(
+    val (_, counts2, _) = cleanWritten(docs, CleanCorpus.Config(
       minQuality = 0.0,
       minhash = Dedup.MinHashConfig(jaccardThreshold = 0.6, bands = 32)))
     assert(counts2.afterNearDup == 6)
     assert(counts2.afterQuality == 6, s"${counts2.toJson}")
     assert(counts2.afterLang == 3, s"${counts2.toJson}")
-    c2.unpersist(); e2.unpersist()
   }
 
   test("CleanCorpusMain writes cleaned parquet + stats.json") {
@@ -156,5 +149,30 @@ class CleanCorpusSpec extends AnyFunSuite with SparkFixture {
     assert(stats2 == """{"input":7,"after_exact_dedup":6,""" +
       """"after_neardup":5,"after_decontaminate":4,"after_repetition":4,""" +
       """"after_quality":3,"after_lang":2,"redacted_docs":0}""", stats2)
+  }
+
+  test("CleanCorpusMain.run stays within its Spark job budget") {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    val dir = tempDir("cleanbudget")
+    corpus.write.mode("overwrite").parquet(s"$dir/in")
+    val sc = spark.sparkContext
+    org.apache.spark.graftbridge.Bus.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      CleanCorpusMain.run(spark, Map("input" -> s"$dir/in",
+        "output" -> s"$dir/out"))
+      org.apache.spark.graftbridge.Bus.drain(sc)
+    } finally sc.removeSparkListener(listener)
+    info(s"${jobs.get} Spark jobs")
+    // the run took 12 jobs on local[4] when this budget was set: two cuts
+    // (exact stage, MinHash kernel relation), then the cleaned write and
+    // the exact-id write. The persisted stages with their own counts ran
+    // 29 on perfbench's clean-corpus input
+    assert(jobs.get <= 16, s"${jobs.get} Spark jobs, budget 16")
   }
 }

@@ -434,4 +434,44 @@ class DataOpsSpec extends AnyFunSuite with SparkFixture {
     val f = feats.filter(col("modality") === "image").head()
     assert(f.n_bytes >= 256 && f.mean_byte > 64 && f.mean_byte < 192)
   }
+
+  test("a capped flood logs its dropped buckets and rows") {
+    import spark.implicits._
+    // never drop silently: each capped near-dup run prints how many
+    // buckets and rows its cap dropped, counted in the candidate query
+    def logged(run: => Unit): String = {
+      val buf = new java.io.ByteArrayOutputStream
+      Console.withOut(buf)(run)
+      buf.toString("UTF-8")
+    }
+    val flood = spark.range(300).select((col("id") + 50000).as("doc_id"),
+      lit("flood of identical tokens repeated here").as("text"))
+    val cfg = Dedup.MinHashConfig(bands = 32, jaccardThreshold = 0.6,
+      minBucketCap = 50)
+    // 300 identical docs fill one bucket in each of the 32 bands
+    val minhash = logged(Dedup.minHashNearDups(corpus.unionByName(flood), cfg)
+      .unpersist())
+    assert(minhash.contains("minhash-lsh: dropped 32 hot bucket(s) " +
+      "holding 9600 rows over cap=50"), minhash)
+    // the flood alone: the cap leaves no candidate, so AQE drops the
+    // cap's branch (and its observation) from the final plan
+    val alone = logged(Dedup.minHashNearDups(flood, cfg).unpersist())
+    assert(alone.contains("minhash-lsh: dropped 32 hot bucket(s) " +
+      "holding 9600 rows over cap=50"), alone)
+    // one simhash for 300 docs: one bucket in each of 4 bands
+    val simhash = logged(Dedup.simHashNearDups(
+      Dedup.simHash(corpus.unionByName(flood)), maxDistance = 3,
+      minBucketCap = 50).unpersist())
+    assert(simhash.contains("simhash: dropped 4 hot bucket(s) holding " +
+      "1200 rows over cap=50"), simhash)
+    // the corpus cleaner reports its cap after the write: a near-dup
+    // flood (each copy one word apart) survives exact dedup into it
+    val base = corpus.filter(col("doc_id") === 1L).head().getString(1)
+    val nearFlood = (0 until 80).map(i =>
+      (60000L + i, s"$base w$i")).toDF("doc_id", "text")
+    val clean = logged(cleanWritten(corpus.unionByName(nearFlood),
+      graft.data.CleanCorpus.Config(lang = None, minhash = cfg)))
+    assert("""minhash-lsh: dropped [1-9]\d* hot bucket\(s\) holding \d+ rows over cap=50"""
+      .r.findFirstIn(clean).isDefined, clean)
+  }
 }

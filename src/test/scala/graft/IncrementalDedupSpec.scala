@@ -115,10 +115,9 @@ class IncrementalDedupSpec extends AnyFunSuite with SparkFixture {
       maxDupNgramFrac = Some(0.5), redactPii = true)
     val all = d1.unionByName(p2).unionByName(d3)
 
-    val (full, fullCounts, fullExact) = CleanCorpus.clean(all, ccfg)
+    val (full, fullCounts, _) = cleanWritten(all, ccfg)
     val fullRows = full.select("doc_id", "text").collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
-    full.unpersist(); fullExact.unpersist()
     assert(fullCounts.afterDecontaminate.get < fullCounts.afterNearDup,
       "benchmark must contaminate at least one doc")
     assert(fullCounts.redactedDocs.get >= 1L,
@@ -129,18 +128,16 @@ class IncrementalDedupSpec extends AnyFunSuite with SparkFixture {
     // (the CLI path breaks it by writing parquet) — without it the
     // increment-2 plan tree is big enough that merely RENDERING its
     // explain string OOMs the test JVM
-    val (c1, _, ids1) = CleanCorpus.clean(d1, ccfg)
+    val (c1, _, ids1) = cleanWritten(d1, ccfg)
     val exact1 = d1.join(ids1, Seq("doc_id"), "left_semi").localCheckpoint()
-    ids1.unpersist()
-    val (c2, _, ids2) = CleanCorpus.clean(p2, ccfg, previous = Some(exact1))
+    val (c2, _, ids2) = cleanWritten(p2, ccfg, previous = Some(exact1))
     val exact12 = exact1.unionByName(p2.join(ids2, Seq("doc_id"), "left_semi"))
       .localCheckpoint()
-    val (c3, _, ids3) = CleanCorpus.clean(d3, ccfg, previous = Some(exact12))
+    val (c3, _, _) = cleanWritten(d3, ccfg, previous = Some(exact12))
     val incRows = (c1.select("doc_id", "text").collect() ++
       c2.select("doc_id", "text").collect() ++
       c3.select("doc_id", "text").collect())
       .map(r => r.getLong(0) -> r.getString(1)).toMap
-    Seq(c1, c2, c3, ids2, ids3).foreach(_.unpersist())
 
     assert(incRows.keySet == fullRows.keySet,
       s"missing=${fullRows.keySet -- incRows.keySet} " +
@@ -160,11 +157,10 @@ class IncrementalDedupSpec extends AnyFunSuite with SparkFixture {
       minhash = cfg.copy(jaccardThreshold = 0.6))
     val all123 = d1.unionByName(d2).unionByName(d3)
 
-    val (fullCleaned, fullCounts, fullExact) = CleanCorpus.clean(all123, ccfg)
+    val (fullCleaned, fullCounts, fullExact) = cleanWritten(all123, ccfg)
     val fullIds = fullCleaned.select("doc_id").collect()
       .map(_.getLong(0)).toSet
     val fullExactIds = fullExact.collect().map(_.getLong(0)).toSet
-    fullCleaned.unpersist(); fullExact.unpersist()
 
     val tmp = tempDir("cleaninc")
     Seq(d1, d2, d3).zipWithIndex.foreach { case (df, i) =>
@@ -190,11 +186,9 @@ class IncrementalDedupSpec extends AnyFunSuite with SparkFixture {
         .collect().map(_.getLong(0))).toSet
     // full clean() runs with lang=Some("en") by default in Config — the
     // CLI runs above pinned lang none both sides, so compare none-vs-none
-    val (fullNone, _, noneExact) =
-      CleanCorpus.clean(all123, ccfg.copy(lang = None))
+    val (fullNone, _, _) = cleanWritten(all123, ccfg.copy(lang = None))
     val fullNoneIds = fullNone.select("doc_id").collect()
       .map(_.getLong(0)).toSet
-    fullNone.unpersist(); noneExact.unpersist()
     assert(incIds == fullNoneIds,
       s"missing=${fullNoneIds -- incIds} extra=${incIds -- fullNoneIds}")
 
@@ -214,7 +208,7 @@ class IncrementalDedupSpec extends AnyFunSuite with SparkFixture {
 
     // id-discipline violation is refused loudly
     val e = intercept[IllegalArgumentException] {
-      CleanCorpus.clean(Seq((1L, "way too small id")).toDF("doc_id", "text"),
+      cleanWritten(Seq((1L, "way too small id")).toDF("doc_id", "text"),
         ccfg, previous = Some(d2))
     }
     assert(e.getMessage.contains("append-only"))
@@ -234,7 +228,7 @@ class IncrementalDedupSpec extends AnyFunSuite with SparkFixture {
     spark.catalog.clearCache()
     val cached = spark.sparkContext.getPersistentRDDs.size
     val e = intercept[IllegalArgumentException] {
-      CleanCorpus.clean(newS, ccfg, previous = Some(prevS))
+      cleanWritten(newS, ccfg, previous = Some(prevS))
     }
     assert(e.getMessage.contains("append-only"), e.getMessage)
     assert(spark.sparkContext.getPersistentRDDs.size == cached,
@@ -247,11 +241,9 @@ class IncrementalDedupSpec extends AnyFunSuite with SparkFixture {
     // passes the candidate filter above 1.9) and drops the new doc
     val prevD = Seq((1.9, text)).toDF("doc_id", "text")
     val newD = Seq((1.95, s"$text india")).toDF("doc_id", "text")
-    val (cleaned, counts, ids) =
-      CleanCorpus.clean(newD, ccfg, previous = Some(prevD))
+    val (_, counts, ids) = cleanWritten(newD, ccfg, previous = Some(prevD))
     assert(ids.collect().map(_.getDouble(0)).toSeq == Seq(1.95))
     assert(counts.afterExact == 1 && counts.afterNearDup == 0,
       counts.toJson)
-    cleaned.unpersist(); ids.unpersist()
   }
 }

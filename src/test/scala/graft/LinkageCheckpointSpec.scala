@@ -183,6 +183,106 @@ class LinkageCheckpointSpec extends AnyFunSuite with SparkFixture {
       transcripts.filter(later), Pipeline.Config(), _))
     base.unpersist()
   }
+
+  /** Two append-only slices of English-like documents (planted exact
+    * copies, one-word near copies, email addresses) and a benchmark set
+    * cut from a slice-1 doc, as parquet under `dir`: in1, in2, bench. */
+  private def cleanInputs(dir: String): Unit = {
+    import spark.implicits._
+    val words = Array("the", "and", "of", "to", "in", "is", "that", "for",
+      "river", "house", "garden", "morning", "people", "story", "market",
+      "winter", "letter", "window", "table", "friend", "music", "city")
+    val rnd = new scala.util.Random(5)
+    val base = (0 until 120).map(i => (i.toLong,
+      Array.fill(30)(words(rnd.nextInt(words.length))).mkString(" ")))
+    val near = base.take(30).map { case (i, t) =>
+      (1000L + i, t.split(" ").updated(9, "changed").mkString(" ")) }
+    val copies = base.slice(30, 40).map { case (i, t) => (2000L + i, t) }
+    val mail = base.slice(40, 50).map { case (i, t) =>
+      (3000L + i, s"$t write to person$i@example.org") }
+    val docs = (base ++ near ++ copies ++ mail).toDF("doc_id", "text")
+    docs.filter(col("doc_id") < 1500L).write.parquet(s"$dir/in1")
+    docs.filter(col("doc_id") >= 1500L).write.parquet(s"$dir/in2")
+    Seq((1L, base(3)._2.split(" ").slice(4, 20).mkString(" ")))
+      .toDF("bench_id", "text").write.parquet(s"$dir/bench")
+  }
+
+  private def allOptions(dir: String): Map[String, String] = Map(
+    "benchmarks" -> s"$dir/bench", "max-dup-ngram-frac" -> "0.3",
+    "redact" -> "true")
+
+  test("clean-corpus plans stay bounded: every option, full and --previous") {
+    val dir = tempDir("cleangate")
+    cleanInputs(dir)
+    val before = persistentRdds
+    // Measured in this spec's session (local[4], 170 docs): the longest
+    // rendered plans are 23.7k chars (full run) and 22.6k (--previous);
+    // the largest analyzed plans 32 and 32 nodes. The linkage bounds leave
+    // about 1.7x and 3x headroom. With persisted stages the full
+    // all-options run took 11 executions and failed this gate: 7
+    // truncation warnings and plans at the 100k cap (90 analyzed nodes).
+    val maxRendered = 40000
+    val maxAnalyzed = 100
+    val full = plansOf(graft.data.CleanCorpusMain.run(spark, allOptions(dir) ++
+      Map("input" -> s"$dir/in1", "output" -> s"$dir/o1")))
+    checkBounded("CleanCorpusMain.run", full, maxRendered, maxAnalyzed)
+    val previous = plansOf(graft.data.CleanCorpusMain.run(spark,
+      allOptions(dir) ++ Map("input" -> s"$dir/in2", "output" -> s"$dir/o2",
+        "previous" -> s"$dir/o1", "previous-input" -> s"$dir/in1")))
+    checkBounded("CleanCorpusMain.run --previous", previous, maxRendered,
+      maxAnalyzed)
+    assert(persistentRdds == before, "the clean runs left checkpoints")
+  }
+
+  /** For each of the `cuts` cuts `CleanCorpusMain.run` builds with `opts`:
+    * run it with that cut's blocks removed right after its build. The run
+    * must fail with a SparkException naming the lost block's RDD, write no
+    * stats.json, and leave no persistent RDD behind; an undrilled run
+    * builds exactly `cuts` cuts. */
+  private def cleanDrill(cuts: Int, dir: String,
+                         opts: Map[String, String]): Unit = {
+    val built = new AtomicInteger
+    graft.data.CleanCorpusMain.run(spark,
+      opts + ("output" -> s"$dir/undrilled"), _ => built.incrementAndGet())
+    assert(built.get == cuts)
+    val keep = persistentRdds
+    (0 until cuts).foreach { k =>
+      val out = s"$dir/drill$k"
+      val seen = new AtomicInteger
+      val lost = new AtomicReference[Option[Int]](None)
+      val e = intercept[SparkException] {
+        graft.data.CleanCorpusMain.run(spark, opts + ("output" -> out), cp =>
+          if (seen.getAndIncrement() == k) {
+            val rdd = DatasetBridge.backingRdd(cp).get.id
+            lost.set(Some(rdd))
+            Bus.dropRddBlocks(rdd)
+          })
+      }
+      val rdd = lost.get.getOrElse(fail(s"cut $k was never built"))
+      val chain = Iterator.iterate[Throwable](e)(_.getCause)
+        .takeWhile(_ != null).map(t => String.valueOf(t.getMessage)).toSeq
+      assert(chain.exists(_.contains(s"rdd_${rdd}_")),
+        s"cut $k: the failure does not name RDD $rdd:\n${chain.mkString("\n")}")
+      assert(!new java.io.File(s"$out/stats.json").exists(),
+        s"cut $k: a failed run wrote stats.json")
+      assert(persistentRdds == keep,
+        s"cut $k: the failed run left RDDs ${persistentRdds -- keep}")
+    }
+  }
+
+  test("lost-block drill: every CleanCorpusMain.run cut fails loudly") {
+    val dir = tempDir("cleandrill")
+    cleanInputs(dir)
+    // exact stage, MinHash kernel relation
+    cleanDrill(2, s"$dir/full", Map("input" -> s"$dir/in1"))
+    // the near-dup survivors decontamination reads are the third cut
+    cleanDrill(3, s"$dir/all", allOptions(dir) + ("input" -> s"$dir/in1"))
+    graft.data.CleanCorpusMain.run(spark,
+      Map("input" -> s"$dir/in1", "output" -> s"$dir/o1"))
+    // the daily append: the kernel relation covers previous ∪ new
+    cleanDrill(2, s"$dir/inc", Map("input" -> s"$dir/in2",
+      "previous" -> s"$dir/o1", "previous-input" -> s"$dir/in1"))
+  }
 }
 
 /** A log4j appender counting Spark's plan-string truncation warnings. */

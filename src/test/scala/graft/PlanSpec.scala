@@ -117,7 +117,8 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     // downstream of the checkpoint: posexplode → cap → candidates →
     // shingle-array joins → merge; no kernel re-run, no interpreted HOF,
     // no object aggregate, and one band posexplode
-    val pairs = Dedup.nearDupPairs(mh.localCheckpoint(), cfg, "doc_id")
+    val (pairs, _) = Dedup.nearDupPairs(mh.localCheckpoint(), 60L, cfg,
+      "doc_id")
     pairs.collect()
     val exprs = exprsOf(pairs)
     assert(!exprs.exists(_.isInstanceOf[MinHashShingles]))
@@ -138,7 +139,9 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     val merges = "sorted_jaccard".r.findAllIn(finalPlan).length
     assert(merges == 1, s"$merges sorted_jaccard calls:\n$finalPlan")
     // before AQE turns small sides into broadcasts: the band join's two
-    // sides, the candidate distinct, and two per verify join (measured 7)
+    // sides, the candidate distinct, and two per verify join (measured 7;
+    // 60 docs cannot fill a bucket past the 5000-row cap, so none is
+    // planned: a planned cap's sizes aggregate and semi-join make it 9)
     val shuffles = """(?m)^[\s:|+-]*Exchange """.r.findAllIn(initialPlan).length
     info(s"$shuffles shuffle exchanges")
     assert(shuffles <= 7, s"$shuffles exchanges:\n$initialPlan")
@@ -164,45 +167,54 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     import spark.implicits._
     import org.apache.spark.sql.catalyst.expressions.Inline
     import org.apache.spark.sql.execution.{GenerateExec, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
+      ExchangeQueryStageExec, QueryStageExec}
     import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
-    import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
     import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
     import graft.data.CleanCorpus
     import graft.linkage.expr.TextFeatures
     val texts = spark.sparkContext.parallelize((0 until 40).map(i =>
       (i.toLong, s"the cat $i and the dog sat on a mat in the house " +
         s"mail user$i@example.org")), 4).toDF("doc_id", "text")
-    val (cleaned, _, ids) = CleanCorpus.clean(texts,
-      CleanCorpus.Config(lang = Some("en"), redactPii = true))
-    val cache = cleaned.queryExecution.withCachedData
-      .collectFirst { case r: InMemoryRelation => r }.get.cacheBuilder
-    // the optimized plan the cache was built from calls the kernel once
-    val logical = cache.logicalPlan
+    // the plan the writer receives, once its action has run
+    var written: DataFrame = null
+    CleanCorpus.clean(texts,
+        CleanCorpus.Config(lang = Some("en"), redactPii = true)) {
+      (cleaned, ids) =>
+        cleaned.collect(); ids.collect()
+        written = cleaned
+    }
+    val qe = written.queryExecution
+    // the optimized plan the write ran calls the kernel once
+    val logical = qe.optimizedPlan
       .flatMap(_.expressions.flatMap(_.collect { case t: TextFeatures => t }))
     assert(logical.size == 1, s"${logical.size} text_features calls:\n" +
-      cache.logicalPlan)
-    // the executed plan from the nearDeduped cache scan up: no shuffle,
-    // no aggregate, one Generate (the kernel's inline), one kernel call
+      qe.optimizedPlan)
+    // the executed plan from the near-dup survivors up (the anti-join, or
+    // the stage that fed it once AQE dropped an empty drop side): no
+    // shuffle, no aggregate, one Generate (the kernel's inline), one
+    // kernel call
+    def boundary(p: SparkPlan) =
+      p.isInstanceOf[ExchangeQueryStageExec] || p.isInstanceOf[BaseJoinExec]
     def tail(p: SparkPlan): Seq[SparkPlan] = p match {
       case a: AdaptiveSparkPlanExec => tail(a.executedPlan)
+      case b if boundary(b) => Seq(b)
       case s: QueryStageExec => s +: tail(s.plan)
-      case i: InMemoryTableScanExec => Seq(i)
       case _ => p +: p.children.flatMap(tail)
     }
-    val nodes = tail(cache.cachedPlan)
-    val shown = cache.cachedPlan.toString
-    assert(nodes.exists(_.isInstanceOf[InMemoryTableScanExec]), shown)
-    assert(!nodes.exists(p => p.isInstanceOf[Exchange] ||
+    val nodes = tail(qe.executedPlan)
+    val shown = qe.executedPlan.toString
+    val tailNodes = nodes.filterNot(boundary)
+    assert(nodes.count(boundary) == 1, shown)
+    assert(!tailNodes.exists(p => p.isInstanceOf[Exchange] ||
       p.isInstanceOf[BaseAggregateExec]), shown)
-    val generators = nodes.collect { case g: GenerateExec => g.generator }
+    val generators = tailNodes.collect { case g: GenerateExec => g.generator }
     assert(generators.size == 1 && generators.head.isInstanceOf[Inline],
       shown)
-    val kernels = nodes.flatMap(_.expressions.flatMap(_.collect {
+    val kernels = tailNodes.flatMap(_.expressions.flatMap(_.collect {
       case t: TextFeatures => t }))
     assert(kernels.size == 1, shown)
-    cleaned.unpersist()
-    ids.unpersist()
   }
 
   test("parquet scan: predicate pushdown + column pruning") {

@@ -17,6 +17,24 @@ trait SparkFixture extends BeforeAndAfterAll { self: Suite =>
     dir.toString
   }
 
+  /** [[graft.data.CleanCorpus.clean]] with a writer that writes both of
+    * its outputs as parquet under a fresh temp directory: (cleaned, stage
+    * counts, exact-survivor ids), read back. */
+  def cleanWritten(docs: org.apache.spark.sql.DataFrame,
+                   cfg: graft.data.CleanCorpus.Config,
+                   previous: Option[org.apache.spark.sql.DataFrame] = None)
+      : (org.apache.spark.sql.DataFrame, graft.data.CleanCorpus.StageCounts,
+        org.apache.spark.sql.DataFrame) = {
+    val dir = tempDir("clean")
+    val counts = graft.data.CleanCorpus.clean(docs, cfg,
+        previous = previous) { (cleaned, ids) =>
+      cleaned.write.parquet(s"$dir/cleaned")
+      ids.write.parquet(s"$dir/exact_ids")
+    }
+    (spark.read.parquet(s"$dir/cleaned"), counts,
+      spark.read.parquet(s"$dir/exact_ids"))
+  }
+
   override def afterAll(): Unit =
     try tempDirs.foreach(d =>
       new scala.reflect.io.Directory(d.toFile).deleteRecursively())
