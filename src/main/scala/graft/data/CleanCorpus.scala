@@ -1,7 +1,6 @@
 package graft.data
 
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.linkage.Stages
 import graft.linkage.Stages.counted
@@ -10,10 +9,10 @@ import graft.linkage.Stages.counted
   * data ops exist for: exact dedup → MinHash near-dup dedup → benchmark
   * decontamination (optional) → repetition ceiling (optional) → quality
   * filter → language filter → PII redaction (optional), with per-stage
-  * survivor counts. After the exact stage (a keep-min window over each
-  * text group) each stage is the library operator (Dedup / Decontaminate
-  * / TextAnalysis / Redact), so every plan-shape property those carry
-  * (banded LSH + exact verify, broadcast benchmark grams, codegen'd
+  * survivor counts. Each stage is
+  * the library operator (Dedup / Decontaminate / TextAnalysis / Redact),
+  * so every plan-shape property those carry (join-back exact dedup,
+  * banded LSH + exact verify, broadcast benchmark grams, codegen'd
   * quality/lang/redact projections) holds for the composed run.
   * Survivor policy is deterministic: exact groups keep the minimum id;
   * near-dup pairs drop the LARGER id of every qualifying pair (so a
@@ -70,8 +69,9 @@ object CleanCorpus {
     * Two cuts and one write. The exact stage is built first, as an eager
     * local checkpoint with the input and exact counts observed on its
     * build; the MinHash kernel relation is the second cut, its observed
-    * row count sizing the hot-bucket cap ([[Dedup.kernelCut]]). Everything
-    * after — candidates with the cap in-plan, verify, the near-dup
+    * row count sizing the hot-bucket cap ([[Dedup.kernelCut]]; the cap's
+    * stats pass runs only when the corpus is large enough for a bucket to
+    * cross it). Everything after — candidates, verify, the near-dup
     * anti-join, the text kernel, redaction — is the LAZY `cleaned` plan:
     * `write` runs it once, and the near-dup, repetition, quality, language
     * and redaction counts are observed on that action. (With
@@ -116,25 +116,29 @@ object CleanCorpus {
     val above = previous.flatMap(Dedup.previousMaxId(_, docs, idCol))
     val stages = new Stages(drill)
     stages.releasing {
-      // 1. exact dedup: a doc survives when its id is the smallest of its
-      //    text group (the rows Dedup.exact marks as their group's keeper;
-      //    two rows sharing that id and text both survive). A new doc
-      //    whose text a previous exact survivor holds goes first: its
-      //    keeper is that smaller previous id, as in the full run (a whole
-      //    text group goes at once, so the new keepers are unchanged)
+      // 1. exact dedup: keep each group's min-id representative (the
+      //    keeper ids of Dedup.exact's join-back, semi-joined to the docs).
+      //    A new doc whose text a previous exact survivor holds goes first:
+      //    its keeper is that smaller previous id, as in the full run (a
+      //    whole text group goes at once, so the new keepers are unchanged)
       val inputObs = Observation()
-      val input = counted(docs, inputObs)
-      val h = xxhash64(col(textCol))
-      val fresh = previous.fold(input)(p => input.join(
-        p.select(h.as("_prev_hash")).distinct(), h === col("_prev_hash"),
-        "left_anti"))
-      val (exact, nExact) = stages.checkpoint(fresh
-        .withColumn("_keeper", min(col(idCol)).over(Window.partitionBy(h)))
-        .filter(col(idCol) === col("_keeper")).drop("_keeper"))
+      def fresh(df: DataFrame) = previous.fold(df)(p => df.join(
+        p.select(xxhash64(col(textCol)).as("_prev_hash")).distinct(),
+        xxhash64(col(textCol)) === col("_prev_hash"), "left_anti"))
+      val keepers = Dedup.exact(fresh(docs), idCol, textCol)
+        .filter(col(idCol) === col("keeper")).select(idCol)
+      val (exact, nExact) = stages.checkpoint(
+        fresh(counted(docs, inputObs)).join(keepers, Seq(idCol), "left_semi"))
+      // the input count sits below the semi-join: AQE drops it with its
+      // branch when no doc has a keeper (every new doc is a copy of a
+      // previous text, or every id is null), and only then is the input
+      // counted by a query of its own
+      val nInput = Stages.observed(inputObs)
+        .fold(docs.count())(_.getAs[Long]("n"))
 
       // 2. near-dup dedup: drop the larger id of every verified pair (with
       //    a previous corpus, always the new side)
-      val (pairs, cap) = Dedup.kernelCut(exact, previous, above, cfg.minhash,
+      val pairs = Dedup.kernelCut(exact, previous, above, cfg.minhash,
         idCol, textCol, stages)
       val drops = pairs.select(col("id_b").as(idCol)).distinct()
       val nearObs = Observation()
@@ -197,9 +201,8 @@ object CleanCorpus {
       write(counted(cleaned, langObs), exact.select(idCol))
 
       def n(o: Observation) = Stages.observedCount(o)
-      cap.foreach(_.report())
       val nLang = n(langObs)
-      StageCounts(n(inputObs), nExact, nNearCut.getOrElse(n(nearObs)),
+      StageCounts(nInput, nExact, nNearCut.getOrElse(n(nearObs)),
         cfg.lang.fold(nLang)(_ => n(qualityObs)), nLang,
         cfg.benchmarks.map(_ => n(decontObs)),
         if (cfg.redactPii) Some(n(redactObs)) else None,

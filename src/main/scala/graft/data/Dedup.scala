@@ -1,6 +1,6 @@
 package graft.data
 
-import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.linkage.expr.{functions => gf}
 
@@ -99,58 +99,32 @@ object Dedup {
   /** The oversized-bucket guard over a (band, bucket, …) relation of
     * `docs` documents: a (band, bucket) holding more than
     * min(maxBucketCap, max(minBucketCap, capRatio·docs)) rows is dropped
-    * from the candidate join (a capped bucket is lost RECALL — never drop
-    * silently). [[kept]] applies the cap inside the candidate query, as a
-    * bucket-size aggregate and a left-semi join, and observes the dropped
-    * buckets and rows on the sizes; [[report]] logs them once that query
-    * has run. `docs` is the row count observed on the build of the
-    * relation the buckets come from (the kernel relation, simhash's
-    * signature relation), so the guard runs no job of its own. */
-  private[graft] final class BucketCap private (buckets: DataFrame,
-                                                cap: Long, tag: String) {
-    private val dropped = Observation()
-    private val sizes = buckets.groupBy("band", "bucket")
-      .agg(count(lit(1)).as("_n"))
-    private val over = col("_n") > cap
-    private val stats = Seq(count(when(over, 1)).as("buckets"),
-      coalesce(sum(when(over, col("_n"))), lit(0L)).as("rows"))
-
-    /** `buckets` without the rows of its over-cap buckets. */
-    val kept: DataFrame = buckets.join(
-      sizes.observe(dropped, stats.head, stats.tail: _*).filter(!over)
-        .select("band", "bucket"),
+    * from the candidate join, and the drop is logged (a capped bucket is
+    * lost RECALL — never drop silently). `docs` is the row count observed
+    * on the build of the relation the buckets come from (the kernel
+    * relation, simhash's signature relation). A bucket holds at most one
+    * row per document, so with no more docs than the cap nothing can be
+    * over it and no job runs; otherwise one aggregate over the bucket
+    * sizes finds the over-cap buckets, and `buckets` comes back untouched
+    * when there are none. Off when capRatio >= 1.0. */
+  private[graft] def capBuckets(buckets: DataFrame, docs: Long,
+                                capRatio: Double, minBucketCap: Long,
+                                maxBucketCap: Long, tag: String): DataFrame = {
+    val cap = math.min(maxBucketCap,
+      math.max(minBucketCap, (capRatio * docs).toLong))
+    if (capRatio >= 1.0 || docs <= cap) return buckets
+    val sizes = buckets.groupBy(col("band"), col("bucket"))
+      .agg(count(lit(1)).as("n"))
+    val over = sizes.filter(col("n") > cap)
+      .agg(count(lit(1)).as("b"), coalesce(sum(col("n")), lit(0L)).as("r"))
+      .head()
+    if (over.getLong(0) == 0) return buckets
+    println(s"[graft] $tag: dropped ${over.getLong(0)} hot bucket(s) " +
+      s"holding ${over.getLong(1)} rows over cap=$cap — bounded join " +
+      "partitions traded for recall in those buckets " +
+      "(MinHashConfig.capRatio/minBucketCap/maxBucketCap)")
+    buckets.join(sizes.filter(col("n") <= cap).select("band", "bucket"),
       Seq("band", "bucket"), "left_semi")
-
-    /** Logs the dropped buckets and rows once the query that read [[kept]]
-      * has run. When a stage above the cap turned out empty (no candidate
-      * pair survived), AQE dropped the cap's branch from the final plan
-      * and its observation with it; the sizes are then aggregated again,
-      * in one query of their own. */
-    def report(): Unit = {
-      val r = graft.linkage.Stages.observed(dropped)
-        .getOrElse(sizes.agg(stats.head, stats.tail: _*).head())
-      val rows = r.getAs[Long]("rows")
-      if (rows > 0)
-        println(s"[graft] $tag: dropped ${r.getAs[Long]("buckets")} hot " +
-          s"bucket(s) holding $rows rows over cap=$cap — bounded join " +
-          "partitions traded for recall in those buckets " +
-          "(MinHashConfig.capRatio/minBucketCap/maxBucketCap)")
-    }
-  }
-
-  private[graft] object BucketCap {
-    /** The guard over `buckets`; None when it is off (capRatio >= 1.0) or
-      * cannot drop anything: a bucket holds at most one row per document,
-      * so no bucket of `docs` documents exceeds a cap of at least `docs`
-      * rows, and the candidate query keeps its uncapped plan. */
-    def apply(buckets: DataFrame, docs: Long, capRatio: Double,
-              minBucketCap: Long, maxBucketCap: Long,
-              tag: String): Option[BucketCap] = {
-      val cap = math.min(maxBucketCap,
-        math.max(minBucketCap, (capRatio * docs).toLong))
-      if (capRatio >= 1.0 || docs <= cap) None
-      else Some(new BucketCap(buckets, cap, tag))
-    }
   }
 
   /** The LSH band buckets of a signature column. */
@@ -243,13 +217,13 @@ object Dedup {
     * One path: the per-doc kernel projection (id, shingles, buckets) →
     * posexplode of the buckets → hot-bucket cap → bucket self-join → one
     * shingle-array join per pair side → sorted merge → threshold. The
-    * per-doc relation is the only fan-out point (the buckets feed both
-    * candidate-join sides, the shingle arrays both verify sides), so it is
-    * built first as an eager local checkpoint ([[kernelCut]]): every later
-    * plan starts from one RDD scan instead of re-embedding the kernel
-    * lineage per reference, and the row count observed on that build
-    * sizes the cap, which the candidate query applies itself
-    * ([[BucketCap]]). Its blocks are released once the result is
+    * per-doc relation is the only fan-out point (the buckets feed the
+    * cap's stats pass and both candidate-join sides, the shingle arrays
+    * both verify sides), so it is built first as an eager local
+    * checkpoint ([[kernelCut]]): every later plan starts from one RDD
+    * scan instead of re-embedding the kernel lineage per reference, and
+    * the row count observed on that build sizes the cap
+    * ([[capBuckets]]). Its blocks are released once the result is
     * materialized. The returned DataFrame is PERSISTED (a checkpointed
     * result would dodge Dataset.unpersist and the bench's clearCache);
     * unpersist it when done. A lost result block recomputes through the
@@ -276,29 +250,24 @@ object Dedup {
     val above = previous.flatMap(previousMaxId(_, docs, idCol))
     val stages = new graft.linkage.Stages()
     stages.releasing {
-      val (pairs, cap) =
-        kernelCut(docs, previous, above, cfg, idCol, textCol, stages)
-      val out = pairs
+      val out = kernelCut(docs, previous, above, cfg, idCol, textCol, stages)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       out.count()
-      cap.foreach(_.report())
       out
     }
   }
 
   /** The near-dup body every full run and daily append shares: the kernel
     * relation over previous ∪ `docs` is built as an eager checkpoint on
-    * `stages`, and the verified pairs over it ([[nearDupPairs]], the cap
-    * sized by the observed kernel row count) come back LAZY, with the cap
-    * whose [[BucketCap.report]] the caller runs after the action that
-    * reads them. `above` is [[previousMaxId]]'s bound. Docs without text
-    * have no buckets and never pair, so they are left out of the kernel
-    * relation and of the count that sizes the cap. */
+    * `stages`, and the verified pairs over it come back LAZY
+    * ([[nearDupPairs]], the cap sized by the observed kernel row count).
+    * `above` is [[previousMaxId]]'s bound. Docs without text have no
+    * buckets and never pair, so they are left out of the kernel relation
+    * and of the count that sizes the cap. */
   private[data] def kernelCut(docs: DataFrame, previous: Option[DataFrame],
                               above: Option[Column], cfg: MinHashConfig,
                               idCol: String, textCol: String,
-                              stages: graft.linkage.Stages)
-      : (DataFrame, Option[BucketCap]) = {
+                              stages: graft.linkage.Stages): DataFrame = {
     def narrow(df: DataFrame) = df.select(col(idCol), col(textCol))
     val all = previous.fold(docs)(p => narrow(p).unionByName(narrow(docs)))
     val (mh, n) = stages.checkpoint(
@@ -324,19 +293,15 @@ object Dedup {
   }
 
   /** Verified pairs over a per-doc (id, shingles, buckets) relation of
-    * `docs` rows, with the hot-bucket cap sized from `docs` applied to its
-    * buckets; `above` restricts the larger id of each pair (see
-    * [[lshCandidates]]). The pairs are lazy: run [[BucketCap.report]]
-    * after the action that reads them. */
+    * `docs` rows, its buckets under the hot-bucket cap sized from `docs`;
+    * `above` restricts the larger id of each pair (see [[lshCandidates]]). */
   private[graft] def nearDupPairs(mh: DataFrame, docs: Long,
                                   cfg: MinHashConfig, idCol: String,
-                                  above: Option[Column] = None)
-      : (DataFrame, Option[BucketCap]) = {
-    val buckets = bucketRows(mh, idCol)
-    val cap = BucketCap(buckets, docs, cfg.capRatio, cfg.minBucketCap,
-      cfg.maxBucketCap, "minhash-lsh")
-    (verifyPairs(lshCandidates(cap.fold(buckets)(_.kept), idCol, above), mh,
-      idCol, cfg.jaccardThreshold), cap)
+                                  above: Option[Column] = None): DataFrame = {
+    val kept = capBuckets(bucketRows(mh, idCol), docs, cfg.capRatio,
+      cfg.minBucketCap, cfg.maxBucketCap, "minhash-lsh")
+    verifyPairs(lshCandidates(kept, idCol, above), mh, idCol,
+      cfg.jaccardThreshold)
   }
 
   /** Near-duplicate GROUPS: the linkage engine's large-star/small-star
@@ -477,17 +442,15 @@ object Dedup {
     stages.releasing {
       val (sigRel, n) = stages.checkpoint(sigs.select(col(idCol),
         col("simhash")))
-      val rawBanded = bandedOf(sigRel)
-      val cap = BucketCap(rawBanded, n, capRatio, minBucketCap, maxBucketCap,
-        "simhash")
+      val banded = capBuckets(bandedOf(sigRel), n, capRatio, minBucketCap,
+        maxBucketCap, "simhash")
       // materialize through the checkpointed signature relation, which is
       // released on return; the returned (persisted) frame is the
       // caller-owned handle (a checkpointed result would dodge
       // Dataset.unpersist)
-      val p = pairsOver(cap.fold(rawBanded)(_.kept))
+      val p = pairsOver(banded)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       p.count()
-      cap.foreach(_.report())
       p
     }
   }

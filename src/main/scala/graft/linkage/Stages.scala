@@ -75,10 +75,14 @@ private[graft] object Stages {
     }
   }
 
-  /** The count `o` observed as "n", for a count on its plan's spine:
-    * nothing but unary nodes, or the kept side of an anti-join, between it
-    * and the root. AQE drops such a node only once the stage right above
-    * it turned out empty, so a dropped count counted no row. */
+  /** The count `o` observed as "n", for a count in its query's final
+    * stage (no exchange above it) on the plan's spine (nothing but unary
+    * nodes, or the kept side of an anti-join, between it and the root).
+    * AQE replaces a subtree by an empty relation only once a stage it ran
+    * came out empty, and for such a count that stage lies below it, so a
+    * dropped count counted no row. A count in a map stage may be dropped
+    * after counting rows (the stage's own filters or joins left its output
+    * empty): read it with [[observed]]. */
   def observedCount(o: Observation): Long =
     observed(o).fold(0L)(_.getAs[Long]("n"))
 }

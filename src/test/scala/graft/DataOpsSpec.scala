@@ -438,7 +438,7 @@ class DataOpsSpec extends AnyFunSuite with SparkFixture {
   test("a capped flood logs its dropped buckets and rows") {
     import spark.implicits._
     // never drop silently: each capped near-dup run prints how many
-    // buckets and rows its cap dropped, counted in the candidate query
+    // buckets and rows its cap dropped
     def logged(run: => Unit): String = {
       val buf = new java.io.ByteArrayOutputStream
       Console.withOut(buf)(run)
@@ -453,8 +453,7 @@ class DataOpsSpec extends AnyFunSuite with SparkFixture {
       .unpersist())
     assert(minhash.contains("minhash-lsh: dropped 32 hot bucket(s) " +
       "holding 9600 rows over cap=50"), minhash)
-    // the flood alone: the cap leaves no candidate, so AQE drops the
-    // cap's branch (and its observation) from the final plan
+    // the flood alone: the cap leaves no candidate at all
     val alone = logged(Dedup.minHashNearDups(flood, cfg).unpersist())
     assert(alone.contains("minhash-lsh: dropped 32 hot bucket(s) " +
       "holding 9600 rows over cap=50"), alone)
@@ -464,8 +463,8 @@ class DataOpsSpec extends AnyFunSuite with SparkFixture {
       minBucketCap = 50).unpersist())
     assert(simhash.contains("simhash: dropped 4 hot bucket(s) holding " +
       "1200 rows over cap=50"), simhash)
-    // the corpus cleaner reports its cap after the write: a near-dup
-    // flood (each copy one word apart) survives exact dedup into it
+    // the corpus cleaner caps its kernel relation the same way: a
+    // near-dup flood (each copy one word apart) survives exact dedup into it
     val base = corpus.filter(col("doc_id") === 1L).head().getString(1)
     val nearFlood = (0 until 80).map(i =>
       (60000L + i, s"$base w$i")).toDF("doc_id", "text")

@@ -216,9 +216,9 @@ class LinkageCheckpointSpec extends AnyFunSuite with SparkFixture {
     cleanInputs(dir)
     val before = persistentRdds
     // Measured in this spec's session (local[4], 170 docs): the longest
-    // rendered plans are 23.7k chars (full run) and 22.6k (--previous);
-    // the largest analyzed plans 32 and 32 nodes. The linkage bounds leave
-    // about 1.7x and 3x headroom. With persisted stages the full
+    // rendered plans are 23.2k chars (full run) and 22.0k (--previous);
+    // the largest analyzed plans 32 and 38 nodes. The linkage bounds leave
+    // about 1.7x and 2.6x headroom. With persisted stages the full
     // all-options run took 11 executions and failed this gate: 7
     // truncation warnings and plans at the 100k cap (90 analyzed nodes).
     val maxRendered = 40000

@@ -117,8 +117,7 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     // downstream of the checkpoint: posexplode → cap → candidates →
     // shingle-array joins → merge; no kernel re-run, no interpreted HOF,
     // no object aggregate, and one band posexplode
-    val (pairs, _) = Dedup.nearDupPairs(mh.localCheckpoint(), 60L, cfg,
-      "doc_id")
+    val pairs = Dedup.nearDupPairs(mh.localCheckpoint(), 60L, cfg, "doc_id")
     pairs.collect()
     val exprs = exprsOf(pairs)
     assert(!exprs.exists(_.isInstanceOf[MinHashShingles]))
@@ -140,8 +139,8 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     assert(merges == 1, s"$merges sorted_jaccard calls:\n$finalPlan")
     // before AQE turns small sides into broadcasts: the band join's two
     // sides, the candidate distinct, and two per verify join (measured 7;
-    // 60 docs cannot fill a bucket past the 5000-row cap, so none is
-    // planned: a planned cap's sizes aggregate and semi-join make it 9)
+    // 60 docs cannot fill a bucket past the 5000-row cap, so the cap's
+    // stats pass never runs and no cap is planned)
     val shuffles = """(?m)^[\s:|+-]*Exchange """.r.findAllIn(initialPlan).length
     info(s"$shuffles shuffle exchanges")
     assert(shuffles <= 7, s"$shuffles exchanges:\n$initialPlan")
