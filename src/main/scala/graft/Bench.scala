@@ -85,47 +85,35 @@ object Bench {
       .persist(StorageLevel.MEMORY_AND_DISK)
     val nTurns = transcripts.count() // corpus generation outside timings
 
-    val (records, tFold) = time {
-      val r = Fold.fold(transcripts).persist(StorageLevel.MEMORY_AND_DISK)
-      r.count()
-      r
+    // the product's stage cuts (Pipeline.run): each stage is built once
+    // into a local checkpoint with its row count observed on that build,
+    // so no later stage's plan carries an earlier one's
+    val stages = new Stages()
+    val stats = stages.releasing {
+      val ((records, nRecords), tFold) =
+        time(stages.checkpoint(Fold.fold(transcripts).drop("turns")))
+      val ((pairs, nPairs), tCand) = time(stages.checkpoint(
+        Candidates.candidates(records, Blocking.defaultPasses,
+          nRecords = Some(nRecords))))
+      val ((matched, nMatched), tScore) = time(stages.checkpoint(
+        Scoring.matches(Scoring.scorePairs(records,
+          pairs.repartition(spark.sparkContext.defaultParallelism)))))
+      val (nClusters, tCc) = time {
+        import org.apache.spark.sql.functions.{col, xxhash64}
+        // bounded by the matches cut's count, as Pipeline.link calls it
+        val labels = Cluster.connectedComponents(spark,
+          matched.select(xxhash64(col("id_a")).as("a"),
+            xxhash64(col("id_b")).as("b")),
+          Cluster.Options(), Some(nMatched))
+        val n = labels.select("cluster_id").distinct().count()
+        labels.unpersist(false) // a persisted handle when rounds ran
+        n
+      }
+      LinkageStats(nRecords, nPairs, nMatched, nClusters,
+        tFold, tCand, tScore, tCc)
     }
-    val nRecords = records.count()
-
-    val (pairs, tCand) = time {
-      val p = Candidates.candidates(records, Blocking.defaultPasses)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      p.count()
-      p
-    }
-    val nPairs = pairs.count()
-
-    val (scored, tScore) = time {
-      val sc = Scoring.scorePairs(records, pairs)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      sc.count()
-      sc
-    }
-    val matched = Scoring.matches(scored)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val nMatched = matched.count()
-
-    val (nClusters, tCc) = time {
-      val edges = matched.select(
-        org.apache.spark.sql.functions.xxhash64(
-          org.apache.spark.sql.functions.col("id_a")).as("a"),
-        org.apache.spark.sql.functions.xxhash64(
-          org.apache.spark.sql.functions.col("id_b")).as("b"))
-      val labels = Cluster.connectedComponents(spark, edges)
-      val n = labels.select("cluster_id").distinct().count()
-      labels.unpersist(false) // CC returns a persisted handle — release it
-      n
-    }
-
-    transcripts.unpersist(); records.unpersist(); pairs.unpersist()
-    scored.unpersist(); matched.unpersist()
-    (LinkageStats(nRecords, nPairs, nMatched, nClusters,
-      tFold, tCand, tScore, tCc), nTurns)
+    transcripts.unpersist()
+    (stats, nTurns)
   }
 
   /** Scaling kernel: score a FIXED materialized pair set, best-of-`reps`

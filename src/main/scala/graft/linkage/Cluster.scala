@@ -35,9 +35,16 @@ import org.apache.spark.storage.StorageLevel
   * is written to reliable storage (`iter_k/` parquet + `_cc_state.json`),
   * so a killed job resumes from the last completed round (north-rule
   * resumability); without one, localCheckpoint() is used. The finish
-  * always reads such a round: when no round ran because the input was
-  * already small, the input edge set is first written as round 0, so a
-  * killed finish resumes from it too.
+  * reads such a round: when no round ran because the input was already
+  * small, the input edge set is first written as round 0, so a killed
+  * finish resumes from it too.
+  *
+  * A caller that knows an upper bound on its edge rows (the row count of
+  * a stage cut, as `Pipeline` does) skips all of that when the bound is
+  * at or below the ceiling and there is no checkpoint dir: the finish is
+  * returned as a lazy plan over the caller's edges, and the query that
+  * reads the labels runs it (the linkage clusters build, so CC adds no
+  * query of its own).
   */
 object Cluster {
 
@@ -71,26 +78,48 @@ object Cluster {
     * with its component's minimum id; callers attach singletons via
     * [[labelRecords]].
     *
-    * Cache lifecycle: each round is lazily localCheckpoint()'d — the
-    * LOGICAL plan of a round references the previous round ~8× (largeStar
-    * and smallStar each fan out their input), so without per-round
-    * lineage truncation the plan tree grows exponentially and analysis
-    * OOMs by round ~10 (measured). The convergence-signature action is
-    * the round's single materializing job, and the previous round's
-    * checkpoint blocks are released via DatasetBridge as soon as the next
-    * is materialized (a Dataset-level unpersist never frees them). The
-    * returned labels are materialized into a CacheManager persist
-    * (callers unpersist when done) and all round state is released
-    * before returning. */
+    * `maxEdges`, when given, bounds the number of edge ROWS (duplicates
+    * and self-loops included). At or below [[LocalFinishEdges]], without
+    * a checkpoint dir, the labels are the local finish as a lazy plan over
+    * `edges`: no round runs and nothing is persisted or executed here;
+    * each action over the labels runs the finish again, so read them
+    * once (inside a cut's build, say). Rows beyond the bound fail that
+    * action loudly. Over the ceiling, with a checkpoint dir, or without a
+    * bound, the rounds below run.
+    *
+    * Cache lifecycle of the rounds: each round is lazily
+    * localCheckpoint()'d — the LOGICAL plan of a round references the
+    * previous round ~8× (largeStar and smallStar each fan out their
+    * input), so without per-round lineage truncation the plan tree grows
+    * exponentially and analysis OOMs by round ~10 (measured). The
+    * convergence-signature action is the round's single materializing
+    * job, and the previous round's checkpoint blocks are released via
+    * DatasetBridge as soon as the next is materialized (a Dataset-level
+    * unpersist never frees them). The labels are then materialized into
+    * a CacheManager persist (callers unpersist when done; on the lazy
+    * path above that unpersist is a no-op) and all round state is
+    * released before returning. */
   def connectedComponents(spark: SparkSession, edges: DataFrame,
-                          opts: Options = Options()): DataFrame =
-    connectedComponents(spark, edges, opts, LocalFinishEdges)
+                          opts: Options = Options(),
+                          maxEdges: Option[Long] = None): DataFrame =
+    connectedComponents(spark, edges, opts, maxEdges, LocalFinishEdges)
 
   /** [[connectedComponents]] with the finish ceiling as a parameter: a
     * test seam (0 = pure star rounds), not an option. */
   private[graft] def connectedComponents(spark: SparkSession,
                                          edges: DataFrame, opts: Options,
-                                         finishEdges: Long): DataFrame = {
+                                         maxEdges: Option[Long],
+                                         finishEdges: Long): DataFrame =
+    maxEdges match {
+      case Some(n) if n <= finishEdges && opts.checkpointDir.isEmpty =>
+        localFinish(oriented(edges), n.toInt)
+      case _ => rounds(spark, edges, opts, finishEdges)
+    }
+
+  /** The star rounds, then the local finish (or the fixpoint's labels),
+    * materialized into a persist the caller releases. */
+  private def rounds(spark: SparkSession, edges: DataFrame, opts: Options,
+                     finishEdges: Long): DataFrame = {
     // fingerprint of the INPUT edge set, written into _cc_state.json with
     // every round: resuming against a checkpoint dir whose state was
     // computed from different edges must fall back to a fresh init, not
@@ -152,9 +181,10 @@ object Cluster {
     nodeToRoot.unionByName(roots)
   }
 
-  /** The local finish: union-find over all `nEdges` (hi, lo) edges in one
-    * task, emitting (id, component-min) for every node — exactly what
-    * the star rounds would converge to.
+  /** The local finish: union-find over at most `nEdges` (hi, lo) edge
+    * rows in one task, emitting (id, component-min) for every node —
+    * exactly what the star rounds would converge to. Duplicate rows only
+    * repeat a union; `nEdges` sizes the arrays.
     *
     * The order comes from Spark: the task reads its edges sorted by lo
     * under the id column's own ordering, and numbers nodes densely in
@@ -185,6 +215,9 @@ object Cluster {
       var s = (h ^ (h >>> 16)) & mask
       while (slotId(s) != null && slotId(s) != id) s = (s + 1) & mask
       if (slotId(s) == null) {
+        if (n == maxNodes) throw new IllegalStateException(
+          s"CC local finish: more than $maxNodes nodes, so more than the " +
+            s"$nEdges edge rows its bound allows")
         slotId(s) = id; slotIdx(s) = n; ids(n) = id; parent(n) = n; n += 1
       }
       slotIdx(s)
@@ -202,16 +235,20 @@ object Cluster {
     Iterator.range(0, n).map(i => Row(ids(i), ids(find(i))))
   }
 
-  /** Undirected edge set as (hi, lo) with hi > lo, deduped. */
-  private def normalize(edges: DataFrame): DataFrame = {
+  /** Undirected edge rows as (hi, lo) with hi > lo; self-loops dropped,
+    * duplicates kept. */
+  private def oriented(edges: DataFrame): DataFrame = {
     val a = edges.columns(0)
     val b = edges.columns(1)
     edges
       .select(greatest(col(a), col(b)).as("hi"),
         least(col(a), col(b)).as("lo"))
       .filter(col("hi") =!= col("lo"))
-      .distinct()
   }
+
+  /** Undirected edge set as (hi, lo) with hi > lo, deduped. */
+  private def normalize(edges: DataFrame): DataFrame =
+    oriented(edges).distinct()
 
   /** large-star: ∀u, m = min(N(u) ∪ {u}); emit (v, m) ∀ v ∈ N(u), v > u.
     *

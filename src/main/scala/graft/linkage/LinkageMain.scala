@@ -33,7 +33,7 @@ import org.apache.spark.sql.functions._
   * Writes TableIO-layout tables under --output: records, matched_pairs,
   * clusters, mapping, metrics (+ household_clks, scoring files). Order:
   * the pipeline builds each stage output (records, candidate pairs,
-  * scored pairs, clusters) once into a local checkpoint and counts its
+  * matches, clusters) once into a local checkpoint and counts its
   * metric rows on those builds; then every output is written side by
   * side from the checkpoints; they are released once the last writer has
   * returned.
@@ -107,9 +107,11 @@ object LinkageMain {
     // costs O(new × blocked-neighborhood), not O(corpus²).
     val result = opts.get("previous") match {
       case Some(prev) =>
-        // the result's matched_pairs plan READS prev's matched_pairs
-        // table (its records are a checkpoint) — daily appends alternate
-        // output dirs (or snapshot generations)
+        // every relation of the result reads a checkpoint (matched_pairs
+        // is the previous ∪ new matches cut), so no write below reads
+        // prev's tables. The guard stays so that the previous generation
+        // survives: daily appends alternate output dirs (or snapshot
+        // generations)
         Cli.requireOutputDiffers(spark, prev, out)
         val prevRecords = TableIO.read(spark, s"$prev/records")
         val prevMatches = TableIO.read(spark, s"$prev/matched_pairs")

@@ -1,7 +1,7 @@
 package graft.linkage
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** End-to-end linkage pipeline (reference flagship `households.py`
@@ -12,17 +12,19 @@ import org.apache.spark.sql.functions._
   *
   * Shuffle inventory (each deliberate): #1 fold groupBy(conv_id);
   * #2 candidate self-join on blocking keys (salted + capped); #3 pair
-  * attribute joins on conv_id; #4..k CC rounds (checkpointed);
-  * #k+1 cluster aggregation. Node ids inside CC are xxhash64(conv_id)
-  * (collision odds n²/2⁶⁴ — negligible below ~10⁹ records; swap for a
-  * 128-bit id at full 10¹² scale).
+  * attribute joins on conv_id; #4 CC: below the local-finish ceiling one
+  * exchange into the finish task, inside the clusters build (above it,
+  * checkpointed star rounds first); #5 cluster aggregation. Node ids
+  * inside CC are xxhash64(conv_id) (collision odds n²/2⁶⁴ — negligible
+  * below ~10⁹ records; swap for a 128-bit id at full 10¹² scale).
   *
-  * Records, candidate pairs, scored pairs and clusters are each built
-  * once, as their own query, into a serialized local checkpoint
-  * ([[Stages.checkpoint]]), so no later query carries the fold's plan (or any
-  * other stage's): with persisted relations, whose plans every
+  * Records, candidate pairs, matches and clusters are each built once,
+  * as their own query, into a serialized local checkpoint
+  * ([[Stages.checkpoint]]), so no later query carries the fold's plan (or
+  * any other stage's): with persisted relations, whose plans every
   * downstream query re-embeds, the link-dense tail rendered plans past
-  * 100k characters.
+  * 100k characters. A score-mode run is those four queries; exact mode
+  * and a pairs file skip the matches cut.
   */
 object Pipeline {
 
@@ -67,7 +69,8 @@ object Pipeline {
       deltaRecords: DataFrame,
       deltaMatches: DataFrame,
       /** The stage checkpoints the run built (records, candidate pairs,
-        * scored pairs, clusters, and an incremental run's new records).
+        * matches, clusters; an incremental run's new records, all records
+        * and previous ∪ new matches too).
         * Every DataFrame of the Result reads them; callers release them
         * via [[unpersist]] once done, after which those DataFrames are
         * unusable (a checkpoint has no lineage to recompute from). A run
@@ -135,56 +138,63 @@ object Pipeline {
     }
 
   /** The linkage tail both entry points share, everything after the
-    * checkpointed candidate pairs: score them into a checkpoint (exact
+    * checkpointed candidate pairs: score them and cut the matches (exact
     * mode and a pairs file link the candidates as they are,
-    * matching.py:333–335), union `previous` matches, CC over
+    * matching.py:333–335), cut `previous` ∪ new matches, CC over
     * xxhash64(conv_id) node ids (collision odds n²/2⁶⁴) with singletons
     * keeping their own id, and build the clusters checkpoint, each
     * cluster named by its min(conv_id); the labelled records are the
     * clusters' exploded members.
     *
+    * `matched` is always a cut with a known row count, which bounds CC's
+    * edge rows: below the local-finish ceiling, CC is a lazy plan that
+    * the clusters build runs, so it adds no query of its own.
+    *
     * Metrics: `counts` names the caller's leading metric rows, given the
-    * scored pairs' count. Every count but matched_pairs is observed on
-    * its checkpoint's build; matched_pairs, when it is not itself a
-    * checkpoint, is counted in one job beside the clusters build
-    * ([[Actions.together]]). The metric rows keep their order: the
-    * caller's, matched_pairs, clusters. */
+    * scored pairs' count (observed below the match filter on the matches
+    * build). Every count is observed on its checkpoint's build. The
+    * metric rows keep their order: the caller's, matched_pairs,
+    * clusters. */
   private def link(spark: SparkSession, cfg: Config, records: DataFrame,
                    pairs: DataFrame, nPairs: Long,
                    previous: Option[DataFrame], deltaRecords: DataFrame,
                    stages: Stages)
                   (counts: Long => Seq[(String, Long)]): Result = {
-    val (scored, nScored) =
-      if (cfg.pairsFile.isDefined || cfg.exactAddresses) (pairs, nPairs)
-      // the kernel runs where the pairs stream past the broadcast
-      // attribute sides, one task per pairs partition; AQE sized the
-      // pairs build by bytes (2 tasks at link-dense scale), and scoring
-      // costs ~100x more CPU per byte, so spread the pairs over the cores
-      else stages.checkpoint(Scoring.scorePairs(records,
-        pairs.repartition(spark.sparkContext.defaultParallelism)))
-    val newMatches = if (scored eq pairs) pairs else Scoring.matches(scored)
+    val (newMatches, nNew, nScored) =
+      if (cfg.pairsFile.isDefined || cfg.exactAddresses)
+        (pairs, nPairs, nPairs)
+      else {
+        // the kernel runs where the pairs stream past the broadcast
+        // attribute sides, one task per pairs partition; AQE sized the
+        // pairs build by bytes (2 tasks at link-dense scale), and scoring
+        // costs ~100x more CPU per byte, so spread the pairs over the
+        // cores. The scored rows are counted below the match filter; the
+        // path from there to the root is unary.
+        val scoredRows = Observation()
+        val (m, n) = stages.checkpoint(Scoring.matches(Stages.counted(
+          Scoring.scorePairs(records,
+            pairs.repartition(spark.sparkContext.defaultParallelism)),
+          scoredRows)))
+        (m, n, Stages.observedCount(scoredRows))
+      }
     // no overlap to dedup across the union in practice — incremental
     // candidates always touch a new record, previous matches never do —
     // but keep the belt: a caller-supplied previousMatches overlapping
     // the increment must not double-count
-    val matched = previous.fold(newMatches)(
-      _.unionByName(newMatches).dropDuplicates("id_a", "id_b"))
+    val (matched, nMatched) = previous.fold((newMatches, nNew))(prev =>
+      stages.checkpoint(
+        prev.unionByName(newMatches).dropDuplicates("id_a", "id_b")))
 
     val labels = Cluster.connectedComponents(spark,
       matched.select(xxhash64(col("id_a")).as("a"),
-        xxhash64(col("id_b")).as("b")), cfg.ccOptions)
-    // members are sorted, so members[0] is the cluster's min(conv_id)
-    val clustersPlan = Output.clusters(Cluster.labelRecords(
-        records.withColumn("node_id", xxhash64(col("conv_id"))), labels))
-      .withColumn("cluster_id", col("members")(0))
-    // the clusters build, the longer of the two, is submitted first;
-    // matched rides along so both actions return a (relation, count).
-    // The clusters checkpoint is the labels' one reader, so they go
-    // once it is built, or once the build has failed.
-    val Seq((clusters, nClusters), (_, nMatched)) =
-      try Actions.together(
-        () => stages.checkpoint(clustersPlan),
-        () => (matched, if (matched eq pairs) nPairs else matched.count()))
+        xxhash64(col("id_b")).as("b")), cfg.ccOptions, Some(nMatched))
+    // members are sorted, so members[0] is the cluster's min(conv_id).
+    // The clusters checkpoint is the labels' one reader, so they go once
+    // it is built, or once the build has failed.
+    val (clusters, nClusters) =
+      try stages.checkpoint(Output.clusters(Cluster.labelRecords(
+          records.withColumn("node_id", xxhash64(col("conv_id"))), labels))
+        .withColumn("cluster_id", col("members")(0)))
       finally labels.unpersist(false)
     val labeled = clusters.select(explode(col("members")).as("conv_id"),
       col("cluster_id"))

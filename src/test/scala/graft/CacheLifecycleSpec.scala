@@ -100,6 +100,18 @@ class CacheLifecycleSpec extends AnyFunSuite with SparkFixture {
     assert(persisted == 0)
   }
 
+  test("a bounded connectedComponents persists nothing") {
+    clearAll()
+    import spark.implicits._
+    val edges = Seq((1L, 2L), (2L, 3L), (10L, 11L), (4L, 5L), (5L, 6L))
+      .toDF("a", "b")
+    // the lazy finish: the labels' reader runs it, and nothing is cached
+    val labels = Cluster.connectedComponents(spark, edges, Cluster.Options(),
+      Some(5L))
+    assert(labels.collect().length == 8)
+    assert(persisted == 0)
+  }
+
   test("NearDupStream trigger: releasing its survivors leaves nothing") {
     clearAll()
     import spark.implicits._

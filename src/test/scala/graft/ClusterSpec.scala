@@ -2,33 +2,45 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 import graft.linkage.{Cluster, TableIO}
 
 /** Connected components: known graphs, singleton semantics
   * (households.py:247–249), GraphX cross-check, checkpoint resume. Every
-  * labelling runs twice — pure star rounds (finish ceiling 0) and the
-  * default local finish — and both must return the same labels. */
+  * labelling runs three ways — pure star rounds (finish ceiling 0), the
+  * default local finish, and the lazy finish under a bound on the edge
+  * rows — and all must return the same labels. */
 class ClusterSpec extends AnyFunSuite with SparkFixture {
 
-  /** Labels of `edges` at each finish ceiling, asserted equal; the first
-    * is returned. */
+  private def collected(labels: DataFrame): Map[Any, Any] = {
+    val m = labels.collect().map(r => r.get(0) -> r.get(1)).toMap
+    labels.unpersist()
+    m
+  }
+
+  /** Labels of `edges` at each finish ceiling, and bounded by their row
+    * count (the lazy path, which persists nothing), asserted equal; the
+    * first is returned. */
   private def ccAt(edges: DataFrame,
                    ceilings: Seq[Long] = Seq(0L, Cluster.LocalFinishEdges))
       : Map[Any, Any] = {
+    val bound = edges.count()
     val runs = ceilings.map { c =>
-      val labels = Cluster.connectedComponents(spark, edges,
-        Cluster.Options(), c)
-      val m = labels.collect().map(r => r.get(0) -> r.get(1)).toMap
-      labels.unpersist()
-      m
+      s"ceiling $c" -> collected(Cluster.connectedComponents(spark, edges,
+        Cluster.Options(), None, c))
+    } :+ {
+      val lazyLabels = Cluster.connectedComponents(spark, edges,
+        Cluster.Options(), Some(bound))
+      assert(lazyLabels.storageLevel == StorageLevel.NONE)
+      s"bound $bound" -> collected(lazyLabels)
     }
-    runs.zip(ceilings).tail.foreach { case (m, c) =>
-      assert(m == runs.head,
-        s"ceiling $c: ${(m.toSet diff runs.head.toSet).take(5)} differ " +
+    runs.tail.foreach { case (how, m) =>
+      assert(m == runs.head._2,
+        s"$how: ${(m.toSet diff runs.head._2.toSet).take(5)} differ " +
           s"from pure star rounds")
     }
-    runs.head
+    runs.head._2
   }
 
   private def cc(edges: Seq[(Long, Long)]): Map[Long, Long] = {
@@ -221,5 +233,50 @@ class ClusterSpec extends AnyFunSuite with SparkFixture {
     val labels = ccAt(edges.toDF("a", "b"),
       Seq(0L, ceiling, Cluster.LocalFinishEdges))
     assert(edges.size > ceiling && labels.size - 1 <= ceiling)
+  }
+
+  // The bounded call: the lazy finish only at or below the ceiling and
+  // without a checkpoint dir; the rounds (a persisted result) otherwise.
+
+  test("bounded finish: duplicate rows and self-loops, no distinct") {
+    import spark.implicits._
+    // 8 is only ever in a self-loop, so it is no node of the edge set
+    val labels = ccAt(Seq((5L, 6L), (6L, 5L), (5L, 6L), (6L, 7L), (7L, 7L),
+      (8L, 8L), (7L, 6L), (2L, 9L), (9L, 2L), (9L, 9L)).toDF("a", "b"))
+    assert(labels == Map(5L -> 5L, 6L -> 5L, 7L -> 5L, 2L -> 2L, 9L -> 2L))
+  }
+
+  test("bounded finish: an empty edge set under bound 0") {
+    import spark.implicits._
+    assert(ccAt(Seq.empty[(Long, Long)].toDF("a", "b")).isEmpty)
+  }
+
+  test("a bound above the ceiling takes the rounds") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(5)
+    val edges = Seq.fill(3000)((rnd.nextInt(300).toLong,
+        rnd.nextInt(300).toLong))
+      .filter { case (a, b) => a != b }.toDF("a", "b")
+    val want = ccAt(edges)
+    val n = edges.count()
+    Seq(Cluster.connectedComponents(spark, edges, Cluster.Options(),
+          Some(n), 500L),
+        Cluster.connectedComponents(spark, edges, Cluster.Options(),
+          Some(Cluster.LocalFinishEdges + 1))).foreach { labels =>
+      assert(labels.storageLevel == StorageLevel.MEMORY_AND_DISK,
+        "the rounds' labels come back persisted")
+      assert(collected(labels) == want)
+    }
+  }
+
+  test("a bound with a checkpoint dir still writes round 0") {
+    import spark.implicits._
+    val dir = tempDir("cc-bounded")
+    val edges = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("a", "b")
+    val labels = Cluster.connectedComponents(spark, edges,
+      Cluster.Options(checkpointDir = Some(dir)), Some(3L))
+    assert(collected(labels) == ccAt(edges))
+    assert(new java.io.File(s"$dir/iter_0").isDirectory)
+    assert(new java.io.File(s"$dir/_cc_state.json").isFile)
   }
 }

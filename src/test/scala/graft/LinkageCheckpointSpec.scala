@@ -17,10 +17,11 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.linkage._
 import graft.streaming.LinkageStream
 
-/** The linkage stage checkpoints (records, candidate pairs, scored pairs,
-  * clusters; an incremental run's new records too): every query after a
-  * stage starts from the checkpoint, so the linkage paths' plans stay
-  * bounded, and a checkpoint whose blocks are lost fails the run loudly. */
+/** The linkage stage checkpoints (records, candidate pairs, matches,
+  * clusters; an incremental run's new records, all records and previous ∪
+  * new matches too): every query after a stage starts from the
+  * checkpoint, so the linkage paths' plans stay bounded, and a checkpoint
+  * whose blocks are lost fails the run loudly. */
 class LinkageCheckpointSpec extends AnyFunSuite with SparkFixture {
 
   private val synth = SynthTranscripts.Config(seed = 11L, nConvs = 300,
@@ -172,14 +173,15 @@ class LinkageCheckpointSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("lost-block drill: every Pipeline.run checkpoint fails loudly") {
-    // records, candidate pairs, scored pairs, clusters
+    // records, candidate pairs, matches, clusters
     drill(4)(Pipeline.run(spark, transcripts, Pipeline.Config(), _))
   }
 
   test("lost-block drill: every Pipeline.incremental checkpoint fails loudly") {
     val base = Pipeline.run(spark, transcripts.filter(!later))
-    // new records, all records, candidate pairs, scored pairs, clusters
-    drill(5)(Pipeline.incremental(spark, base.records, base.matchedPairs,
+    // new records, all records, candidate pairs, matches, previous ∪ new
+    // matches, clusters
+    drill(6)(Pipeline.incremental(spark, base.records, base.matchedPairs,
       transcripts.filter(later), Pipeline.Config(), _))
     base.unpersist()
   }

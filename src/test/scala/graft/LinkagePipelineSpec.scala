@@ -115,6 +115,61 @@ class LinkagePipelineSpec extends AnyFunSuite with SparkFixture {
     assert(joined.filter(col("n") > 1).count() == 0)
   }
 
+  /** `body`'s result, and the descriptions of the SQL executions it
+    * starts. */
+  private def sqlExecutions[A](body: => A): (A, Seq[String]) = {
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(
+          e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => started.add(s.description)
+        case _ =>
+      }
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.graftbridge.Bus.drain(sc)
+    sc.addSparkListener(listener)
+    val result = try {
+      val a = body
+      org.apache.spark.graftbridge.Bus.drain(sc)
+      a
+    } finally sc.removeSparkListener(listener)
+    (result, started.toArray(Array.empty[String]).toSeq)
+  }
+
+  test("Pipeline runs one SQL execution per stage cut, and nothing else") {
+    transcripts.count() // the input cache is filled outside the budget
+    val pairsDir = s"${tempDir("budgetpairs")}/pairs"
+    def runs(what: String, cuts: Int)(run: => Pipeline.Result)
+        : Pipeline.Result = {
+      val (result, executions) = sqlExecutions(run)
+      info(s"$what: ${executions.size} SQL executions")
+      // every execution is a cut's build: no head, count or collect
+      assert(executions.size == cuts &&
+        executions.forall(_.startsWith("localCheckpoint")),
+        s"$what: ${executions.mkString("; ")}")
+      assert(result.checkpoints.size == cuts)
+      result
+    }
+    // records, candidate pairs, matches, clusters
+    val scored = runs("score mode", 4)(Pipeline.run(spark, transcripts))
+    scored.matchedPairs.write.parquet(pairsDir)
+    // the candidate links are the matches: no matches cut
+    runs("exact mode", 3)(Pipeline.run(spark, transcripts,
+      Pipeline.Config(exactAddresses = true))).unpersist()
+    runs("pairs file", 3)(Pipeline.run(spark, transcripts,
+      Pipeline.Config(pairsFile = Some(pairsDir)))).unpersist()
+    // new records, all records, candidate pairs, matches, previous ∪ new
+    // matches, clusters
+    val later = SynthTranscripts.transcripts(spark,
+        cfg.copy(seed = 43L, nConvs = 100)).toDF
+      .withColumn("conv_id", concat(lit("n"), col("conv_id")))
+    runs("incremental", 6)(Pipeline.incremental(spark, scored.records,
+      scored.matchedPairs, later)).unpersist()
+    scored.unpersist()
+  }
+
   test("LinkageMain.run stays within its Spark job budget") {
     val jobs = new java.util.concurrent.atomic.AtomicInteger
     val listener = new org.apache.spark.scheduler.SparkListener {
@@ -131,9 +186,8 @@ class LinkagePipelineSpec extends AnyFunSuite with SparkFixture {
       org.apache.spark.graftbridge.Bus.drain(sc)
     } finally sc.removeSparkListener(listener)
     info(s"${jobs.get} Spark jobs")
-    // the run took 33 jobs on local[4] when this budget was set (the
-    // metric counts are one job since the concurrent tail); the rest is
-    // headroom for AQE replanning
-    assert(jobs.get <= 40, s"${jobs.get} Spark jobs, budget 40")
+    // the run took 20 jobs on local[4] when this budget was set; the
+    // rest is headroom for AQE replanning
+    assert(jobs.get <= 27, s"${jobs.get} Spark jobs, budget 27")
   }
 }

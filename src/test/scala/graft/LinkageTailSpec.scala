@@ -6,10 +6,10 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.linkage._
 
-/** The linkage tail after CC: the metric counts observed on the stage
-  * checkpoint builds (matched_pairs counted beside the clusters build),
-  * and LinkageMain's outputs written side by side through
-  * [[Actions.together]]. */
+/** The linkage tail: the metric counts observed on the stage checkpoint
+  * builds (scored pairs below the match filter on the matches build,
+  * matched_pairs as a cut's own count), and LinkageMain's outputs written
+  * side by side through [[Actions.together]]. */
 class LinkageTailSpec extends AnyFunSuite with SparkFixture {
 
   private val synth = SynthTranscripts.Config(seed = 5L, nConvs = 150)
