@@ -81,11 +81,11 @@ object Cluster {
     * `maxEdges`, when given, bounds the number of edge ROWS (duplicates
     * and self-loops included). At or below [[LocalFinishEdges]], without
     * a checkpoint dir, the labels are the local finish as a lazy plan over
-    * `edges`: no round runs and nothing is persisted or executed here;
-    * each action over the labels runs the finish again, so read them
-    * once (inside a cut's build, say). Rows beyond the bound fail that
-    * action loudly. Over the ceiling, with a checkpoint dir, or without a
-    * bound, the rounds below run.
+    * `edges`, marked for broadcast: no round runs and nothing is
+    * persisted or executed here; each action over the labels runs the
+    * finish again, so read them once (inside a cut's build, say). Rows
+    * beyond the bound fail that action loudly. Over the ceiling, with a
+    * checkpoint dir, or without a bound, the rounds below run.
     *
     * Cache lifecycle of the rounds: each round is lazily
     * localCheckpoint()'d — the LOGICAL plan of a round references the
@@ -111,8 +111,12 @@ object Cluster {
                                          maxEdges: Option[Long],
                                          finishEdges: Long): DataFrame =
     maxEdges match {
+      // the finish task emits at most 2·finishEdges labels (32 MB of long
+      // ids at the ceiling), so a join against them broadcasts them rather
+      // than shuffling its other side: without the hint the clusters build
+      // shuffled the records before AQE turned the join into a broadcast
       case Some(n) if n <= finishEdges && opts.checkpointDir.isEmpty =>
-        localFinish(oriented(edges), n.toInt)
+        broadcast(localFinish(oriented(edges), n.toInt))
       case _ => rounds(spark, edges, opts, finishEdges)
     }
 

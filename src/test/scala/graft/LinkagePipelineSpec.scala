@@ -186,8 +186,8 @@ class LinkagePipelineSpec extends AnyFunSuite with SparkFixture {
       org.apache.spark.graftbridge.Bus.drain(sc)
     } finally sc.removeSparkListener(listener)
     info(s"${jobs.get} Spark jobs")
-    // the run took 20 jobs on local[4] when this budget was set; the
+    // the run took 19 jobs on local[4] when this budget was set; the
     // rest is headroom for AQE replanning
-    assert(jobs.get <= 27, s"${jobs.get} Spark jobs, budget 27")
+    assert(jobs.get <= 26, s"${jobs.get} Spark jobs, budget 26")
   }
 }
