@@ -580,6 +580,44 @@ case class TextFeatures(child: Expression, ngram: Int, icuLower: Boolean)
     copy(child = newChild)
 }
 
+/** The per-conversation fold ([[FoldKernel]]) over a sorted array of turn
+  * structs carrying string `role`, `text` and `tool` fields: one
+  * [[FoldKernel.Schema]] struct of the record's derived fields. `icuUpper`
+  * is the case mapping of the tool names' `upper`. */
+case class FoldFields(child: Expression, icuUpper: Boolean)
+    extends UnaryExpression {
+  private def turn: Option[StructType] = child.dataType match {
+    case ArrayType(s: StructType, _) => Some(s)
+    case _ => None
+  }
+  private lazy val width = turn.get.length
+  private lazy val Seq(role, text, tool) =
+    Seq("role", "text", "tool").map(turn.get.fieldIndex)
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (turn.exists(s => Seq("role", "text", "tool").forall(n =>
+        s.fields.exists(f => f.name == n && f.dataType == StringType))))
+      TypeCheckSuccess
+    else TypeCheckFailure(
+      s"$prettyName needs an array of structs with string role, text and tool")
+  override def dataType: DataType = FoldKernel.Schema
+  override def nullable: Boolean = false
+  override def prettyName: String = "fold_fields"
+  override def eval(input: InternalRow): Any =
+    FoldKernel.fields(child.eval(input).asInstanceOf[ArrayData], width, role,
+      text, tool, icuUpper)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val c = child.genCode(ctx)
+    ev.copy(code = code"""
+      ${c.code}
+      ${CodeGenerator.javaType(dataType)} ${ev.value} =
+        graft.linkage.expr.FoldKernel.fields(${c.isNull} ? null : ${c.value},
+          $width, $role, $text, $tool, $icuUpper);
+      """, isNull = FalseLiteral)
+  }
+  override protected def withNewChildInternal(newChild: Expression): FoldFields =
+    copy(child = newChild)
+}
+
 /** λ-fold blocking over CLKs (the CLK encoder itself is
   * [[ClkEncodeBlake]]). */
 object Clk {

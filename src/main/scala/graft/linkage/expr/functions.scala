@@ -34,6 +34,10 @@ object functions {
   def text_features(text: Column, ngram: Int = 0): Column =
     col_(TextFeatures(expr_(text), ngram,
       SQLConf.get.getConf(SQLConf.ICU_CASE_MAPPINGS_ENABLED)))
+  /** [[FoldFields]] under the session's case mapping. */
+  def fold_fields(turns: Column): Column =
+    col_(FoldFields(expr_(turns),
+      SQLConf.get.getConf(SQLConf.ICU_CASE_MAPPINGS_ENABLED)))
   def sorted_jaccard_above(a: Column, b: Column, threshold: Double): Column =
     col_(SortedJaccardAbove(expr_(a), expr_(b), threshold))
   def pq_encode(emb: Column, codebooks: Array[Array[Array[Double]]]): Column =

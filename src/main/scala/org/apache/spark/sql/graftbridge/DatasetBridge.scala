@@ -1,9 +1,10 @@
 package org.apache.spark.sql.graftbridge
 
+import org.apache.spark.SparkEnv
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, classic}
 import org.apache.spark.sql.execution.{LogicalRDD, QueryExecution, SQLExecution}
-import org.apache.spark.storage.StorageLevel
+import org.apache.spark.storage.{RDDBlockId, StorageLevel}
 
 /** Dataset internals bridge (Spark 4 classic implementation).
   *
@@ -26,6 +27,17 @@ object DatasetBridge {
       case lr: LogicalRDD => Some(lr.rdd)
       case _ => None
     }
+
+  /** Bytes the block manager master records for `rdd`'s blocks, in
+    * memory and on disk: the stored size of a checkpoint. Blocks are
+    * reported to the master before the task that stored them ends, so
+    * once the build has returned this is its full size. */
+  def storedBytes(rdd: RDD[_]): Long =
+    SparkEnv.get.blockManager.master.getStorageStatus.iterator
+      .flatMap(_.rddBlocks.iterator)
+      .collect { case (RDDBlockId(id, _), s) if id == rdd.id =>
+        s.memSize + s.diskSize }
+      .sum
 
   /** Unpersist the blocks of a localCheckpoint()'d DataFrame. After this
     * the DataFrame is UNUSABLE (checkpoint lineage is truncated by

@@ -9,7 +9,8 @@ import graft.linkage._
 /** The linkage tail: the metric counts observed on the stage checkpoint
   * builds (scored pairs below the match filter on the matches build,
   * matched_pairs as a cut's own count), and LinkageMain's outputs written
-  * side by side through [[Actions.together]]. */
+  * side by side through [[Actions.together]], each table from as many
+  * tasks as its stored bytes need. */
 class LinkageTailSpec extends AnyFunSuite with SparkFixture {
 
   private val synth = SynthTranscripts.Config(seed = 5L, nConvs = 150)
@@ -123,6 +124,27 @@ class LinkageTailSpec extends AnyFunSuite with SparkFixture {
     }
     assert(jobs.get > 0)
     assert(stray.isEmpty, s"jobs without the caller's properties: $stray")
+  }
+
+  test("LinkageMain.run writes each table by the bytes it holds") {
+    clearAll()
+    val out = tempDir("tailfiles")
+    LinkageMain.run(spark, Map("synthetic" -> "150", "output" -> out))
+    val metrics = TableIO.read(spark, s"$out/metrics").collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    // each far below one advisory partition size (64m) at this scale
+    Seq("metrics" -> metrics.size.toLong, "records" -> metrics("records"),
+      "clusters" -> metrics("clusters"),
+      "matched_pairs" -> metrics("matched_pairs")).foreach { case (t, n) =>
+      val snap = TableIO.readJson(spark, s"$out/$t/_snapshot.json")
+        .getOrElse(fail(s"$t: no snapshot"))
+      val files = new java.io.File(s"$out/$t/data").listFiles()
+        .count(_.getName.endsWith(".parquet"))
+      assert(files == 1 && snap.get("num_files").asInt == 1,
+        s"$t written as $files files")
+      assert(snap.get("row_count").asLong == n, s"$t: $snap")
+    }
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty)
   }
 
   test("an unwritable output fails the run after every other writer") {

@@ -161,11 +161,17 @@ class PipelineModesSpec extends AnyFunSuite with SparkFixture {
   test("household CLK i and mapping_csv row i belong to --testrun position i") {
     val out = tempDir("hhclks")
     val secret = "0123456789abcdef0123456789abcdef"
-    // 10k conversations: AQE sizes the clusters build by bytes, and below
-    // about 1 MB of shuffled clusters (5k conversations) it writes one
-    // file, which would leave the order under test unexercised
-    LinkageMain.run(spark, Map("synthetic" -> "10000", "output" -> out,
+    // 10k conversations at a 256k advisory partition size: AQE sizes the
+    // clusters build by bytes, and LinkageMain writes the clusters as one
+    // file per advisory size of their stored bytes, so at the default 64m
+    // it writes one file, which would leave the order under test
+    // unexercised
+    val advisory = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    val before = spark.conf.getOption(advisory)
+    spark.conf.set(advisory, "256k")
+    try LinkageMain.run(spark, Map("synthetic" -> "10000", "output" -> out,
       "testrun" -> "true", "secret" -> secret))
+    finally before.fold(spark.conf.unset(advisory))(spark.conf.set(advisory, _))
     val clusters = TableIO.read(spark, s"$out/clusters")
     // the clusters span several partitions: their hash order is not the
     // cluster_id order the positions follow

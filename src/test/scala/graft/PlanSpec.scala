@@ -48,12 +48,12 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
   // Plan-time cost gate: a Column builder whose derived vals re-inline
   // into every use grows exponentially (a rule-grammar address tagger
   // analyzed to 27,677 nodes for one column and 2.7M once scored, ~87 s
-  // to plan one row). Ceilings are ~3x the measured count (333, 372,
+  // to plan one row). Ceilings are ~3x the measured count (95, 372,
   // 132, 33, 52, 21, 56, 7), so ordinary growth passes and a
   // re-inlining blowup fails here in seconds. The redaction ceiling
   // stays at its 24-node sizing with the prefilter in.
   Seq[(String, () => DataFrame, Long)](
-    ("Fold.fold", () => Fold.fold(transcripts), 1000L),
+    ("Fold.fold", () => Fold.fold(transcripts), 300L),
     ("Candidates.candidates",
       () => Candidates.candidates(records, Blocking.defaultPasses), 1200L),
     ("Scoring.scorePairs", () => Scoring.scorePairs(records,
