@@ -101,13 +101,11 @@ object Bench {
       val (nClusters, tCc) = time {
         import org.apache.spark.sql.functions.{col, xxhash64}
         // bounded by the matches cut's count, as Pipeline.link calls it
-        val labels = Cluster.connectedComponents(spark,
+        Cluster.connectedComponents(spark,
           matched.select(xxhash64(col("id_a")).as("a"),
             xxhash64(col("id_b")).as("b")),
-          Cluster.Options(), Some(nMatched))
-        val n = labels.select("cluster_id").distinct().count()
-        labels.unpersist(false) // a persisted handle when rounds ran
-        n
+          Cluster.Options(), Some(nMatched), stages, Cluster.LocalFinishEdges)
+          .select("cluster_id").distinct().count()
       }
       LinkageStats(nRecords, nPairs, nMatched, nClusters,
         tFold, tCand, tScore, tCc)

@@ -313,25 +313,36 @@ object Dedup {
     * Same resumability/lineage discipline as the linkage path
     * (Cluster.Options.checkpointDir).
     *
-    * The result is localCheckpoint()'d (so the interior pair/label caches
-    * can be released here) — `unpersist()` will NOT free its blocks;
-    * call `DatasetBridge.releaseCheckpoint(result)` once every consumer
-    * has materialized. */
+    * Built the way `Pipeline` links: the kernel relation and the verified
+    * pairs are cuts, the pairs' observed count bounds CC (below the
+    * finish ceiling the union-find runs inside the result's build), and
+    * the result is one more cut. Every cut but the result is released
+    * before this returns; `unpersist()` will NOT free the result's
+    * blocks: call `DatasetBridge.releaseCheckpoint(result)` once every
+    * consumer has materialized. */
   def nearDupClusters(docs: DataFrame, cfg: MinHashConfig = MinHashConfig(),
                       idCol: String = "doc_id", textCol: String = "text",
                       ccOptions: graft.linkage.Cluster.Options =
-                        graft.linkage.Cluster.Options()): DataFrame = {
-    val pairs = minHashNearDups(docs, cfg, idCol, textCol)
-    val labels = graft.linkage.Cluster.connectedComponents(
-      docs.sparkSession, pairs.select(col("id_a"), col("id_b")), ccOptions)
-    val out = graft.linkage.Cluster.labelRecords(
-      docs.select(col(idCol)), labels, idCol)
-    val materialized = out
-      .select(col(idCol), col("cluster_id"))
-      .localCheckpoint() // inert result: release pairs + labels below
-    pairs.unpersist(blocking = false)
-    labels.unpersist(blocking = false)
-    materialized
+                        graft.linkage.Cluster.Options()): DataFrame =
+    nearDupClusters(docs, cfg, idCol, textCol, ccOptions, _ => ())
+
+  /** [[nearDupClusters]] with the cuts' test seam
+    * ([[graft.linkage.Stages]]). */
+  private[graft] def nearDupClusters(docs: DataFrame, cfg: MinHashConfig,
+                                     idCol: String, textCol: String,
+                                     ccOptions: graft.linkage.Cluster.Options,
+                                     drill: DataFrame => Unit): DataFrame = {
+    import graft.linkage.{Cluster, Stages}
+    val result = new Stages(drill)
+    val interior = new Stages(drill)
+    result.releasingOnFailure(interior.releasing {
+      val (pairs, n) = interior.checkpoint(kernelCut(docs, None, None, cfg,
+        idCol, textCol, interior).select(col("id_a"), col("id_b")))
+      val labels = Cluster.connectedComponents(docs.sparkSession, pairs,
+        ccOptions, Some(n), interior, Cluster.LocalFinishEdges)
+      result.cut(Cluster.labelRecords(docs.select(col(idCol)), labels, idCol)
+        .select(col(idCol), col("cluster_id")))
+    })
   }
 
   // ---------- SimHash ----------

@@ -1,9 +1,9 @@
 package graft.linkage
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Observation, Row,
+  SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
-import org.apache.spark.storage.StorageLevel
 
 /** Transitive closure: distributed connected components replacing the
   * reference's driver-side BFS (households.py:152–169; SURVEY.md §2.9).
@@ -16,14 +16,14 @@ import org.apache.spark.storage.StorageLevel
   *    materialize a neighbor array; skew is absorbed by the aggregation
   *    (partial min) + AQE. Each round leaves only (node → smaller
   *    neighbour) edges; they converge in O(log n) rounds.
-  *  - Local finish: once the edge count that every convergence
-  *    `signature` already returns is at or below [[LocalFinishEdges]],
-  *    one task runs union-find over what is left ([[localFinish]]). The
-  *    finish is the last step of every run; only a graph whose fixpoint
-  *    is still above the ceiling (more than 2²⁰ non-root nodes) reads
-  *    its labels off the star fixpoint instead. Both label a node with its component's
-  *    minimum id, so the labels do not depend on where the switch
-  *    happens (ClusterSpec runs every case both ways).
+  *  - Local finish: once the edge count each round's signature observes
+  *    is at or below [[LocalFinishEdges]], one task runs union-find over
+  *    what is left ([[localFinish]]). The finish is the last step of
+  *    every run; only a graph whose fixpoint is still above the ceiling
+  *    (more than 2²⁰ non-root nodes) reads its labels off the star
+  *    fixpoint instead. Both label a node with its component's minimum
+  *    id, so the labels do not depend on where the switch happens
+  *    (ClusterSpec runs every case both ways).
   *  - Ceiling sizing: an absolute edge count, sized for one task — not a
   *    ratio, and not an option. At 2²⁰ random long edges (1.33M nodes,
   *    local[4]) the finish task ran 2.6–3.1 s next to Spark's 67 MB
@@ -31,13 +31,14 @@ import org.apache.spark.storage.StorageLevel
   *    (from the array sizes). The whole CC call took 4.4 s there, and
   *    pure star rounds on the same graph 60 s.
   *
-  * Lineage is truncated each round. With a checkpoint dir the round state
-  * is written to reliable storage (`iter_k/` parquet + `_cc_state.json`),
-  * so a killed job resumes from the last completed round (north-rule
-  * resumability); without one, localCheckpoint() is used. The finish
-  * reads such a round: when no round ran because the input was already
-  * small, the input edge set is first written as round 0, so a killed
-  * finish resumes from it too.
+  * Every round, round 0 (the deduplicated input) included, is a cut of
+  * the caller's [[Stages]], built as its own query with its convergence
+  * signature (edge count, xor of edge hashes) observed on that build,
+  * and the labels are one more cut. With a checkpoint dir the rounds are
+  * written to reliable storage instead (`iter_k/` parquet, the signature
+  * observed on the write, + `_cc_state.json`), so a killed job resumes
+  * from the last completed round (north-rule resumability) and a killed
+  * finish from the round it reads.
   *
   * A caller that knows an upper bound on its edge rows (the row count of
   * a stage cut, as `Pipeline` does) skips all of that when the bound is
@@ -58,14 +59,6 @@ object Cluster {
     * object doc for how it is sized). */
   val LocalFinishEdges: Long = 1L << 20
 
-  /** Storage of the engine's local checkpoints: CC's lazy rounds and the
-    * linkage stage outputs (Pipeline). Serialized rows, spilled to disk
-    * under memory pressure: compact for the text-heavy records, which a
-    * columnar cache would encode column by column. Fixed, not an option;
-    * the disk level is what a local checkpoint requires anyway. */
-  private[linkage] val CheckpointLevel: StorageLevel =
-    StorageLevel.MEMORY_AND_DISK_SER
-
   /** edges: (id_a, id_b), undirected, self-loop-free. The id columns may
     * be ANY orderable type whose values compare by value (every atomic
     * type but binary) — longs are the cheap default, but string conv_ids
@@ -81,34 +74,38 @@ object Cluster {
     * `maxEdges`, when given, bounds the number of edge ROWS (duplicates
     * and self-loops included). At or below [[LocalFinishEdges]], without
     * a checkpoint dir, the labels are the local finish as a lazy plan over
-    * `edges`, marked for broadcast: no round runs and nothing is
-    * persisted or executed here; each action over the labels runs the
-    * finish again, so read them once (inside a cut's build, say). Rows
-    * beyond the bound fail that action loudly. Over the ceiling, with a
-    * checkpoint dir, or without a bound, the rounds below run.
+    * `edges`, marked for broadcast: no round runs and nothing is built
+    * or executed here; each action over the labels runs the finish again,
+    * so read them once (inside a cut's build, say). Rows beyond the bound
+    * fail that action loudly. Over the ceiling, with a checkpoint dir, or
+    * without a bound, the rounds below run.
     *
-    * Cache lifecycle of the rounds: each round is lazily
-    * localCheckpoint()'d — the LOGICAL plan of a round references the
-    * previous round ~8× (largeStar and smallStar each fan out their
-    * input), so without per-round lineage truncation the plan tree grows
-    * exponentially and analysis OOMs by round ~10 (measured). The
-    * convergence-signature action is the round's single materializing
-    * job, and the previous round's checkpoint blocks are released via
-    * DatasetBridge as soon as the next is materialized (a Dataset-level
-    * unpersist never frees them). The labels are then materialized into
-    * a CacheManager persist (callers unpersist when done; on the lazy
-    * path above that unpersist is a no-op) and all round state is
-    * released before returning. */
+    * Cache lifecycle of the rounds: each round is a cut — the LOGICAL plan
+    * of a round references the previous round ~8× (largeStar and
+    * smallStar each fan out their input), so without per-round lineage
+    * truncation the plan tree grows exponentially and analysis OOMs by
+    * round ~10 (measured). A round's cut is dropped once the next one is
+    * built, so at most two rounds are held at a time, and the last once
+    * the labels cut is built. The labels cut is returned: release it as
+    * a checkpoint (through `DatasetBridge`; there is nothing to release
+    * on the lazy path). A run that fails releases every cut it built. */
   def connectedComponents(spark: SparkSession, edges: DataFrame,
                           opts: Options = Options(),
-                          maxEdges: Option[Long] = None): DataFrame =
-    connectedComponents(spark, edges, opts, maxEdges, LocalFinishEdges)
+                          maxEdges: Option[Long] = None): DataFrame = {
+    val stages = new Stages()
+    stages.releasingOnFailure(connectedComponents(spark, edges, opts,
+      maxEdges, stages, LocalFinishEdges))
+  }
 
-  /** [[connectedComponents]] with the finish ceiling as a parameter: a
-    * test seam (0 = pure star rounds), not an option. */
+  /** [[connectedComponents]] over the caller's cuts: the rounds and the
+    * labels are cuts of `stages`, which owns the labels once this returns
+    * and releases every cut if the caller's run fails. `finishEdges` is
+    * the finish ceiling as a test seam (0 = pure star rounds), not an
+    * option. */
   private[graft] def connectedComponents(spark: SparkSession,
                                          edges: DataFrame, opts: Options,
                                          maxEdges: Option[Long],
+                                         stages: Stages,
                                          finishEdges: Long): DataFrame =
     maxEdges match {
       // the finish task emits at most 2·finishEdges labels (32 MB of long
@@ -117,58 +114,43 @@ object Cluster {
       // shuffled the records before AQE turned the join into a broadcast
       case Some(n) if n <= finishEdges && opts.checkpointDir.isEmpty =>
         broadcast(localFinish(oriented(edges), n.toInt))
-      case _ => rounds(spark, edges, opts, finishEdges)
+      case _ => rounds(spark, edges, opts, stages, finishEdges)
     }
 
+  /** A built round: its edges, their signature, and its number. */
+  private case class Round(edges: DataFrame, sig: (Long, Long), iter: Int)
+
   /** The star rounds, then the local finish (or the fixpoint's labels),
-    * materialized into a persist the caller releases. */
+    * as a cut of `stages`. */
   private def rounds(spark: SparkSession, edges: DataFrame, opts: Options,
-                     finishEdges: Long): DataFrame = {
-    // fingerprint of the INPUT edge set, written into _cc_state.json with
-    // every round: resuming against a checkpoint dir whose state was
-    // computed from different edges must fall back to a fresh init, not
-    // silently emit the previous input's clusters
-    val inputSig: Option[(Long, Long)] =
-      opts.checkpointDir.map(_ => signature(normalize(edges)))
-    var (cur, startIter) = opts.checkpointDir match {
-      case Some(dir) => resumeOrInit(spark, edges, dir, inputSig.get)
-      case None => (normalize(edges), 0)
-    }
-    // a resumed state is already parquet-backed; re-checkpointing it would
-    // overwrite the very files being read (self-overwrite ⇒ FILE_NOT_EXIST)
-    if (startIter == 0) {
-      cur = cur.localCheckpoint(eager = false, CheckpointLevel)
-    }
+                     stages: Stages, finishEdges: Long): DataFrame = {
+    // round 0's signature is the fingerprint of the INPUT edge set,
+    // written into _cc_state.json with every round: resuming against a
+    // checkpoint dir whose state was computed from different edges must
+    // fall back to a fresh init, not silently emit the previous input's
+    // clusters
+    val (first, input) = opts.checkpointDir
+      .flatMap(resume(spark, edges, _))
+      .getOrElse {
+        val r0 = round(spark, normalize(edges), 0, None, opts, stages)
+        (r0, r0.sig)
+      }
+    var cur = first
     var converged = false
-    var iter = startIter
-    var prevSig = signature(cur) // materializes the lazy checkpoint
-    while (prevSig._1 > finishEdges && !converged && iter < MaxRounds) {
-      val ls = largeStar(cur)
-      val ss = smallStar(ls)
-      val next = persistRound(spark, ss, opts, iter, inputSig)
-      val sig = signature(next) // the round's one materializing job
-      converged = sig == prevSig
-      prevSig = sig
-      org.apache.spark.sql.graftbridge.DatasetBridge.releaseCheckpoint(cur)
+    while (cur.sig._1 > finishEdges && !converged && cur.iter < MaxRounds) {
+      val next = round(spark, smallStar(largeStar(cur.edges)), cur.iter + 1,
+        Some(input), opts, stages)
+      converged = next.sig == cur.sig
+      stages.drop(cur.edges)
       cur = next
-      iter += 1
     }
-    val finish = prevSig._1 <= finishEdges
+    val finish = cur.sig._1 <= finishEdges
     require(finish || converged,
       s"CC did not converge in $MaxRounds rounds")
-    // with a checkpoint dir the finish reads a persisted round: iter == 0
-    // means no round ran and nothing was resumed, so write the input
-    // edge set as round 0 first
-    if (finish && opts.checkpointDir.isDefined && iter == 0) {
-      val persisted = persistRound(spark, cur, opts, iter, inputSig)
-      org.apache.spark.sql.graftbridge.DatasetBridge.releaseCheckpoint(cur)
-      cur = persisted
-    }
-    val labels = (if (finish) localFinish(cur, prevSig._1.toInt)
-                  else starLabels(cur))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    labels.count() // materialize before releasing the final round state
-    org.apache.spark.sql.graftbridge.DatasetBridge.releaseCheckpoint(cur)
+    val labels = stages.cut(
+      if (finish) localFinish(cur.edges, cur.sig._1.toInt)
+      else starLabels(cur.edges))
+    stages.drop(cur.edges)
     labels
   }
 
@@ -289,36 +271,45 @@ object Cluster {
       .distinct()
   }
 
-  /** Cheap fixpoint signature: (count, xor of pair hashes) — xor is
-    * order-independent and can't overflow under ANSI mode. */
+  /** Convergence signature of (hi, lo) edges: (count, xor of pair
+    * hashes) — xor is order-independent and can't overflow under ANSI
+    * mode. A round observes it on its build; only a resume reads one
+    * with an action of its own ([[signature]]). */
+  private val signatureCols = Seq(count(lit(1)).as("n"),
+    coalesce(bit_xor(xxhash64(col("hi"), col("lo"))), lit(0L)).as("h"))
+
   private def signature(edges: DataFrame): (Long, Long) = {
-    val row = edges.agg(
-      count(lit(1)).as("c"),
-      coalesce(bit_xor(xxhash64(col("hi"), col("lo"))), lit(0L)).as("h"))
-      .head()
+    val row = edges.agg(signatureCols.head, signatureCols.tail: _*).head()
     (row.getLong(0), row.getLong(1))
   }
 
-  private def persistRound(spark: SparkSession, df: DataFrame,
-                           opts: Options, iter: Int,
-                           inputSig: Option[(Long, Long)]): DataFrame =
+  /** Round `iter`'s edges, built once with their signature observed on
+    * that build: a cut of `stages`, or with a checkpoint dir `iter_<iter>`
+    * parquet committed by its `_cc_state.json` (whose input fingerprint
+    * is `input`, or this round's own signature for round 0). A round is
+    * built from the previous one, never from its own files, so no write
+    * overwrites what it reads. */
+  private def round(spark: SparkSession, df: DataFrame, iter: Int,
+                    input: Option[(Long, Long)], opts: Options,
+                    stages: Stages): Round = {
+    val o = Observation()
+    val signed = df.observe(o, signatureCols.head, signatureCols.tail: _*)
+    def observed(built: DataFrame) = Round(built,
+      Stages.observed(o).fold((0L, 0L))(r => (r.getLong(0), r.getLong(1))),
+      iter)
     opts.checkpointDir match {
-      case Some(dir) if iter >= 0 =>
+      case Some(dir) =>
         val path = s"$dir/iter_$iter"
-        df.write.mode("overwrite").parquet(path)
-        writeState(spark, dir, iter, inputSig.getOrElse((0L, 0L)))
+        signed.write.mode("overwrite").parquet(path)
         // a resumed run may overwrite a path cached by the session-shared
         // FileStatusCache — drop the stale listing before re-reading
         spark.catalog.refreshByPath(path)
-        spark.read.parquet(path)
-      case _ =>
-        // lazy localCheckpoint: truncates the exponentially-fanning
-        // lineage; the convergence signature right after is the round's
-        // single materializing job. Truncation means a lost block is not
-        // recomputable — local-mode semantics; reliable deployments pass
-        // checkpointDir and get parquet-backed rounds instead.
-        df.localCheckpoint(eager = false, CheckpointLevel)
+        val r = observed(spark.read.parquet(path))
+        writeState(spark, dir, iter, input.getOrElse(r.sig))
+        r
+      case None => observed(stages.cut(signed))
     }
+  }
 
   private def writeState(spark: SparkSession, dir: String, iter: Int,
                          sig: (Long, Long)): Unit =
@@ -326,28 +317,27 @@ object Cluster {
       "last_completed_iter" -> iter, "edges_count" -> sig._1,
       "edges_hash" -> sig._2))
 
-  /** Resume from the last completed round iff state exists AND its stored
-    * input-edges fingerprint matches the current input — otherwise the
-    * checkpoint belongs to a different run and we must init fresh. State
-    * files without a fingerprint (pre-fingerprint format) never match. */
-  private def resumeOrInit(spark: SparkSession, edges: DataFrame,
-                           dir: String,
-                           inputSig: (Long, Long)): (DataFrame, Int) = {
-    val resumable = TableIO.readJson(spark, s"$dir/_cc_state.json")
-      .flatMap { st =>
-        def field(key: String) = Option(st.get(key)).map(_.asLong)
-        if (field("edges_count").contains(inputSig._1) &&
-            field("edges_hash").contains(inputSig._2))
-          field("last_completed_iter").map(_.toInt)
-        else None
-      }
-      .filter(iter => iter >= 0 && TableIO.fileSystem(spark, dir)
-        .exists(new org.apache.hadoop.fs.Path(s"$dir/iter_$iter")))
-    resumable match {
-      case Some(iter) => (spark.read.parquet(s"$dir/iter_$iter"), iter + 1)
-      case None => (normalize(edges), 0)
+  /** The last completed round and the input fingerprint, iff state
+    * exists AND its stored input-edges fingerprint matches the current
+    * input — otherwise the checkpoint belongs to a different run and we
+    * must init fresh. State files without a fingerprint (pre-fingerprint
+    * format) never match. Only a dir with state pays for fingerprinting
+    * the input up front; a fresh run observes it on round 0's write. */
+  private def resume(spark: SparkSession, edges: DataFrame, dir: String)
+      : Option[(Round, (Long, Long))] =
+    TableIO.readJson(spark, s"$dir/_cc_state.json").flatMap { st =>
+      def field(key: String) = Option(st.get(key)).map(_.asLong)
+      val input = signature(normalize(edges))
+      field("last_completed_iter").map(_.toInt)
+        .filter(iter => field("edges_count").contains(input._1) &&
+          field("edges_hash").contains(input._2) && iter >= 0 &&
+          TableIO.fileSystem(spark, dir)
+            .exists(new org.apache.hadoop.fs.Path(s"$dir/iter_$iter")))
+        .map { iter =>
+          val done = spark.read.parquet(s"$dir/iter_$iter")
+          (Round(done, signature(done), iter), input)
+        }
     }
-  }
 
   /** Attach labels to all records; nodes without edges become their own
     * cluster (singleton semantics, households.py:247–249). */

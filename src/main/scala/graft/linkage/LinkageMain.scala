@@ -1,9 +1,7 @@
 package graft.linkage
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.DatasetBridge
-import org.apache.spark.sql.internal.SQLConf
 
 /** spark-submit entry point for the full linkage pipeline (north-rule
   * deployment surface; the reference's `households.py` CLI analog):
@@ -137,16 +135,6 @@ object LinkageMain {
                            out: String, result: Pipeline.Result): Unit = {
     val metrics = result.metrics.collect()
       .map(r => r.getString(0) -> r.getLong(1))
-    // a checkpointed table is written as one task per advisory partition
-    // size of its stored bytes, never more than its partitions: each
-    // write task costs tens of ms to start, whatever it holds
-    val advisory = SQLConf.get.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
-    def bySize(table: DataFrame): DataFrame =
-      DatasetBridge.backingRdd(table).fold(table) { rdd =>
-        val n = math.max(1L,
-          (DatasetBridge.storedBytes(rdd) + advisory - 1) / advisory)
-        if (n < rdd.getNumPartitions) table.coalesce(n.toInt) else table
-      }
     // household position i is the i-th cluster by cluster_id: mapping_csv
     // row i (which ResolveMain --hhsourcefile numbers by scan order) and
     // household CLK i both follow that order. The CLKs are encoded at full
@@ -174,9 +162,10 @@ object LinkageMain {
         .coalesce(1).sortWithinPartitions("cluster_id")
         .write.mode("overwrite").option("header", "true")
         .csv(s"$out/mapping_csv"),
-      () => TableIO.write(bySize(result.clusters), s"$out/clusters"),
-      () => TableIO.write(bySize(result.records), s"$out/records"),
-      () => TableIO.write(bySize(result.matchedPairs), s"$out/matched_pairs"),
+      () => TableIO.write(TableIO.bySize(result.clusters), s"$out/clusters"),
+      () => TableIO.write(TableIO.bySize(result.records), s"$out/records"),
+      () => TableIO.write(TableIO.bySize(result.matchedPairs),
+        s"$out/matched_pairs"),
       // a handful of local rows
       () => TableIO.write(result.metrics.coalesce(1), s"$out/metrics"),
       // households metadata document (households.py:370–390 analog)

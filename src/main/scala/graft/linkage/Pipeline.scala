@@ -70,7 +70,7 @@ object Pipeline {
       deltaMatches: DataFrame,
       /** The stage checkpoints the run built (records, candidate pairs,
         * matches, clusters; an incremental run's new records, all records
-        * and previous ∪ new matches too).
+        * and previous ∪ new matches too; CC's labels when its rounds ran).
         * Every DataFrame of the Result reads them; callers release them
         * via [[unpersist]] once done, after which those DataFrames are
         * unusable (a checkpoint has no lineage to recompute from). A run
@@ -148,7 +148,8 @@ object Pipeline {
     *
     * `matched` is always a cut with a known row count, which bounds CC's
     * edge rows: below the local-finish ceiling, CC is a lazy plan that
-    * the clusters build runs, so it adds no query of its own.
+    * the clusters build runs, so it adds no query of its own; otherwise
+    * its labels are one more cut of the run.
     *
     * Metrics: `counts` names the caller's leading metric rows, given the
     * scored pairs' count (observed below the match filter on the matches
@@ -187,15 +188,13 @@ object Pipeline {
 
     val labels = Cluster.connectedComponents(spark,
       matched.select(xxhash64(col("id_a")).as("a"),
-        xxhash64(col("id_b")).as("b")), cfg.ccOptions, Some(nMatched))
-    // members are sorted, so members[0] is the cluster's min(conv_id).
-    // The clusters checkpoint is the labels' one reader, so they go once
-    // it is built, or once the build has failed.
-    val (clusters, nClusters) =
-      try stages.checkpoint(Output.clusters(Cluster.labelRecords(
+        xxhash64(col("id_b")).as("b")), cfg.ccOptions, Some(nMatched),
+      stages, Cluster.LocalFinishEdges)
+    // members are sorted, so members[0] is the cluster's min(conv_id)
+    val (clusters, nClusters) = stages.checkpoint(Output.clusters(
+        Cluster.labelRecords(
           records.withColumn("node_id", xxhash64(col("conv_id"))), labels))
-        .withColumn("cluster_id", col("members")(0)))
-      finally labels.unpersist(false)
+      .withColumn("cluster_id", col("members")(0)))
     val labeled = clusters.select(explode(col("members")).as("conv_id"),
       col("cluster_id"))
 

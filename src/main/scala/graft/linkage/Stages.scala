@@ -7,6 +7,7 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Observation, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.DatasetBridge
+import org.apache.spark.storage.StorageLevel
 
 /** The stage cuts of one run, in build order: the one way a multi-stage
   * run (the linkage pipeline, the corpus cleaner, the near-dup kernels)
@@ -22,7 +23,7 @@ private[graft] final class Stages(drill: DataFrame => Unit = _ => ()) {
   def all: Seq[RDD[_]] = built.toArray(Array.empty[RDD[_]]).toSeq
 
   /** A stage output built once, as its own query, into an eager local
-    * checkpoint at [[Cluster.CheckpointLevel]]; returned with its row
+    * checkpoint at [[Stages.CheckpointLevel]]; returned with its row
     * count, observed on that build. Every later query starts from the
     * checkpoint's `LogicalRDD` leaf instead of re-embedding the plan that
     * built it (a persisted relation's `InMemoryRelation` carries its whole
@@ -32,11 +33,24 @@ private[graft] final class Stages(drill: DataFrame => Unit = _ => ()) {
     * runs, so a failed build's blocks are released too. */
   def checkpoint(df: DataFrame): (DataFrame, Long) = {
     val rows = Observation()
-    val cp = DatasetBridge.localCheckpoint(Stages.counted(df, rows),
-      Cluster.CheckpointLevel, built.add)
-    drill(cp)
-    (cp, Stages.observedCount(rows))
+    (cut(Stages.counted(df, rows)), Stages.observedCount(rows))
   }
+
+  /** [[checkpoint]] without the count: the observations `df` holds
+    * report on its build. */
+  def cut(df: DataFrame): DataFrame = {
+    val cp = DatasetBridge.localCheckpoint(df, Stages.CheckpointLevel,
+      built.add)
+    drill(cp)
+    cp
+  }
+
+  /** Releases one cut of this run before the run ends, once nothing reads
+    * it any more (connected components' previous round); a no-op for a
+    * DataFrame that is no cut of this run. */
+  def drop(cut: DataFrame): Unit =
+    DatasetBridge.backingRdd(cut).filter(built.remove)
+      .foreach(_.unpersist(blocking = false))
 
   def release(): Unit = all.foreach(_.unpersist(blocking = false))
 
@@ -52,6 +66,12 @@ private[graft] final class Stages(drill: DataFrame => Unit = _ => ()) {
 }
 
 private[graft] object Stages {
+
+  /** Storage of the cuts. Serialized rows, spilled to disk under memory
+    * pressure: compact for the text-heavy records, which a columnar cache
+    * would encode column by column. Fixed, not an option; the disk level
+    * is what a local checkpoint requires anyway. */
+  val CheckpointLevel: StorageLevel = StorageLevel.MEMORY_AND_DISK_SER
 
   /** `df` with its rows counted by `o`, as "n", on the action that runs
     * it. */

@@ -6,6 +6,7 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.DatasetBridge
+import org.apache.spark.sql.internal.SQLConf
 import scala.jdk.CollectionConverters._
 
 /** The engine's on-disk state format. Tables are an Iceberg-like layout
@@ -40,6 +41,21 @@ object TableIO {
     withPart.parquet(s"$path/data")
     writeSnapshot(df, path, rows.get("rows").asInstanceOf[Long])
   }
+
+  /** `table` coalesced to one partition per advisory partition size
+    * (`spark.sql.adaptive.advisoryPartitionSizeInBytes`) of the stored
+    * bytes of the checkpoint it reads, never to more partitions than it
+    * has: each write task costs tens of ms to start, whatever it holds.
+    * A table that is no checkpoint (or projection of one) is returned as
+    * it is. */
+  def bySize(table: DataFrame): DataFrame =
+    DatasetBridge.scannedRdd(table).fold(table) { rdd =>
+      val advisory =
+        SQLConf.get.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
+      val n = math.max(1L,
+        (DatasetBridge.storedBytes(rdd) + advisory - 1) / advisory)
+      if (n < rdd.getNumPartitions) table.coalesce(n.toInt) else table
+    }
 
   def read(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(s"$path/data")

@@ -112,16 +112,18 @@ object LinkageStream {
     // delta rows for the logs: the batch's own records (piiCols on both
     // paths, so the log schema does not depend on arrival order) and new
     // matches; idempotent per-batch partitions: a replay overwrites its
-    // own dirs
-    result.deltaRecords.write.mode("overwrite")
+    // own dirs. Each write reads a stage checkpoint and is sized by its
+    // stored bytes, as LinkageMain's tables are
+    TableIO.bySize(result.deltaRecords).write.mode("overwrite")
       .parquet(s"$storeDir/records_log/batch=$batchId")
-    result.deltaMatches.write.mode("overwrite")
+    TableIO.bySize(result.deltaMatches).write.mode("overwrite")
       .parquet(s"$storeDir/matches_log/batch=$batchId")
     // the clusters are written from their stage checkpoint, which has no
     // plan behind it: the refreshes below drop only CacheManager entries
     // whose plans read the logs, so they cannot send this write (or any
     // later read of the result) back through the O(corpus) lineage
-    TableIO.write(result.clusters, s"$storeDir/g$nextGen/clusters")
+    TableIO.write(TableIO.bySize(result.clusters),
+      s"$storeDir/g$nextGen/clusters")
     // new partition dirs dodge the self-overwrite class, but the session
     // FileStatusCache may still hold the roots' pre-append listings
     spark.catalog.refreshByPath(s"$storeDir/records_log")
@@ -147,15 +149,11 @@ object LinkageStream {
     * TIME, and that generation's directory is REWRITTEN two committed
     * batches later — a clusters DataFrame held across batches can hit
     * missing files or a mixed snapshot. Materialize within the window,
-    * or pass snapshot = true to localCheckpoint the result (eager,
-    * lineage-free — survives any number of generation flips; release it
-    * with DatasetBridge.releaseCheckpoint when done). */
-  def currentClusters(spark: SparkSession, storeDir: String,
-                      snapshot: Boolean = false): DataFrame = {
-    val st = requireState(spark, storeDir)
-    val df = TableIO.read(spark, s"$storeDir/g${st.gen}/clusters")
-    if (snapshot) df.localCheckpoint() else df
-  }
+    * or `localCheckpoint()` the result for a copy that survives any
+    * number of generation flips. */
+  def currentClusters(spark: SparkSession, storeDir: String): DataFrame =
+    TableIO.read(spark,
+      s"$storeDir/g${requireState(spark, storeDir).gen}/clusters")
   def currentRecords(spark: SparkSession, storeDir: String): DataFrame =
     readLog(spark, s"$storeDir/records_log",
       requireState(spark, storeDir).batch)

@@ -3,6 +3,7 @@ package org.apache.spark.sql.graftbridge
 import org.apache.spark.SparkEnv
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, classic}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
 import org.apache.spark.sql.execution.{LogicalRDD, QueryExecution, SQLExecution}
 import org.apache.spark.storage.{RDDBlockId, StorageLevel}
 
@@ -27,6 +28,17 @@ object DatasetBridge {
       case lr: LogicalRDD => Some(lr.rdd)
       case _ => None
     }
+
+  /** [[backingRdd]] seen through column projections: the checkpoint a
+    * projected view of one reads. */
+  def scannedRdd(df: DataFrame): Option[RDD[_]] = {
+    def scanned(p: LogicalPlan): Option[RDD[_]] = p match {
+      case lr: LogicalRDD => Some(lr.rdd)
+      case Project(_, child) => scanned(child)
+      case _ => None
+    }
+    scanned(df.asInstanceOf[classic.Dataset[_]].queryExecution.analyzed)
+  }
 
   /** Bytes the block manager master records for `rdd`'s blocks, in
     * memory and on disk: the stored size of a checkpoint. Blocks are

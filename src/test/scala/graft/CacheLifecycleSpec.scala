@@ -96,7 +96,7 @@ class CacheLifecycleSpec extends AnyFunSuite with SparkFixture {
     val labels = Cluster.connectedComponents(spark, edges)
     labels.collect()
     assert(persisted == 1, "only the returned labels stay cached")
-    labels.unpersist(true)
+    org.apache.spark.sql.graftbridge.DatasetBridge.releaseCheckpoint(labels)
     assert(persisted == 0)
   }
 

@@ -2,9 +2,10 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.DatasetBridge
 import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
-import graft.linkage.{Cluster, TableIO}
+import graft.linkage.{Cluster, Stages, TableIO}
 
 /** Connected components: known graphs, singleton semantics
   * (households.py:247–249), GraphX cross-check, checkpoint resume. Every
@@ -15,7 +16,7 @@ class ClusterSpec extends AnyFunSuite with SparkFixture {
 
   private def collected(labels: DataFrame): Map[Any, Any] = {
     val m = labels.collect().map(r => r.get(0) -> r.get(1)).toMap
-    labels.unpersist()
+    DatasetBridge.releaseCheckpoint(labels)
     m
   }
 
@@ -28,7 +29,7 @@ class ClusterSpec extends AnyFunSuite with SparkFixture {
     val bound = edges.count()
     val runs = ceilings.map { c =>
       s"ceiling $c" -> collected(Cluster.connectedComponents(spark, edges,
-        Cluster.Options(), None, c))
+        Cluster.Options(), None, new Stages(), c))
     } :+ {
       val lazyLabels = Cluster.connectedComponents(spark, edges,
         Cluster.Options(), Some(bound))
@@ -113,7 +114,7 @@ class ClusterSpec extends AnyFunSuite with SparkFixture {
           labels)
         .groupBy("cluster_id").agg(collect_set(col("conv_id")))
         .collect().map(_.getSeq[String](1).toSet).toSet
-      labels.unpersist()
+      DatasetBridge.releaseCheckpoint(labels)
       members
     }
     val hashed = clusters(xxhash64(_))
@@ -236,7 +237,7 @@ class ClusterSpec extends AnyFunSuite with SparkFixture {
   }
 
   // The bounded call: the lazy finish only at or below the ceiling and
-  // without a checkpoint dir; the rounds (a persisted result) otherwise.
+  // without a checkpoint dir; the rounds (a checkpointed result) otherwise.
 
   test("bounded finish: duplicate rows and self-loops, no distinct") {
     import spark.implicits._
@@ -260,11 +261,11 @@ class ClusterSpec extends AnyFunSuite with SparkFixture {
     val want = ccAt(edges)
     val n = edges.count()
     Seq(Cluster.connectedComponents(spark, edges, Cluster.Options(),
-          Some(n), 500L),
+          Some(n), new Stages(), 500L),
         Cluster.connectedComponents(spark, edges, Cluster.Options(),
           Some(Cluster.LocalFinishEdges + 1))).foreach { labels =>
-      assert(labels.storageLevel == StorageLevel.MEMORY_AND_DISK,
-        "the rounds' labels come back persisted")
+      assert(DatasetBridge.backingRdd(labels).isDefined,
+        "the rounds' labels come back as a checkpoint")
       assert(collected(labels) == want)
     }
   }

@@ -115,39 +115,19 @@ class LinkagePipelineSpec extends AnyFunSuite with SparkFixture {
     assert(joined.filter(col("n") > 1).count() == 0)
   }
 
-  /** `body`'s result, and the descriptions of the SQL executions it
-    * starts. */
-  private def sqlExecutions[A](body: => A): (A, Seq[String]) = {
-    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
-    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onOtherEvent(
-          e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
-        case s: SparkListenerSQLExecutionStart => started.add(s.description)
-        case _ =>
-      }
-    }
-    val sc = spark.sparkContext
-    org.apache.spark.graftbridge.Bus.drain(sc)
-    sc.addSparkListener(listener)
-    val result = try {
-      val a = body
-      org.apache.spark.graftbridge.Bus.drain(sc)
-      a
-    } finally sc.removeSparkListener(listener)
-    (result, started.toArray(Array.empty[String]).toSeq)
-  }
-
   test("Pipeline runs one SQL execution per stage cut, and nothing else") {
     transcripts.count() // the input cache is filled outside the budget
     val pairsDir = s"${tempDir("budgetpairs")}/pairs"
-    def runs(what: String, cuts: Int)(run: => Pipeline.Result)
-        : Pipeline.Result = {
+    def runs(what: String, cuts: Int, roundWrites: Int = 0)(
+        run: => Pipeline.Result): Pipeline.Result = {
       val (result, executions) = sqlExecutions(run)
       info(s"$what: ${executions.size} SQL executions")
-      // every execution is a cut's build: no head, count or collect
-      assert(executions.size == cuts &&
-        executions.forall(_.startsWith("localCheckpoint")),
+      // every execution is a cut's build or, with a CC checkpoint dir, a
+      // round's parquet write: no head, count or collect
+      val (built, written) =
+        executions.partition(_.startsWith("localCheckpoint"))
+      assert(built.size == cuts && written.size == roundWrites &&
+        written.forall(_.contains("Cluster.scala")),
         s"$what: ${executions.mkString("; ")}")
       assert(result.checkpoints.size == cuts)
       result
@@ -160,6 +140,11 @@ class LinkagePipelineSpec extends AnyFunSuite with SparkFixture {
       Pipeline.Config(exactAddresses = true))).unpersist()
     runs("pairs file", 3)(Pipeline.run(spark, transcripts,
       Pipeline.Config(pairsFile = Some(pairsDir)))).unpersist()
+    // LinkageMain --checkpoint: CC writes round 0 as parquet and finishes
+    // from it into a labels cut, which the clusters build reads
+    runs("--checkpoint", 5, roundWrites = 1)(Pipeline.run(spark, transcripts,
+      Pipeline.Config(ccOptions = Cluster.Options(
+        Some(tempDir("budgetcc")))))).unpersist()
     // new records, all records, candidate pairs, matches, previous ∪ new
     // matches, clusters
     val later = SynthTranscripts.transcripts(spark,

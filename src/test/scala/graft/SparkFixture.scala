@@ -35,6 +35,29 @@ trait SparkFixture extends BeforeAndAfterAll { self: Suite =>
       spark.read.parquet(s"$dir/exact_ids"))
   }
 
+  /** `body`'s result, and the descriptions of the SQL executions it
+    * starts. */
+  def sqlExecutions[A](body: => A): (A, Seq[String]) = {
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(
+          e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => started.add(s.description)
+        case _ =>
+      }
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.graftbridge.Bus.drain(sc)
+    sc.addSparkListener(listener)
+    val result = try {
+      val a = body
+      org.apache.spark.graftbridge.Bus.drain(sc)
+      a
+    } finally sc.removeSparkListener(listener)
+    (result, started.toArray(Array.empty[String]).toSeq)
+  }
+
   override def afterAll(): Unit =
     try tempDirs.foreach(d =>
       new scala.reflect.io.Directory(d.toFile).deleteRecursively())
